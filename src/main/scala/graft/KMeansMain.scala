@@ -30,13 +30,34 @@ import graft.kmeans._
   *
   * Sinks are single-file headerless overwrite CSV (O15); with no
   * out-paths the results print to stdout (O16, KMeans.java:143,243-245).
+  * Every flag takes exactly one value; an unknown flag or a flag without
+  * a value is rejected rather than silently falling back to a default.
   */
 object KMeansMain {
 
-  def parseArgs(args: Array[String]): Map[String, String] =
-    args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("-") => k.drop(1) -> v
+  /** The flags documented above, without their leading `-`. */
+  private val Flags: Set[String] = Set(
+    "points", "centroids", "numcentroids", "minc", "maxc", "recompnearest",
+    "seed", "iterations", "custconvergence", "epsilon",
+    "pointsout", "centroidsout", "objfunout", "objtraceout")
+
+  /** `-flag value` pairs to a map keyed by flag name. A value may start
+    * with `-` (`-minc -15`) unless it is itself a known flag, which means
+    * the flag before it was given without a value.
+    * @throws IllegalArgumentException naming an unknown or value-less flag */
+  def parseArgs(args: Array[String]): Map[String, String] = {
+    def flag(tok: String): Option[String] =
+      Some(tok).filter(_.startsWith("-")).map(_.drop(1)).filter(Flags)
+    args.toList.grouped(2).map { pair =>
+      val name = flag(pair.head).getOrElse(throw new IllegalArgumentException(
+        s"unknown flag: ${pair.head} (known: " +
+          Flags.toSeq.sorted.map("-" + _).mkString(" ") + ")"))
+      pair match {
+        case List(_, v) if flag(v).isEmpty => name -> v
+        case _ => throw new IllegalArgumentException(s"flag ${pair.head} has no value")
+      }
     }.toMap
+  }
 
   def main(args: Array[String]): Unit = {
     val p = parseArgs(args)
@@ -83,9 +104,16 @@ object KMeansMain {
           .toSeq.sortBy(_.cid)
       }
 
-    val res = KMeansFit.fit(points, init, cfg, trace = p.contains("objtraceout"))
+    val traced = p.contains("objtraceout")
+    val res = KMeansFit.fit(points, init, cfg, trace = traced)
     val assigned = KMeansOps.assign(points, res.centroids)
-    val objective = KMeansFit.sse(points, res.centroids)
+    // A trace's last entry IS the SSE against the final centroids (the
+    // fit computes it exactly as `sse` does, over its cached points), so
+    // a traced run takes the objective from it instead of re-scanning
+    // the CSV; untraced (or zero-iteration) runs pay the one pass here.
+    val objective =
+      if (traced && res.objTrace.nonEmpty) res.objTrace.last
+      else KMeansFit.sse(points, res.centroids)
 
     p.get("objtraceout").foreach { path =>
       import spark.implicits._

@@ -39,7 +39,9 @@ case class KMeansConfig(
   * empty otherwise). `objTrace(i)` = SSE against the centroids produced
   * by superstep i+1 — the quantity the reference's script_3 harness logs
   * per iteration (scripts/script_3.sh:18-42,
-  * script_results/script_3/results_objfun_N.csv). */
+  * script_results/script_3/results_objfun_N.csv). Every entry equals
+  * `KMeansFit.sse` against those centroids exactly, so the last one is
+  * the objective of [[centroids]]. */
 case class FitResult(
     centroids: Seq[Cent], iterations: Int, objTrace: Seq[Double] = Nil)
 
@@ -76,20 +78,32 @@ object KMeansFit {
     * shrink), matching the reference's reduce semantics — NOT MLlib's
     * keep-old-center behavior.
     *
-    * @param exact decimal-exact (order-independent) sums when true — the
-    *              oracle-parity arithmetic; plain double sums when false
-    *              — the reference's own arithmetic, ~2x cheaper per row */
-  def step(points: DataFrame, cents: Seq[Cent], exact: Boolean = true): Seq[Cent] = {
-    // label-only assignment: the recompute reads nothing but (cid, x, y),
-    // so the full assign's carried centroid coords / distance are dead
-    // work in the hot loop (KMeansOps.assignLabel doc)
-    val assigned = KMeansOps.assignLabel(points, cents)
-    val next =
-      if (exact) KMeansOps.recompute(assigned)
-      else KMeansOps.recomputeFast(assigned)
-    next.collect()
-      .map(r => Cent(r.getInt(0), r.getDouble(1), r.getDouble(2)))
+    * @param exact   decimal-exact (order-independent) sums when true — the
+    *                oracle-parity arithmetic; plain double sums when false
+    *                — the reference's own arithmetic, ~2x cheaper per row
+    * @param withSse also return the SSE of `points` against the INPUT
+    *                centroids `cents`, equal to [[sse]]`(points, cents)`.
+    *                The argmin already has each point's distance to its
+    *                centroid, so the step's aggregate sums it per cluster
+    *                on the objective's integer grid and the driver adds
+    *                the k partial sums exactly: no second pass.
+    * @return the next centroids, and the SSE when `withSse` */
+  def step(points: DataFrame, cents: Seq[Cent], exact: Boolean = true,
+      withSse: Boolean = false): (Seq[Cent], Option[Double]) = {
+    // label-only assignment: the recompute reads nothing but (cid, x, y)
+    // and, traced, the distance, so the full assign's carried centroid
+    // coords are dead work in the hot loop (KMeansOps.assignLabel doc)
+    val assigned = KMeansOps.assignLabel(points, cents, withSq = withSse)
+    val extra = if (withSse) Seq(KMeansOps.sqdistGridSum.as("sq6")) else Nil
+    val rows =
+      (if (exact) KMeansOps.recompute(assigned, extra: _*)
+       else KMeansOps.recomputeFast(assigned, extra: _*)).collect()
+    val next = rows.map(r => Cent(r.getInt(0), r.getDouble(1), r.getDouble(2)))
       .toSeq.sortBy(_.cid)
+    val sse =
+      if (withSse) Some(KMeansOps.gridToObjective(rows.map(_.getDecimal(3)).toSeq))
+      else None
+    (next, sse)
   }
 
   /** Full fit. Caches `points` for the duration of the loop (the one real
@@ -97,10 +111,12 @@ object KMeansFit {
     * on exit.
     *
     * @param trace record the per-iteration objective (SSE vs the freshly
-    *              updated centroids) in [[FitResult.objTrace]]. Costs one
-    *              extra pass over the cached points per superstep, so it
-    *              is opt-in — the production loop stays at one scan +
-    *              one k-group aggregate per iteration.
+    *              updated centroids) in [[FitResult.objTrace]]. Step i+1
+    *              sums the SSE against step i's centroids in its own
+    *              aggregate, so the trace costs one extra pass over the
+    *              cached points in total (for the final centroids). Off,
+    *              the loop plans exactly one scan + one k-group aggregate
+    *              per iteration with no objective column.
     * @param exact decimal-exact sums (bit-reproducible across partition
     *              orders, the arithmetic the DuckDB oracle replicates)
     *              when true; the reference's plain double sums when
@@ -126,13 +142,16 @@ object KMeansFit {
       var go = cfg.maxIter > 0
       val objs = Seq.newBuilder[Double]
       while (go) {
-        val next = step(cached, cents, exact)
+        val (next, prevSse) = step(cached, cents, exact, withSse = trace)
         iter += 1
-        if (trace) objs += sse(cached, next)
+        // step i+1 measured the SSE of step i's centroids: trace entry
+        // i-1; the first step's (the initial centroids') is not traced
+        if (iter > 1) objs ++= prevSse
         go = iter < cfg.maxIter &&
           (!cfg.convergence || moved(next, cents, cfg.tol))
         cents = next
       }
+      if (trace && iter > 0) objs += sse(cached, cents)
       FitResult(cents, iter, objs.result())
     } finally { cached.unpersist(blocking = false) }
   }

@@ -64,8 +64,14 @@ object KMeansOps {
     * winning centroid's coordinates or the distance, so the full
     * variant's extra 2 struct fields × k candidates per row are dead
     * work in the hot loop (~15% of superstep cost at 10M points).
-    * The oracle surface keeps the full [[assign]]. */
-  def assignLabel(points: DataFrame, cents: Seq[Cent]): DataFrame = {
+    * The oracle surface keeps the full [[assign]].
+    *
+    * @param withSq also project the winner's squared distance as
+    *               `sqdist` — the argmin already computed it, so a traced
+    *               fit reads its objective from here instead of running
+    *               a second distance pass */
+  def assignLabel(points: DataFrame, cents: Seq[Cent],
+      withSq: Boolean = false): DataFrame = {
     require(cents.nonEmpty, "assignLabel: empty centroid set")
     val cands = cents.map { c =>
       struct(
@@ -73,7 +79,8 @@ object KMeansOps {
         lit(c.cid).as("cid"))
     }
     val best = if (cands.size == 1) cands.head else least(cands: _*)
-    points.select(col("x"), col("y"), best.getField("cid").as("cid"))
+    val sq = if (withSq) Seq(best.getField("sq").as("sqdist")) else Nil
+    points.select(Seq(col("x"), col("y"), best.getField("cid").as("cid")) ++ sq: _*)
   }
 
   /** Broadcast-hash-join variant for larger k (centroids still fit in an
@@ -173,12 +180,13 @@ object KMeansOps {
   // both engines perform the identical IEEE division.
   // An empty cluster simply produces no group — k can shrink, matching
   // the reference (SURVEY.md §5 edge semantics), unlike MLlib which
-  // keeps the old center.
+  // keeps the old center. `extra` aggregates ride the same k-group pass
+  // (the traced fit's per-cluster objective sums).
   // -----------------------------------------------------------------
-  def recompute(assigned: DataFrame): DataFrame =
+  def recompute(assigned: DataFrame, extra: Column*): DataFrame =
     assigned.groupBy("cid").agg(
       (sum(col("x").cast(Dec)).cast("double") / count(lit(1))).as("x"),
-      (sum(col("y").cast(Dec)).cast("double") / count(lit(1))).as("y"))
+      (sum(col("y").cast(Dec)).cast("double") / count(lit(1))).as("y") +: extra: _*)
 
   /** Double-sum twin of `recompute` for the production fit loop: plain
     * IEEE accumulation (the reference's own arithmetic,
@@ -186,10 +194,10 @@ object KMeansOps {
     * cheaper per row than the per-value BigDecimal conversions the
     * oracle-exact variant pays. Golden replay passes at 1e-9 relative
     * with either path; the oracle-checked queries keep the decimal one. */
-  def recomputeFast(assigned: DataFrame): DataFrame =
+  def recomputeFast(assigned: DataFrame, extra: Column*): DataFrame =
     assigned.groupBy("cid").agg(
       (sum(col("x")) / count(lit(1))).as("x"),
-      (sum(col("y")) / count(lit(1))).as("y"))
+      (sum(col("y")) / count(lit(1))).as("y") +: extra: _*)
 
   def recomputeSql(assignedRel: String): String =
     s"""SELECT cid,
@@ -234,8 +242,20 @@ object KMeansOps {
   // rounding MECHANISM changed.
   def objective(assigned: DataFrame): DataFrame =
     assigned.agg(
-      (sum(round(col("sqdist") * 1e6).cast(DecimalType(38, 0)))
-        .cast("string").cast("double") / 1e6).as("objective"))
+      (sqdistGridSum.cast("string").cast("double") / 1e6).as("objective"))
+
+  /** Σ round(sqdist·1e6) as an exact DECIMAL(38,0): the integer-grid sum
+    * behind [[objective]]. Partial sums of it (one per cluster, from the
+    * Lloyd step's aggregate) add up exactly on the driver, and
+    * [[gridToObjective]] then yields the value `objective` would. */
+  def sqdistGridSum: Column =
+    sum(round(col("sqdist") * 1e6).cast(DecimalType(38, 0)))
+
+  /** Driver-side twin of [[objective]]'s final conversion over partial
+    * [[sqdistGridSum]]s: exact sum, then decimal → string → double and
+    * one divide, the same steps (and so the same double) as the SQL. */
+  def gridToObjective(parts: Seq[java.math.BigDecimal]): Double =
+    parts.foldLeft(java.math.BigDecimal.ZERO)(_ add _).toString.toDouble / 1e6
 
   def objectiveSql(assignedRel: String): String =
     s"SELECT CAST(CAST(SUM(CAST(ROUND(sqdist * 1e6) AS DECIMAL(38,0))) " +

@@ -171,5 +171,93 @@ class KMeansMainSpec extends SparkSpec {
     val p = KMeansMain.parseArgs(Array(
       "-points", "p.csv", "-numcentroids", "8", "-epsilon", "0.5"))
     assert(p == Map("points" -> "p.csv", "numcentroids" -> "8", "epsilon" -> "0.5"))
+    // a negative number is a value, not a flag
+    assert(KMeansMain.parseArgs(Array("-minc", "-15", "-maxc", "15")) ==
+      Map("minc" -> "-15", "maxc" -> "15"))
+    // a typo must not silently run the default 100 iterations
+    val unknown = intercept[IllegalArgumentException](
+      KMeansMain.parseArgs(Array("-points", "p.csv", "-iteration", "5")))
+    assert(unknown.getMessage.contains("-iteration"))
+    // a flag without a value must not swallow the next flag as its value
+    val noValue = intercept[IllegalArgumentException](
+      KMeansMain.parseArgs(Array("-custconvergence", "-epsilon", "0.5")))
+    assert(noValue.getMessage.contains("-custconvergence"))
+    val trailing = intercept[IllegalArgumentException](
+      KMeansMain.parseArgs(Array("-points", "p.csv", "-iterations")))
+    assert(trailing.getMessage.contains("-iterations"))
+  }
+
+  test("paper anchor: the CLI job on in-repo blob points matches a sequential Lloyd") {
+    // Needs no reference download: 4000 deterministic blob points
+    // (8 centres, σ = 0.6, FIXTURES.md §1) through KMeansMain.run with
+    // seeded random init, 10 iterations and all four sinks.
+    val n = 4000; val k = 8; val iters = 10; val seed = 3L
+    val pts = Blobs.points(n, seed = 21)
+    val dir = Files.createTempDirectory("kmeans-anchor")
+    val csv = dir.resolve("points.csv")
+    Files.writeString(csv,
+      pts.map { case (x, y) => s"$x,$y" }.mkString("X,Y\n", "\n", "\n"))
+    def out(name: String) = dir.resolve(name).toString
+    def sink(name: String): Seq[Array[String]] = {
+      val f = Files.list(Paths.get(out(name))).iterator.asScala
+        .filter(_.toString.endsWith(".csv")).toList
+      assert(f.size == 1, s"$name: expected one CSV part")
+      Files.readAllLines(f.head).asScala.toSeq.map(_.split(","))
+    }
+    val args = Map(
+      "points" -> csv.toString, "numcentroids" -> k.toString,
+      "seed" -> seed.toString, "iterations" -> iters.toString,
+      "custconvergence" -> "false")
+    val res = KMeansMain.run(spark, args ++ Map(
+      "pointsout" -> out("pts"), "centroidsout" -> out("cents"),
+      "objfunout" -> out("obj"), "objtraceout" -> out("trace")))
+
+    val obj = sink("obj").head(0).toDouble
+    val trace = sink("trace").map(a => a(0).toInt -> a(1).toDouble)
+    val cents = sink("cents")
+      .map(a => kmeans.Cent(a(0).toInt, a(1).toDouble, a(2).toDouble)).sortBy(_.cid)
+    assert(trace.map(_._1) == (1 to iters))
+    assert(cents == res.centroids)
+    // the objective is the trace's last row, and both are the SSE of the
+    // written centroids recomputed from the input file
+    assert(obj == trace.last._2)
+    val points = Tables.pointsCsv(spark, csv.toString)
+      .withColumn("pid", org.apache.spark.sql.functions.monotonically_increasing_id())
+      .select("pid", "x", "y")
+    assert(obj == kmeans.KMeansFit.sse(points, cents))
+    trace.map(_._2).sliding(2).foreach { case Seq(a, b) =>
+      assert(b <= a, s"trace increased: $a -> $b") }
+
+    // the untraced run computes its objective with its own pass: same value
+    KMeansMain.run(spark, args ++ Map(
+      "pointsout" -> out("pts2"), "centroidsout" -> out("cents2"),
+      "objfunout" -> out("obj2")))
+    assert(sink("obj2").map(_.toSeq) == sink("obj").map(_.toSeq))
+
+    // independent sequential Lloyd in plain doubles: the reference's
+    // java.util.Random init (x then y per centroid, uniform in ±15),
+    // strict-< nearest centroid, empty clusters dropped
+    val rnd = new java.util.Random(seed)
+    var lc: Seq[(Int, Double, Double)] =
+      (0 until k).map(i => (i, -15 + 30 * rnd.nextDouble(), -15 + 30 * rnd.nextDouble()))
+    def nearest(x: Double, y: Double) = lc.minBy { case (cid, cx, cy) =>
+      ((x - cx) * (x - cx) + (y - cy) * (y - cy), cid) }
+    def lloydSse = pts.map { case (x, y) =>
+      val (_, cx, cy) = nearest(x, y); (x - cx) * (x - cx) + (y - cy) * (y - cy) }.sum
+    val lloydTrace = (1 to iters).map { _ =>
+      lc = pts.groupBy { case (x, y) => nearest(x, y)._1 }.toSeq.sortBy(_._1)
+        .map { case (cid, ps) =>
+          (cid, ps.map(_._1).sum / ps.size, ps.map(_._2).sum / ps.size) }
+      lloydSse
+    }
+    def close(a: Double, b: Double) = math.abs(a - b) <= 1e-6 * math.max(1.0, math.abs(b))
+    assert(cents.map(_.cid) == lc.map(_._1))
+    cents.zip(lc).foreach { case (c, (_, x, y)) =>
+      assert(close(c.x, x) && close(c.y, y), s"centroid $c vs ($x, $y)") }
+    trace.map(_._2).zip(lloydTrace).foreach { case (a, b) =>
+      assert(close(a, b), s"trace $a vs $b") }
+    assert(sink("pts").size == n)
+    assert(sink("pts").groupBy(_(0).toInt).map { case (c, r) => c -> r.size } ==
+      pts.groupBy { case (x, y) => nearest(x, y)._1 }.map { case (c, r) => c -> r.size })
   }
 }

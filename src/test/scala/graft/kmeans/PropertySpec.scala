@@ -25,7 +25,7 @@ class PropertySpec extends SparkSpec {
       var cents = init
       var prev = Double.MaxValue
       for (_ <- 1 to 4) {
-        cents = KMeansFit.step(df, cents)
+        cents = KMeansFit.step(df, cents)._1
         val obj = KMeansFit.sse(df, cents)
         assert(obj <= prev + 1e-9, s"objective increased: $prev -> $obj")
         prev = obj

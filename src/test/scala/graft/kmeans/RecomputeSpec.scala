@@ -29,7 +29,7 @@ class RecomputeSpec extends SparkSpec {
     // centroid 2 sits far away and captures no points
     val pts = Seq((1L, 0.0, 0.0), (2L, 1.0, 0.0)).toDF("pid", "x", "y")
     val cents = Seq(Cent(0, 0.0, 0.0), Cent(1, 1.0, 0.0), Cent(2, 1e6, 1e6))
-    val next = KMeansFit.step(pts, cents)
+    val next = KMeansFit.step(pts, cents)._1
     assert(next.map(_.cid).toSet == Set(0, 1))
     assert(next.size == 2)
   }
