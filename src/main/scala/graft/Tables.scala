@@ -142,13 +142,34 @@ object Tables {
     StructField("y", DoubleType, nullable = false)))
 
   /** O1 — CSV points scan; header=true reproduces `ignoreFirstLine`
-    * (KMeans.java:74): line 1 is skipped, never interpreted. */
+    * (KMeans.java:74): line 1 is skipped, never interpreted. Bad input
+    * fails the read (see [[validCsv]]). */
   def pointsCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(pointsCsvSchema).option("header", true).csv(path)
+    validCsv(spark, pointsCsvSchema, path)
 
-  /** O2 — CSV centroids scan (KMeans.java:138-142). */
+  /** O2 — CSV centroids scan (KMeans.java:138-142), validated like
+    * [[pointsCsv]]. */
   def centroidsCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(centroidsCsvSchema).option("header", true).csv(path)
+    validCsv(spark, centroidsCsvSchema, path)
+
+  /** Positional-schema CSV scan that fails instead of guessing. FAILFAST
+    * rejects a bad token, a short row and an extra field (Spark's default
+    * PERMISSIVE mode would turn them into nulls or truncate the row). It
+    * still passes an empty field (null), `NaN` and `±Infinity`, so each
+    * column is also checked per row, in the scan's own projection (no
+    * extra pass): any of those raises an error naming the file and the
+    * column. A silently dropped or null coordinate would otherwise skew
+    * every centroid its row is assigned to. */
+  private def validCsv(spark: SparkSession, schema: StructType, path: String): DataFrame = {
+    val df = spark.read.schema(schema).option("header", true)
+      .option("mode", "FAILFAST").csv(path)
+    df.select(schema.fieldNames.toIndexedSeq.map { name =>
+      val v = col(name)
+      when(v.isNull || isnan(v) || abs(v) === lit(Double.PositiveInfinity),
+        raise_error(lit(s"$path: column $name holds a null (empty), NaN or infinite value")))
+        .otherwise(v).as(name)
+    }: _*)
+  }
 
   /** O15 — single-file, header-less, overwrite CSV sink
     * (KMeans.java:231-233, `setParallelism(1)` + WriteMode.OVERWRITE). */

@@ -10,10 +10,14 @@ import org.apache.spark.sql.functions._
   * fixed expression tree over them yields identical bits on every
   * compliant engine. libm transcendentals carry no such guarantee:
   * Spark's `log()` is `java.lang.StrictMath.log` (fdlibm) while DuckDB
-  * calls the platform libm — measured on this host they disagree by
-  * 1 ulp on 844 of 11 100 inputs across the BM25/tf-idf idf domain
-  * (`graft.tools.LnCheck`). Any raw-`ln` ranking score would therefore
-  * fail a hash-exact cross-engine compare on ~8% of distinct df values.
+  * calls the platform libm — they were measured to disagree by 1 ulp
+  * on 844 of 11 100 inputs across the BM25/tf-idf idf domain. Any
+  * raw-`ln` ranking score would therefore fail a hash-exact
+  * cross-engine compare on ~8% of distinct df values. The functions
+  * below close that gap: `PORTABLE_MATH_PARITY.json` (written by
+  * `graft.tools.PortableMathDump` + `tools/portable_math_parity.py`)
+  * records 0 bit mismatches between the JVM and DuckDB over their
+  * domain.
   *
   * `plog(x)`, for x ≥ 1, uses only correctly-rounded ops:
   *

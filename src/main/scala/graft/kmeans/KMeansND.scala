@@ -112,19 +112,8 @@ object KMeansND {
       .mapPartitions { it =>
         val (cids, m) = bc.value
         it.map { case (id, v) =>
-          val p = v.toArray
-          var bestI = 0; var bestD = Double.MaxValue
-          var i = 0
-          while (i < m.length) {
-            val c = m(i)
-            var d = 0.0; var j = 0
-            while (j < c.length) { val dx = p(j) - c(j); d += dx * dx; j += 1 }
-            // strict < keeps the first (lowest-index) centroid on ties,
-            // matching the 2-D engine / reference KMeans.java:281
-            if (d < bestD) { bestD = d; bestI = i }
-            i += 1
-          }
-          (id, cids(bestI), bestD)
+          val (i, d) = argmin(m, v.toArray)
+          (id, cids(i), d)
         }
       }.toDF("id", "cid", "sqdist")
   }
@@ -144,20 +133,24 @@ object KMeansND {
     points.select(col("id"), col("vec")).as[(Long, Seq[Double])]
       .mapPartitions { it =>
         val (cids, m) = bc.value
-        it.map { case (id, v) =>
-          val p = v.toArray
-          var bestI = 0; var bestD = Double.MaxValue
-          var i = 0
-          while (i < m.length) {
-            val c = m(i)
-            var d = 0.0; var j = 0
-            while (j < c.length) { val dx = p(j) - c(j); d += dx * dx; j += 1 }
-            if (d < bestD) { bestD = d; bestI = i }
-            i += 1
-          }
-          (id, cids(bestI), v)
-        }
+        it.map { case (id, v) => (id, cids(argmin(m, v.toArray)._1), v) }
       }.toDF("id", "cid", "vec")
+  }
+
+  /** Row index in `m` of the centroid nearest to `p`, with its squared
+    * distance. Strict < keeps the first (lowest-index) centroid on ties,
+    * matching the 2-D engine / reference KMeans.java:281. */
+  private def argmin(m: Array[Array[Double]], p: Array[Double]): (Int, Double) = {
+    var bestI = 0; var bestD = Double.MaxValue
+    var i = 0
+    while (i < m.length) {
+      val c = m(i)
+      var d = 0.0; var j = 0
+      while (j < c.length) { val dx = p(j) - c(j); d += dx * dx; j += 1 }
+      if (d < bestD) { bestD = d; bestI = i }
+      i += 1
+    }
+    (bestI, bestD)
   }
 
   // -------------------------------------------------------------------
@@ -165,27 +158,23 @@ object KMeansND {
   // per-(cid, dim) means, re-assemble ordered vectors. One shuffle of
   // k·dim groups. Empty clusters drop (reference semantics).
   // -------------------------------------------------------------------
+
+  /** Decimal-exact mean `m` of the exploded `col` per (cid, pos) group;
+    * the DuckDB twin is the `SUM(CAST(t.v AS DECIMAL(28,6)))` / COUNT(*)
+    * term of `recomputeFlatSql` / `recomputeSql`. */
+  private val posMean: Column =
+    (sum(col("col").cast(Dec)).cast("double") / count(lit(1))).as("m")
+
   def recompute(points: DataFrame, assigned: DataFrame): DataFrame = {
     val joined = points.join(assigned.select("id", "cid"), "id")
     joined
       .select(col("cid"), posexplode(col("vec")))
       .groupBy("cid", "pos")
-      .agg((sum(col("col").cast(Dec)).cast("double") / count(lit(1))).as("m"))
+      .agg(posMean)
       .groupBy("cid")
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
         s => s.getField("m")).as("cvec"))
   }
-
-  /** Mean recompute over a vec-carrying assignment (id, cid, vec) — the
-    * no-join fit-loop path: one explode + one k·dim-group aggregate. */
-  def recomputeDirect(assignedVec: DataFrame): DataFrame =
-    assignedVec
-      .select(col("cid"), posexplode(col("vec")))
-      .groupBy("cid", "pos")
-      .agg((sum(col("col").cast(Dec)).cast("double") / count(lit(1))).as("m"))
-      .groupBy("cid")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-        s => s.getField("m")).as("cvec"))
 
   /** Flattened recompute — (cid, pos, m) scalar rows — used by the
     * verified query surface (array-typed result columns don't survive
@@ -195,7 +184,7 @@ object KMeansND {
     points.join(assigned.select("id", "cid"), "id")
       .select(col("cid"), posexplode(col("vec")))
       .groupBy("cid", "pos")
-      .agg((sum(col("col").cast(Dec)).cast("double") / count(lit(1))).as("m"))
+      .agg(posMean)
 
   def recomputeFlatSql(ptsRel: String = "ptsnd", assignedRel: String = "assignednd"): String =
     s"""SELECT a.cid, t.pos,
@@ -272,7 +261,7 @@ object KMeansND {
       var go = maxIter > 0
       while (go) {
         // One shuffle per iteration, k·dim flat rows collected, vectors
-        // assembled driver-side (r16): the previous recomputeDirect +
+        // assembled driver-side (r16): the previous vec-carrying recompute +
         // collect ran a SECOND shuffle (groupBy(cid) + collect_list)
         // whose only purpose was array assembly the driver can do on
         // ≤ k·dim rows. Same (cid, pos) decimal-exact means, same
@@ -281,7 +270,7 @@ object KMeansND {
         val flat = assignKernelVec(cached, cents)
           .select(col("cid"), posexplode(col("vec")))
           .groupBy("cid", "pos")
-          .agg((sum(col("col").cast(Dec)).cast("double") / count(lit(1))).as("m"))
+          .agg(posMean)
           .collect()
         val next = flat.groupBy(_.getInt(0)).map { case (cid, rows) =>
           CentND(cid, rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toIndexedSeq)

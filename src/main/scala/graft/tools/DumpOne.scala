@@ -5,11 +5,7 @@ package graft.tools
 object DumpOne {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, names @ _*) = args.toSeq.toArray[String]
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]").config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.create("DumpOne", cores = 8)
     names.foreach { n =>
       graft.SparkEntry.queries(n)(spark, sfDir)
         .write.mode("overwrite").parquet(s"$outDir/$n.parquet")

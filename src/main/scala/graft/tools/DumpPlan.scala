@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan dumper for the optimization-round evidence files:
@@ -20,14 +19,8 @@ object DumpPlan {
     val suffix = args(2)
     val names = args.drop(3).toSeq
     outDir.mkdirs()
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.create("DumpPlan", cores = 8,
+      conf = Map("spark.sql.adaptive.enabled" -> "false"))
     var failed = List.empty[String]
     names.foreach { name =>
       val out = new java.io.File(outDir, s"${name}_$suffix.txt")

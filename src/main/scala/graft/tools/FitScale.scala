@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -15,12 +14,7 @@ object FitScale {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(100000000L)
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.create("FitScale", cores = 32)
 
     val path = s"target/bench_points_${rows}.parquet"
     if (!new java.io.File(path, "_SUCCESS").exists()) {

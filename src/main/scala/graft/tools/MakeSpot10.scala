@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf10 spot fixture (r13 verdict item 8): the three tables the heavy
@@ -25,13 +25,7 @@ object MakeSpot10 {
     val src = args.headOption.getOrElse("target/sf1")
     val out = args.lift(1).getOrElse("target/sf10")
     val reps = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.create("MakeSpot10", cores = 16)
     new java.io.File(out).mkdirs()
 
     def stride(df: DataFrame, c: String): Long =

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan audit: runMain graft.tools.PlanAudit <sfDir> [query...]
   * — prints unique Exchange / BroadcastExchange counts and whether the
   * plan contains a Window or TakeOrderedAndProject, per registered
@@ -12,16 +10,10 @@ object PlanAudit {
     val names =
       if (args.length > 1) args.tail.toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      // static audit: disable AQE so the executed plan is a plain tree
-      // (AdaptiveSparkPlanExec hides its inner plan from collect)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // static audit: disable AQE so the executed plan is a plain tree
+    // (AdaptiveSparkPlanExec hides its inner plan from collect)
+    val spark = graft.Sessions.create("PlanAudit", cores = 8,
+      conf = Map("spark.sql.adaptive.enabled" -> "false"))
     names.foreach { name =>
       try {
         val physical = graft.SparkEntry.queries(name)(spark, sfDir)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc timing probe for individual registered queries:
   * runMain graft.tools.Probe <sfDir> <query> [query...] — times each
   * query end-to-end through the same noop sink as Bench. Pass `@all`
@@ -17,16 +15,9 @@ object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names0 = args.tail
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val out = sys.env.get("SPARK_GRAFT_PROBE_OUT")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Sessions.envCores
+    val spark = graft.Sessions.create("Probe")
     val names =
       if (names0.sameElements(Array("@all"))) SparkEntryNames.all
       else names0.toSeq

@@ -106,13 +106,7 @@ object RecallBench {
   /** Standalone runner: runMain graft.tools.RecallBench [sfDir] */
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.create("RecallBench")
     run(spark, sfDir).foreach { r =>
       println(f"RECALL ${r.name}%-22s metric=${r.metric}%-6s " +
         f"recall@10=${r.recall}%.2f (${r.sec}%.1f s)" +

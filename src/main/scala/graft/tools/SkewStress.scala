@@ -92,13 +92,7 @@ object SkewStress {
   /** Standalone runner: runMain graft.tools.SkewStress [sfDir] */
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.create("SkewStress")
     run(spark, sfDir).foreach { r =>
       println(f"SKEW ${r.name}%-20s base=${r.baseSec}%6.2f s " +
         f"skew=${r.skewSec}%6.2f s ratio=${r.skewSec / math.max(r.baseSec, 1e-9)}%5.2f" +

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf10 spot board (r13 verdict item 8): time the heaviest operator
@@ -24,16 +24,9 @@ import org.apache.spark.sql.functions._
 object Spot10 {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("target/sf10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val out = sys.env.getOrElse("SPARK_GRAFT_SPOT_OUT", "SF10_SPOT.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Sessions.envCores
+    val spark = graft.Sessions.create("Spot10")
 
     // SPARK_GRAFT_SPOT_ONLY=a,b runs a row subset; its rows MERGE into
     // the existing JSON at `out` in code (r15 advice: the old behavior

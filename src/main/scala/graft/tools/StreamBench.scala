@@ -155,14 +155,7 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.create("StreamBench")
     run(spark, sfDir).foreach { r =>
       println(f"STREAMBENCH ${r.name}%-14s ${r.sec}%7.2f s  ${r.rows}%7d rows" +
         f"  ${if (r.sec > 0) r.rows / r.sec else 0.0}%9.0f rows/s" +

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Attribute a streaming query's replay cost to the STATE machinery vs
   * the memory sink's driver-side collection: run the transformWithState
   * operators against a `noop` streaming sink (distributed, nothing
@@ -14,13 +12,9 @@ object StreamSinkProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("target/sf10")
     val ops = if (args.length > 1) args.tail.toSeq else Seq("seqnum", "sessions")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.create("StreamSinkProbe", cores = 32, conf = Map(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
     ops.foreach { op =>
       val t0 = System.nanoTime()
       val df = op match {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.kmeans._
 
 /** Automated analog of the reference's benchmark sweep scripts
@@ -31,14 +30,7 @@ object SweepReplay {
     val outDir = args.lift(2).getOrElse(s"target/sweep/$mode")
     val execs = args.lift(3).map(_.toInt).getOrElse(3)
     val iters = args.lift(4).map(_.toInt).getOrElse(30)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.create("SweepReplay")
 
     import org.apache.spark.sql.functions._
     val points = graft.Tables.pointsCsv(spark, s"$refDir/input/points.csv")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Operating-point scout for the r16 recall-targeted ANN defaults
@@ -15,13 +15,7 @@ object TuneAnn {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.create("TuneAnn")
     val embs = graft.Tables.table(spark, sfDir, "embeddings")
     val n = embs.count()
     println(s"TUNE n=$n autoBits=${graft.ops.EmbeddingOps.autoBits(n)} " +

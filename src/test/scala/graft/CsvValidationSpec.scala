@@ -1,0 +1,72 @@
+package graft
+
+import java.nio.file.Files
+
+/** The CSV readers reject input that would silently skew a fit: Spark's
+  * default PERMISSIVE mode turns a bad token or a short row into nulls,
+  * truncates an extra field, and passes NaN and ±Infinity, and a null or
+  * NaN coordinate biases the mean of whatever cluster its row lands in.
+  * Each case below must fail the read; a clean file still reads. */
+class CsvValidationSpec extends SparkSpec {
+
+  private val dir = Files.createTempDirectory("graft-csv-validation")
+
+  private def csv(name: String, lines: String*): String = {
+    val f = dir.resolve(name.replaceAll("[^A-Za-z0-9]", "_") + ".csv")
+    Files.writeString(f, lines.mkString("", "\n", "\n"))
+    f.toString
+  }
+
+  /** Messages of `e` and its causes, outermost first. */
+  private def messages(e: Throwable): List[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toList
+
+  // (case, bad x value or row) — the bad row sits between two good ones,
+  // the ROADMAP probe's shape: (10,10), (12,12) plus one bad row
+  private val badRows = Seq(
+    "bad token" -> "abc,1.0",
+    "short row" -> "1.0",
+    "extra field" -> "1.0,2.0,3.0",
+    "empty field" -> ",1.0",
+    "NaN" -> "NaN,1.0",
+    "Infinity" -> "Infinity,1.0",
+    "-Infinity" -> "-Infinity,1.0")
+
+  // the value checks name the file and the column
+  private val checked = Set("empty field", "NaN", "Infinity", "-Infinity")
+
+  badRows.foreach { case (label, row) =>
+    test(s"pointsCsv rejects a row with: $label") {
+      val path = csv(s"points_$label", "X,Y", "10.0,10.0", row, "12.0,12.0")
+      val e = intercept[Exception](Tables.pointsCsv(spark, path).collect())
+      if (checked(label))
+        assert(messages(e).exists(m => m.contains(path) && m.contains("column x")),
+          messages(e).mkString(" / "))
+    }
+
+    test(s"centroidsCsv rejects a row with: $label") {
+      val path = csv(s"cents_$label", "Cluster,X,Y", "0,10.0,10.0", s"1,$row", "2,12.0,12.0")
+      val e = intercept[Exception](Tables.centroidsCsv(spark, path).collect())
+      if (checked(label))
+        assert(messages(e).exists(m => m.contains(path) && m.contains("column x")),
+          messages(e).mkString(" / "))
+    }
+  }
+
+  test("centroidsCsv rejects an empty cluster id") {
+    val path = csv("cents_empty_cid", "Cluster,X,Y", "0,10.0,10.0", ",1.0,2.0")
+    val e = intercept[Exception](Tables.centroidsCsv(spark, path).collect())
+    assert(messages(e).exists(m => m.contains(path) && m.contains("column cid")))
+  }
+
+  test("clean files read unchanged") {
+    val pts = csv("points_clean", "X,Y", "10.0,10.0", "-1.5,2.25e3", "12.0,12.0")
+    assert(Tables.pointsCsv(spark, pts).collect().map(r => (r.getDouble(0), r.getDouble(1))).toSeq ==
+      Seq((10.0, 10.0), (-1.5, 2250.0), (12.0, 12.0)))
+    val cents = csv("cents_clean", "Cluster,X,Y", "0,10.0,10.0", "1,-0.5,3.0")
+    assert(Tables.centroidsCsv(spark, cents).collect()
+      .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2))).toSeq ==
+      Seq((0, 10.0, 10.0), (1, -0.5, 3.0)))
+  }
+}

@@ -15,6 +15,9 @@ the oracle's output surface, and this audit keeps the class extinct.
 Usage: python3 tools/oracle_type_audit.py <sfDir> <oracle_sql.json> \
            [--report out.json]
 
+<oracle_sql.json> is the file `graft.Verify <sfDir> <outDir>` writes to
+<outDir>/oracle_sql.json (every registered query's DuckDB oracle SQL).
+
 Exit 1 iff any oracle output column DESCRIBEs as HUGEINT/UHUGEINT.
 DECIMAL outputs are reported as warnings only: pandas renders DECIMAL
 as float64 too, which matches a Spark double column's rendering, and
