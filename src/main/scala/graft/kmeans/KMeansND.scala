@@ -211,9 +211,13 @@ object KMeansND {
       CentND(i, r.getSeq[Double](r.fieldIndex("vec")))
     }.toSeq
 
-  /** Lloyd fit with the mapPartitions kernel; same loop contract as the
-    * 2-D `KMeansFit.fit` (strict >tol displacement, empty-cluster drop,
-    * points cached once). */
+  /** Lloyd fit with the mapPartitions assignment kernel: strict >tol
+    * displacement, empty-cluster drop, points cached once — the 2-D
+    * `KMeansFit.fit` contract. The loop itself differs: each superstep
+    * here is a DataFrame query (kernel assignment, then the decimal
+    * `recompute` aggregate and its shuffle) over a cached DataFrame,
+    * where the 2-D fit runs one shuffle-free job over cached
+    * coordinate arrays. */
   def fit(points: DataFrame, init: Seq[CentND], maxIter: Int, tol: Double = 0.0,
       convergence: Boolean = true, numRows: Long = -1L): (Seq[CentND], Int) = {
     val spark = points.sparkSession

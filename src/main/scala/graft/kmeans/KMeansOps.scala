@@ -2,7 +2,7 @@ package graft.kmeans
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{Decimal, DecimalType}
 
 /** A 2-D centroid (reference `Centroid extends Point`, KMeans.java:406-430 —
   * immutable here; the reference's in-place `Point.sum/div` mutation is a
@@ -40,9 +40,11 @@ object KMeansOps {
 
   /** Broadcast-argmin as a pure projection: the k centroids are folded
     * into a `least(struct(sqdist, cid, cx, cy))` expression. ZERO shuffle,
-    * whole-stage-codegen'd, scales linearly with input — this is the
-    * 100 TB path for small k (the centroid set plays the role of the
-    * reference's broadcast variable, KMeans.java:159). */
+    * whole-stage-codegen'd, scales linearly with input (the centroid set
+    * plays the role of the reference's broadcast variable,
+    * KMeans.java:159). This is the oracle-gated assignment; the fit
+    * loop runs the same argmin inside `KMeansFit`'s kernel, which
+    * KernelParitySpec pins against it. */
   def assign(points: DataFrame, cents: Seq[Cent]): DataFrame = {
     require(cents.nonEmpty, "assign: empty centroid set")
     val cands = cents.map { c =>
@@ -56,31 +58,6 @@ object KMeansOps {
       .select(col("pid"), col("x"), col("y"),
         col("best.cid").as("cid"), col("best.cx").as("cx"),
         col("best.cy").as("cy"), col("best.sq").as("sqdist"))
-  }
-
-  /** Label-only assignment for the fit loop: same argmin and tie-break
-    * as [[assign]], but the candidate structs carry only (sq, cid) and
-    * the output only (x, y, cid) — the mean recompute never reads the
-    * winning centroid's coordinates or the distance, so the full
-    * variant's extra 2 struct fields × k candidates per row are dead
-    * work in the hot loop (~15% of superstep cost at 10M points).
-    * The oracle surface keeps the full [[assign]].
-    *
-    * @param withSq also project the winner's squared distance as
-    *               `sqdist` — the argmin already computed it, so a traced
-    *               fit reads its objective from here instead of running
-    *               a second distance pass */
-  def assignLabel(points: DataFrame, cents: Seq[Cent],
-      withSq: Boolean = false): DataFrame = {
-    require(cents.nonEmpty, "assignLabel: empty centroid set")
-    val cands = cents.map { c =>
-      struct(
-        sqDist(col("x"), col("y"), lit(c.x), lit(c.y)).as("sq"),
-        lit(c.cid).as("cid"))
-    }
-    val best = if (cands.size == 1) cands.head else least(cands: _*)
-    val sq = if (withSq) Seq(best.getField("sq").as("sqdist")) else Nil
-    points.select(Seq(col("x"), col("y"), best.getField("cid").as("cid")) ++ sq: _*)
   }
 
   /** Broadcast-hash-join variant for larger k (centroids still fit in an
@@ -180,24 +157,14 @@ object KMeansOps {
   // both engines perform the identical IEEE division.
   // An empty cluster simply produces no group — k can shrink, matching
   // the reference (SURVEY.md §5 edge semantics), unlike MLlib which
-  // keeps the old center. `extra` aggregates ride the same k-group pass
-  // (the traced fit's per-cluster objective sums).
+  // keeps the old center. The oracle-gated recompute; `KMeansFit`'s
+  // kernel repeats its arithmetic per partition and is pinned against
+  // it (KernelParitySpec).
   // -----------------------------------------------------------------
-  def recompute(assigned: DataFrame, extra: Column*): DataFrame =
+  def recompute(assigned: DataFrame): DataFrame =
     assigned.groupBy("cid").agg(
       (sum(col("x").cast(Dec)).cast("double") / count(lit(1))).as("x"),
-      (sum(col("y").cast(Dec)).cast("double") / count(lit(1))).as("y") +: extra: _*)
-
-  /** Double-sum twin of `recompute` for the production fit loop: plain
-    * IEEE accumulation (the reference's own arithmetic,
-    * KMeans.java:311-336) — order-dependent in the last ~ulp but far
-    * cheaper per row than the per-value BigDecimal conversions the
-    * oracle-exact variant pays. Golden replay passes at 1e-9 relative
-    * with either path; the oracle-checked queries keep the decimal one. */
-  def recomputeFast(assigned: DataFrame, extra: Column*): DataFrame =
-    assigned.groupBy("cid").agg(
-      (sum(col("x")) / count(lit(1))).as("x"),
-      (sum(col("y")) / count(lit(1))).as("y") +: extra: _*)
+      (sum(col("y").cast(Dec)).cast("double") / count(lit(1))).as("y"))
 
   def recomputeSql(assignedRel: String): String =
     s"""SELECT cid,
@@ -245,17 +212,16 @@ object KMeansOps {
       (sqdistGridSum.cast("string").cast("double") / 1e6).as("objective"))
 
   /** Σ round(sqdist·1e6) as an exact DECIMAL(38,0): the integer-grid sum
-    * behind [[objective]]. Partial sums of it (one per cluster, from the
-    * Lloyd step's aggregate) add up exactly on the driver, and
-    * [[gridToObjective]] then yields the value `objective` would. */
+    * behind [[objective]]. `KMeansFit`'s kernel sums the same grid per
+    * partition, and [[gridToObjective]] then yields the value
+    * `objective` would. */
   def sqdistGridSum: Column =
     sum(round(col("sqdist") * 1e6).cast(DecimalType(38, 0)))
 
-  /** Driver-side twin of [[objective]]'s final conversion over partial
-    * [[sqdistGridSum]]s: exact sum, then decimal → string → double and
-    * one divide, the same steps (and so the same double) as the SQL. */
-  def gridToObjective(parts: Seq[java.math.BigDecimal]): Double =
-    parts.foldLeft(java.math.BigDecimal.ZERO)(_ add _).toString.toDouble / 1e6
+  /** Driver-side twin of [[objective]]'s final conversion of the exact
+    * DECIMAL(38,0) grid sum: decimal → string → double and one divide,
+    * the same steps (and so the same double) as the SQL. */
+  def gridToObjective(total: Decimal): Double = total.toString.toDouble / 1e6
 
   def objectiveSql(assignedRel: String): String =
     s"SELECT CAST(CAST(SUM(CAST(ROUND(sqdist * 1e6) AS DECIMAL(38,0))) " +

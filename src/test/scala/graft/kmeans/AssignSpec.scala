@@ -67,17 +67,4 @@ class AssignSpec extends SparkSpec {
       .select("cid").as[Int].collect().toSet
     assert(got == Set(7))
   }
-
-  test("assignLabel matches assign's labels and plans as a pure codegen projection") {
-    val full = KMeansOps.assign(pts, cents)
-      .select("x", "y", "cid").as[(Double, Double, Int)].collect().toSet
-    val lean = KMeansOps.assignLabel(pts, cents)
-      .as[(Double, Double, Int)].collect().toSet
-    assert(lean == full)
-    // the fit loop's hot path must stay a zero-shuffle codegen'd scan
-    val plan = KMeansOps.assignLabel(pts, cents)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"shuffle crept into assignLabel:\n$plan")
-    assert(!plan.contains("CodegenFallback"), s"fallback in assignLabel:\n$plan")
-  }
 }

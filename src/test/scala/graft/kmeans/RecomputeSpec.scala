@@ -45,27 +45,6 @@ class RecomputeSpec extends SparkSpec {
     assert(a.getLong(3) == 1000L && b.getLong(3) == 1000L)
   }
 
-  test("fast double-sum recompute agrees with the decimal-exact path to 1e-12") {
-    val vals = Seq.tabulate(5000)(i =>
-      (i.toLong, 1e6 + math.sin(i) * 1e3, math.cos(i) * 1e4, i % 7))
-      .toDF("pid", "x", "y", "cid")
-    val exact = KMeansOps.recompute(vals).collect()
-      .map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    val fast = KMeansOps.recomputeFast(vals).collect()
-      .map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    assert(exact.keySet == fast.keySet)
-    // tolerance scales with the magnitude of the summed TERMS, not the
-    // mean — the y terms (±1e4) cancel to a near-zero mean, so n·eps
-    // rounding shows up as ~1e-8 absolute there
-    val xTol = 1e6 * 1e-10
-    val yTol = 1e4 * 1e-10
-    exact.foreach { case (cid, (ex, ey)) =>
-      val (fx, fy) = fast(cid)
-      assert(math.abs(fx - ex) <= xTol, s"cid=$cid x: $fx vs $ex")
-      assert(math.abs(fy - ey) <= yTol, s"cid=$cid y: $fy vs $ey")
-    }
-  }
-
   test("countAppend seeds every row with count 1") {
     val assigned = Seq((1L, 0.0, 0.0, 0), (2L, 2.0, 4.0, 1)).toDF("pid", "x", "y", "cid")
     val got = KMeansOps.countAppend(assigned).as[(Long, Int, Long)].collect()
