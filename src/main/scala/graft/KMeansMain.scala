@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.kmeans._
 
@@ -28,10 +28,22 @@ import graft.kmeans._
   *                        count to build this table, scripts/
   *                        script_3.sh:18-42; we emit it from one run)
   *
-  * Sinks are single-file headerless overwrite CSV (O15); with no
-  * out-paths the results print to stdout (O16, KMeans.java:143,243-245).
-  * Every flag takes exactly one value; an unknown flag or a flag without
-  * a value is rejected rather than silently falling back to a default.
+  * Sinks are single-file headerless overwrite CSV (O15). The points
+  * sink, the one that grows with the data, is written by Spark
+  * (`Tables.writeCsvSingle`); the trace, the centroids, the objective
+  * and the `-centroids` echo are a few driver-held rows, which the
+  * driver writes itself (`Tables.writeCsvRows`) without a Spark job.
+  * `-pointsout`, `-centroidsout` and `-objfunout` come together: with
+  * none of them the centroids and the objective print to stdout (O16,
+  * KMeans.java:143,243-245).
+  *
+  * Every flag takes exactly one value. [[run]] raises an
+  * `IllegalArgumentException` naming the flag, before any Spark work,
+  * rather than fall back to a default or skip a sink: an unknown flag,
+  * a flag without a value, a missing `-points`, neither `-centroids`
+  * nor `-numcentroids`, a value that does not parse as the flag's type
+  * (`-iterations ten`, `-custconvergence yes`), or only some of the
+  * three result sinks.
   */
 object KMeansMain {
 
@@ -66,15 +78,27 @@ object KMeansMain {
   }
 
   def run(spark: SparkSession, p: Map[String, String]): FitResult = {
+    def arg[T](name: String, default: String)(parse: String => T): T = {
+      val v = p.getOrElse(name, default)
+      try parse(v) catch { case _: IllegalArgumentException =>
+        throw new IllegalArgumentException(s"flag -$name: cannot parse '$v'") }
+    }
+    require(p.contains("points"), "flag -points is required")
+    require(p.contains("centroids") || p.contains("numcentroids"),
+      "one of -centroids or -numcentroids is required")
+    val sinks = Seq("pointsout", "centroidsout", "objfunout")
+    require(sinks.forall(p.contains) || !sinks.exists(p.contains),
+      "flags -pointsout -centroidsout -objfunout come together; missing: " +
+        sinks.filterNot(p.contains).map("-" + _).mkString(" "))
     val cfg = KMeansConfig(
-      k = p.getOrElse("numcentroids", "6").toInt,
-      maxIter = p.getOrElse("iterations", "100").toInt,
-      tol = p.getOrElse("epsilon", "0").toDouble,
-      convergence = p.getOrElse("custconvergence", "false").toBoolean,
-      minC = p.getOrElse("minc", "-15").toDouble,
-      maxC = p.getOrElse("maxc", "15").toDouble,
-      recompNearest = p.getOrElse("recompnearest", "0").toInt,
-      seed = p.getOrElse("seed", "42").toLong)
+      k = arg("numcentroids", "6")(_.toInt),
+      maxIter = arg("iterations", "100")(_.toInt),
+      tol = arg("epsilon", "0")(_.toDouble),
+      convergence = arg("custconvergence", "false")(_.toBoolean),
+      minC = arg("minc", "-15")(_.toDouble),
+      maxC = arg("maxc", "15")(_.toDouble),
+      recompNearest = arg("recompnearest", "0")(_.toInt),
+      seed = arg("seed", "42")(_.toLong))
 
     val points = Tables.pointsCsv(spark, p("points"))
       .withColumn("pid", monotonically_increasing_id())
@@ -87,8 +111,7 @@ object KMeansMain {
     val init: Seq[Cent] =
       if (p.contains("numcentroids")) {
         val cents = KMeansFit.randomInit(cfg)
-        p.get("centroids").foreach(path =>
-          Tables.writeCsvSingle(Tables.centroidsDF(spark, cents), path))
+        p.get("centroids").foreach(Tables.writeCsvRows(spark, cents, _))
         cents
       } else {
         Tables.centroidsCsv(spark, p("centroids")).collect()
@@ -98,7 +121,6 @@ object KMeansMain {
 
     val traced = p.contains("objtraceout")
     val res = KMeansFit.fit(points, init, cfg, trace = traced)
-    val assigned = KMeansOps.assign(points, res.centroids)
     // A trace's last entry IS the SSE against the final centroids (the
     // fit computes it exactly as `sse` does, over its cached points), so
     // a traced run takes the objective from it instead of re-scanning
@@ -107,27 +129,17 @@ object KMeansMain {
       if (traced && res.objTrace.nonEmpty) res.objTrace.last
       else KMeansFit.sse(points, res.centroids)
 
-    p.get("objtraceout").foreach { path =>
-      import spark.implicits._
-      val trace = res.objTrace.zipWithIndex
-        .map { case (obj, i) => (i + 1, obj) }
-      Tables.writeCsvSingle(trace.toDF("iter", "objval"), path)
-    }
-
-    val pointsOut = assigned.select("cid", "x", "y")
-    val centsOut = Tables.centroidsDF(spark, res.centroids)
-    val objOut = {
-      import spark.implicits._
-      Seq(objective).toDF("objective")
-    }
+    p.get("objtraceout").foreach(Tables.writeCsvRows(spark,
+      res.objTrace.zipWithIndex.map { case (obj, i) => (i + 1, obj) }, _))
 
     (p.get("pointsout"), p.get("centroidsout"), p.get("objfunout")) match {
       case (Some(po), Some(co), Some(oo)) =>
-        Tables.writeCsvSingle(pointsOut, po)
-        Tables.writeCsvSingle(centsOut, co)
-        Tables.writeCsvSingle(objOut, oo)
+        Tables.writeCsvSingle(
+          KMeansOps.assign(points, res.centroids).select("cid", "x", "y"), po)
+        Tables.writeCsvRows(spark, res.centroids, co)
+        Tables.writeCsvRows(spark, Seq(Tuple1(objective)), oo)
       case _ =>
-        Tables.printSink(centsOut)
+        Tables.printSink(Tables.centroidsDF(spark, res.centroids))
         println(s"objective: $objective")
     }
     println(s"iterations run: ${res.iterations}")

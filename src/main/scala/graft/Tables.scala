@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -172,9 +173,39 @@ object Tables {
   }
 
   /** O15 — single-file, header-less, overwrite CSV sink
-    * (KMeans.java:231-233, `setParallelism(1)` + WriteMode.OVERWRITE). */
+    * (KMeans.java:231-233, `setParallelism(1)` + WriteMode.OVERWRITE),
+    * written by Spark: one job, for a relation that grows with the data
+    * (the paper job's points sink). Rows already on the driver go
+    * through [[writeCsvRows]] instead. */
   def writeCsvSingle(df: DataFrame, path: String): Unit =
     df.coalesce(1).write.mode("overwrite").option("header", false).csv(path)
+
+  /** O15 for rows held on the driver (a trace, centroids, an objective):
+    * the same sink as [[writeCsvSingle]] without a Spark job. Writes
+    * `path/part-00000.csv` and then an empty `_SUCCESS` through Hadoop's
+    * `FileSystem`, so every scheme Spark's writer accepts works, after
+    * deleting whatever `path` held. Each row is one `\n`-terminated line
+    * of its fields joined by `,`, an `Int` or `Double` rendered
+    * by `toString` as Spark's CSV writer renders it (`1.0E-7`, `-0.0`,
+    * `NaN`), so the part file is byte-identical to Spark's. Zero rows
+    * give an empty part file.
+    * @throws IllegalArgumentException for a field of any other type */
+  def writeCsvRows(spark: SparkSession, rows: Seq[Product], path: String): Unit = {
+    val text = rows.map(_.productIterator.map {
+      case v @ (_: Int | _: Double) => v.toString
+      case v => throw new IllegalArgumentException(
+        s"writeCsvRows: unsupported field $v (${v.getClass.getName})")
+    }.mkString("", ",", "\n")).mkString
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(dir, true)
+    def create(name: String, bytes: Array[Byte]): Unit = {
+      val out = fs.create(new Path(dir, name), false)
+      try out.write(bytes) finally out.close()
+    }
+    create("part-00000.csv", text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    create("_SUCCESS", Array.emptyByteArray)
+  }
 
   /** O15∘O1 composed for the oracle gate: single-file header-less CSV
     * write, then a positional-schema read-back of the same directory.

@@ -137,15 +137,75 @@ object KMeansFit {
   private def unscaled(v: Double, p: Int, s: Int): BigInteger =
     decimal(Decimal(v), p, s).toJavaBigDecimal.unscaledValue
 
+  /** [[halfUp]]'s answer when `t` cannot decide the rounding. */
+  private[kmeans] final val Undecided = Long.MinValue
+
+  /** Largest |t| [[halfUp]] decides: below 2^50 its tie guard stays
+    * under 1/2. */
+  private val FastBound = 1.125899906842624e15 // 2^50
+
+  /** The HALF_UP rounding to an integer of the decimal number `t` stands
+    * for, or [[Undecided]]. `t` is the double product `v·1e6` of a
+    * coordinate `v`, standing for the decimal `Double.toString(v)`·1e6
+    * that `Decimal(v)` scales (JDK 17's `toString` round-trips but is not
+    * always shortest, so that decimal is only known to lie within
+    * ulp(v)/2 of `v`), or the objective's `sq·1e6`, standing for
+    * `BigDecimal.valueOf(sq·1e6)`. Either decimal lies within
+    * 1.5·ulp(t) < |t|·2^-51 of `t`, so when the fraction of |t| is
+    * farther than that from 1/2, no half-integer lies between them and
+    * both round alike; otherwise (a near tie, |t| ≥ 2^50, NaN) the
+    * caller falls back to the `Decimal` conversion. */
+  private[kmeans] def halfUp(t: Double): Long = {
+    val a = math.abs(t)
+    if (!(a < FastBound)) return Undecided
+    val f = math.floor(a)
+    val frac = a - f // exact below 2^52
+    if (math.abs(frac - 0.5) <= a * 4.440892098500626e-16) return Undecided // 2^-51
+    val r = f.toLong + (if (frac > 0.5) 1L else 0L)
+    if (t < 0) -r else r
+  }
+
+  /** The unscaled DECIMAL(28,6) value of coordinate `v`: [[halfUp]] of
+    * `v·1e6`, else Spark's `Decimal` cast. */
+  private[kmeans] def micros(v: Double): BigInteger = {
+    val u = halfUp(v * 1e6)
+    if (u != Undecided) BigInteger.valueOf(u) else unscaled(v, 28, 6)
+  }
+
+  /** The objective's grid value of a squared distance: round(sq·1e6) as
+    * DECIMAL(38,0), the steps of `KMeansOps.sqdistGridSum` (HALF_UP of
+    * the double's decimal, back to double, cast). */
+  private[kmeans] def gridValue(sq: Double): BigInteger = {
+    val t = sq * 1e6
+    val u = halfUp(t)
+    if (u != Undecided) BigInteger.valueOf(u)
+    else unscaled(java.math.BigDecimal.valueOf(t).setScale(0, RoundingMode.HALF_UP).doubleValue, 38, 0)
+  }
+
+  /** Adds `u` to `longs(i)`. A sum that would overflow a `Long` first
+    * moves the slot's value into `bigs(i)`, so `bigs(i) + longs(i)` is
+    * always the exact total. */
+  private[kmeans] def addSpilling(longs: Array[Long], bigs: Array[BigInteger], i: Int, u: Long): Unit = {
+    val s = longs(i)
+    val r = s + u
+    if (((s ^ r) & (u ^ r)) < 0) { // the signs of s and u both differ from r's
+      bigs(i) = bigs(i).add(BigInteger.valueOf(s))
+      longs(i) = u
+    } else longs(i) = r
+  }
+
   /** One task's k cluster slots, indexed like the cid-sorted centroids:
     * point count, coordinate sums (plain doubles on the fast path,
-    * unscaled DECIMAL(28,6) on the exact one) and, when traced, the
-    * partition's objective grid sum. */
+    * unscaled DECIMAL(28,6) on the exact one, each a `Long` part that
+    * spills into a `BigInteger` part) and, when traced, the partition's
+    * objective grid sum (slot 0 of `lg`/`ug`). */
   private final class Slots(k: Int) extends Serializable {
     val n = new Array[Long](k)
     val sx, sy = new Array[Double](k)
+    val lx, ly = new Array[Long](k)
     val ux, uy = Array.fill(k)(BigInteger.ZERO)
-    var grid = BigInteger.ZERO
+    val lg = new Array[Long](1)
+    val ug = Array(BigInteger.ZERO)
   }
 
   /** One Lloyd step over `points`: assign each point to its nearest
@@ -173,10 +233,23 @@ object KMeansFit {
     * the argmin scans the centroids in cid order and keeps the first
     * strictly smaller squared distance (the `least(struct(sq, cid))`
     * tie-break toward the lowest cid); the exact path converts each
-    * coordinate to DECIMAL(28,6) with Spark's own `Decimal`, sums the
-    * unscaled values exactly and divides `Decimal.toDouble` of the
-    * DECIMAL(38,6) sum by the count; the objective sums
-    * round(sq·1e6) as DECIMAL(38,0) like `KMeansOps.sqdistGridSum`.
+    * coordinate to its unscaled DECIMAL(28,6) value, sums those exactly
+    * and divides `Decimal.toDouble` of the DECIMAL(38,6) sum by the
+    * count; the objective sums round(sq·1e6) as DECIMAL(38,0) like
+    * `KMeansOps.sqdistGridSum`.
+    *
+    * Both conversions run on primitive arithmetic ([[halfUp]]: floor
+    * `v·1e6` and compare the fraction with 1/2) whenever |v·1e6| < 2^50
+    * and the fraction is farther from a HALF_UP tie than the error of
+    * the product and of `Double.toString` can reach. Anything else — a
+    * near tie, a larger value, an overflow that must raise — falls back
+    * to Spark's own `Decimal` cast, so each value equals the cast's
+    * exactly. The unscaled values sum into `Long` slots that spill into
+    * `BigInteger` ones before they overflow. They are recomputed on
+    * every step rather than cached beside the coordinates: at 16 B per
+    * point that would double the fit's cache, and the conversion costs
+    * a few nanoseconds.
+    *
     * The `collect` stays in this method: the benchmark attributes a job
     * to the innermost repository frame of its call site. */
   private[kmeans] def step(coords: RDD[Coords], cents: Seq[Cent], exact: Boolean,
@@ -205,26 +278,32 @@ object KMeansFit {
         val b = slot(best)
         s.n(b) += 1
         if (exact) {
-          s.ux(b) = s.ux(b).add(unscaled(x, 28, 6))
-          s.uy(b) = s.uy(b).add(unscaled(y, 28, 6))
+          val ux = halfUp(x * 1e6)
+          if (ux != Undecided) addSpilling(s.lx, s.ux, b, ux) else s.ux(b) = s.ux(b).add(micros(x))
+          val uy = halfUp(y * 1e6)
+          if (uy != Undecided) addSpilling(s.ly, s.uy, b, uy) else s.uy(b) = s.uy(b).add(micros(y))
         } else { s.sx(b) += x; s.sy(b) += y }
-        if (withSse) s.grid = s.grid.add(unscaled(java.math.BigDecimal.valueOf(bestSq * 1e6)
-          .setScale(0, RoundingMode.HALF_UP).doubleValue, 38, 0))
+        if (withSse) {
+          val g = halfUp(bestSq * 1e6)
+          if (g != Undecided) addSpilling(s.lg, s.ug, 0, g) else s.ug(0) = s.ug(0).add(gridValue(bestSq))
+        }
         i += 1
       }
       s
     }).collect()
-    def total(sums: Array[BigInteger]) = sums.foldLeft(BigInteger.ZERO)(_ add _)
-    def mean(sums: Array[BigInteger], n: Long): Double =
-      decimal(Decimal(new java.math.BigDecimal(total(sums), 6)), 38, 6).toDouble / n
+    // the exact total of one slot over the tasks: BigInteger + Long parts
+    def total(longs: Slots => Array[Long], bigs: Slots => Array[BigInteger], i: Int) =
+      parts.foldLeft(BigInteger.ZERO)((t, p) => t.add(bigs(p)(i)).add(BigInteger.valueOf(longs(p)(i))))
+    def mean(sum: BigInteger, n: Long): Double =
+      decimal(Decimal(new java.math.BigDecimal(sum, 6)), 38, 6).toDouble / n
     val next = (0 until k).filter(i => slot(i) == i).flatMap { i =>
       val n = parts.map(_.n(i)).sum
       if (n == 0) None
-      else if (exact) Some(Cent(cs(i).cid, mean(parts.map(_.ux(i)), n), mean(parts.map(_.uy(i)), n)))
+      else if (exact) Some(Cent(cs(i).cid, mean(total(_.lx, _.ux, i), n), mean(total(_.ly, _.uy, i), n)))
       else Some(Cent(cs(i).cid, parts.map(_.sx(i)).sum / n, parts.map(_.sy(i)).sum / n))
     }
     val sse = Option.when(withSse)(
-      KMeansOps.gridToObjective(decimal(Decimal(total(parts.map(_.grid))), 38, 0)))
+      KMeansOps.gridToObjective(decimal(Decimal(total(_.lg, _.ug, 0)), 38, 0)))
     (next, sse)
   }
 

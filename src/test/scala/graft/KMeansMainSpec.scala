@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** End-to-end CLI contract (EP1/EP2) + CSV sink round-trip (O1/O15). */
-class KMeansMainSpec extends SparkSpec {
+class KMeansMainSpec extends SparkSpec with JobCounting {
 
   private val base = "/root/reference/script_results/script_3"
   private def tmp(name: String) = s"/tmp/graft-test/$name"
@@ -185,6 +185,46 @@ class KMeansMainSpec extends SparkSpec {
     val trailing = intercept[IllegalArgumentException](
       KMeansMain.parseArgs(Array("-points", "p.csv", "-iterations")))
     assert(trailing.getMessage.contains("-iterations"))
+  }
+
+  test("run rejects missing, unparsable and partial flags by name, before any Spark work") {
+    // a points path that does not exist: reaching Spark would fail differently
+    val base = Map("points" -> "/nonexistent/points.csv", "numcentroids" -> "4")
+    val sinks = Map("pointsout" -> tmp("v_pts"), "centroidsout" -> tmp("v_cents"),
+      "objfunout" -> tmp("v_obj"))
+    val cases = Seq(
+      (base - "points") -> Seq("-points"),
+      (base - "numcentroids") -> Seq("-centroids", "-numcentroids"),
+      (base + ("iterations" -> "ten")) -> Seq("-iterations", "ten"),
+      (base + ("custconvergence" -> "yes")) -> Seq("-custconvergence", "yes"),
+      (base + ("numcentroids" -> "4.5")) -> Seq("-numcentroids"),
+      (base + ("epsilon" -> "tiny")) -> Seq("-epsilon"),
+      (base + ("seed" -> "1e3")) -> Seq("-seed"),
+      (base ++ (sinks - "objfunout")) -> Seq("-objfunout"),
+      (base ++ (sinks - "pointsout" - "centroidsout")) -> Seq("-pointsout", "-centroidsout"),
+      (base + ("objfunout" -> tmp("v_obj"), "objtraceout" -> tmp("v_tr"))) ->
+        Seq("-pointsout", "-centroidsout"))
+    cases.foreach { case (args, names) =>
+      var e: IllegalArgumentException = null
+      val (jobs, _) = counted { e = intercept[IllegalArgumentException](KMeansMain.run(spark, args)) }
+      assert(jobs == 0, s"$args ran $jobs jobs")
+      names.foreach(n => assert(e.getMessage.contains(n), s"$args: ${e.getMessage}"))
+    }
+    assert(!new java.io.File(tmp("v_obj")).exists())
+  }
+
+  test("a traced 10-iteration run with all four sinks runs 12 jobs: 11 kernel jobs and the points sink") {
+    val dir = Files.createTempDirectory("kmeans-jobs")
+    val csv = dir.resolve("points.csv")
+    Files.writeString(csv, Blobs.points(4000, seed = 22)
+      .map { case (x, y) => s"$x,$y" }.mkString("X,Y\n", "\n", "\n"))
+    def out(name: String) = dir.resolve(name).toString
+    val (jobs, _) = counted(KMeansMain.run(spark, Map(
+      "points" -> csv.toString, "numcentroids" -> "8", "seed" -> "3",
+      "iterations" -> "10", "custconvergence" -> "false",
+      "pointsout" -> out("pts"), "centroidsout" -> out("cents"),
+      "objfunout" -> out("obj"), "objtraceout" -> out("trace"))))
+    assert(jobs == 12)
   }
 
   test("paper anchor: the CLI job on in-repo blob points matches a sequential Lloyd") {

@@ -73,6 +73,16 @@ class KernelParitySpec extends SparkSpec {
     assertParity(points, Seq(Cent(0, 0.0, 0.0)))
   }
 
+  test("coordinates and squared distances on 1e-6 HALF_UP ties round as the SQL casts do") {
+    // each coordinate is an exact tie at the 6th decimal, and the squared
+    // distances to (0, 0) of the last two points sit on ties of the
+    // objective's 1e-6 grid (5e-7 and 2.5e-6)
+    val points = df(Seq((1.2345675, -2.5e-6), (-1.2345675, 2.5e-6), (0.0000005, -0.0000005),
+      (3.0000005, -7.9999995), (0.0005, 0.0005), (0.0015, 0.0005)))
+    assertParity(points, Seq(Cent(0, 0.0, 0.0)))
+    assertParity(points, Seq(Cent(0, 0.0, 0.0), Cent(1, 2.0, -5.0)))
+  }
+
   test("a coordinate of 1e22 raises in the kernel where the SQL raises") {
     val points = df(Seq((1e22, 0.0), (0.0, 0.0)))
     val cents = Seq(Cent(0, 0.0, 0.0))
