@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import graft.kmeans._
 
 /** CLI entry point mirroring the reference program's argument contract
@@ -28,14 +27,21 @@ import graft.kmeans._
   *                        count to build this table, scripts/
   *                        script_3.sh:18-42; we emit it from one run)
   *
-  * Sinks are single-file headerless overwrite CSV (O15). The points
-  * sink, the one that grows with the data, is written by Spark
-  * (`Tables.writeCsvSingle`); the trace, the centroids, the objective
-  * and the `-centroids` echo are a few driver-held rows, which the
-  * driver writes itself (`Tables.writeCsvRows`) without a Spark job.
-  * `-pointsout`, `-centroidsout` and `-objfunout` come together: with
-  * none of them the centroids and the objective print to stdout (O16,
+  * Sinks are single-file headerless overwrite CSV (O15), and none is a
+  * Spark CSV write. The points sink, the one that grows with the data,
+  * is written by the fit's closing kernel pass: each task labels its
+  * cached points with the final centroids, sums the objective and
+  * writes its part, and the driver joins the parts
+  * (`Tables.writeCsvParts`), so the CSV is scanned once per run. The
+  * trace, the centroids, the objective and the `-centroids` echo are a
+  * few driver-held rows, which the driver writes itself
+  * (`Tables.writeCsvRows`) without a Spark job. `-pointsout`,
+  * `-centroidsout` and `-objfunout` come together: with none of them
+  * the centroids and the objective print to stdout (O16,
   * KMeans.java:143,243-245).
+  *
+  * A `-points` file without points (a header alone) raises an
+  * `IllegalArgumentException` saying so.
   *
   * Every flag takes exactly one value. [[run]] raises an
   * `IllegalArgumentException` naming the flag, before any Spark work,
@@ -101,8 +107,6 @@ object KMeansMain {
       seed = arg("seed", "42")(_.toLong))
 
     val points = Tables.pointsCsv(spark, p("points"))
-      .withColumn("pid", monotonically_increasing_id())
-      .select("pid", "x", "y")
 
     // The -centroids path is dual-purpose, as in the reference
     // (KMeans.java:60,132): with -numcentroids it is the ECHO
@@ -119,23 +123,20 @@ object KMeansMain {
           .toSeq.sortBy(_.cid)
       }
 
-    val traced = p.contains("objtraceout")
-    val res = KMeansFit.fit(points, init, cfg, trace = traced)
-    // A trace's last entry IS the SSE against the final centroids (the
-    // fit computes it exactly as `sse` does, over its cached points), so
-    // a traced run takes the objective from it instead of re-scanning
-    // the CSV; untraced (or zero-iteration) runs pay the one pass here.
-    val objective =
-      if (traced && res.objTrace.nonEmpty) res.objTrace.last
-      else KMeansFit.sse(points, res.centroids)
+    // The fit's closing pass over its cached points measures the
+    // objective of the final centroids and, with -pointsout, writes the
+    // labelled points: the CSV is scanned once.
+    def fit(labels: Option[Tables.CsvParts]) = KMeansFit.fit(points, init, cfg,
+      trace = p.contains("objtraceout"), last = Some(FinalPass(labels)))
+    val res = p.get("pointsout").fold(fit(None))(
+      Tables.writeCsvParts(spark, _)(parts => fit(Some(parts))))
+    val objective = res.objective.get
 
     p.get("objtraceout").foreach(Tables.writeCsvRows(spark,
       res.objTrace.zipWithIndex.map { case (obj, i) => (i + 1, obj) }, _))
 
     (p.get("pointsout"), p.get("centroidsout"), p.get("objfunout")) match {
-      case (Some(po), Some(co), Some(oo)) =>
-        Tables.writeCsvSingle(
-          KMeansOps.assign(points, res.centroids).select("cid", "x", "y"), po)
+      case (Some(_), Some(co), Some(oo)) =>
         Tables.writeCsvRows(spark, res.centroids, co)
         Tables.writeCsvRows(spark, Seq(Tuple1(objective)), oo)
       case _ =>

@@ -1,9 +1,14 @@
 package graft
 
+import java.io.{BufferedWriter, IOException, OutputStreamWriter, Writer}
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.IOUtils
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /** IO layer: parquet testdata readers, the shared `points` relation the
   * k-means surface runs on, and reference-parity CSV sources/sinks.
@@ -174,37 +179,89 @@ object Tables {
 
   /** O15 — single-file, header-less, overwrite CSV sink
     * (KMeans.java:231-233, `setParallelism(1)` + WriteMode.OVERWRITE),
-    * written by Spark: one job, for a relation that grows with the data
-    * (the paper job's points sink). Rows already on the driver go
-    * through [[writeCsvRows]] instead. */
+    * written by Spark's CSV writer in one job (`csvRoundtrip`'s sink).
+    * Rows already on the driver go through [[writeCsvRows]], rows
+    * rendered by a job's own tasks through [[writeCsvParts]]. */
   def writeCsvSingle(df: DataFrame, path: String): Unit =
     df.coalesce(1).write.mode("overwrite").option("header", false).csv(path)
 
-  /** O15 for rows held on the driver (a trace, centroids, an objective):
-    * the same sink as [[writeCsvSingle]] without a Spark job. Writes
-    * `path/part-00000.csv` and then an empty `_SUCCESS` through Hadoop's
-    * `FileSystem`, so every scheme Spark's writer accepts works, after
-    * deleting whatever `path` held. Each row is one `\n`-terminated line
-    * of its fields joined by `,`, an `Int` or `Double` rendered
-    * by `toString` as Spark's CSV writer renders it (`1.0E-7`, `-0.0`,
-    * `NaN`), so the part file is byte-identical to Spark's. Zero rows
-    * give an empty part file.
+  /** One line of an O15 sink: the fields of `row` joined by `,` and
+    * ended by `\n`, an `Int` or `Double` rendered by `toString` as
+    * Spark's CSV writer renders it (`1.0E-7`, `-0.0`, `NaN`), so a sink
+    * of these lines is byte-identical to [[writeCsvSingle]]'s.
     * @throws IllegalArgumentException for a field of any other type */
-  def writeCsvRows(spark: SparkSession, rows: Seq[Product], path: String): Unit = {
-    val text = rows.map(_.productIterator.map {
+  def csvLine(row: Product): String =
+    row.productIterator.map {
       case v @ (_: Int | _: Double) => v.toString
       case v => throw new IllegalArgumentException(
-        s"writeCsvRows: unsupported field $v (${v.getClass.getName})")
-    }.mkString("", ",", "\n")).mkString
+        s"CSV sink: unsupported field $v (${v.getClass.getName})")
+    }.mkString("", ",", "\n")
+
+  /** O15 for rows held on the driver (a trace, centroids, an objective):
+    * the same sink as [[writeCsvSingle]] without a Spark job. Writes
+    * `path/part-00000.csv` of the rows' [[csvLine]]s and then an empty
+    * `_SUCCESS` through Hadoop's `FileSystem`, so every scheme Spark's
+    * writer accepts works, after deleting whatever `path` held. Zero
+    * rows give an empty part file.
+    * @throws IllegalArgumentException for a field other than Int or Double */
+  def writeCsvRows(spark: SparkSession, rows: Seq[Product], path: String): Unit = {
+    val text = rows.map(csvLine).mkString
     val dir = new Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(dir, true)
-    def create(name: String, bytes: Array[Byte]): Unit = {
-      val out = fs.create(new Path(dir, name), false)
-      try out.write(bytes) finally out.close()
+    val out = fs.create(new Path(dir, "part-00000.csv"), false)
+    try out.write(text.getBytes(UTF_8)) finally out.close()
+    fs.create(new Path(dir, "_SUCCESS"), false).close()
+  }
+
+  /** The part files of a [[writeCsvParts]] sink, shipped to the tasks
+    * that write them. */
+  final class CsvParts private[Tables] (
+      dir: String, conf: Broadcast[SerializableConfiguration]) extends Serializable {
+    /** A writer of part `i` (a task's partition index). It replaces what
+      * the part held, so a retried task overwrites its own part. */
+    def open(i: Int): Writer = {
+      val part = new Path(dir, f"part-$i%05d")
+      new BufferedWriter(new OutputStreamWriter(
+        part.getFileSystem(conf.value.value).create(part, true), UTF_8), 1 << 16)
     }
-    create("part-00000.csv", text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    create("_SUCCESS", Array.emptyByteArray)
+  }
+
+  /** O15 for rows that the tasks of one job render and write
+    * themselves, so no query re-derives them for the sink: the same
+    * single-file sink as [[writeCsvRows]]. After deleting whatever
+    * `path` held, `job` runs with a [[CsvParts]] under
+    * `path/_temporary`, whose task `i` writes part `i` (lines by
+    * [[csvLine]]); once it returns, the driver concatenates the parts in
+    * partition order into `path/part-00000.csv`, writes an empty
+    * `_SUCCESS` and deletes `_temporary` — also when `job` or the
+    * assembly fails. All through Hadoop's `FileSystem`, the part
+    * writers on the executors with the driver's Hadoop configuration.
+    * @throws java.io.IOException if `path` cannot be written, before
+    *         `job` runs */
+  def writeCsvParts[T](spark: SparkSession, path: String)(job: CsvParts => T): T = {
+    val sc = spark.sparkContext
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(sc.hadoopConfiguration)
+    fs.delete(dir, true)
+    val tmp = new Path(dir, "_temporary")
+    if (!fs.mkdirs(tmp)) throw new IOException(s"cannot create the CSV sink $path")
+    val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
+    try {
+      val result = job(new CsvParts(tmp.toString, conf))
+      val parts = fs.listStatus(tmp).map(_.getPath).filter(_.getName.startsWith("part-"))
+        .sortBy(_.getName.stripPrefix("part-").toInt)
+      val out = fs.create(new Path(dir, "part-00000.csv"), false)
+      try parts.foreach { p =>
+        val in = fs.open(p)
+        try IOUtils.copyBytes(in, out, 1 << 16, false) finally in.close()
+      } finally out.close()
+      fs.create(new Path(dir, "_SUCCESS"), false).close()
+      result
+    } finally {
+      fs.delete(tmp, true)
+      conf.destroy()
+    }
   }
 
   /** O15∘O1 composed for the oracle gate: single-file header-less CSV

@@ -48,9 +48,18 @@ case class KMeansConfig(
   * per iteration (scripts/script_3.sh:18-42,
   * script_results/script_3/results_objfun_N.csv). Every entry equals
   * `KMeansFit.sse` against those centroids exactly, so the last one is
-  * the objective of [[centroids]]. */
+  * the objective of [[centroids]]. `objective` is that SSE too, when the
+  * fit ran its closing pass (traced, or asked for by a [[FinalPass]]). */
 case class FitResult(
-    centroids: Seq[Cent], iterations: Int, objTrace: Seq[Double] = Nil)
+    centroids: Seq[Cent], iterations: Int, objTrace: Seq[Double] = Nil,
+    objective: Option[Double] = None)
+
+/** The closing pass [[KMeansFit.fit]] runs over its coordinate cache
+  * after the loop, against the final centroids: it measures their
+  * objective ([[FitResult.objective]]) and, given `labels`, writes each
+  * point's `cid,x,y` line (`Tables.csvLine`) to the part of its
+  * partition, the parts in the input's row order. */
+final case class FinalPass(labels: Option[graft.Tables.CsvParts] = None)
 
 /** O10 — the bulk-iteration (Lloyd) driver loop. The reference runs this
   * as a Flink `IterativeDataSet` superstep loop (KMeans.java:148,173-185);
@@ -89,10 +98,12 @@ object KMeansFit {
     * `IllegalArgumentException` naming its column, in this same pass.
     * Input with fewer partitions than `defaultParallelism` (small files,
     * local runs) is widened to it, so every superstep runs at full
-    * width: each partition is cut into that many contiguous slices,
-    * shuffled once, and each target reassembles its slices in
-    * source-partition order. On a real cluster the scan already has
-    * more splits than cores and there is no shuffle. */
+    * width: source partition s of n owns targets
+    * [s·width/n, (s+1)·width/n), is cut into that many contiguous
+    * slices and shuffled once, one slice per target. Either way the
+    * partitions, in order, hold the points in the input's row order. On
+    * a real cluster the scan already has more splits than cores and
+    * there is no shuffle. */
   private[kmeans] def coordinates(points: DataFrame): RDD[Coords] = {
     val rows = points.select(col("x").cast(DoubleType), col("y").cast(DoubleType))
       .queryExecution.toRdd
@@ -103,19 +114,18 @@ object KMeansFit {
       Iterator.single(Coords(xs.result(), ys.result()))
     }
     val width = points.sparkSession.sparkContext.defaultParallelism
-    if (rows.getNumPartitions >= width) cols
+    val n = rows.getNumPartitions
+    if (n >= width) cols
     else cols.mapPartitionsWithIndex { (src, it) =>
       val c = it.next()
-      Iterator.tabulate(width) { t =>
-        val from = (c.xs.length.toLong * t / width).toInt
-        val until = (c.xs.length.toLong * (t + 1) / width).toInt
-        (t, (src, Coords(c.xs.slice(from, until), c.ys.slice(from, until))))
+      val first = src * width / n
+      val m = (src + 1) * width / n - first
+      Iterator.tabulate(m) { j =>
+        val from = (c.xs.length.toLong * j / m).toInt
+        val until = (c.xs.length.toLong * (j + 1) / m).toInt
+        (first + j, Coords(c.xs.slice(from, until), c.ys.slice(from, until)))
       }
-    }.partitionBy(new HashPartitioner(width)).mapPartitions { it =>
-      val slices = it.map(_._2).toSeq.sortBy(_._1).map(_._2)
-      Iterator.single(Coords(Array.concat(slices.map(_.xs): _*),
-        Array.concat(slices.map(_.ys): _*)))
-    }
+    }.partitionBy(new HashPartitioner(width)).values
   }
 
   private def finite(r: InternalRow, i: Int, name: String): Double = {
@@ -223,10 +233,11 @@ object KMeansFit {
     *                the argmin already has each point's distance to its
     *                centroid, so the same pass sums it on the objective's
     *                integer grid
-    * @return the next centroids, and the SSE when `withSse` */
+    * @return the next centroids (empty only for empty `points`), and the
+    *         SSE when `withSse` */
   def step(points: DataFrame, cents: Seq[Cent], exact: Boolean = true,
       withSse: Boolean = false): (Seq[Cent], Option[Double]) =
-    step(coordinates(points), cents, exact, withSse)
+    step(coordinates(points), cents, exact, withSse, None)
 
   /** The kernel: one `mapPartitions` + `collect` over the coordinate
     * cache, one job, no shuffle. Same arithmetic as the SQL operators:
@@ -250,10 +261,13 @@ object KMeansFit {
     * point that would double the fit's cache, and the conversion costs
     * a few nanoseconds.
     *
+    * With `labels`, task i also writes the `cid,x,y` line of each of its
+    * points, labelled with its nearest centroid among `cents`, to part i.
+    *
     * The `collect` stays in this method: the benchmark attributes a job
     * to the innermost repository frame of its call site. */
   private[kmeans] def step(coords: RDD[Coords], cents: Seq[Cent], exact: Boolean,
-      withSse: Boolean): (Seq[Cent], Option[Double]) = {
+      withSse: Boolean, labels: Option[graft.Tables.CsvParts]): (Seq[Cent], Option[Double]) = {
     require(cents.nonEmpty, "step: empty centroid set")
     val cs = cents.sortBy(_.cid).toArray
     val k = cs.length
@@ -261,34 +275,38 @@ object KMeansFit {
     val cy = cs.map(_.y)
     // centroids sharing a cid share its slot, as they share one SQL group
     val slot = cs.map(c => cs.indexWhere(_.cid == c.cid))
-    val parts = coords.mapPartitions(_.map { c =>
+    val parts = coords.mapPartitionsWithIndex((part, it) => it.map { c =>
       val s = new Slots(k)
-      var i = 0
-      while (i < c.xs.length) {
-        val x = c.xs(i); val y = c.ys(i)
-        var best = 0
-        var bestSq = 0.0
-        var j = 0
-        while (j < k) {
-          val dx = x - cx(j); val dy = y - cy(j)
-          val sq = dx * dx + dy * dy
-          if (j == 0 || sq < bestSq) { best = j; bestSq = sq }
-          j += 1
+      val out = labels.map(_.open(part)).orNull // null: no sink (hot loop)
+      try {
+        var i = 0
+        while (i < c.xs.length) {
+          val x = c.xs(i); val y = c.ys(i)
+          var best = 0
+          var bestSq = 0.0
+          var j = 0
+          while (j < k) {
+            val dx = x - cx(j); val dy = y - cy(j)
+            val sq = dx * dx + dy * dy
+            if (j == 0 || sq < bestSq) { best = j; bestSq = sq }
+            j += 1
+          }
+          val b = slot(best)
+          s.n(b) += 1
+          if (exact) {
+            val ux = halfUp(x * 1e6)
+            if (ux != Undecided) addSpilling(s.lx, s.ux, b, ux) else s.ux(b) = s.ux(b).add(micros(x))
+            val uy = halfUp(y * 1e6)
+            if (uy != Undecided) addSpilling(s.ly, s.uy, b, uy) else s.uy(b) = s.uy(b).add(micros(y))
+          } else { s.sx(b) += x; s.sy(b) += y }
+          if (withSse) {
+            val g = halfUp(bestSq * 1e6)
+            if (g != Undecided) addSpilling(s.lg, s.ug, 0, g) else s.ug(0) = s.ug(0).add(gridValue(bestSq))
+          }
+          if (out != null) out.write(graft.Tables.csvLine((cs(best).cid, x, y)))
+          i += 1
         }
-        val b = slot(best)
-        s.n(b) += 1
-        if (exact) {
-          val ux = halfUp(x * 1e6)
-          if (ux != Undecided) addSpilling(s.lx, s.ux, b, ux) else s.ux(b) = s.ux(b).add(micros(x))
-          val uy = halfUp(y * 1e6)
-          if (uy != Undecided) addSpilling(s.ly, s.uy, b, uy) else s.uy(b) = s.uy(b).add(micros(y))
-        } else { s.sx(b) += x; s.sy(b) += y }
-        if (withSse) {
-          val g = halfUp(bestSq * 1e6)
-          if (g != Undecided) addSpilling(s.lg, s.ug, 0, g) else s.ug(0) = s.ug(0).add(gridValue(bestSq))
-        }
-        i += 1
-      }
+      } finally if (out != null) out.close()
       s
     }).collect()
     // the exact total of one slot over the tasks: BigInteger + Long parts
@@ -308,32 +326,44 @@ object KMeansFit {
   }
 
   /** Full fit. Caches the points' coordinates for the duration of the
-    * loop (the one real performance decision vs the reference —
-    * SURVEY.md §4; see [[coordinates]]) and unpersists them on exit.
-    * Every superstep is one kernel job over that cache (see [[step]]).
+    * loop and of its closing pass (the one real performance decision vs
+    * the reference — SURVEY.md §4; see [[coordinates]]) and unpersists
+    * them on exit. Every superstep is one kernel job over that cache
+    * (see [[step]]), and so is the closing pass.
     *
     * @param trace record the per-iteration objective (SSE vs the freshly
     *              updated centroids) in [[FitResult.objTrace]]. Step i+1
     *              sums the SSE against step i's centroids in its own
-    *              pass, so the trace costs one extra kernel pass in total
-    *              (for the final centroids).
+    *              pass, so the trace costs one extra kernel pass in total:
+    *              a closing pass against the final centroids, whose SSE
+    *              is also [[FitResult.objective]].
     * @param exact decimal-exact sums (bit-reproducible across partition
     *              orders, the arithmetic the DuckDB oracle replicates)
     *              when true; the reference's plain double sums when
     *              false. The paths agree to within n·eps of the summed
     *              magnitudes (golden replay passes at 1e-9 relative with
-    *              either; KernelParitySpec pins the agreement). */
+    *              either; KernelParitySpec pins the agreement).
+    * @param last  run the closing pass (once, also when traced, and also
+    *              after 0 iterations) as [[FinalPass]] asks
+    * @throws IllegalArgumentException when a pass finds no points */
   def fit(points: DataFrame, init: Seq[Cent], cfg: KMeansConfig,
-      trace: Boolean = false, exact: Boolean = true): FitResult = {
+      trace: Boolean = false, exact: Boolean = true,
+      last: Option[FinalPass] = None): FitResult = {
     require(init.nonEmpty, "fit: empty initial centroid set")
     val cache = coordinates(points).persist(StorageLevel.MEMORY_AND_DISK)
     try {
+      def pass(cents: Seq[Cent], withSse: Boolean,
+          labels: Option[graft.Tables.CsvParts] = None): (Seq[Cent], Option[Double]) = {
+        val r = step(cache, cents, exact, withSse, labels)
+        require(r._1.nonEmpty, "fit: the k-means input holds no points")
+        r
+      }
       var cents = init
       var iter = 0
       var go = cfg.maxIter > 0
       val objs = Seq.newBuilder[Double]
       while (go) {
-        val (next, prevSse) = step(cache, cents, exact, withSse = trace)
+        val (next, prevSse) = pass(cents, withSse = trace)
         iter += 1
         // step i+1 measured the SSE of step i's centroids: trace entry
         // i-1; the first step's (the initial centroids') is not traced
@@ -342,8 +372,12 @@ object KMeansFit {
           (!cfg.convergence || moved(next, cents, cfg.tol))
         cents = next
       }
-      if (trace && iter > 0) objs ++= step(cache, cents, exact, withSse = true)._2
-      FitResult(cents, iter, objs.result())
+      val objective =
+        if (trace && iter > 0 || last.isDefined)
+          pass(cents, withSse = true, last.flatMap(_.labels))._2
+        else None
+      if (trace && iter > 0) objs ++= objective
+      FitResult(cents, iter, objs.result(), objective)
     } finally { cache.unpersist(blocking = false) }
   }
 

@@ -213,7 +213,7 @@ class KMeansMainSpec extends SparkSpec with JobCounting {
     assert(!new java.io.File(tmp("v_obj")).exists())
   }
 
-  test("a traced 10-iteration run with all four sinks runs 12 jobs: 11 kernel jobs and the points sink") {
+  test("a traced 10-iteration run with all four sinks runs 11 jobs: the kernel jobs, the last writing the points sink") {
     val dir = Files.createTempDirectory("kmeans-jobs")
     val csv = dir.resolve("points.csv")
     Files.writeString(csv, Blobs.points(4000, seed = 22)
@@ -224,7 +224,44 @@ class KMeansMainSpec extends SparkSpec with JobCounting {
       "iterations" -> "10", "custconvergence" -> "false",
       "pointsout" -> out("pts"), "centroidsout" -> out("cents"),
       "objfunout" -> out("obj"), "objtraceout" -> out("trace"))))
-    assert(jobs == 12)
+    assert(jobs == 11)
+  }
+
+  test("a traced and an untraced run with all sinks scan the points CSV once") {
+    val dir = Files.createTempDirectory("kmeans-scan")
+    val csv = dir.resolve("points.csv")
+    Files.writeString(csv, Blobs.points(4000, seed = 23)
+      .map { case (x, y) => s"$x,$y" }.mkString("X,Y\n", "\n", "\n"))
+    def out(name: String) = dir.resolve(name).toString
+    val args = Map(
+      "points" -> csv.toString, "numcentroids" -> "8", "seed" -> "3",
+      "iterations" -> "10", "custconvergence" -> "false",
+      "pointsout" -> out("pts"), "centroidsout" -> out("cents"), "objfunout" -> out("obj"))
+    // the first job scans the CSV into the fit's cache; every later job
+    // reads each cached block once, and nothing else
+    Seq(args, args + ("objtraceout" -> out("trace"))).foreach { a =>
+      val t = tally(KMeansMain.run(spark, a))
+      assert(t.jobs == 11 && t.cachedBytes > 0 &&
+        t.bytesRead == Files.size(csv) + (t.jobs - 1) * t.cachedBytes,
+        s"traced=${a.contains("objtraceout")}: $t")
+    }
+  }
+
+  test("a points file without points raises, saying so, traced, untraced and for one iteration") {
+    val dir = Files.createTempDirectory("kmeans-empty")
+    val csv = Files.writeString(dir.resolve("points.csv"), "X,Y\n")
+    def out(name: String) = dir.resolve(name).toString
+    val args = Map(
+      "points" -> csv.toString, "numcentroids" -> "4", "seed" -> "3",
+      "iterations" -> "10", "custconvergence" -> "false",
+      "pointsout" -> out("pts"), "centroidsout" -> out("cents"), "objfunout" -> out("obj"))
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
+    Seq(args + ("objtraceout" -> out("trace")), args, args + ("iterations" -> "1")).foreach { a =>
+      val e = intercept[IllegalArgumentException](KMeansMain.run(spark, a))
+      assert(e.getMessage.contains("no points"), s"$a: ${e.getMessage}")
+      assert(!Files.exists(Paths.get(out("pts"), "_temporary")))
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cached)
   }
 
   test("paper anchor: the CLI job on in-repo blob points matches a sequential Lloyd") {
