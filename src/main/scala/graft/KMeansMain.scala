@@ -7,7 +7,8 @@ import graft.kmeans._
   * (README.md:10-32 / KMeans.java:58-66) so a user of the reference can
   * run the same invocations against this engine:
   *
-  *   -points <csv>        points input (header X,Y)
+  *   -points <csv>        points input (header X,Y): a file, a directory
+  *                        or a glob of such files, plain or compressed
   *   -centroids <csv>     centroids input (header Cluster,X,Y) — EP1;
   *                        with -numcentroids it becomes the echo sink
   *                        for the generated centroids (KMeans.java:132)
@@ -40,8 +41,17 @@ import graft.kmeans._
   * the centroids and the objective print to stdout (O16,
   * KMeans.java:143,243-245).
   *
-  * A `-points` file without points (a header alone) raises an
-  * `IllegalArgumentException` saying so.
+  * The points input is no DataFrame query. `-points` resolves on the
+  * driver, before anything is written, to its data files
+  * (`Tables.dataFiles`: hidden `_*`/`.*` files skipped, path order),
+  * and the fit's first kernel job parses their Hadoop text splits in
+  * parallel with Spark's own CSV parser straight into its coordinate
+  * cache (`KMeansFit.csvCoordinates`): no query planning, and no
+  * shuffle on a file split as wide as the cores. A path without data
+  * files raises an `IllegalArgumentException` naming `-points` before
+  * any Spark job or sink; a file without points (a header alone) raises
+  * one saying so; a malformed row, an empty field, NaN or ±Inf fails
+  * the run as `Tables.pointsCsv` fails its read.
   *
   * Every flag takes exactly one value. [[run]] raises an
   * `IllegalArgumentException` naming the flag, before any Spark work,
@@ -106,7 +116,10 @@ object KMeansMain {
       recompNearest = arg("recompnearest", "0")(_.toInt),
       seed = arg("seed", "42")(_.toLong))
 
-    val points = Tables.pointsCsv(spark, p("points"))
+    // -points resolves on the driver before anything is written: the
+    // text splits would only fail once the fit's first job runs
+    val files = Tables.dataFiles(spark, p("points"))
+    require(files.nonEmpty, s"flag -points: no data files at '${p("points")}'")
 
     // The -centroids path is dual-purpose, as in the reference
     // (KMeans.java:60,132): with -numcentroids it is the ECHO
@@ -126,8 +139,9 @@ object KMeansMain {
     // The fit's closing pass over its cached points measures the
     // objective of the final centroids and, with -pointsout, writes the
     // labelled points: the CSV is scanned once.
-    def fit(labels: Option[Tables.CsvParts]) = KMeansFit.fit(points, init, cfg,
-      trace = p.contains("objtraceout"), last = Some(FinalPass(labels)))
+    def fit(labels: Option[Tables.CsvParts]) = KMeansFit.fit(
+      KMeansFit.csvCoordinates(spark, files), init, cfg,
+      trace = p.contains("objtraceout"), exact = true, last = Some(FinalPass(labels)))
     val res = p.get("pointsout").fold(fit(None))(
       Tables.writeCsvParts(spark, _)(parts => fit(Some(parts))))
     val objective = res.objective.get

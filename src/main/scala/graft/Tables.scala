@@ -2,7 +2,7 @@ package graft
 
 import java.io.{BufferedWriter, IOException, OutputStreamWriter, Writer}
 import java.nio.charset.StandardCharsets.UTF_8
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.io.IOUtils
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -172,9 +172,29 @@ object Tables {
     df.select(schema.fieldNames.toIndexedSeq.map { name =>
       val v = col(name)
       when(v.isNull || isnan(v) || abs(v) === lit(Double.PositiveInfinity),
-        raise_error(lit(s"$path: column $name holds a null (empty), NaN or infinite value")))
+        raise_error(lit(badCsvValue(path, name))))
         .otherwise(v).as(name)
     }: _*)
+  }
+
+  /** The error of a null (empty), NaN or infinite value in column
+    * `name` of the CSV at `path`. */
+  def badCsvValue(path: String, name: String): String =
+    s"$path: column $name holds a null (empty), NaN or infinite value"
+
+  /** The data files `path` names, in path order: the file itself, the
+    * files in a directory (not below it), or the files and directories'
+    * files a glob matches. Hidden names (`_*`, `.*`) are skipped, as
+    * Spark's and Hadoop's file sources skip them. Empty when nothing
+    * matches. Lists through Hadoop's `FileSystem`, on the driver. */
+  def dataFiles(spark: SparkSession, path: String): Seq[Path] = {
+    val pattern = new Path(path)
+    val fs = pattern.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def visible(s: FileStatus) = !Seq("_", ".").exists(s.getPath.getName.startsWith)
+    Option(fs.globStatus(pattern)).toSeq.flatten.filter(visible).flatMap { s =>
+      if (s.isDirectory) fs.listStatus(s.getPath).toSeq.filter(f => f.isFile && visible(f))
+      else Seq(s)
+    }.map(_.getPath).sortBy(_.toString)
   }
 
   /** O15 — single-file, header-less, overwrite CSV sink

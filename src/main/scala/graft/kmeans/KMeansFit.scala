@@ -1,12 +1,17 @@
 package graft.kmeans
 
 import java.math.{BigInteger, RoundingMode}
-import org.apache.spark.HashPartitioner
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.io.{LongWritable, Text}
+import org.apache.hadoop.mapred.{FileInputFormat, FileSplit, JobConf, TextInputFormat}
+import org.apache.spark.{HashPartitioner, TaskContext}
+import org.apache.spark.rdd.{HadoopRDD, RDD}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.{CSVExprUtils, CSVOptions, UnivocityParser}
+import org.apache.spark.sql.catalyst.util.{FailFastMode, FailureSafeParser}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{Decimal, DoubleType}
+import org.apache.spark.sql.types.{Decimal, DoubleType, StructType}
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable.ArrayBuilder
 import scala.util.Random
@@ -66,7 +71,7 @@ final case class FinalPass(labels: Option[graft.Tables.CsvParts] = None)
   * the Spark shape — the one `org.apache.spark.ml.clustering.KMeans`
   * runs internally — is a DRIVER-side loop over a cached RDD: the
   * points' coordinates are cached once per fit as two primitive arrays
-  * per partition, and each superstep is one `mapPartitions` + `collect`.
+  * per partition, and each superstep is one `runJob` over that cache.
   *
   * 100 TB posture: one iteration is ONE job, with no shuffle and no
   * query planning. Each task scans its partition's arrays once (nearest
@@ -90,31 +95,89 @@ object KMeansFit {
   }
 
   /** One partition of the fit's cache: the points' coordinates. */
-  private[kmeans] final case class Coords(xs: Array[Double], ys: Array[Double])
+  private[graft] final case class Coords(xs: Array[Double], ys: Array[Double])
 
   /** The `x`/`y` coordinates of `points` as one [[Coords]] per partition,
     * read from the physical rows (no Row conversion; `pid` and any other
-    * column is pruned). A null, NaN or ±Inf coordinate raises an
-    * `IllegalArgumentException` naming its column, in this same pass.
-    * Input with fewer partitions than `defaultParallelism` (small files,
-    * local runs) is widened to it, so every superstep runs at full
+    * column is pruned) and [[widen]]ed. A null, NaN or ±Inf coordinate
+    * raises an `IllegalArgumentException` naming its column, in this
+    * same pass. */
+  private[kmeans] def coordinates(points: DataFrame): RDD[Coords] = {
+    val rows = points.select(col("x").cast(DoubleType), col("y").cast(DoubleType))
+      .queryExecution.toRdd
+    widen(rows.mapPartitions { it =>
+      val xs = new ArrayBuilder.ofDouble
+      val ys = new ArrayBuilder.ofDouble
+      it.foreach { r =>
+        xs += finite(r, 0, "k-means input column x holds a null, NaN or infinite value")
+        ys += finite(r, 1, "k-means input column y holds a null, NaN or infinite value")
+      }
+      Iterator.single(Coords(xs.result(), ys.result()))
+    })
+  }
+
+  /** The points of the headed `x,y` CSV `files` (`Tables.dataFiles`), in
+    * that order, as one [[Coords]] per Hadoop text split, [[widen]]ed,
+    * without a query plan: the parse Spark's CSV source runs per split,
+    * `Tables.pointsCsv`'s options (header, FAILFAST) and its values.
+    * `TextInputFormat` cuts each file into `defaultParallelism` splits
+    * or more (one per compressed file); each split's lines go, blank
+    * ones dropped, through a `UnivocityParser` behind a
+    * `FailureSafeParser` that raises on a bad token, a short row or an
+    * extra field. A split that starts a file skips its first non-blank
+    * line, the header, as `UnivocityParser.parseIterator` does. An
+    * empty field, NaN or ±Inf raises, in the same pass, the
+    * `IllegalArgumentException` `Tables.badCsvValue` words for the file
+    * and the column. */
+  private[graft] def csvCoordinates(spark: SparkSession, files: Seq[Path]): RDD[Coords] = {
+    val sc = spark.sparkContext
+    val conf = new JobConf(sc.hadoopConfiguration)
+    FileInputFormat.setInputPaths(conf, files: _*)
+    val lines = new HadoopRDD(sc, conf, classOf[ListedTextInputFormat],
+      classOf[LongWritable], classOf[Text], sc.defaultParallelism)
+    // the reader's schema is nullable, as for every file source, so an
+    // empty field reaches the value check as a null
+    val schema = StructType(graft.Tables.pointsCsvSchema.map(_.copy(nullable = true)))
+    val options = new CSVOptions(Map("header" -> "true", "mode" -> FailFastMode.name),
+      false, spark.conf.get("spark.sql.session.timeZone"))
+    widen(lines.mapPartitionsWithInputSplit { (split, it) =>
+      val file = split.asInstanceOf[FileSplit]
+      val parser = new UnivocityParser(schema, options)
+      val safe = new FailureSafeParser[String](parser.parse(_), FailFastMode, schema,
+        options.columnNameOfCorruptRecord)
+      val data = CSVExprUtils.filterCommentAndEmpty(it.map(_._2.toString), options)
+      val rows = (if (file.getStart == 0) data.drop(1) else data).flatMap(safe.parse)
+      val name = file.getPath.toString
+      val xs = new ArrayBuilder.ofDouble
+      val ys = new ArrayBuilder.ofDouble
+      rows.foreach { r =>
+        xs += finite(r, 0, graft.Tables.badCsvValue(name, "x"))
+        ys += finite(r, 1, graft.Tables.badCsvValue(name, "y"))
+      }
+      Iterator.single(Coords(xs.result(), ys.result()))
+    })
+  }
+
+  /** `TextInputFormat` over exactly its input paths, in order: a file
+    * resolved already is not globbed again, so a name holding `[`, `{`
+    * or `*` reads as itself. */
+  private final class ListedTextInputFormat extends TextInputFormat {
+    override protected def listStatus(job: JobConf): Array[FileStatus] =
+      FileInputFormat.getInputPaths(job).map(p => p.getFileSystem(job).getFileStatus(p))
+  }
+
+  /** `cols` (one [[Coords]] per partition), widened to
+    * `defaultParallelism` partitions when it has fewer (small or
+    * compressed files, local runs), so every superstep runs at full
     * width: source partition s of n owns targets
     * [s·width/n, (s+1)·width/n), is cut into that many contiguous
     * slices and shuffled once, one slice per target. Either way the
     * partitions, in order, hold the points in the input's row order. On
-    * a real cluster the scan already has more splits than cores and
+    * a real cluster the input already has more splits than cores and
     * there is no shuffle. */
-  private[kmeans] def coordinates(points: DataFrame): RDD[Coords] = {
-    val rows = points.select(col("x").cast(DoubleType), col("y").cast(DoubleType))
-      .queryExecution.toRdd
-    val cols = rows.mapPartitions { it =>
-      val xs = new ArrayBuilder.ofDouble
-      val ys = new ArrayBuilder.ofDouble
-      it.foreach { r => xs += finite(r, 0, "x"); ys += finite(r, 1, "y") }
-      Iterator.single(Coords(xs.result(), ys.result()))
-    }
-    val width = points.sparkSession.sparkContext.defaultParallelism
-    val n = rows.getNumPartitions
+  private def widen(cols: RDD[Coords]): RDD[Coords] = {
+    val width = cols.sparkContext.defaultParallelism
+    val n = cols.getNumPartitions
     if (n >= width) cols
     else cols.mapPartitionsWithIndex { (src, it) =>
       val c = it.next()
@@ -128,10 +191,11 @@ object KMeansFit {
     }.partitionBy(new HashPartitioner(width)).values
   }
 
-  private def finite(r: InternalRow, i: Int, name: String): Double = {
+  /** Coordinate `i` of `r`; `error` is the message of the
+    * `IllegalArgumentException` a null, NaN or ±Inf raises. */
+  private def finite(r: InternalRow, i: Int, error: => String): Double = {
     val v = if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
-    if (v.isNaN || v.isInfinite) throw new IllegalArgumentException(
-      s"k-means input column $name holds a null, NaN or infinite value")
+    if (v.isNaN || v.isInfinite) throw new IllegalArgumentException(error)
     v
   }
 
@@ -239,46 +303,21 @@ object KMeansFit {
       withSse: Boolean = false): (Seq[Cent], Option[Double]) =
     step(coordinates(points), cents, exact, withSse, None)
 
-  /** The kernel: one `mapPartitions` + `collect` over the coordinate
-    * cache, one job, no shuffle. Same arithmetic as the SQL operators:
-    * the argmin scans the centroids in cid order and keeps the first
-    * strictly smaller squared distance (the `least(struct(sq, cid))`
-    * tie-break toward the lowest cid); the exact path converts each
-    * coordinate to its unscaled DECIMAL(28,6) value, sums those exactly
-    * and divides `Decimal.toDouble` of the DECIMAL(38,6) sum by the
-    * count; the objective sums round(sq·1e6) as DECIMAL(38,0) like
-    * `KMeansOps.sqdistGridSum`.
-    *
-    * Both conversions run on primitive arithmetic ([[halfUp]]: floor
-    * `v·1e6` and compare the fraction with 1/2) whenever |v·1e6| < 2^50
-    * and the fraction is farther from a HALF_UP tie than the error of
-    * the product and of `Double.toString` can reach. Anything else — a
-    * near tie, a larger value, an overflow that must raise — falls back
-    * to Spark's own `Decimal` cast, so each value equals the cast's
-    * exactly. The unscaled values sum into `Long` slots that spill into
-    * `BigInteger` ones before they overflow. They are recomputed on
-    * every step rather than cached beside the coordinates: at 16 B per
-    * point that would double the fit's cache, and the conversion costs
-    * a few nanoseconds.
-    *
-    * With `labels`, task i also writes the `cid,x,y` line of each of its
-    * points, labelled with its nearest centroid among `cents`, to part i.
-    *
-    * The `collect` stays in this method: the benchmark attributes a job
-    * to the innermost repository frame of its call site. */
-  private[kmeans] def step(coords: RDD[Coords], cents: Seq[Cent], exact: Boolean,
-      withSse: Boolean, labels: Option[graft.Tables.CsvParts]): (Seq[Cent], Option[Double]) = {
-    require(cents.nonEmpty, "step: empty centroid set")
-    val cs = cents.sortBy(_.cid).toArray
-    val k = cs.length
-    val cx = cs.map(_.x)
-    val cy = cs.map(_.y)
-    // centroids sharing a cid share its slot, as they share one SQL group
-    val slot = cs.map(c => cs.indexWhere(_.cid == c.cid))
-    val parts = coords.mapPartitionsWithIndex((part, it) => it.map { c =>
+  /** The task side of [[step]], against the cid-sorted centroids (`cx`,
+    * `cy`, `cids`, the slot of each in `slot`): one [[Slots]] per
+    * partition and, with `labels`, the part of the partition
+    * (`TaskContext.partitionId`). A named class rather than a lambda:
+    * Spark's `ClosureCleaner` returns at once for anything but a
+    * closure, so a superstep reads and parses no class file. */
+  private final class Kernel(cx: Array[Double], cy: Array[Double], cids: Array[Int],
+      slot: Array[Int], exact: Boolean, withSse: Boolean, labels: Option[graft.Tables.CsvParts])
+      extends ((TaskContext, Iterator[Coords]) => Slots) with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[Coords]): Slots = {
+      val k = cx.length
       val s = new Slots(k)
-      val out = labels.map(_.open(part)).orNull // null: no sink (hot loop)
-      try {
+      val out = labels.map(_.open(ctx.partitionId())).orNull // null: no sink (hot loop)
+      try while (it.hasNext) {
+        val c = it.next()
         var i = 0
         while (i < c.xs.length) {
           val x = c.xs(i); val y = c.ys(i)
@@ -303,12 +342,51 @@ object KMeansFit {
             val g = halfUp(bestSq * 1e6)
             if (g != Undecided) addSpilling(s.lg, s.ug, 0, g) else s.ug(0) = s.ug(0).add(gridValue(bestSq))
           }
-          if (out != null) out.write(graft.Tables.csvLine((cs(best).cid, x, y)))
+          if (out != null) out.write(graft.Tables.csvLine((cids(best), x, y)))
           i += 1
         }
       } finally if (out != null) out.close()
       s
-    }).collect()
+    }
+  }
+
+  /** The kernel: one `runJob` of a [[Kernel]] over the partitions of
+    * the coordinate cache itself, one job, no shuffle, no RDD made per
+    * step. Same arithmetic as the SQL operators:
+    * the argmin scans the centroids in cid order and keeps the first
+    * strictly smaller squared distance (the `least(struct(sq, cid))`
+    * tie-break toward the lowest cid); the exact path converts each
+    * coordinate to its unscaled DECIMAL(28,6) value, sums those exactly
+    * and divides `Decimal.toDouble` of the DECIMAL(38,6) sum by the
+    * count; the objective sums round(sq·1e6) as DECIMAL(38,0) like
+    * `KMeansOps.sqdistGridSum`.
+    *
+    * Both conversions run on primitive arithmetic ([[halfUp]]: floor
+    * `v·1e6` and compare the fraction with 1/2) whenever |v·1e6| < 2^50
+    * and the fraction is farther from a HALF_UP tie than the error of
+    * the product and of `Double.toString` can reach. Anything else — a
+    * near tie, a larger value, an overflow that must raise — falls back
+    * to Spark's own `Decimal` cast, so each value equals the cast's
+    * exactly. The unscaled values sum into `Long` slots that spill into
+    * `BigInteger` ones before they overflow. They are recomputed on
+    * every step rather than cached beside the coordinates: at 16 B per
+    * point that would double the fit's cache, and the conversion costs
+    * a few nanoseconds.
+    *
+    * With `labels`, task i also writes the `cid,x,y` line of each of its
+    * points, labelled with its nearest centroid among `cents`, to part i.
+    *
+    * The `runJob` stays in this method: the benchmark attributes a job
+    * to the innermost repository frame of its call site. */
+  private[kmeans] def step(coords: RDD[Coords], cents: Seq[Cent], exact: Boolean,
+      withSse: Boolean, labels: Option[graft.Tables.CsvParts]): (Seq[Cent], Option[Double]) = {
+    require(cents.nonEmpty, "step: empty centroid set")
+    val cs = cents.sortBy(_.cid).toArray
+    val k = cs.length
+    // centroids sharing a cid share its slot, as they share one SQL group
+    val slot = cs.map(c => cs.indexWhere(_.cid == c.cid))
+    val kernel = new Kernel(cs.map(_.x), cs.map(_.y), cs.map(_.cid), slot, exact, withSse, labels)
+    val parts = coords.sparkContext.runJob(coords, kernel, coords.partitions.indices)
     // the exact total of one slot over the tasks: BigInteger + Long parts
     def total(longs: Slots => Array[Long], bigs: Slots => Array[BigInteger], i: Int) =
       parts.foldLeft(BigInteger.ZERO)((t, p) => t.add(bigs(p)(i)).add(BigInteger.valueOf(longs(p)(i))))
@@ -325,11 +403,12 @@ object KMeansFit {
     (next, sse)
   }
 
-  /** Full fit. Caches the points' coordinates for the duration of the
-    * loop and of its closing pass (the one real performance decision vs
-    * the reference — SURVEY.md §4; see [[coordinates]]) and unpersists
-    * them on exit. Every superstep is one kernel job over that cache
-    * (see [[step]]), and so is the closing pass.
+  /** Full fit. Caches the points' coordinates ([[coordinates]]) for the
+    * duration of the loop and of its closing pass (the one real
+    * performance decision vs the reference — SURVEY.md §4) and
+    * unpersists them on exit. Every superstep is one kernel job over
+    * that cache (see [[step]]), and so is the closing pass; the first
+    * one also fills the cache.
     *
     * @param trace record the per-iteration objective (SSE vs the freshly
     *              updated centroids) in [[FitResult.objTrace]]. Step i+1
@@ -348,9 +427,15 @@ object KMeansFit {
     * @throws IllegalArgumentException when a pass finds no points */
   def fit(points: DataFrame, init: Seq[Cent], cfg: KMeansConfig,
       trace: Boolean = false, exact: Boolean = true,
-      last: Option[FinalPass] = None): FitResult = {
+      last: Option[FinalPass] = None): FitResult =
+    fit(coordinates(points), init, cfg, trace, exact, last)
+
+  /** [[fit]] over the points `coords` holds, which it caches: the
+    * paper job's CSV input comes as [[csvCoordinates]]. */
+  private[graft] def fit(coords: RDD[Coords], init: Seq[Cent], cfg: KMeansConfig,
+      trace: Boolean, exact: Boolean, last: Option[FinalPass]): FitResult = {
     require(init.nonEmpty, "fit: empty initial centroid set")
-    val cache = coordinates(points).persist(StorageLevel.MEMORY_AND_DISK)
+    val cache = coords.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       def pass(cents: Seq[Cent], withSse: Boolean,
           labels: Option[graft.Tables.CsvParts] = None): (Seq[Cent], Option[Double]) = {

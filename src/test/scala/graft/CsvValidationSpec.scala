@@ -6,7 +6,9 @@ import java.nio.file.Files
   * default PERMISSIVE mode turns a bad token or a short row into nulls,
   * truncates an extra field, and passes NaN and ±Infinity, and a null or
   * NaN coordinate biases the mean of whatever cluster its row lands in.
-  * Each case below must fail the read; a clean file still reads. */
+  * Each case below must fail the read, also through the paper CLI's own
+  * points reader (`KMeansFit.csvCoordinates`); a clean file still
+  * reads, and every accepted spelling reads alike through both. */
 class CsvValidationSpec extends SparkSpec {
 
   private val dir = Files.createTempDirectory("graft-csv-validation")
@@ -45,12 +47,42 @@ class CsvValidationSpec extends SparkSpec {
           messages(e).mkString(" / "))
     }
 
+    test(s"the CLI's points reader rejects a row with: $label") {
+      val path = csv(s"cli_$label", "X,Y", "10.0,10.0", row, "12.0,12.0")
+      val e = intercept[Exception](KMeansMain.run(spark, Map(
+        "points" -> path, "numcentroids" -> "2", "seed" -> "1", "iterations" -> "1")))
+      if (checked(label))
+        assert(messages(e).exists(m => m.contains(path) && m.contains("column x")),
+          messages(e).mkString(" / "))
+    }
+
     test(s"centroidsCsv rejects a row with: $label") {
       val path = csv(s"cents_$label", "Cluster,X,Y", "0,10.0,10.0", s"1,$row", "2,12.0,12.0")
       val e = intercept[Exception](Tables.centroidsCsv(spark, path).collect())
       if (checked(label))
         assert(messages(e).exists(m => m.contains(path) && m.contains("column x")),
           messages(e).mkString(" / "))
+    }
+  }
+
+  // accepted spellings: the CLI's reader gives the coordinates
+  // pointsCsv gives, in order, also where a file's text splits cut lines
+  Seq(
+    "quoted fields" -> "\"X\",\"Y\"\n\"10.0\",\"10.0\"\n\"-1.5\",\"2.0\"\n",
+    "spaces around values" -> "X,Y\n 10.0 ,10.0\n-1.5, 2.0 \n",
+    "exponents" -> "X,Y\n2.25e3,-1.5E-3\n10,1e0\n",
+    "CRLF line ends" -> "X,Y\r\n10.0,10.0\r\n-1.5,2.0\r\n12.0,12.0\r\n",
+    "blank lines" -> "\nX,Y\n\n10.0,10.0\n   \n\n-1.5,2.0\n\n",
+    "no trailing newline" -> "X,Y\n10.0,10.0\n-1.5,2.0"
+  ).foreach { case (label, text) =>
+    test(s"the CLI's points reader reads what pointsCsv reads: $label") {
+      val f = dir.resolve("accepted_" + label.replaceAll("[^A-Za-z0-9]", "_") + ".csv")
+      Files.writeString(f, text)
+      val cli = kmeans.KMeansFit.csvCoordinates(spark, Tables.dataFiles(spark, f.toString))
+        .collect().toSeq.flatMap(c => c.xs.zip(c.ys))
+      val ref = Tables.pointsCsv(spark, f.toString).collect().toSeq
+        .map(r => (r.getDouble(0), r.getDouble(1)))
+      assert(ref.size >= 2 && cli == ref)
     }
   }
 

@@ -237,14 +237,105 @@ class KMeansMainSpec extends SparkSpec with JobCounting {
       "points" -> csv.toString, "numcentroids" -> "8", "seed" -> "3",
       "iterations" -> "10", "custconvergence" -> "false",
       "pointsout" -> out("pts"), "centroidsout" -> out("cents"), "objfunout" -> out("obj"))
-    // the first job scans the CSV into the fit's cache; every later job
-    // reads each cached block once, and nothing else
+    // the first job scans the CSV's text splits into the fit's cache,
+    // one record a line; every later job reads each cached block once,
+    // one record a block, and nothing else. To finish its last line a
+    // split's reader reads on past the split's end, through its own and
+    // its stream's buffer, so the scan's bytes are bounded, not exact
+    val lines = Files.readAllLines(csv).size
+    val buffer = spark.sparkContext.hadoopConfiguration.getInt("io.file.buffer.size", 4096)
     Seq(args, args + ("objtraceout" -> out("trace"))).foreach { a =>
       val t = tally(KMeansMain.run(spark, a))
-      assert(t.jobs == 11 && t.cachedBytes > 0 &&
-        t.bytesRead == Files.size(csv) + (t.jobs - 1) * t.cachedBytes,
-        s"traced=${a.contains("objtraceout")}: $t")
+      val scanned = t.bytesRead - (t.jobs - 1) * t.cachedBytes
+      assert(t.jobs == 11 && t.cachedBytes > 0 && t.cachedBlocks > 0 &&
+        t.recordsRead == lines + (t.jobs - 1) * t.cachedBlocks &&
+        scanned >= Files.size(csv) && scanned <= Files.size(csv) + t.cachedBlocks * 2L * buffer,
+        s"traced=${a.contains("objtraceout")}: $t, $lines lines, $buffer B buffers")
     }
+  }
+
+  /** `points` as a CSV with the reference's `X,Y` header. */
+  private def headed(points: Seq[(Double, Double)]): String =
+    points.map { case (x, y) => s"$x,$y" }.mkString("X,Y\n", "\n", "\n")
+
+  /** The content of a sink directory's CSV part. */
+  private def part(dir: java.nio.file.Path): String =
+    Files.readString(dir.resolve("part-00000.csv"))
+
+  test("a run on a splittable CSV shuffles nothing and runs every kernel job on the fit's cached RDD") {
+    val dir = Files.createTempDirectory("kmeans-shape")
+    val csv = Files.writeString(dir.resolve("points.csv"), headed(Blobs.points(4000, seed = 25)))
+    def out(name: String) = dir.resolve(name).toString
+    val t = tally(KMeansMain.run(spark, Map(
+      "points" -> csv.toString, "numcentroids" -> "8", "seed" -> "3",
+      "iterations" -> "10", "custconvergence" -> "false",
+      "pointsout" -> out("pts"), "centroidsout" -> out("cents"),
+      "objfunout" -> out("obj"), "objtraceout" -> out("trace"))))
+    assert(t.jobs == 11 && t.shuffleBytes == 0L, t)
+    assert(t.cachedBlocks == spark.sparkContext.defaultParallelism, t)
+    assert(t.cachedRdds.size == 1 && t.resultRdds == Seq.fill(11)(t.cachedRdds.head), t)
+  }
+
+  test("a -points path without data files raises naming -points, before any Spark job or sink") {
+    val dir = Files.createTempDirectory("kmeans-nodata")
+    // a directory that holds hidden files only
+    val hidden = Files.createDirectory(dir.resolve("hidden"))
+    Files.writeString(hidden.resolve("_SUCCESS"), "")
+    Files.writeString(hidden.resolve(".points.csv.crc"), "X,Y\n1.0,2.0\n")
+    val pts = Files.createDirectory(dir.resolve("pts"))
+    Files.writeString(pts.resolve("part-00000.csv"), "old\n")
+    val empty = Files.createDirectory(dir.resolve("empty"))
+    def out(name: String) = dir.resolve(name).toString
+    Seq(out("missing.csv"), hidden.toString, empty.toString, out("none-*.csv")).foreach { path =>
+      var e: IllegalArgumentException = null
+      val (jobs, _) = counted { e = intercept[IllegalArgumentException](KMeansMain.run(spark, Map(
+        "points" -> path, "numcentroids" -> "4", "centroids" -> out("echo"),
+        "pointsout" -> pts.toString, "centroidsout" -> out("cents"), "objfunout" -> out("obj")))) }
+      assert(jobs == 0, s"$path: $jobs jobs")
+      assert(e.getMessage.contains("-points") && e.getMessage.contains(path), e.getMessage)
+      assert(part(pts) == "old\n")
+      Seq("echo", "cents", "obj").foreach(s => assert(!Files.exists(dir.resolve(s)), s))
+    }
+  }
+
+  test("a directory of headed CSVs reads each file after its header, in path order") {
+    val dir = Files.createTempDirectory("kmeans-dir")
+    val in = Files.createDirectory(dir.resolve("in"))
+    val chunks = Blobs.points(3000, seed = 26).grouped(1000).toSeq
+    // written out of path order, beside hidden files the reader skips;
+    // a name with glob characters reads as itself
+    Seq("c.csv", "a.csv", "b[1].csv").zip(chunks).foreach { case (f, c) =>
+      Files.writeString(in.resolve(f), headed(c)) }
+    Files.writeString(in.resolve("_SUCCESS"), "")
+    Files.writeString(in.resolve(".a.csv.crc"), "not a csv")
+    def out(name: String) = dir.resolve(name).toString
+    KMeansMain.run(spark, Map(
+      "points" -> in.toString, "numcentroids" -> "8", "seed" -> "3", "iterations" -> "3",
+      "pointsout" -> out("pts"), "centroidsout" -> out("cents"), "objfunout" -> out("obj")))
+    val sunk = part(dir.resolve("pts")).linesIterator.map(_.split(","))
+      .map(a => (a(1).toDouble, a(2).toDouble)).toSeq
+    assert(sunk == chunks(1) ++ chunks(2) ++ chunks(0))
+  }
+
+  test("a gzipped CSV, one split widened to the cores, gives the plain file's sinks") {
+    val dir = Files.createTempDirectory("kmeans-gz")
+    val text = headed(Blobs.points(4000, seed = 27))
+    val plain = Files.writeString(dir.resolve("points.csv"), text)
+    val gz = dir.resolve("points.csv.gz")
+    val zip = new java.util.zip.GZIPOutputStream(Files.newOutputStream(gz))
+    try zip.write(text.getBytes("UTF-8")) finally zip.close()
+    def out(name: String) = dir.resolve(name).toString
+    def run(csv: java.nio.file.Path, tag: String) = KMeansMain.run(spark, Map(
+      "points" -> csv.toString, "numcentroids" -> "8", "seed" -> "3", "iterations" -> "5",
+      "pointsout" -> out(s"pts-$tag"), "centroidsout" -> out(s"cents-$tag"),
+      "objfunout" -> out(s"obj-$tag")))
+    val ref = run(plain, "plain")
+    var res: kmeans.FitResult = null
+    val t = tally { res = run(gz, "gz") }
+    assert(t.shuffleBytes > 0L && t.cachedBlocks == spark.sparkContext.defaultParallelism, t)
+    assert(res.centroids == ref.centroids)
+    Seq("pts", "cents", "obj").foreach { s =>
+      assert(part(dir.resolve(s"$s-gz")) == part(dir.resolve(s"$s-plain")), s) }
   }
 
   test("a points file without points raises, saying so, traced, untraced and for one iteration") {
