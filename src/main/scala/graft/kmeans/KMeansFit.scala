@@ -1,6 +1,7 @@
 package graft.kmeans
 
 import java.math.{BigInteger, RoundingMode}
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.io.{LongWritable, Text}
 import org.apache.hadoop.mapred.{FileInputFormat, FileSplit, JobConf, TextInputFormat}
@@ -8,12 +9,14 @@ import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.rdd.{HadoopRDD, RDD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.csv.{CSVExprUtils, CSVOptions, UnivocityParser}
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityParser}
 import org.apache.spark.sql.catalyst.util.{FailFastMode, FailureSafeParser}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{Decimal, DoubleType, StructType}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.SerializableConfiguration
 import scala.collection.mutable.ArrayBuilder
+import scala.reflect.ClassTag
 import scala.util.Random
 
 /** Engine configuration — the reference CLI surface (O18,
@@ -94,8 +97,23 @@ object KMeansFit {
     }
   }
 
+  /** One partition's points, which [[widen]] cuts into contiguous
+    * slices. */
+  private[kmeans] trait Block[B] {
+    def length: Int
+    def slice(from: Int, until: Int): B
+  }
+
   /** One partition of the fit's cache: the points' coordinates. */
-  private[graft] final case class Coords(xs: Array[Double], ys: Array[Double])
+  private[graft] final case class Coords(xs: Array[Double], ys: Array[Double]) extends Block[Coords] {
+    def length: Int = xs.length
+    def slice(from: Int, until: Int): Coords = Coords(xs.slice(from, until), ys.slice(from, until))
+  }
+
+  /** The message of the `IllegalArgumentException` a null, NaN or ±Inf
+    * value of k-means input column `column` raises. */
+  private[kmeans] def nonFinite(column: String): String =
+    s"k-means input column $column holds a null, NaN or infinite value"
 
   /** The `x`/`y` coordinates of `points` as one [[Coords]] per partition,
     * read from the physical rows (no Row conversion; `pid` and any other
@@ -109,8 +127,8 @@ object KMeansFit {
       val xs = new ArrayBuilder.ofDouble
       val ys = new ArrayBuilder.ofDouble
       it.foreach { r =>
-        xs += finite(r, 0, "k-means input column x holds a null, NaN or infinite value")
-        ys += finite(r, 1, "k-means input column y holds a null, NaN or infinite value")
+        xs += finite(r, 0, nonFinite("x"))
+        ys += finite(r, 1, nonFinite("y"))
       }
       Iterator.single(Coords(xs.result(), ys.result()))
     })
@@ -124,8 +142,12 @@ object KMeansFit {
     * or more (one per compressed file); each split's lines go, blank
     * ones dropped, through a `UnivocityParser` behind a
     * `FailureSafeParser` that raises on a bad token, a short row or an
-    * extra field. A split that starts a file skips its first non-blank
-    * line, the header, as `UnivocityParser.parseIterator` does. An
+    * extra field. The header is each file's first non-blank line, as
+    * for `Tables.pointsCsv`, whichever split it falls in: a split drops
+    * its first non-blank line when the split starts the file, or when
+    * every byte of the file before that line is blank (a file's leading
+    * blank lines may run past its first split). The line keys are byte
+    * offsets, and a compressed file is one split that starts at 0. An
     * empty field, NaN or ±Inf raises, in the same pass, the
     * `IllegalArgumentException` `Tables.badCsvValue` words for the file
     * and the column. */
@@ -133,7 +155,10 @@ object KMeansFit {
     val sc = spark.sparkContext
     val conf = new JobConf(sc.hadoopConfiguration)
     FileInputFormat.setInputPaths(conf, files: _*)
-    val lines = new HadoopRDD(sc, conf, classOf[ListedTextInputFormat],
+    // the broadcast HadoopRDD(sc, conf, ...) makes, kept to open a file
+    // in a task
+    val shared = sc.broadcast(new SerializableConfiguration(conf))
+    val lines = new HadoopRDD(sc, shared, None, classOf[ListedTextInputFormat],
       classOf[LongWritable], classOf[Text], sc.defaultParallelism)
     // the reader's schema is nullable, as for every file source, so an
     // empty field reaches the value check as a null
@@ -145,8 +170,13 @@ object KMeansFit {
       val parser = new UnivocityParser(schema, options)
       val safe = new FailureSafeParser[String](parser.parse(_), FailFastMode, schema,
         options.columnNameOfCorruptRecord)
-      val data = CSVExprUtils.filterCommentAndEmpty(it.map(_._2.toString), options)
-      val rows = (if (file.getStart == 0) data.drop(1) else data).flatMap(safe.parse)
+      // (offset, line), copied before the reader reuses its key and
+      // value; blank lines dropped as `CSVExprUtils.filterCommentAndEmpty`
+      // drops them with no comment character set
+      val data = it.map(kv => (kv._1.get, kv._2.toString)).filter(_._2.trim.nonEmpty).buffered
+      val header = data.hasNext &&
+        (file.getStart == 0 || blankBefore(file.getPath, data.head._1, shared.value.value))
+      val rows = (if (header) data.drop(1) else data).flatMap(kv => safe.parse(kv._2))
       val name = file.getPath.toString
       val xs = new ArrayBuilder.ofDouble
       val ys = new ArrayBuilder.ofDouble
@@ -158,6 +188,17 @@ object KMeansFit {
     })
   }
 
+  /** Whether the first `end` bytes of `file` are all blank (at most
+    * `' '`, what `String.trim` drops), read up to the first that is not. */
+  private def blankBefore(file: Path, end: Long, conf: Configuration): Boolean = {
+    val in = file.getFileSystem(conf).open(file, 512)
+    try {
+      var at = 0L
+      while (at < end && { val b = in.read(); b >= 0 && b <= ' ' }) at += 1
+      at == end
+    } finally in.close()
+  }
+
   /** `TextInputFormat` over exactly its input paths, in order: a file
     * resolved already is not globbed again, so a name holding `[`, `{`
     * or `*` reads as itself. */
@@ -166,34 +207,32 @@ object KMeansFit {
       FileInputFormat.getInputPaths(job).map(p => p.getFileSystem(job).getFileStatus(p))
   }
 
-  /** `cols` (one [[Coords]] per partition), widened to
-    * `defaultParallelism` partitions when it has fewer (small or
-    * compressed files, local runs), so every superstep runs at full
-    * width: source partition s of n owns targets
-    * [s·width/n, (s+1)·width/n), is cut into that many contiguous
-    * slices and shuffled once, one slice per target. Either way the
-    * partitions, in order, hold the points in the input's row order. On
-    * a real cluster the input already has more splits than cores and
-    * there is no shuffle. */
-  private def widen(cols: RDD[Coords]): RDD[Coords] = {
-    val width = cols.sparkContext.defaultParallelism
-    val n = cols.getNumPartitions
-    if (n >= width) cols
-    else cols.mapPartitionsWithIndex { (src, it) =>
-      val c = it.next()
+  /** `blocks` (one per partition), widened to `defaultParallelism`
+    * partitions when it has fewer (small or compressed files, local
+    * runs), so every pass over them runs at full width: source partition
+    * s of n owns targets [s·width/n, (s+1)·width/n), is cut into that
+    * many contiguous slices and shuffled once, one slice per target.
+    * Either way the partitions, in order, hold the points in the input's
+    * row order. On a real cluster the input already has more splits than
+    * cores and there is no shuffle. An input of no partitions stays one,
+    * so each partition holds one block. */
+  private[kmeans] def widen[B <: Block[B]: ClassTag](blocks: RDD[B]): RDD[B] = {
+    val width = blocks.sparkContext.defaultParallelism
+    val n = blocks.getNumPartitions
+    if (n >= width || n == 0) blocks
+    else blocks.mapPartitionsWithIndex { (src, it) =>
+      val b = it.next()
       val first = src * width / n
       val m = (src + 1) * width / n - first
       Iterator.tabulate(m) { j =>
-        val from = (c.xs.length.toLong * j / m).toInt
-        val until = (c.xs.length.toLong * (j + 1) / m).toInt
-        (first + j, Coords(c.xs.slice(from, until), c.ys.slice(from, until)))
+        (first + j, b.slice((b.length.toLong * j / m).toInt, (b.length.toLong * (j + 1) / m).toInt))
       }
     }.partitionBy(new HashPartitioner(width)).values
   }
 
   /** Coordinate `i` of `r`; `error` is the message of the
     * `IllegalArgumentException` a null, NaN or ±Inf raises. */
-  private def finite(r: InternalRow, i: Int, error: => String): Double = {
+  private[kmeans] def finite(r: InternalRow, i: Int, error: => String): Double = {
     val v = if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
     if (v.isNaN || v.isInfinite) throw new IllegalArgumentException(error)
     v
@@ -202,7 +241,7 @@ object KMeansFit {
   /** `d` as DECIMAL(p, s), rounded HALF_UP by the method Spark's cast to
     * that type uses, and raising where that cast raises (ANSI
     * NUMERIC_VALUE_OUT_OF_RANGE). */
-  private def decimal(d: Decimal, p: Int, s: Int): Decimal =
+  private[kmeans] def decimal(d: Decimal, p: Int, s: Int): Decimal =
     if (d.changePrecision(p, s)) d
     else throw new ArithmeticException(
       s"NUMERIC_VALUE_OUT_OF_RANGE: ${d.toPlainString} cannot be represented as Decimal($p, $s)")

@@ -1,8 +1,17 @@
 package graft.kmeans
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import java.math.BigInteger
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{Decimal, DoubleType, LongType, StructType}
+import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable.ArrayBuilder
 
 import graft.functions.PortableMath
 
@@ -28,7 +37,8 @@ import graft.functions.PortableMath
   *    — no RNG state, engine-independent;
   *  - the round cost φ(C) is an EXACT decimal sum of 1e-6-grid-snapped
   *    d² (order-independent), converted to double through the
-  *    canonical string cast both engines share;
+  *    canonical string cast both engines share
+  *    ([[KMeansOps.gridToObjective]]);
   *  - the Bernoulli test is `u·φ < l·d²` — one IEEE multiply per side,
   *    no division, bit-identical in both engines; min(1,·) is
   *    automatic (u < 1 ⇒ u·φ < φ ≤ l·d² whenever the clamp binds);
@@ -40,16 +50,22 @@ import graft.functions.PortableMath
   *  - chosen points have d² = 0 and are excluded by the `d² > 0` arm
   *    (ANSI Spark raises on x/0; there is no division anywhere).
   *
-  * Scale shape: per round ONE zero-shuffle scan computes d² against
-  * the ≤ 1+r·cap current centers folded in as literals (the broadcast-
-  * argmin idiom of [[KMeansOps.assign]]) feeding a 1-row decimal agg
-  * (map-side partials), then ONE filtered scan collects the ≤ cap
-  * acceptances. No point-sized relation ever shuffles; 2R+2 passes
-  * total regardless of n.
+  * Scale shape: the MLlib `KMeans.initKMeansParallel` shape on
+  * [[KMeansFit]]'s kernel idiom. The points' pid, x, y and every
+  * round's draw are read once into one cached block of primitive arrays
+  * per partition (widened by [[KMeansFit.widen]]), and every pass is
+  * one closure-free `runJob` of a named kernel over that cache whose
+  * tasks return a few values the driver merges exactly: the fill (the
+  * first pick), per round a cost job (it persists d²_r, the min of
+  * d²_{r−1} and the distances to round r−1's new centres, and returns
+  * φ's grid sums) and a sample job (each partition's first `cap`
+  * acceptances), then one weights job (per-candidate counts). That is
+  * 2R+2 jobs over one cache and no query planned per round; no
+  * point-sized relation ever shuffles, and per-point work per round is
+  * O(cap).
   */
 object KMeansParallel {
 
-  private val Dec38 = DecimalType(38, 0)
   private val Two60 = 1152921504606846976.0
   private val Two60Sql = "1152921504606846976.0"
 
@@ -65,158 +81,248 @@ object KMeansParallel {
   /** One accepted candidate: enumeration identity is (rnd, pid, x, y). */
   final case class Cand(cidx: Int, rnd: Int, pid: Long, x: Double, y: Double)
 
-  private def sqDistTo(cx: Double, cy: Double): Column =
-    KMeansOps.sqDist(col("x"), col("y"), lit(cx), lit(cy))
+  /** A point's identity (pid, x, y), ordered with doubles compared as
+    * Spark SQL sorts them. */
+  private type Pt = (Long, Double, Double)
+  private val SqlDouble: Ordering[Double] = compareDoubles(_, _)
+  private val ByPt: Ordering[Pt] = Ordering.Tuple3(Ordering.Long, SqlDouble, SqlDouble)
 
-  /** The points relation at full parallelism (the KMeansFit idiom,
-    * §2.4/§6): the single-file fixture scan plans byte-ranged splits
-    * but the file holds one ~128 MB row group per ~10M rows, so nearly
-    * all splits are EMPTY (sf1: 20 planned partitions, 1 non-empty) —
-    * without the spread the md5 pass, every per-round φ/acceptance
-    * scan and the |cands|-term argmin run on a single core. Every
-    * consumer here is partition-order-independent (decimal φ sums,
-    * global-sort races, per-row argmin + count agg), so the spread
-    * changes no bits. A partition-count ==1 guard is NOT equivalent:
-    * it misses the empty-split shape (measured sf1 init_kmeanspp 10 s
-    * spread vs 19-20 s unspread, 3 probes each). On a real cluster the
-    * scan has ≥ defPar populated splits and this is a no-op. */
-  private def widened(points: DataFrame): DataFrame = {
-    val defPar = points.sparkSession.sparkContext.defaultParallelism
-    if (points.rdd.getNumPartitions < defPar) points.repartition(defPar)
-    else points
+  /** (h0, pid, x, y) order: the first pick's. */
+  private val ByDraw: Ordering[(Long, Pt)] = Ordering.Tuple2(Ordering.Long, ByPt)
+
+  /** One partition of the sweep's cache: the points' pids and
+    * coordinates, and `hs(r)(i)`, point i's draw of round r. */
+  private[kmeans] final case class Points(pids: Array[Long], xs: Array[Double], ys: Array[Double],
+      hs: Array[Array[Long]]) extends KMeansFit.Block[Points] {
+    def length: Int = pids.length
+    def slice(from: Int, until: Int): Points = Points(pids.slice(from, until),
+      xs.slice(from, until), ys.slice(from, until), hs.map(_.slice(from, until)))
+    def pt(i: Int): Pt = (pids(i), xs(i), ys(i))
   }
 
-  private def minD2(cs: Seq[(Long, Double, Double)]): Column = {
-    val terms = cs.map { case (_, cx, cy) => sqDistTo(cx, cy) }
-    if (terms.size == 1) terms.head else least(terms: _*)
+  /** The first 60 bits of md5(prefix ++ key) as a long, the value
+    * [[graft.ops.Dedup.md5Hash60]] reads from the first 15 hex digits. */
+  private def md5Hash60(md: MessageDigest, prefix: Array[Byte], key: Array[Byte]): Long = {
+    md.update(prefix)
+    ByteBuffer.wrap(md.digest(key)).getLong >>> 4
+  }
+
+  /** `points`' pid, x and y as one [[Points]] per partition, read from
+    * the physical rows and widened ([[KMeansFit.widen]]), with the draws
+    * of rounds 0 until `draws`: round r's draw of a point is
+    * `Dedup.md5Hash60(seed + r, pid)`. A null pid, or a null, NaN or
+    * ±Inf coordinate, raises an `IllegalArgumentException` naming its
+    * column in the pass that reads it. */
+  private[kmeans] def read(points: DataFrame, seed: Int, draws: Int): RDD[Points] = {
+    val rows = points.select(col("pid").cast(LongType), col("x").cast(DoubleType),
+      col("y").cast(DoubleType)).queryExecution.toRdd
+    val wide = KMeansFit.widen(rows.mapPartitions { it =>
+      val pids = new ArrayBuilder.ofLong
+      val xs = new ArrayBuilder.ofDouble
+      val ys = new ArrayBuilder.ofDouble
+      it.foreach { r =>
+        if (r.isNullAt(0))
+          throw new IllegalArgumentException("k-means input column pid holds a null value")
+        pids += r.getLong(0)
+        xs += KMeansFit.finite(r, 1, KMeansFit.nonFinite("x"))
+        ys += KMeansFit.finite(r, 2, KMeansFit.nonFinite("y"))
+      }
+      Iterator.single(Points(pids.result(), xs.result(), ys.result(), Array.empty))
+    })
+    wide.mapPartitions(_.map { p =>
+      val md = MessageDigest.getInstance("MD5")
+      p.copy(hs = Array.tabulate(draws) { r =>
+        val prefix = s"${seed + r}|".getBytes(UTF_8)
+        p.pids.map(pid => md5Hash60(md, prefix, java.lang.Long.toString(pid).getBytes(UTF_8)))
+      })
+    })
+  }
+
+  /** Fill pass: the partition's least (h0, pid, x, y). */
+  private object FirstPick
+      extends ((TaskContext, Iterator[Points]) => Option[(Long, Pt)]) with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[Points]): Option[(Long, Pt)] = {
+      val p = it.next()
+      (0 until p.length).map(i => (p.hs(0)(i), p.pt(i))).minOption(ByDraw)
+    }
+  }
+
+  /** d²_0: no centre yet. */
+  private object Unreached extends (Iterator[Points] => Iterator[Array[Double]]) with Serializable {
+    def apply(it: Iterator[Points]): Iterator[Array[Double]] =
+      it.map(p => Array.fill(p.length)(Double.PositiveInfinity))
+  }
+
+  /** d²_r of a partition: d²_{r−1} lowered to each point's squared
+    * distance to a new centre (cx, cy), dx·dx + dy·dy with dx = x − cx.
+    * Min is comparison-only, so folding each round's new centres in
+    * gives the SQL twin's MIN over the whole centre set bit for bit. */
+  private final class Fold(cx: Array[Double], cy: Array[Double])
+      extends ((Iterator[Points], Iterator[Array[Double]]) => Iterator[Array[Double]]) with Serializable {
+    def apply(ps: Iterator[Points], prev: Iterator[Array[Double]]): Iterator[Array[Double]] = {
+      val p = ps.next()
+      val d2 = prev.next().clone() // prev may be a cached block
+      var i = 0
+      while (i < d2.length) {
+        var j = 0
+        while (j < cx.length) {
+          val dx = p.xs(i) - cx(j); val dy = p.ys(i) - cy(j)
+          val sq = dx * dx + dy * dy
+          if (sq < d2(i)) d2(i) = sq
+          j += 1
+        }
+        i += 1
+      }
+      Iterator.single(d2)
+    }
+  }
+
+  /** The partition's φ grid sum: Σ round(d²·1e6) as DECIMAL(38,0)
+    * ([[KMeansFit.gridValue]]), in `Long` parts that spill into a
+    * `BigInteger`. */
+  private object Cost extends ((TaskContext, Iterator[Array[Double]]) => BigInteger) with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[Array[Double]]): BigInteger = {
+      val lg = new Array[Long](1)
+      val ug = Array(BigInteger.ZERO)
+      it.foreach(_.foreach { d =>
+        val g = KMeansFit.halfUp(d * 1e6)
+        if (g != KMeansFit.Undecided) KMeansFit.addSpilling(lg, ug, 0, g)
+        else ug(0) = ug(0).add(KMeansFit.gridValue(d))
+      })
+      ug(0).add(BigInteger.valueOf(lg(0)))
+    }
+  }
+
+  /** A partition's points beside their d². */
+  private object Zip extends ((Iterator[Points], Iterator[Array[Double]]) => Iterator[(Points, Array[Double])])
+      with Serializable {
+    def apply(ps: Iterator[Points], ds: Iterator[Array[Double]]): Iterator[(Points, Array[Double])] = ps.zip(ds)
+  }
+
+  /** Round r's acceptances in the partition, its first `cap` in (pid, x,
+    * y) order: d² > 0 and u·φ < l·d², with u = h_r / 2^60. */
+  private final class Sample(r: Int, phi: Double, l: Double, cap: Int)
+      extends ((TaskContext, Iterator[(Points, Array[Double])]) => Array[Pt]) with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[(Points, Array[Double])]): Array[Pt] = {
+      val (p, d2) = it.next()
+      val h = p.hs(r)
+      (0 until p.length).filter(i => d2(i) > 0.0 && h(i).toDouble / Two60 * phi < l * d2(i))
+        .map(p.pt).sorted(ByPt).take(cap).toArray
+    }
+  }
+
+  /** The partition's point count per candidate (cx, cy): each point
+    * counts for the first candidate at its least squared distance. */
+  private final class Weigh(cx: Array[Double], cy: Array[Double])
+      extends ((TaskContext, Iterator[Points]) => Array[Long]) with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[Points]): Array[Long] = {
+      val w = new Array[Long](cx.length)
+      it.foreach { p =>
+        var i = 0
+        while (i < p.length) {
+          var best = 0
+          var bestSq = 0.0
+          var j = 0
+          while (j < cx.length) {
+            val dx = p.xs(i) - cx(j); val dy = p.ys(i) - cy(j)
+            val sq = dx * dx + dy * dy
+            if (j == 0 || sq < bestSq) { best = j; bestSq = sq }
+            j += 1
+          }
+          w(best) += 1
+          i += 1
+        }
+      }
+      w
+    }
+  }
+
+  /** `body` over `points` [[read]] with `draws` draws and cached; the
+    * cache is unpersisted on exit. */
+  private def cached[A](points: DataFrame, seed: Int, draws: Int)(body: RDD[Points] => A): A = {
+    val cache = read(points, seed, draws).persist(StorageLevel.MEMORY_AND_DISK)
+    try body(cache) finally cache.unpersist(blocking = false)
   }
 
   /** The R-round oversampling sweep. Returns the candidate list in
     * enumeration order (round 0 = the uniform first pick, then each
     * round's acceptances ordered (pid, x, y)). Driver memory is
     * bounded by 1 + rounds·cap rows.
-    *
-    * d²(p, C) is maintained INCREMENTALLY (r13 verdict item 4): round
-    * r materializes `d2 = least(d2_prev, d² to round r−1's NEW
-    * centers)` — min is associative and comparison-only, so the value
-    * is bit-identical to the flat least over the full center set, but
-    * the per-round scan evaluates only ≤ 1+cap new distance terms
-    * instead of the cumulative 1+r·cap (the flat form re-paid every
-    * prior round's terms in BOTH the φ-agg and the acceptance filter,
-    * where the duplicated giant least() also fell out of efficient
-    * codegen — measured 1.5 s + 8 s per round at sf0.1 vs ~1 s total
-    * for the incremental shape). The φ-agg and acceptance scans then
-    * read the materialized column: per-point work per round is O(cap),
-    * not O(r·cap), which is the shape that survives R or cap growing
-    * at 100 TB. */
+    * @throws IllegalArgumentException on empty input, or on a null pid
+    *         or a null, NaN or infinite coordinate */
   def sweep(points: DataFrame, l: Int = L, rounds: Int = Rounds,
-            seed: Int = Seed, cap: Int = Cap): Seq[Cand] = {
-    val hashCols = (0 to rounds).map { r =>
-      graft.ops.Dedup.md5Hash60(seed + r, col("pid").cast("string")).as(s"h$r")
-    }
-    // one pass materializes every round's uniform draw (the md5s
-    // dominate per-pass cost — same lesson as kmeansPlusPlus)
-    val hashed = widened(points)
-      .select(col("pid") +: col("x") +: col("y") +: hashCols: _*)
-      // LAZY checkpoint: the first-pick TakeOrdered below touches every
-      // partition, so it materializes the blocks as a side effect —
-      // eager=true would spend a whole extra pass doing the same thing
-      // first (r13 verdict item 4).
-      .localCheckpoint(false)
-    val first = hashed
-      .orderBy(col("h0").asc, col("pid").asc, col("x").asc, col("y").asc)
-      .limit(1).select("pid", "x", "y").collect()(0)
-    var cands = Vector((0, first.getLong(0), first.getDouble(1), first.getDouble(2)))
-    // centers not yet folded into the materialized d2 column
-    var fresh = cands
-    var cur = hashed
-    var hasD2 = false
-    for (r <- 1 to rounds) {
-      val newTerms = fresh.map { case (_, _, cx, cy) => sqDistTo(cx, cy) }
-      val d2Upd =
-        if (!hasD2) minD2(fresh.map { case (_, p, cx, cy) => (p, cx, cy) })
-        else if (newTerms.isEmpty) col("d2") // a zero-acceptance round
-        else least(col("d2") +: newTerms: _*)
-      cur = cur
-        .select(col("pid") +: col("x") +: col("y") +:
-          (r to rounds).map(j => col(s"h$j")) :+ d2Upd.as("d2"): _*)
-        // lazy again: the phi-agg right below is the materializing
-        // action (it reads every partition), so the d2 update costs no
-        // standalone pass
-        .localCheckpoint(false)
-      hasD2 = true
-      // φ(C): exact decimal sum of the 1e-6-snapped d² grid, back to
-      // double through the shared string cast — order-independent
-      val cost = cur
-        .select((sum(round(col("d2") * lit(1e6)).cast(Dec38)).cast("string")
-          .cast("double") / 1e6).as("v"))
-        .collect()(0).getDouble(0)
-      val u = col(s"h$r").cast("double") / lit(Two60)
-      val accepted = cur
-        .where(col("d2") > 0.0 && u * lit(cost) < lit(l.toDouble) * col("d2"))
-        .orderBy(col("pid").asc, col("x").asc, col("y").asc)
-        .limit(cap)
-        .select("pid", "x", "y").collect()
-      fresh = accepted.map(row =>
-        (r, row.getLong(0), row.getDouble(1), row.getDouble(2))).toVector
-      cands = cands ++ fresh
-    }
-    cands.zipWithIndex.map { case ((r, p, x, y), i) => Cand(i, r, p, x, y) }
+            seed: Int = Seed, cap: Int = Cap): Seq[Cand] =
+    cached(points, seed, rounds + 1)(sweepOn(_, l, rounds, cap))
+
+  /** [[sweep]] over the cache: the fill job, then per round a cost job
+    * and a sample job. d²_r is persisted by its cost job and read by its
+    * sample job and by round r+1's cost job, then unpersisted. The
+    * `runJob`s stay in this method: the benchmark attributes a job to
+    * the innermost repository frame of its call site. */
+  private def sweepOn(cache: RDD[Points], l: Int, rounds: Int, cap: Int): Seq[Cand] = {
+    val sc = cache.sparkContext
+    val all = cache.partitions.indices
+    val first = sc.runJob(cache, FirstPick, all).flatten.minOption(ByDraw)
+      .getOrElse(throw new IllegalArgumentException("k-means||: the input holds no points"))._2
+    var cands = Vector((0, first))
+    var fresh = Vector(first) // centres not yet folded into d²
+    var d2 = cache.mapPartitions(Unreached)
+    try for (r <- 1 to rounds) {
+      val prev = d2
+      d2 = cache.zipPartitions(prev)(new Fold(fresh.map(_._2).toArray, fresh.map(_._3).toArray))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val grid = try sc.runJob(d2, Cost, all).foldLeft(BigInteger.ZERO)(_.add(_))
+        finally prev.unpersist(blocking = false)
+      val phi = KMeansOps.gridToObjective(KMeansFit.decimal(Decimal(grid), 38, 0))
+      fresh = sc.runJob(cache.zipPartitions(d2)(Zip), new Sample(r, phi, l.toDouble, cap), all)
+        .flatten.sorted(ByPt).take(cap).toVector
+      cands ++= fresh.map((r, _))
+    } finally d2.unpersist(blocking = false)
+    cands.zipWithIndex.map { case ((r, (pid, x, y)), i) => Cand(i, r, pid, x, y) }
   }
 
+  /** Each of the cidx-sorted `cands`' weight w(c) = |{p : c = argmin
+    * d²(p, C)}| with the assign tie-break (lowest cidx wins), in one
+    * job over `blocks`. The `runJob` stays here, as in [[sweepOn]]. */
+  private def weightsOn(blocks: RDD[Points], cands: Seq[Cand]): Array[Long] = {
+    val w = blocks.sparkContext.runJob(blocks,
+      new Weigh(cands.map(_.x).toArray, cands.map(_.y).toArray), blocks.partitions.indices)
+    Array.tabulate(cands.length)(i => w.map(_(i)).sum)
+  }
+
+  private val TableSchema = StructType.fromDDL("cidx INT NOT NULL, rnd INT NOT NULL, " +
+    "pid BIGINT NOT NULL, x DOUBLE NOT NULL, y DOUBLE NOT NULL, w BIGINT NOT NULL")
+
+  /** The weighted candidate table `(cidx, rnd, pid, x, y, w)`: a local
+    * relation built on the driver. */
+  private def table(spark: SparkSession, cands: Seq[Cand], w: Array[Long]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(cands.zip(w).map { case (c, n) =>
+      Row(c.cidx, c.rnd, c.pid, c.x, c.y, n) }: _*), TableSchema)
+
+  /** The sweep and its candidates' weights over one cache. */
+  private def sweepWeighted(points: DataFrame, l: Int, rounds: Int, seed: Int,
+      cap: Int): (Seq[Cand], Array[Long]) =
+    cached(points, seed, rounds + 1) { cache =>
+      val cands = sweepOn(cache, l, rounds, cap)
+      (cands, weightsOn(cache, cands))
+    }
+
   /** Candidate weights: w(c) = |{p : c = argmin d²(p, C)}| with the
-    * assign tie-break (lowest cidx wins) — ONE zero-shuffle argmin
-    * scan + one candidate-keyed count agg. Duplicate-coordinate
-    * candidates lose every tie to their lower-cidx twin and keep
-    * weight 0 (they are dropped by the final race's w=0 arm). */
+    * assign tie-break (lowest cidx wins), in one pass over the points.
+    * Duplicate-coordinate candidates lose every tie to their lower-cidx
+    * twin and keep weight 0 (they are dropped by the final race's w=0
+    * arm). */
   def weighted(points: DataFrame, cands: Seq[Cand]): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    // Flat PRIMITIVE argmin, not least(struct(sq, cid)…): the
-    // candidate set here is 1+R·cap ≈ 50-100 entries, past the size
-    // where a least() over struct terms stays efficient (struct
-    // comparisons leave whole-stage codegen's primitive path —
-    // measured 11 s at sf0.1; the packed-DECIMAL crossJoin twin was no
-    // better at 12 s from 31M per-row Decimal allocations). This shape
-    // is three chained projections of doubles only: (1) each sq once,
-    // (2) m = least(sq…) — comparisons, no allocation, (3) cidx =
-    // first candidate (ascending) with sq = m. Identical semantics to
-    // the lexicographic (sq, cidx) min: m is bit-for-bit one of the sq
-    // values, sq is never -0.0 (products of same sign), and the CASE
-    // scans cidx ascending so ties keep the lowest cidx — the oracle's
-    // `ORDER BY d2, cidx LIMIT 1`. ~0.85 s at sf0.1 (13× faster),
-    // zero-shuffle until the |cands|-group count agg.
-    val sqCols = cands.map(c => KMeansOps.sqDist(
-      col("x"), col("y"), lit(c.x), lit(c.y)).as(s"sq${c.cidx}"))
     val byIdx = cands.sortBy(_.cidx)
-    val m =
-      if (byIdx.size == 1) col(s"sq${byIdx.head.cidx}")
-      else least(byIdx.map(c => col(s"sq${c.cidx}")): _*)
-    // The .otherwise(-1) is UNREACHABLE (m = least(sq…) is bit-for-bit
-    // one of the sq values, so some branch always fires — and the spec
-    // pins Σw = n, which a -1 leak would break) but load-bearing for
-    // the PLAN: without it the CASE is nullable, the left join infers
-    // `isNotNull(cidx)`, and InferFiltersFromConstraints pushes that
-    // predicate below the projections with m INLINED into all |cands|
-    // branches — a 41k-node Filter re-evaluating ~|cands|² distance
-    // terms per row (measured 5 s of the 6 s total at sf0.1).
-    val cidx = byIdx.tail.foldLeft(
-      when(col(s"sq${byIdx.head.cidx}") === col("m"), lit(byIdx.head.cidx))) {
-      (acc, c) => acc.when(col(s"sq${c.cidx}") === col("m"), lit(c.cidx))
-    }.otherwise(lit(-1))
-    val w = widened(points).select(sqCols: _*).withColumn("m", m)
-      .select(cidx.as("cidx"))
-      .groupBy("cidx").agg(count(lit(1)).as("w"))
-    cands.toDF("cidx", "rnd", "pid", "x", "y")
-      .join(w, Seq("cidx"), "left")
-      .select(col("cidx"), col("rnd"), col("pid"), col("x"), col("y"),
-        coalesce(col("w"), lit(0L)).as("w"))
+    table(points.sparkSession, byIdx, weightsOn(read(points, 0, 0), byIdx))
   }
 
   /** The registered `init_kmeansbb` surface: weighted candidate set. */
   def candidates(points: DataFrame, l: Int = L, rounds: Int = Rounds,
-                 seed: Int = Seed, cap: Int = Cap): DataFrame =
-    weighted(points, sweep(points, l, rounds, seed, cap))
+                 seed: Int = Seed, cap: Int = Cap): DataFrame = {
+    val (cands, w) = sweepWeighted(points, l, rounds, seed, cap)
+    table(points.sparkSession, cands, w)
+  }
 
   /** Recluster the weighted candidates to k seeds by the weighted
     * k-means++ exponential race (sampling ∝ w, then ∝ w·d² — Bahmani
@@ -229,11 +335,8 @@ object KMeansParallel {
                    cap: Int = Cap, fseed: Int = FinalSeed): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
-    val cands = sweep(points, l, rounds, seed, cap)
-    val wRows = weighted(points, cands)
-      .select("cidx", "x", "y", "w").collect()
-      .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2), r.getLong(3)))
-      .sortBy(_._1)
+    val (cands, weights) = sweepWeighted(points, l, rounds, seed, cap)
+    val wRows = cands.zip(weights).map { case (c, n) => (c.cidx, c.x, c.y, n) }
     // ln u_c via the same clamp + plog construction as kmeansPlusPlus
     val lnU = wRows.map { case (cidx, _, _, _) =>
       val h = md5Hash60Jvm(fseed, cidx.toString)
@@ -278,15 +381,11 @@ object KMeansParallel {
     }.toDF("cid", "cidx", "x", "y")
   }
 
-  /** JVM twin of [[graft.ops.Dedup.md5Hash60]]: first 15 hex chars of
-    * md5("seed|" ++ s) as a 60-bit long — bit-identical to the Column
-    * and SQL forms (pinned in KMeansParallelSpec). */
-  def md5Hash60Jvm(seed: Int, s: String): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(s"$seed|$s".getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString
-    java.lang.Long.parseLong(hex.substring(0, 15), 16)
-  }
+  /** JVM twin of [[graft.ops.Dedup.md5Hash60]]: the first 60 bits of
+    * md5("seed|" ++ s) — bit-identical to the Column and SQL forms
+    * (pinned in KMeansParallelSpec). */
+  def md5Hash60Jvm(seed: Int, s: String): Long =
+    md5Hash60(MessageDigest.getInstance("MD5"), s"$seed|".getBytes(UTF_8), s.getBytes(UTF_8))
 
   // -----------------------------------------------------------------
   // DuckDB twins — the identical rounds unrolled as materialized CTEs.

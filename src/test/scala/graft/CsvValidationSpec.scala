@@ -73,7 +73,9 @@ class CsvValidationSpec extends SparkSpec {
     "exponents" -> "X,Y\n2.25e3,-1.5E-3\n10,1e0\n",
     "CRLF line ends" -> "X,Y\r\n10.0,10.0\r\n-1.5,2.0\r\n12.0,12.0\r\n",
     "blank lines" -> "\nX,Y\n\n10.0,10.0\n   \n\n-1.5,2.0\n\n",
-    "no trailing newline" -> "X,Y\n10.0,10.0\n-1.5,2.0"
+    "no trailing newline" -> "X,Y\n10.0,10.0\n-1.5,2.0",
+    // on 4 cores the first two text splits hold blank lines only
+    "header past the first split" -> ("\n" * 40 + "X,Y\n10.0,10.0\n-1.5,2.0\n12.0,12.0\n")
   ).foreach { case (label, text) =>
     test(s"the CLI's points reader reads what pointsCsv reads: $label") {
       val f = dir.resolve("accepted_" + label.replaceAll("[^A-Za-z0-9]", "_") + ".csv")
@@ -84,6 +86,15 @@ class CsvValidationSpec extends SparkSpec {
         .map(r => (r.getDouble(0), r.getDouble(1)))
       assert(ref.size >= 2 && cli == ref)
     }
+  }
+
+  test("the CLI reads a file whose header is past its first text split") {
+    val path = dir.resolve("late_header.csv")
+    Files.writeString(path, "\n" * 40 + "X,Y\n10.0,10.0\n-1.5,2.0\n12.0,12.0\n")
+    val splits = kmeans.KMeansFit.csvCoordinates(spark, Tables.dataFiles(spark, path.toString))
+    assert(splits.collect().map(_.xs.length).sum == 3)
+    KMeansMain.run(spark, Map(
+      "points" -> path.toString, "numcentroids" -> "2", "seed" -> "1", "iterations" -> "1"))
   }
 
   test("centroidsCsv rejects an empty cluster id") {
