@@ -321,8 +321,8 @@ object Tables {
 
   /** O16 — collect-print sink (KMeans.java:143,243-245: `.print()` when
     * no output paths are given). */
-  def printSink(df: DataFrame, numRows: Int = 100): Unit =
-    df.show(numRows, truncate = false)
+  def printSink(df: DataFrame, rows: Int = 100): Unit =
+    df.show(rows, truncate = false)
 
   /** Bucketed managed-table write: rows hash-partitioned into
     * `numBuckets` files per partition by `cols`, sorted within buckets.

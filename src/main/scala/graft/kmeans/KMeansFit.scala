@@ -8,8 +8,8 @@ import org.apache.hadoop.mapred.{FileInputFormat, FileSplit, JobConf, TextInputF
 import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.rdd.{HadoopRDD, RDD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityParser}
+import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.catalyst.util.{FailFastMode, FailureSafeParser}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{Decimal, DoubleType, StructType}
@@ -18,6 +18,8 @@ import org.apache.spark.util.SerializableConfiguration
 import scala.collection.mutable.ArrayBuilder
 import scala.reflect.ClassTag
 import scala.util.Random
+
+import KMeansND.CentND
 
 /** Engine configuration — the reference CLI surface (O18,
   * flink-project/src/main/java/org/apache/flink/KMeans.java:58-66,
@@ -73,29 +75,33 @@ final case class FinalPass(labels: Option[graft.Tables.CsvParts] = None)
   * as a Flink `IterativeDataSet` superstep loop (KMeans.java:148,173-185);
   * the Spark shape — the one `org.apache.spark.ml.clustering.KMeans`
   * runs internally — is a DRIVER-side loop over a cached RDD: the
-  * points' coordinates are cached once per fit as two primitive arrays
+  * points' coordinates are cached once per fit as one primitive array
   * per partition, and each superstep is one `runJob` over that cache.
+  * The loop is the same for any number of dimensions: the paper's 2-D
+  * points, the `KMeansND` vectors and the m subspace codebooks of PQ
+  * training, which it fits in lockstep.
   *
   * 100 TB posture: one iteration is ONE job, with no shuffle and no
-  * query planning. Each task scans its partition's arrays once (nearest
-  * centroid, then a count and coordinate sums into k slots), so k slots
-  * × partitions cross the wire, and the driver merges them exactly.
-  * Driver memory holds the centroids and those slots, never data.
+  * query planning. Each task scans its partition's array once (nearest
+  * centroid, then a count and coordinate sums into k slots), so k·dim
+  * slots × partitions cross the wire, and the driver merges them
+  * exactly. Driver memory holds the centroids and those slots, never
+  * data.
   */
 object KMeansFit {
 
-  /** Euclidean displacement between two centroid sets, by cid; a centroid
-    * whose cluster vanished (empty cluster — reference drops the group,
-    * SURVEY.md §5) counts as not-moved. */
-  private def moved(newC: Seq[Cent], oldC: Seq[Cent], tol: Double): Boolean = {
-    val old = oldC.map(c => c.cid -> c).toMap
-    newC.exists { n =>
-      old.get(n.cid).exists { o =>
-        val dx = n.x - o.x; val dy = n.y - o.y
-        math.sqrt(dx * dx + dy * dy) > tol  // STRICT > (KMeans.java:179)
-      }
+  /** 0.0 + Σ (a(i) − b(i))², the fold in index order (`vecSqDist`). */
+  private def sqDist(a: Seq[Double], b: Seq[Double]): Double =
+    a.indices.foldLeft(0.0) { (d, i) => val dx = a(i) - b(i); d + dx * dx }
+
+  /** Euclidean displacement between two lists of centroid sets, set by
+    * set and by cid; a centroid whose cluster vanished (empty cluster —
+    * reference drops the group, SURVEY.md §5) counts as not-moved. */
+  private def moved(newSets: Seq[Seq[CentND]], oldSets: Seq[Seq[CentND]], tol: Double): Boolean =
+    newSets.zip(oldSets).exists { case (newC, oldC) =>
+      val old = oldC.map(c => c.cid -> c.vec).toMap
+      newC.exists(n => old.get(n.cid).exists(o => math.sqrt(sqDist(n.vec, o)) > tol)) // STRICT > (KMeans.java:179)
     }
-  }
 
   /** One partition's points, which [[widen]] cuts into contiguous
     * slices. */
@@ -104,10 +110,11 @@ object KMeansFit {
     def slice(from: Int, until: Int): B
   }
 
-  /** One partition of the fit's cache: the points' coordinates. */
-  private[graft] final case class Coords(xs: Array[Double], ys: Array[Double]) extends Block[Coords] {
-    def length: Int = xs.length
-    def slice(from: Int, until: Int): Coords = Coords(xs.slice(from, until), ys.slice(from, until))
+  /** One partition of the fit's cache: the points' `dim` coordinates
+    * each, point after point in `vs`. */
+  private[graft] final case class Coords(dim: Int, vs: Array[Double]) extends Block[Coords] {
+    def length: Int = vs.length / dim
+    def slice(from: Int, until: Int): Coords = Coords(dim, vs.slice(from * dim, until * dim))
   }
 
   /** The message of the `IllegalArgumentException` a null, NaN or ±Inf
@@ -124,13 +131,33 @@ object KMeansFit {
     val rows = points.select(col("x").cast(DoubleType), col("y").cast(DoubleType))
       .queryExecution.toRdd
     widen(rows.mapPartitions { it =>
-      val xs = new ArrayBuilder.ofDouble
-      val ys = new ArrayBuilder.ofDouble
+      val vs = new ArrayBuilder.ofDouble
       it.foreach { r =>
-        xs += finite(r, 0, nonFinite("x"))
-        ys += finite(r, 1, nonFinite("y"))
+        vs += finite(r, 0, nonFinite("x"))
+        vs += finite(r, 1, nonFinite("y"))
       }
-      Iterator.single(Coords(xs.result(), ys.result()))
+      Iterator.single(Coords(2, vs.result()))
+    })
+  }
+
+  /** The `vec` arrays of `points`, `dim` doubles each, as one [[Coords]]
+    * per partition, read from the physical rows and [[widen]]ed. A null
+    * vector, a null, NaN or ±Inf element, or a vector of another length
+    * raises an `IllegalArgumentException` naming the column, in this
+    * same pass. */
+  private[kmeans] def vectors(points: DataFrame, dim: Int): RDD[Coords] = {
+    val rows = points.select(col("vec").cast("array<double>")).queryExecution.toRdd
+    widen(rows.mapPartitions { it =>
+      val vs = new ArrayBuilder.ofDouble
+      it.foreach { r =>
+        if (r.isNullAt(0)) throw new IllegalArgumentException(nonFinite("vec"))
+        val v = r.getArray(0)
+        if (v.numElements != dim) throw new IllegalArgumentException(
+          s"k-means input column vec holds a vector of length ${v.numElements}, not the centroids' $dim")
+        var i = 0
+        while (i < dim) { vs += finite(v, i, nonFinite("vec")); i += 1 }
+      }
+      Iterator.single(Coords(dim, vs.result()))
     })
   }
 
@@ -178,13 +205,12 @@ object KMeansFit {
         (file.getStart == 0 || blankBefore(file.getPath, data.head._1, shared.value.value))
       val rows = (if (header) data.drop(1) else data).flatMap(kv => safe.parse(kv._2))
       val name = file.getPath.toString
-      val xs = new ArrayBuilder.ofDouble
-      val ys = new ArrayBuilder.ofDouble
+      val vs = new ArrayBuilder.ofDouble
       rows.foreach { r =>
-        xs += finite(r, 0, graft.Tables.badCsvValue(name, "x"))
-        ys += finite(r, 1, graft.Tables.badCsvValue(name, "y"))
+        vs += finite(r, 0, graft.Tables.badCsvValue(name, "x"))
+        vs += finite(r, 1, graft.Tables.badCsvValue(name, "y"))
       }
-      Iterator.single(Coords(xs.result(), ys.result()))
+      Iterator.single(Coords(2, vs.result()))
     })
   }
 
@@ -230,9 +256,9 @@ object KMeansFit {
     }.partitionBy(new HashPartitioner(width)).values
   }
 
-  /** Coordinate `i` of `r`; `error` is the message of the
+  /** Value `i` of row or array `r`; `error` is the message of the
     * `IllegalArgumentException` a null, NaN or ±Inf raises. */
-  private[kmeans] def finite(r: InternalRow, i: Int, error: => String): Double = {
+  private[kmeans] def finite(r: SpecializedGetters, i: Int, error: => String): Double = {
     val v = if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
     if (v.isNaN || v.isInfinite) throw new IllegalArgumentException(error)
     v
@@ -307,19 +333,25 @@ object KMeansFit {
     } else longs(i) = r
   }
 
-  /** One task's k cluster slots, indexed like the cid-sorted centroids:
-    * point count, coordinate sums (plain doubles on the fast path,
-    * unscaled DECIMAL(28,6) on the exact one, each a `Long` part that
-    * spills into a `BigInteger` part) and, when traced, the partition's
-    * objective grid sum (slot 0 of `lg`/`ug`). */
-  private final class Slots(k: Int) extends Serializable {
+  /** One task's cluster slots, indexed like the rows of the kernel's
+    * centroid matrix: point count, sums of each of the `w` coordinates
+    * (plain doubles on the fast path, unscaled DECIMAL(28,6) on the exact
+    * one, each a `Long` part that spills into a `BigInteger` part) and,
+    * when traced, the partition's objective grid sum (slot 0 of
+    * `lg`/`ug`). */
+  private final class Slots(k: Int, w: Int) extends Serializable {
     val n = new Array[Long](k)
-    val sx, sy = new Array[Double](k)
-    val lx, ly = new Array[Long](k)
-    val ux, uy = Array.fill(k)(BigInteger.ZERO)
+    val sums = new Array[Double](k * w)
+    val longs = new Array[Long](k * w)
+    val bigs = Array.fill(k * w)(BigInteger.ZERO)
     val lg = new Array[Long](1)
     val ug = Array(BigInteger.ZERO)
   }
+
+  /** `cents` as the kernel's one centroid set of 2 coordinates, and
+    * back. */
+  private def nd(cents: Seq[Cent]): Seq[Seq[CentND]] = Seq(cents.map(c => CentND(c.cid, Seq(c.x, c.y))))
+  private def xy(sets: Seq[Seq[CentND]]): Seq[Cent] = sets.head.map(c => Cent(c.cid, c.vec(0), c.vec(1)))
 
   /** One Lloyd step over `points`: assign each point to its nearest
     * centroid, then re-average per cluster. Empty clusters produce no
@@ -339,66 +371,94 @@ object KMeansFit {
     * @return the next centroids (empty only for empty `points`), and the
     *         SSE when `withSse` */
   def step(points: DataFrame, cents: Seq[Cent], exact: Boolean = true,
-      withSse: Boolean = false): (Seq[Cent], Option[Double]) =
-    step(coordinates(points), cents, exact, withSse, None)
+      withSse: Boolean = false): (Seq[Cent], Option[Double]) = {
+    val (next, sse) = step(coordinates(points), 2, nd(cents), exact, withSse, None)
+    (xy(next), sse)
+  }
 
-  /** The task side of [[step]], against the cid-sorted centroids (`cx`,
-    * `cy`, `cids`, the slot of each in `slot`): one [[Slots]] per
-    * partition and, with `labels`, the part of the partition
+  /** The task side of [[step]]. The centroid sets, each cid-sorted, are
+    * the rows of the row-major, `w`-wide matrix `cv`, set after set: set
+    * s is rows `start(s)` until `start(s + 1)` and is matched against
+    * coordinates s·w until (s+1)·w of each point. Row g has cid `cids(g)`
+    * and sums into slot `slot(g)`. Returns one [[Slots]] per partition
+    * and, with `labels`, writes the part of the partition
     * (`TaskContext.partitionId`). A named class rather than a lambda:
     * Spark's `ClosureCleaner` returns at once for anything but a
     * closure, so a superstep reads and parses no class file. */
-  private final class Kernel(cx: Array[Double], cy: Array[Double], cids: Array[Int],
+  private final class Kernel(w: Int, start: Array[Int], cv: Array[Double], cids: Array[Int],
       slot: Array[Int], exact: Boolean, withSse: Boolean, labels: Option[graft.Tables.CsvParts])
       extends ((TaskContext, Iterator[Coords]) => Slots) with Serializable {
     def apply(ctx: TaskContext, it: Iterator[Coords]): Slots = {
-      val k = cx.length
-      val s = new Slots(k)
+      val m = start.length - 1
+      val s = new Slots(cids.length, w)
       val out = labels.map(_.open(ctx.partitionId())).orNull // null: no sink (hot loop)
       try while (it.hasNext) {
-        val c = it.next()
-        var i = 0
-        while (i < c.xs.length) {
-          val x = c.xs(i); val y = c.ys(i)
-          var best = 0
+        val vs = it.next().vs
+        var o = 0 // the first coordinate of a point's slice
+        var set = 0 // the centroid set of that slice
+        while (o < vs.length) {
+          val first = start(set)
+          var best = first
           var bestSq = 0.0
-          var j = 0
-          while (j < k) {
-            val dx = x - cx(j); val dy = y - cy(j)
-            val sq = dx * dx + dy * dy
-            if (j == 0 || sq < bestSq) { best = j; bestSq = sq }
-            j += 1
+          var g = first
+          while (g < start(set + 1)) {
+            var sq = 0.0
+            var t = 0
+            while (t < w) { val d = vs(o + t) - cv(g * w + t); sq += d * d; t += 1 }
+            if (g == first || sq < bestSq) { best = g; bestSq = sq }
+            g += 1
           }
-          val b = slot(best)
-          s.n(b) += 1
-          if (exact) {
-            val ux = halfUp(x * 1e6)
-            if (ux != Undecided) addSpilling(s.lx, s.ux, b, ux) else s.ux(b) = s.ux(b).add(micros(x))
-            val uy = halfUp(y * 1e6)
-            if (uy != Undecided) addSpilling(s.ly, s.uy, b, uy) else s.uy(b) = s.uy(b).add(micros(y))
-          } else { s.sx(b) += x; s.sy(b) += y }
+          val b = slot(best) * w
+          s.n(slot(best)) += 1
+          var t = 0
+          while (t < w) {
+            val v = vs(o + t)
+            if (exact) {
+              val u = halfUp(v * 1e6)
+              if (u != Undecided) addSpilling(s.longs, s.bigs, b + t, u)
+              else s.bigs(b + t) = s.bigs(b + t).add(micros(v))
+            } else s.sums(b + t) += v
+            t += 1
+          }
           if (withSse) {
-            val g = halfUp(bestSq * 1e6)
-            if (g != Undecided) addSpilling(s.lg, s.ug, 0, g) else s.ug(0) = s.ug(0).add(gridValue(bestSq))
+            val u = halfUp(bestSq * 1e6)
+            if (u != Undecided) addSpilling(s.lg, s.ug, 0, u) else s.ug(0) = s.ug(0).add(gridValue(bestSq))
           }
-          if (out != null) out.write(graft.Tables.csvLine((cids(best), x, y)))
-          i += 1
+          if (out != null)
+            out.write(Iterator.range(o, o + w).map(vs(_).toString).mkString(s"${cids(best)},", ",", "\n"))
+          o += w
+          set = if (set + 1 == m) 0 else set + 1
         }
       } finally if (out != null) out.close()
       s
     }
   }
 
+  /** Whether centroid vector `vec` holds `w` coordinates and none is
+    * null (a `Row`'s array can hide one behind `Seq[Double]`), NaN or
+    * ±Inf. */
+  private def finiteCentroid(vec: Seq[Double], w: Int): Boolean =
+    vec != null && vec.length == w && (vec: Seq[Any]).forall {
+      case d: Double => !d.isNaN && !d.isInfinite
+      case _ => false
+    }
+
   /** The kernel: one `runJob` of a [[Kernel]] over the partitions of
     * the coordinate cache itself, one job, no shuffle, no RDD made per
-    * step. Same arithmetic as the SQL operators:
-    * the argmin scans the centroids in cid order and keeps the first
-    * strictly smaller squared distance (the `least(struct(sq, cid))`
-    * tie-break toward the lowest cid); the exact path converts each
-    * coordinate to its unscaled DECIMAL(28,6) value, sums those exactly
-    * and divides `Decimal.toDouble` of the DECIMAL(38,6) sum by the
-    * count; the objective sums round(sq·1e6) as DECIMAL(38,0) like
-    * `KMeansOps.sqdistGridSum`.
+    * step. The points have `dim` coordinates, and each of the m centroid
+    * `sets` is matched against its own slice of every point: set s
+    * against the s-th of m consecutive slices of dim/m coordinates (m = 1
+    * for a plain fit, one set per subspace for PQ training). Each set
+    * assigns, sums and drops its empty clusters independently, as m
+    * separate fits over the sliced points would. Same arithmetic as the
+    * SQL operators: the argmin scans a set's centroids in cid order and
+    * keeps the first strictly smaller squared distance 0.0 + Σ dx² (the
+    * `vecSqDist` fold, at dim 2 equal to `KMeansOps.assign`'s dx² + dy²;
+    * the `least(struct(sq, cid))` tie-break toward the lowest cid); the exact
+    * path converts each coordinate to its unscaled DECIMAL(28,6) value,
+    * sums those exactly and divides `Decimal.toDouble` of the
+    * DECIMAL(38,6) sum by the count; the objective sums round(sq·1e6) as
+    * DECIMAL(38,0) like `KMeansOps.sqdistGridSum`, over every set.
     *
     * Both conversions run on primitive arithmetic ([[halfUp]]: floor
     * `v·1e6` and compare the fraction with 1/2) whenever |v·1e6| < 2^50
@@ -408,34 +468,44 @@ object KMeansFit {
     * to Spark's own `Decimal` cast, so each value equals the cast's
     * exactly. The unscaled values sum into `Long` slots that spill into
     * `BigInteger` ones before they overflow. They are recomputed on
-    * every step rather than cached beside the coordinates: at 16 B per
-    * point that would double the fit's cache, and the conversion costs
-    * a few nanoseconds.
+    * every step rather than cached beside the coordinates: at 8 B per
+    * coordinate that would double the fit's cache, and the conversion
+    * costs a few nanoseconds.
     *
-    * With `labels`, task i also writes the `cid,x,y` line of each of its
-    * points, labelled with its nearest centroid among `cents`, to part i.
+    * With `labels` (one set only), task i also writes the `cid,x,y` line
+    * of each of its points, labelled with its nearest centroid, to part
+    * i.
     *
     * The `runJob` stays in this method: the benchmark attributes a job
-    * to the innermost repository frame of its call site. */
-  private[kmeans] def step(coords: RDD[Coords], cents: Seq[Cent], exact: Boolean,
-      withSse: Boolean, labels: Option[graft.Tables.CsvParts]): (Seq[Cent], Option[Double]) = {
-    require(cents.nonEmpty, "step: empty centroid set")
-    val cs = cents.sortBy(_.cid).toArray
-    val k = cs.length
-    // centroids sharing a cid share its slot, as they share one SQL group
-    val slot = cs.map(c => cs.indexWhere(_.cid == c.cid))
-    val kernel = new Kernel(cs.map(_.x), cs.map(_.y), cs.map(_.cid), slot, exact, withSse, labels)
+    * to the innermost repository frame of its call site.
+    * @throws IllegalArgumentException on the driver, before the job, for
+    *         a centroid with a null, NaN or ±Inf coordinate or without
+    *         dim/m of them, naming its cid */
+  private[kmeans] def step(coords: RDD[Coords], dim: Int, sets: Seq[Seq[CentND]], exact: Boolean,
+      withSse: Boolean, labels: Option[graft.Tables.CsvParts]): (Seq[Seq[CentND]], Option[Double]) = {
+    require(sets.nonEmpty && sets.forall(_.nonEmpty), "step: empty centroid set")
+    val w = dim / sets.length
+    sets.flatten.find(c => !finiteCentroid(c.vec, w)).foreach(c => throw new IllegalArgumentException(
+      s"k-means centroid cid ${c.cid} does not hold $w finite coordinates (a null, NaN or infinite value, or another length)"))
+    require(w > 0 && dim % sets.length == 0, s"step: $dim coordinates do not split into ${sets.length} sets")
+    val sorted = sets.map(_.sortBy(_.cid))
+    val cs = sorted.flatten.toArray
+    val start = sorted.scanLeft(0)(_ + _.length).toArray
+    // centroids of a set sharing a cid share its slot, as they share one SQL group
+    val slot = sorted.zip(start).flatMap { case (set, s0) => set.map(c => s0 + set.indexWhere(_.cid == c.cid)) }.toArray
+    val kernel = new Kernel(w, start, cs.flatMap(_.vec), cs.map(_.cid), slot, exact, withSse, labels)
     val parts = coords.sparkContext.runJob(coords, kernel, coords.partitions.indices)
     // the exact total of one slot over the tasks: BigInteger + Long parts
     def total(longs: Slots => Array[Long], bigs: Slots => Array[BigInteger], i: Int) =
       parts.foldLeft(BigInteger.ZERO)((t, p) => t.add(bigs(p)(i)).add(BigInteger.valueOf(longs(p)(i))))
     def mean(sum: BigInteger, n: Long): Double =
       decimal(Decimal(new java.math.BigDecimal(sum, 6)), 38, 6).toDouble / n
-    val next = (0 until k).filter(i => slot(i) == i).flatMap { i =>
-      val n = parts.map(_.n(i)).sum
-      if (n == 0) None
-      else if (exact) Some(Cent(cs(i).cid, mean(total(_.lx, _.ux, i), n), mean(total(_.ly, _.uy, i), n)))
-      else Some(Cent(cs(i).cid, parts.map(_.sx(i)).sum / n, parts.map(_.sy(i)).sum / n))
+    val next = sorted.indices.map { s =>
+      (start(s) until start(s + 1)).filter(g => slot(g) == g).flatMap { g =>
+        val n = parts.map(_.n(g)).sum
+        Option.when(n > 0)(CentND(cs(g).cid, (g * w until (g + 1) * w).map(i =>
+          if (exact) mean(total(_.longs, _.bigs, i), n) else parts.map(_.sums(i)).sum / n)))
+      }
     }
     val sse = Option.when(withSse)(
       KMeansOps.gridToObjective(decimal(Decimal(total(_.lg, _.ug, 0)), 38, 0)))
@@ -443,11 +513,8 @@ object KMeansFit {
   }
 
   /** Full fit. Caches the points' coordinates ([[coordinates]]) for the
-    * duration of the loop and of its closing pass (the one real
-    * performance decision vs the reference — SURVEY.md §4) and
-    * unpersists them on exit. Every superstep is one kernel job over
-    * that cache (see [[step]]), and so is the closing pass; the first
-    * one also fills the cache.
+    * duration of the loop and of its closing pass and unpersists them on
+    * exit (see [[lloyd]]).
     *
     * @param trace record the per-iteration objective (SSE vs the freshly
     *              updated centroids) in [[FitResult.objTrace]]. Step i+1
@@ -474,34 +541,52 @@ object KMeansFit {
   private[graft] def fit(coords: RDD[Coords], init: Seq[Cent], cfg: KMeansConfig,
       trace: Boolean, exact: Boolean, last: Option[FinalPass]): FitResult = {
     require(init.nonEmpty, "fit: empty initial centroid set")
+    val (sets, iter, objs, objective) =
+      lloyd(coords, 2, nd(init), cfg.maxIter, cfg.tol, cfg.convergence, trace, exact, last)
+    FitResult(xy(sets), iter, objs, objective)
+  }
+
+  /** The Lloyd loop over the points `coords` holds, `dim` coordinates
+    * each. It caches them for the duration of the loop and of its closing
+    * pass (the one real performance decision vs the reference — SURVEY.md
+    * §4) and unpersists them on exit. Every superstep is one kernel job
+    * over that cache (see [[step]]), and so is the closing pass; the
+    * first one also fills the cache. The m centroid sets `init` step in
+    * lockstep. The loop stops after `maxIter` steps or, with
+    * `convergence`, at the first step after which no centroid of any set
+    * moved more than `tol`.
+    * @return the final sets, the iterations run, and [[fit]]'s objective
+    *         trace and closing-pass objective */
+  private[kmeans] def lloyd(coords: RDD[Coords], dim: Int, init: Seq[Seq[CentND]], maxIter: Int,
+      tol: Double, convergence: Boolean, trace: Boolean = false, exact: Boolean = true,
+      last: Option[FinalPass] = None): (Seq[Seq[CentND]], Int, Seq[Double], Option[Double]) = {
     val cache = coords.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      def pass(cents: Seq[Cent], withSse: Boolean,
-          labels: Option[graft.Tables.CsvParts] = None): (Seq[Cent], Option[Double]) = {
-        val r = step(cache, cents, exact, withSse, labels)
-        require(r._1.nonEmpty, "fit: the k-means input holds no points")
+      def pass(sets: Seq[Seq[CentND]], withSse: Boolean,
+          labels: Option[graft.Tables.CsvParts] = None): (Seq[Seq[CentND]], Option[Double]) = {
+        val r = step(cache, dim, sets, exact, withSse, labels)
+        require(r._1.forall(_.nonEmpty), "fit: the k-means input holds no points")
         r
       }
-      var cents = init
+      var sets = init
       var iter = 0
-      var go = cfg.maxIter > 0
+      var go = maxIter > 0
       val objs = Seq.newBuilder[Double]
       while (go) {
-        val (next, prevSse) = pass(cents, withSse = trace)
+        val (next, prevSse) = pass(sets, withSse = trace)
         iter += 1
         // step i+1 measured the SSE of step i's centroids: trace entry
         // i-1; the first step's (the initial centroids') is not traced
         if (iter > 1) objs ++= prevSse
-        go = iter < cfg.maxIter &&
-          (!cfg.convergence || moved(next, cents, cfg.tol))
-        cents = next
+        go = iter < maxIter && (!convergence || moved(next, sets, tol))
+        sets = next
       }
       val objective =
         if (trace && iter > 0 || last.isDefined)
-          pass(cents, withSse = true, last.flatMap(_.labels))._2
+          pass(sets, withSse = true, last.flatMap(_.labels))._2
         else None
       if (trace && iter > 0) objs ++= objective
-      FitResult(cents, iter, objs.result(), objective)
+      (sets, iter, objs.result(), objective)
     } finally { cache.unpersist(blocking = false) }
   }
 

@@ -3,24 +3,24 @@ package graft.kmeans
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import org.apache.spark.storage.StorageLevel
 
 /** N-dimensional K-Means — the generalization SURVEY.md §1.2 calls for
   * (the reference hardcodes 2-D `Point.x/y`; here a point is an
   * `array<double>` feature vector and the 2-D engine is the special
-  * case). Two assignment paths, mirroring the 2-D design:
+  * case). The fit is [[KMeansFit]]'s Lloyd loop, which runs in any
+  * number of dimensions; this object reads the vectors for it and keeps
+  * the verified query surface:
   *
-  *  - `assign` — declarative (broadcast crossJoin + fold sqdist +
-  *    min-struct argmin), DuckDB-checkable, used by the verified query
-  *    surface;
+  *  - `assign` / `recompute` — declarative (broadcast crossJoin + fold
+  *    sqdist + min-struct argmin; decimal-exact per-(cid, pos) means),
+  *    DuckDB-checkable, each with its SQL twin;
   *  - `assignKernel` — MLlib-style mapPartitions over primitive arrays
-  *    with a broadcast centroid matrix: no boxing, no fold
-  *    interpretation, the production path for the fit loop at scale.
+  *    with a broadcast centroid matrix, the same assignment without a
+  *    shuffle.
   *
-  * 100 TB posture matches the 2-D engine: assignment is scan-parallel
-  * (broadcast centroids, zero shuffle in the kernel path), recompute is
-  * one partial/final aggregate whose shuffle carries k·dim doubles per
-  * partition, the driver holds k centroids only.
+  * 100 TB posture matches the 2-D engine: each fit superstep is one
+  * shuffle-free job over the cached vectors, whose tasks return k·dim
+  * exact sums; the driver holds the centroids only.
   */
 object KMeansND {
 
@@ -118,25 +118,6 @@ object KMeansND {
       }.toDF("id", "cid", "sqdist")
   }
 
-  /** Kernel assignment that carries the vector through: (id, cid, vec).
-    * Costs nothing extra (the vector is already in the row) and lets
-    * the fit loop recompute means WITHOUT re-joining assignments back
-    * to the points — at scale that join is a full shuffle of every
-    * vector per superstep. */
-  def assignKernelVec(points: DataFrame, cents: Seq[CentND]): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    require(cents.nonEmpty, "assignKernelVec: empty centroid set")
-    val ids = cents.map(_.cid).toArray
-    val mat = cents.map(_.vec.toArray).toArray
-    val bc = spark.sparkContext.broadcast((ids, mat))
-    points.select(col("id"), col("vec")).as[(Long, Seq[Double])]
-      .mapPartitions { it =>
-        val (cids, m) = bc.value
-        it.map { case (id, v) => (id, cids(argmin(m, v.toArray)._1), v) }
-      }.toDF("id", "cid", "vec")
-  }
-
   /** Row index in `m` of the centroid nearest to `p`, with its squared
     * distance. Strict < keeps the first (lowest-index) centroid on ties,
     * matching the 2-D engine / reference KMeans.java:281. */
@@ -211,91 +192,31 @@ object KMeansND {
       CentND(i, r.getSeq[Double](r.fieldIndex("vec")))
     }.toSeq
 
-  /** Lloyd fit with the mapPartitions assignment kernel: strict >tol
-    * displacement, empty-cluster drop, points cached once — the 2-D
-    * `KMeansFit.fit` contract. The loop itself differs: each superstep
-    * here is a DataFrame query (kernel assignment, then the decimal
-    * `recompute` aggregate and its shuffle) over a cached DataFrame,
-    * where the 2-D fit runs one shuffle-free job over cached
-    * coordinate arrays. */
+  /** Lloyd fit over the `vec` column: [[KMeansFit]]'s kernel at the
+    * centroids' dim, one shuffle-free job per superstep over the
+    * vectors, cached once. Strict >tol displacement, empty clusters
+    * dropped, each step `==` `recompute(points, assign(points, cents))`.
+    * An empty `init` at `maxIter` 0 returns as it is, with no job.
+    * @throws IllegalArgumentException for a centroid with a null, NaN or
+    *         ±Inf element or another length than the first's, before any
+    *         job; for a null vector, a null, NaN or ±Inf element or a
+    *         vector of another length, in the first job */
   def fit(points: DataFrame, init: Seq[CentND], maxIter: Int, tol: Double = 0.0,
-      convergence: Boolean = true, numRows: Long = -1L): (Seq[CentND], Int) = {
-    val spark = points.sparkSession
-    val defPar = spark.sparkContext.defaultParallelism
-    // Rebalance for the loop. Without a row count the target is the
-    // full cluster width, as in the 2-D engine (decimal mean
-    // aggregation is CPU-bound per row — on any real cluster input
-    // splits already exceed the cores, so this is a local-mode knob).
-    // With `numRows` (callers that run MANY small fits pay ONE
-    // metadata-fast count and share it — PqIndex/IvfIndex) the target
-    // is exact-size-aware: ~1 MB of in-memory rows per task, clamped
-    // to [1, defaultParallelism], so a 2k-row codebook fit stays a
-    // few-task kernel instead of 32-task scheduling weight per
-    // superstep while a corpus-scale fit still fans out fully. The
-    // budget is deliberately SMALL because the per-iteration decimal
-    // mean aggregation is CPU-bound per row, not scan-bound: a 4 MB
-    // budget starved the sf10 residual fits to 8 tasks and tripled
-    // ivfpq there (measured r16) while 1 MB restores full width at
-    // 200k rows and keeps the tiny gate-SF fits at 1-2 tasks. r16
-    // note: an optimizer sizeInBytes estimate is NOT a substitute for
-    // the count — parquet bytes under-read the replicated sf1 fixture
-    // ~40× and a 200k×64 coarse fit landed on one task (ivf_topk
-    // 2.8 → 18 s there). Row count × schema width cannot be fooled
-    // that way. Result-identical under any partitioning: assignment
-    // is per-row, means are DECIMAL-exact, init is id-ordered.
-    val target =
-      // init.isEmpty guard (r16 advice): the size-aware branch reads
-      // init.head for the row width, and an empty init (e.g.
-      // initFromLowestIds on an empty relation) must keep the old
-      // behavior — maxIter=0 returns cleanly, maxIter>0 reaches
-      // assignKernelVec's clear require — not a bare head exception.
-      if (numRows < 0L || init.isEmpty) defPar
-      else {
-        val rowBytes = 24L + 8L * init.head.vec.length
-        (((numRows * rowBytes) / (1L << 20)) + 1L).min(defPar.toLong)
-          .max(1L).toInt
-      }
-    val balanced =
-      if (points.rdd.getNumPartitions < target) points.repartition(target)
-      else points
-    val cached = balanced.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      var cents = init
-      var iter = 0
-      var go = maxIter > 0
-      while (go) {
-        // One shuffle per iteration, k·dim flat rows collected, vectors
-        // assembled driver-side (r16): the previous vec-carrying recompute +
-        // collect ran a SECOND shuffle (groupBy(cid) + collect_list)
-        // whose only purpose was array assembly the driver can do on
-        // ≤ k·dim rows. Same (cid, pos) decimal-exact means, same
-        // pos-ascending order as the array_sort(struct(pos, m)) it
-        // replaces (pos is unique per cid), empty clusters still drop.
-        val flat = assignKernelVec(cached, cents)
-          .select(col("cid"), posexplode(col("vec")))
-          .groupBy("cid", "pos")
-          .agg(posMean)
-          .collect()
-        val next = flat.groupBy(_.getInt(0)).map { case (cid, rows) =>
-          CentND(cid, rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toIndexedSeq)
-        }.toSeq.sortBy(_.cid)
-        iter += 1
-        go = iter < maxIter && (!convergence || moved(next, cents, tol))
-        cents = next
-      }
-      (cents, iter)
-    } finally { cached.unpersist(blocking = false) }
+      convergence: Boolean = true): (Seq[CentND], Int) = {
+    val (sets, iter) = fitSets(points, Seq(init), maxIter, tol, convergence)
+    (sets.head, iter)
   }
 
-  private def moved(newC: Seq[CentND], oldC: Seq[CentND], tol: Double): Boolean = {
-    val old = oldC.map(c => c.cid -> c.vec).toMap
-    newC.exists { n =>
-      old.get(n.cid).exists { o =>
-        var d = 0.0; var i = 0
-        while (i < n.vec.length) { val dx = n.vec(i) - o(i); d += dx * dx; i += 1 }
-        math.sqrt(d) > tol
-      }
-    }
+  /** [[fit]] of m centroid sets in lockstep, set s over the s-th of m
+    * equal consecutive slices of every vector (PQ's subspaces): the
+    * result of m separate fits over the sliced vectors, in one job per
+    * superstep. The slice width is the first centroid's length. */
+  private[graft] def fitSets(points: DataFrame, init: Seq[Seq[CentND]], maxIter: Int,
+      tol: Double, convergence: Boolean): (Seq[Seq[CentND]], Int) = {
+    val dim = init.size * init.head.headOption.flatMap(c => Option(c.vec)).fold(0)(_.length)
+    val (sets, iter, _, _) =
+      KMeansFit.lloyd(KMeansFit.vectors(points, dim), dim, init, maxIter, tol, convergence)
+    (sets, iter)
   }
 
   /** SSE against a centroid set (kernel path). */

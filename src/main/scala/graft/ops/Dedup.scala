@@ -982,8 +982,8 @@ object Dedup {
       docs: DataFrame, n: Int = 3, numPerm: Int = 64,
       rowsPerBand: Int = 4, threshold: Double = 0.8,
       maxDf: Int = DefaultMaxDf): DataFrame = {
-    // NOTE: running the two eager checkpoints concurrently (the
-    // PqIndex.train trick) was tried and REJECTED: both pipelines are
+    // NOTE: running the two eager checkpoints concurrently from two
+    // driver threads was tried and REJECTED: both pipelines are
     // shuffle-heavy scans that each saturate the cluster on their own,
     // so overlap only added contention (7.1 s → ~9.9 s at sf0.1).
     val truth = ngramJaccardPairs(docs, n, threshold, maxDf)

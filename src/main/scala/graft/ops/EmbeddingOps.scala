@@ -22,7 +22,8 @@ import scala.util.Random
 object EmbeddingOps {
 
   /** Per-invocation job-group token for [[topkRecallReport]]'s
-    * concurrent branches (the PqIndex.TrainSeq convention). */
+    * concurrent branches: two concurrent reports get distinct groups,
+    * so one's failure cancels only its own jobs. */
   private val RecallSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Dot product of two array<double|float> columns via the native
@@ -1575,11 +1576,10 @@ object EmbeddingOps {
     // The four family pipelines run driver-side work at CONSTRUCTION
     // time (the PQ/IVFADC codebook-training collects, the auto-width
     // count jobs) and are fully independent until the final union, so
-    // they are constructed CONCURRENTLY from four driver threads — the
-    // PqIndex.train pattern one level up. Each branch's arithmetic is
-    // untouched (train() already isolates concurrent invocations under
-    // per-invocation job groups), so the report is bit-identical to the
-    // sequential construction; only the scheduler interleaving changes.
+    // they are constructed CONCURRENTLY from four driver threads. Each
+    // branch's arithmetic is untouched, so the report is bit-identical
+    // to the sequential construction; only the scheduler interleaving
+    // changes.
     // Measured r16 (isolated fresh-JVM bench, sf0.1): 12.4 s → see
     // OPTIMIZATION_r16.md — the two training stacks alone serialize
     // ~8.5 s of small underutilizing jobs otherwise.
@@ -1589,9 +1589,9 @@ object EmbeddingOps {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
       implicit val ec: ExecutionContext =
         ExecutionContext.fromExecutorService(pool)
-      // One per-invocation job group over all four branches (the
-      // PqIndex.train discipline, r16 advice): if a branch future
-      // fails, Await rethrows but the other three keep running their
+      // One per-invocation job group over all four branches (r16
+      // advice): if a branch future fails, Await rethrows but the
+      // other three keep running their
       // construction-time Spark jobs (training collects, count jobs)
       // behind the exception — cancel the group and interrupt the pool
       // instead of letting them burn slots to completion.

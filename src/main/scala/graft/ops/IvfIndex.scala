@@ -16,8 +16,8 @@ import graft.kmeans.KMeansND.CentND
   *     nlist·dim flops), probe the best `nprobe` lists, exact-rescore
   *     only those candidates.
   *
-  * 100 TB posture: the index build is one k-means fit (scan-parallel
-  * kernel, k·dim-sized shuffles); a search touches nprobe/nlist of the
+  * 100 TB posture: the index build is one k-means fit (one
+  * scan-parallel, shuffle-free kernel job per superstep); a search touches nprobe/nlist of the
   * data — with partitioning-by-list_id at write time a probe is a
   * partition-pruned scan, never a full pass. Rescoring is brute-force
   * cosine over the (small) probed candidate set.
@@ -40,11 +40,8 @@ object IvfIndex {
       convergence: Boolean = true): Index = {
     val vecs = vectors(embs)
     val init = KMeansND.initFromLowestIds(vecs, nlist)
-    // one metadata-fast count so the fit right-sizes its loop
-    // parallelism (KMeansND.fit numRows doc)
     val (cents, _) =
-      KMeansND.fit(vecs, init, maxIter, tol = 1e-6,
-        convergence = convergence, numRows = vecs.count())
+      KMeansND.fit(vecs, init, maxIter, tol = 1e-6, convergence = convergence)
     val lists = KMeansND.assignKernel(vecs, cents)
       .select(col("id"), col("cid").as("list_id"))
     Index(lists.join(vecs, "id"), cents)

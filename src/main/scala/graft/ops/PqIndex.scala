@@ -25,63 +25,30 @@ import graft.kmeans.KMeansND.CentND
   */
 object PqIndex {
 
-  private val TrainSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-
   case class Codebooks(m: Int, subDim: Int, books: Seq[Seq[CentND]])
 
   private def subVec(s: Int, subDim: Int) =
     slice(col("vec"), s * subDim + 1, subDim)
 
   /** Train per-subspace codebooks with exactly `maxIter` Lloyd steps
-    * from the k lowest-id sub-vectors (deterministic, unrollable).
+    * from the `nlist` lowest-id sub-vectors (deterministic, unrollable).
     *
-    * The m fits are independent Spark job chains, so they are submitted
-    * CONCURRENTLY from m driver threads — each subspace's arithmetic
-    * (init, assignment, decimal-exact means) is untouched, so the
-    * codebooks are bit-identical to the sequential loop; only the
-    * scheduler interleaving changes. Sequentially, each small fit job
-    * leaves most of the cluster idle between stages; interleaved, the
-    * m·maxIter jobs share the same wall-clock window (measured ~2.5×
-    * on the pq/ivfpq query family at sf0.1). */
-  def train(vecs: DataFrame, m: Int, nlist: Int, maxIter: Int,
-      numRows: Long = -1L): Codebooks = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val dim = vecs.select(size(col("vec"))).head().getInt(0)
+    * The m subspace fits are independent (each its own init, argmins
+    * and decimal-exact means), so they run in lockstep as one fit of m
+    * centroid sets ([[KMeansND.fitSets]]): one init query for the
+    * lowest-id full vectors, sliced into the m initial codebooks, then
+    * one job per iteration over the vectors, cached once, that fills
+    * the m·nlist slots. The codebooks are those of m separate fits over
+    * the sliced vectors. */
+  def train(vecs: DataFrame, m: Int, nlist: Int, maxIter: Int): Codebooks = {
+    val init = KMeansND.initFromLowestIds(vecs, nlist)
+    // a null vector stays null, for the fit to reject by its cid
+    val dim = init.headOption.flatMap(c => Option(c.vec)).fold(0)(_.length)
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val subDim = dim / m
-    // ONE count shared by all m subspace fits (metadata-fast on a
-    // column-pruned parquet scan): lets each fit right-size its loop
-    // parallelism instead of paying 32-task stages on a ~3 MB slice
-    // (KMeansND.fit numRows doc — measured r16)
-    val n = if (numRows >= 0L) numRows else vecs.count()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(m)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    // sibling fits run under one job group so a failed subspace CANCELS
-    // the others' in-flight Spark jobs before Await rethrows — a
-    // graceful shutdown() alone would leave orphaned jobs burning
-    // cluster slots behind the exception (r14 advice)
-    val sc = vecs.sparkSession.sparkContext
-    // per-invocation token: identityHashCode(this) is the SINGLETON's
-    // hash, so two concurrent same-shape train() calls shared a group
-    // name and a failure in one cancelled the other's jobs (r15 advice)
-    val group = s"pq-train-${TrainSeq.incrementAndGet()}-${m}x$nlist"
-    val books =
-      try Await.result(Future.sequence((0 until m).map { s => Future {
-        sc.setJobGroup(group, "pq subspace fits", interruptOnCancel = true)
-        try {
-          val sub = vecs.select(col("id"), subVec(s, subDim).as("vec"))
-          val init = KMeansND.initFromLowestIds(sub, nlist)
-          KMeansND.fit(sub, init, maxIter, tol = 0.0, convergence = false,
-            numRows = n)._1
-        } finally sc.clearJobGroup()
-      }}), Duration.Inf)
-      catch { case e: Throwable =>
-        sc.cancelJobGroup(group)
-        pool.shutdownNow()
-        throw e
-      }
-      finally pool.shutdown()
+    val books = KMeansND.fitSets(vecs, (0 until m).map(s => init.map(c =>
+        c.copy(vec = Option(c.vec).map(_.slice(s * subDim, (s + 1) * subDim)).orNull))),
+      maxIter, tol = 0.0, convergence = false)._1
     Codebooks(m, subDim, books)
   }
 
@@ -272,22 +239,18 @@ object PqIndex {
       queryId: Long = 0L, k: Int = 10, nprobe: Int = 2): DataFrame = {
     val spark = embs.sparkSession
     val vecs = IvfIndex.vectors(embs)
-    // one count shared by the coarse fit and the m residual fits
-    // (residual rows = vector rows; see KMeansND.fit numRows)
-    val n = vecs.count()
     val coarse = KMeansND.fit(vecs,
       KMeansND.initFromLowestIds(vecs, nlistC), maxIterC, tol = 0.0,
-      convergence = false, numRows = n)._1
+      convergence = false)._1
     val lists = KMeansND.assignKernel(vecs, coarse)
       .select(col("id"), col("cid").as("list_id"))
     val coarseDF = graft.Tables.centsNDDF(spark, coarse)
       .select(col("cid").as("list_id"), col("cvec"))
-    // one eager materialization: the m concurrent subspace fits, the
-    // encode branches and the list join all read the SAME residual
-    // relation — without this each consumer re-runs the scan+join
+    // one eager materialization: the codebook fit, the encode branches
+    // and the list join all read the SAME residual relation — without
+    // this each consumer re-runs the scan+join
     val resid = residuals(vecs, lists, coarseDF).localCheckpoint(true)
-    val cb = train(resid.select("id", "vec"), m, nlist, maxIter,
-      numRows = n)
+    val cb = train(resid.select("id", "vec"), m, nlist, maxIter)
     val codes = encode(resid.select("id", "vec"), cb)
       .join(resid.select("id", "list_id"), "id")
     val q = vecs.filter(col("id") === queryId).head().getSeq[Double](1)
@@ -309,17 +272,15 @@ object PqIndex {
     val spark = embs.sparkSession
     import spark.implicits._
     val vecs = IvfIndex.vectors(embs)
-    val n = vecs.count()
     val coarse = KMeansND.fit(vecs,
       KMeansND.initFromLowestIds(vecs, nlistC), maxIterC, tol = 0.0,
-      convergence = false, numRows = n)._1
+      convergence = false)._1
     val lists = KMeansND.assignKernel(vecs, coarse)
       .select(col("id"), col("cid").as("list_id"))
     val coarseDF = graft.Tables.centsNDDF(spark, coarse)
       .select(col("cid").as("list_id"), col("cvec"))
     val resid = residuals(vecs, lists, coarseDF).localCheckpoint(true)
-    val cb = train(resid.select("id", "vec"), m, nlist, maxIter,
-      numRows = n)
+    val cb = train(resid.select("id", "vec"), m, nlist, maxIter)
     encode(resid.select("id", "vec"), cb)
       .join(resid.select("id", "list_id"), "id")
       .write.mode("overwrite").partitionBy("list_id").parquet(s"$path/codes")

@@ -23,11 +23,10 @@ import graft.kmeans.KMeansND
   * 100 TB posture: the oracle-checkable declarative loop keeps the
   * doc-vector relation distributed — per superstep one broadcast of k
   * dense centroids onto the scan and one groupBy(id) argmin shuffle of
-  * the k-exploded relation; production fits at scale swap in
-  * `KMeansND.assignKernelVec` (zero-shuffle argmin, vec carried
-  * through, k·dim-group mean aggregate) exactly as the 2-D fit loop
-  * does — same math, same result, kernel path pinned equal to the
-  * declarative path in KMeansNDSpec.
+  * the k-exploded relation; the fit supersteps run on `KMeansND.fit`
+  * instead, the 2-D fit loop's kernel (one shuffle-free job per
+  * superstep over the cached vectors) — same math, same result, pinned
+  * equal to the declarative assign → recompute chain in KMeansNDSpec.
   */
 object TopicCluster {
 
@@ -61,8 +60,8 @@ object TopicCluster {
     // k-row driver collect (the one allowed collect class: centroid
     // seeds) — keeps the plan free of a global Window over the vecs
     val init = KMeansND.initFromLowestIds(vecs, k)
-    // the supersteps run on the kernel fit loop (zero-shuffle argmin +
-    // k·dim-group decimal means) — pinned bit-equal to the declarative
+    // the supersteps run on the kernel fit loop (one shuffle-free job
+    // per superstep) — pinned bit-equal to the declarative
     // assign→recompute chain in KMeansNDSpec, so the oracle hash is
     // unchanged; the returned relation keeps the declarative assign
     // (id, cid, sqdist) shape the oracle checks

@@ -81,7 +81,7 @@ class CsvValidationSpec extends SparkSpec {
       val f = dir.resolve("accepted_" + label.replaceAll("[^A-Za-z0-9]", "_") + ".csv")
       Files.writeString(f, text)
       val cli = kmeans.KMeansFit.csvCoordinates(spark, Tables.dataFiles(spark, f.toString))
-        .collect().toSeq.flatMap(c => c.xs.zip(c.ys))
+        .collect().toSeq.flatMap(_.vs.grouped(2).map { case Array(x, y) => (x, y) })
       val ref = Tables.pointsCsv(spark, f.toString).collect().toSeq
         .map(r => (r.getDouble(0), r.getDouble(1)))
       assert(ref.size >= 2 && cli == ref)
@@ -92,7 +92,7 @@ class CsvValidationSpec extends SparkSpec {
     val path = dir.resolve("late_header.csv")
     Files.writeString(path, "\n" * 40 + "X,Y\n10.0,10.0\n-1.5,2.0\n12.0,12.0\n")
     val splits = kmeans.KMeansFit.csvCoordinates(spark, Tables.dataFiles(spark, path.toString))
-    assert(splits.collect().map(_.xs.length).sum == 3)
+    assert(splits.collect().map(_.length).sum == 3)
     KMeansMain.run(spark, Map(
       "points" -> path.toString, "numcentroids" -> "2", "seed" -> "1", "iterations" -> "1"))
   }

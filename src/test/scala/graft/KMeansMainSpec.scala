@@ -4,13 +4,13 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** End-to-end CLI contract (EP1/EP2) + CSV sink round-trip (O1/O15). */
-class KMeansMainSpec extends SparkSpec with JobCounting {
+class KMeansMainSpec extends SparkSpec with JobCounting with GoldenCount {
 
   private val base = "/root/reference/script_results/script_3"
   private def tmp(name: String) = s"/tmp/graft-test/$name"
 
   test("EP1: file-init fit reproduces the reference golden objective") {
-    assume(new java.io.File(s"$base/input/points.csv").exists())
+    assumeGolden(base)
     KMeansMain.run(spark, Map(
       "points" -> s"$base/input/points.csv",
       "centroids" -> s"$base/input/centroids.csv",
@@ -30,7 +30,7 @@ class KMeansMainSpec extends SparkSpec with JobCounting {
   }
 
   test("EP2: seeded random init is reproducible and respects the config") {
-    assume(new java.io.File(s"$base/input/points.csv").exists())
+    assumeGolden(base)
     val args = Map(
       "points" -> s"$base/input/points.csv",
       "numcentroids" -> "4", "seed" -> "11",
@@ -54,7 +54,7 @@ class KMeansMainSpec extends SparkSpec with JobCounting {
     // in the goldens themselves (SweepReplay's artifact records the
     // full-curve ratios).
     val s1 = "/root/reference/script_results/script_1"
-    assume(new java.io.File(s"$s1/input/points.csv").exists())
+    assumeGolden(s1)
     def goldenBest(k: Int): Double = {
       val src = scala.io.Source.fromFile(s"$s1/results_objfun_$k.csv")
       try src.getLines().drop(1)
@@ -82,7 +82,7 @@ class KMeansMainSpec extends SparkSpec with JobCounting {
   }
 
   test("objtraceout emits the per-iteration objective matching the reference goldens") {
-    assume(new java.io.File(s"$base/input/points.csv").exists())
+    assumeGolden(base)
     KMeansMain.run(spark, Map(
       "points" -> s"$base/input/points.csv",
       "centroids" -> s"$base/input/centroids.csv",
@@ -105,7 +105,7 @@ class KMeansMainSpec extends SparkSpec with JobCounting {
   }
 
   test("CLI binary path: main(argv) in a fresh JVM replays all 15 script_3 goldens") {
-    assume(new java.io.File(s"$base/input/points.csv").exists())
+    assumeGolden(base)
     // The real user entry point — graft.KMeansMain.main with the
     // reference's own flag syntax — in its OWN JVM (main builds and
     // stops its own SparkSession; running it in-process would stop the

@@ -1,8 +1,7 @@
 package graft.kmeans
 
-import graft.{SparkSpec, Tables}
+import graft.{GoldenCount, SparkSpec, Tables}
 import org.apache.spark.sql.functions._
-import org.scalatest.Outcome
 
 /** Golden replay (SURVEY.md §5): run our engine on the reference's own
   * script_3 fixtures (100k blob points + 8 fixed centroids) and compare
@@ -12,25 +11,9 @@ import org.scalatest.Outcome
   * repetitions each, so the run is deterministic). Tolerance 1e-9
   * relative absorbs the reference's Math.pow(sqrt(d),2) ULP wrinkle
   * (KMeans.java:357,381). */
-class GoldenReplaySpec extends SparkSpec {
+class GoldenReplaySpec extends SparkSpec with GoldenCount {
 
   private val base = "/root/reference/script_results/script_3"
-
-  private var canceled = 0
-
-  override def withFixture(test: NoArgTest): Outcome = {
-    val outcome = super.withFixture(test)
-    if (outcome.isCanceled) canceled += 1
-    outcome
-  }
-
-  /** One line in the test log: how many golden tests did not run, and
-    * why, so a dark anchor shows beside the suite's pass count. */
-  override def afterAll(): Unit = {
-    val why = if (canceled == 0) "" else s": the reference goldens under $base are absent"
-    println(s"GoldenReplaySpec: $canceled of ${testNames.size} golden replay tests canceled$why")
-    super.afterAll()
-  }
 
   private def golden(n: Int): Double = {
     val src = scala.io.Source.fromFile(s"$base/results_objfun_$n.csv")
@@ -39,7 +22,7 @@ class GoldenReplaySpec extends SparkSpec {
   }
 
   test("objective trace over 15 supersteps matches the reference goldens") {
-    assume(new java.io.File(s"$base/input/points.csv").exists())
+    assumeGolden(base)
     val pts = Tables.pointsCsv(spark, s"$base/input/points.csv")
       .withColumn("pid", monotonically_increasing_id())
       .select("pid", "x", "y")
@@ -67,7 +50,7 @@ class GoldenReplaySpec extends SparkSpec {
   }
 
   test("fit() with convergence reproduces the plateau objective") {
-    assume(new java.io.File(s"$base/input/points.csv").exists())
+    assumeGolden(base)
     val pts = Tables.pointsCsv(spark, s"$base/input/points.csv")
       .withColumn("pid", monotonically_increasing_id())
       .select("pid", "x", "y")

@@ -1,6 +1,6 @@
 package graft.kmeans
 
-import graft.{Blobs, SparkSpec, Tables}
+import graft.{Blobs, GoldenCount, SparkSpec, Tables}
 import org.apache.spark.mllib.clustering.{KMeans => MLKMeans, KMeansModel}
 import org.apache.spark.mllib.linalg.Vectors
 import org.apache.spark.sql.functions._
@@ -13,12 +13,12 @@ import org.apache.spark.sql.functions._
   * neither has a silent arithmetic/semantics bug. The reference fixtures
   * are not always mounted, so the same check also runs on the in-repo
   * blob points of KMeansMainSpec's paper anchor. */
-class MLlibCrossCheckSpec extends SparkSpec {
+class MLlibCrossCheckSpec extends SparkSpec with GoldenCount {
 
   private val base = "/root/reference/script_results/script_3"
 
   test("our fit and MLlib KMeans agree on the objective for a fixed init") {
-    assume(new java.io.File(s"$base/input/points.csv").exists())
+    assumeGolden(base)
     val iters = 10
     val pts = Tables.pointsCsv(spark, s"$base/input/points.csv")
       .withColumn("pid", monotonically_increasing_id())

@@ -2,9 +2,10 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{JobCounting, SparkSpec}
+import graft.kmeans.{KMeansND, KMeansNDSpec}
 
-class PqIndexSpec extends SparkSpec {
+class PqIndexSpec extends SparkSpec with JobCounting {
 
   /** 4 well-separated clusters in 8-dim space, 10 vectors each; cluster
     * centers at 10·e_{2c}, members jittered deterministically. */
@@ -27,6 +28,27 @@ class PqIndexSpec extends SparkSpec {
     assert(cb.m == 4 && cb.subDim == 2 && cb.books.length == 4)
     assert(cb.books.forall(b => b.nonEmpty && b.length <= 4))
     assert(cb.books.forall(_.forall(_.vec.length == 2)))
+  }
+
+  test("lockstep train equals m per-subspace assign-recompute replays") {
+    val vecs = IvfIndex.vectors(spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet"))
+    val cb = PqIndex.train(vecs, m = 4, nlist = 16, maxIter = 3)
+    val want = (0 until 4).map { s =>
+      val sub = vecs.select(col("id"), slice(col("vec"), s * 16 + 1, 16).as("vec"))
+      KMeansNDSpec.replay(sub, KMeansND.initFromLowestIds(sub, 16), 3)
+    }
+    assert(cb.subDim == 16 && cb.books == want)
+  }
+
+  test("train runs its init query and maxIter kernel jobs, with no shuffle and no leaked cache") {
+    val sc = spark.sparkContext
+    val vecs = IvfIndex.vectors(clustered)
+    assert(vecs.rdd.getNumPartitions == sc.defaultParallelism)
+    val init = tally(KMeansND.initFromLowestIds(vecs, 4))
+    val before = sc.getPersistentRDDs.keySet
+    val train = tally(PqIndex.train(vecs, m = 4, nlist = 4, maxIter = 3))
+    assert(train.jobs == init.jobs + 3 && train.shuffleBytes == init.shuffleBytes, s"$train vs $init")
+    assert(sc.getPersistentRDDs.keySet == before)
   }
 
   test("encode assigns every vector a code per subspace, from the book") {
