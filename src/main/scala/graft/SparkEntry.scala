@@ -102,16 +102,15 @@ object SparkEntry {
       KMeansOps.convergeFilter(pairs, epsilon = 1.0).drop("displacement")
     }),
     // O10 — the flagship Lloyd loop itself, oracle-checked: SSE after
-    // exactly 10 fixed-init supersteps (the DuckDB twin unrolls the same
+    // exactly 10 fixed-init supersteps, summed by the fit's closing
+    // kernel pass over its own cache (the DuckDB twin unrolls the same
     // 10 decimal-exact steps as chained CTEs)
     "kmeans_fit10_obj" -> ((s, dir) => {
-      val pts = Tables.points(s, dir)
-      val res = kmeans.KMeansFit.fit(pts, Tables.initCentroids(s, dir, K),
-        kmeans.KMeansConfig(k = K, maxIter = 10, convergence = false))
-      // small local parquet comes up under-split (~3 partitions on 32
-      // cores) — rebalance for the final full-scan objective pass
-      val balanced = pts.repartition(s.sparkContext.defaultParallelism)
-      KMeansOps.objective(KMeansOps.assign(balanced, res.centroids))
+      import s.implicits._
+      val res = kmeans.KMeansFit.fit(Tables.points(s, dir), Tables.initCentroids(s, dir, K),
+        kmeans.KMeansConfig(k = K, maxIter = 10, convergence = false),
+        last = Some(kmeans.FinalPass()))
+      Seq(res.objective.get).toDF("objective")
     }),
 
     // O15∘O1 — the reference CSV sink (single-file, header-less,

@@ -15,14 +15,6 @@ object VecFunctions {
   def vecSqDist(a: Column, b: Column): Column =
     VecBridge.column(VecSqDist(e(a), e(b)))
 
-  def vecNorm(a: Column): Column = {
-    import org.apache.spark.sql.functions.sqrt
-    sqrt(vecDot(a, a))
-  }
-
-  def vecCosine(a: Column, b: Column): Column =
-    vecDot(a, b) / (vecNorm(a) * vecNorm(b))
-
   /** Raw IEEE bits of a non-negative double (order-preserving). */
   def doubleBits(a: Column): Column = VecBridge.column(DoubleBits(e(a)))
 

@@ -97,6 +97,17 @@ object KMeansND {
        |        (a, b) -> a + b), c.cid) AS rn
        |  FROM $ptsRel p CROSS JOIN $centsRel c) t WHERE rn = 1""".stripMargin
 
+  /** DuckDB twin of `maxIter` fixed Lloyd steps over `ptsRel`, unrolled
+    * as chained CTEs from the caller's centroid relation `<c>0`: step i
+    * assigns into `<a>i` against `<c>(i-1)` and recomputes `<c>i` from
+    * it. */
+  def lloydStepsSql(maxIter: Int, ptsRel: String = "ptsnd", a: String = "a",
+      c: String = "c"): String =
+    (1 to maxIter).map { i =>
+      s"$a$i AS (${assignSql(ptsRel, s"$c${i - 1}")}), " +
+        s"$c$i AS (${recomputeSql(ptsRel, s"$a$i")})"
+    }.mkString(", ")
+
   // -------------------------------------------------------------------
   // Production kernel: broadcast primitive centroid matrix +
   // mapPartitions argmin. No shuffle, no boxing, no interpreted folds.

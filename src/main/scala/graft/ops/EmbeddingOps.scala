@@ -445,31 +445,6 @@ object EmbeddingOps {
        |  JOIN e eb ON p.idb = eb.vec_id)""".stripMargin
   }
 
-  def lshTopKSql(
-      queryId: Long = 0L, k: Int = 10, dim: Int = 64,
-      numBits: Int = 8, numTables: Int = 4, seed: Long = 42L): String = {
-    val bucketsUnion = bucketsUnionSql(dim, numBits, numTables, seed)
-    s"""WITH buckets AS ($bucketsUnion),
-       |qb AS (SELECT tbl, bucket FROM buckets WHERE vec_id = $queryId),
-       |cand AS (
-       |  SELECT DISTINCT b.vec_id FROM buckets b
-       |  JOIN qb ON b.tbl = qb.tbl AND b.bucket = qb.bucket
-       |  WHERE b.vec_id <> $queryId),
-       |q AS (SELECT embedding AS q_emb,
-       |  SQRT(${dotSql("embedding", "embedding")}) AS q_norm
-       |  FROM embeddings WHERE vec_id = $queryId),
-       |scored AS (
-       |  SELECT e.vec_id,
-       |    ${dotSql("e.embedding", "q.q_emb")}
-       |      / (SQRT(${dotSql("e.embedding", "e.embedding")}) * q.q_norm) AS cosine
-       |  FROM embeddings e CROSS JOIN q
-       |  WHERE e.vec_id IN (SELECT vec_id FROM cand))
-       |SELECT vec_id, cosine FROM (
-       |  SELECT vec_id, cosine,
-       |    ROW_NUMBER() OVER (ORDER BY cosine DESC, vec_id ASC) AS rn
-       |  FROM scored) s WHERE rn <= $k""".stripMargin
-  }
-
   /** DuckDB twin of [[lshTopKAuto]]: the auto-masked bucket union (same
     * `nb` staircase from COUNT(*)), the query's probe set = its bucket
     * per table UNION ALL one flip per plane index `i < nb.bits`
@@ -545,41 +520,6 @@ object EmbeddingOps {
     cosineTopK(embs.join(cand.unionAll(
         embs.filter(col("vec_id") === queryId).select("vec_id")),
       Seq("vec_id"), "left_semi"), queryId, k)
-  }
-
-  /** DuckDB twin of [[rpTopK]]: same inlined projection matrix, same
-    * left-associated squared-distance chain, same overscan + rerank. */
-  def rpTopKSql(
-      queryId: Long = 0L, k: Int = 10, dim: Int = 64,
-      p: Int = 16, overscan: Int = 4, seed: Long = 77L): String = {
-    val planes = hyperplanes(dim, p, 1, seed).head
-    def planeLit(pl: Array[Double]): String =
-      pl.map(_.toString).mkString("[", ", ", "]")
-    val projCols = planes.zipWithIndex.map { case (pl, j) =>
-      s"${dotSql("embedding", planeLit(pl))} AS p$j" }.mkString(",\n    ")
-    val distChain = (0 until p)
-      .map(j => s"(pr.p$j - qp.p$j) * (pr.p$j - qp.p$j)").mkString(" + ")
-    s"""WITH pr AS MATERIALIZED (SELECT vec_id,
-       |    $projCols
-       |  FROM embeddings),
-       |qp AS (SELECT * FROM pr WHERE vec_id = $queryId),
-       |cand AS (SELECT vec_id FROM (
-       |  SELECT pr.vec_id, $distChain AS pd2
-       |  FROM pr, qp WHERE pr.vec_id <> $queryId
-       |  ORDER BY pd2 ASC, pr.vec_id ASC LIMIT ${k * overscan}) c),
-       |q AS (SELECT embedding AS q_emb,
-       |  SQRT(${dotSql("embedding", "embedding")}) AS q_norm
-       |  FROM embeddings WHERE vec_id = $queryId),
-       |scored AS (
-       |  SELECT e.vec_id,
-       |    ${dotSql("e.embedding", "q.q_emb")}
-       |      / (SQRT(${dotSql("e.embedding", "e.embedding")}) * q.q_norm) AS cosine
-       |  FROM embeddings e CROSS JOIN q
-       |  WHERE e.vec_id IN (SELECT vec_id FROM cand))
-       |SELECT vec_id, cosine FROM (
-       |  SELECT vec_id, cosine,
-       |    ROW_NUMBER() OVER (ORDER BY cosine DESC, vec_id ASC) AS rn
-       |  FROM scored) s WHERE rn <= $k""".stripMargin
   }
 
   // -------------------------------------------------------------------
@@ -819,21 +759,11 @@ object EmbeddingOps {
         col("lb").as("neg_label"), col("cosine"), col("rank"))
   }
 
-  def hardNegativesSql(
-      k: Int = 3, dim: Int = 64, numBits: Int = 6,
-      numTables: Int = 8, seed: Long = 42L): String =
-    hardNegativesBodySql(
-      bucketsUnionSql(dim, numBits, numTables, seed), "", k, dim)
-
   def hardNegativesAutoSql(
       k: Int = 3, dim: Int = 64, numTables: Int = 8,
-      seed: Long = 42L): String =
-    hardNegativesBodySql(bucketsUnionAutoSql(dim, numTables, seed),
-      s"${autoBitsCteSql()},\n", k, dim)
-
-  private def hardNegativesBodySql(
-      bucketsUnion: String, lead: String, k: Int, dim: Int): String = {
-    s"""WITH ${lead}buckets AS ($bucketsUnion),
+      seed: Long = 42L): String = {
+    s"""WITH ${autoBitsCteSql()},
+       |buckets AS (${bucketsUnionAutoSql(dim, numTables, seed)}),
        |cpairs AS (
        |  SELECT DISTINCT a.vec_id AS ida, b.vec_id AS idb
        |  FROM buckets a JOIN buckets b
@@ -900,18 +830,10 @@ object EmbeddingOps {
         col("label"), (col("nlbl") === col("label")).as("correct"))
   }
 
-  def knnClassifySql(
-      k: Int = 5, dim: Int = 64, numBits: Int = 6,
-      numTables: Int = 8, seed: Long = 42L): String =
-    knnClassifyBodySql(knnScoredChainSql(dim, numBits, numTables, seed), k)
-
   def knnClassifyAutoSql(
       k: Int = 5, dim: Int = 64, numTables: Int = 8,
-      seed: Long = 42L): String =
-    knnClassifyBodySql(knnScoredChainAutoSql(dim, numTables, seed), k)
-
-  private def knnClassifyBodySql(chain: String, k: Int): String = {
-    s"""WITH $chain,
+      seed: Long = 42L): String = {
+    s"""WITH ${knnScoredChainAutoSql(dim, numTables, seed)},
        |knn AS (
        |  SELECT ida AS vec_id, idb AS neighbor FROM (
        |    SELECT ida, idb,

@@ -14,9 +14,15 @@ import org.apache.spark.sql.functions._
   * Ranks are |V|-sized, edges |E|-sized; nothing driver-side grows
   * with the graph (the only collect-like op is the 1-row node count,
   * broadcast). Fixed iteration counts compose the whole run into ONE
-  * lazy plan (like the unrolled Lloyd fit); for long runs, checkpoint
-  * every few supersteps to truncate lineage, exactly as
-  * connectedComponents does.
+  * lazy plan (like the unrolled Lloyd fit); long runs checkpoint every
+  * `CkptEvery` supersteps to truncate lineage.
+  *
+  * There is one PageRank loop, [[pageRank]]: plain PageRank is the
+  * personalized one whose seed predicate holds for every node (Jeh &
+  * Widom 2003), and one SQL generator, [[pageRankSql]], emits its
+  * unrolled-CTE twins. The registered supplier↔part queries share one
+  * edge builder (`supplierPartEdges`, `symmetric`) and one SQL
+  * prelude (`supplierPartEdgesSql`).
   *
   * Determinism: contributions are IEEE divisions snapped to a 1e-12
   * integer grid before the per-dst sum (the corpusJsDivergence
@@ -27,10 +33,27 @@ object GraphOps {
 
   private val Grid = 1.0e12
 
+  /** Supersteps between the lazy loops' lineage cuts ([[pageRank]],
+    * [[labelPropagation]]): plan depth and optimizer time stay bounded
+    * on long runs, and the registered 3-superstep queries never cut. */
+  private val CkptEvery = 8
+
   /** PageRank with `iters` fixed supersteps at the given damping.
-    * `edges0` carries (src, dst) long node ids; duplicate edges are
+    * `edges0` carries (src, dst) node ids; duplicate edges are
     * collapsed. Nodes without out-edges (dangling) contribute nothing
     * — feed a symmetrized edge set if the graph has sinks.
+    *
+    * Teleport (Jeh & Widom 2003, "Scaling Personalized Web Search"):
+    * the teleport mass goes to the seed set S, the nodes `isSource`
+    * holds for, as base/|S| on each seed and 0 elsewhere; rank(v) then
+    * measures proximity to the seeds (the "related items from this
+    * seed set" query recommendation and curation pipelines run).
+    * `isSource` is a predicate column over `node`, so the seed set is
+    * declarative (a filter, never a driver-side list). The default
+    * seeds every node: plain PageRank, whose `when(true, …)` teleport
+    * and `count(when(true, 1))` seed count the optimizer folds to
+    * `1.0 / n` and `count(1)`. The initial rank is the teleport vector
+    * itself.
     *
     * Loop shape (the r10→r11 rework, measured 8.0 → 3.7 s at sf0.1):
     *   - The out-degree is folded onto the edge relation ONCE (ewd =
@@ -41,7 +64,7 @@ object GraphOps {
     *     round → exponential lazy lineage), each superstep references
     *     the previous rank exactly once, so lineage is linear and the
     *     per-superstep eager checkpoint was pure job-scheduling
-    *     overhead. Long runs checkpoint every `ckptEvery` supersteps
+    *     overhead. Long runs checkpoint every `CkptEvery` supersteps
     *     to bound plan depth/optimizer time.
     *   - Contributions accumulate as LONGs on the 1e-12 grid, not
     *     DECIMAL(38,0): every term round(c·1e12) ≤ 1e12 and a dst's
@@ -54,7 +77,7 @@ object GraphOps {
     * would be wrong at scale, so join strategy is left to AQE stats. */
   def pageRank(
       edges0: DataFrame, iters: Int = 3, damping: Double = 0.85,
-      ckptEvery: Int = 8): DataFrame = {
+      isSource: Column => Column = _ => lit(true)): DataFrame = {
     val base = 1.0 - damping
     val edges = edges0.select("src", "dst").distinct()
     val deg = edges.groupBy(col("src").as("dnode"))
@@ -65,16 +88,18 @@ object GraphOps {
     // node set derives from it without re-scanning the base relation
     val nodes = ewd.select(col("src").as("node"))
       .union(ewd.select(col("dst").as("node"))).distinct().localCheckpoint(true)
-    val nRow = nodes.agg(count(lit(1)).as("n"))
+    val seed = isSource(col("node"))
+    val nRow = nodes.agg(count(when(seed, lit(1))).as("n"))
+    val teleport =
+      when(seed, lit(1.0) / col("n").cast("double")).otherwise(lit(0.0))
     def freshRank(sums: Option[DataFrame]): DataFrame = sums match {
       case None =>
-        nodes.crossJoin(broadcast(nRow))
-          .select(col("node"), (lit(1.0) / col("n").cast("double")).as("rank"))
+        nodes.crossJoin(broadcast(nRow)).select(col("node"), teleport.as("rank"))
       case Some(sg) =>
         nodes.crossJoin(broadcast(nRow))
           .join(sg, Seq("node"), "left")
           .select(col("node"),
-            (lit(base) * (lit(1.0) / col("n").cast("double")) +
+            (lit(base) * teleport +
               lit(damping) *
                 // long→double is exact here (sums ≤ ~1e12 < 2^53)
                 (coalesce(col("sg").cast("double"), lit(0.0))
@@ -88,128 +113,97 @@ object GraphOps {
             .cast("long").as("g"))
         .groupBy(col("dst").as("node")).agg(sum(col("g")).as("sg"))
       rank = freshRank(Some(sums))
-      if (i % ckptEvery == 0 && i < iters) rank = rank.localCheckpoint(true)
+      if (i % CkptEvery == 0 && i < iters) rank = rank.localCheckpoint(true)
     }
     rank
   }
 
-  /** Personalized PageRank (Jeh & Widom 2003, "Scaling Personalized
-    * Web Search"): the teleport mass goes to a SOURCE SET instead of
-    * uniformly to every node — rank(v) measures proximity to the seeds
-    * (the "related items from this seed set" query recommendation and
-    * curation pipelines run). Same loop shape as [[pageRank]] (deg-
-    * annotated adjacency list, lazy supersteps, long grid sums); the
-    * only change is the teleport term: base/|S| on seed nodes, 0
-    * elsewhere. `isSource` is a predicate column over `node`, so the
-    * seed set is declarative (a filter, never a driver-side list).
-    * Initial rank is the teleport vector itself — mass stays
-    * seed-centered from step 0, and every iteration is hash-exact
-    * against the unrolled-CTE oracle. */
-  def pageRankPersonalized(
-      edges0: DataFrame, isSource: Column => Column, iters: Int = 3,
-      damping: Double = 0.85, ckptEvery: Int = 8): DataFrame = {
+  /** DuckDB twin of [[pageRank]], unrolled as `iters` chained CTEs
+    * after `edgeCtes`, which must define the distinct (src, dst)
+    * relation `edges`. `seed` is the SQL twin of `isSource` over the
+    * column `node` (None seeds every node); `out` selects the result
+    * from the last rank relation, (node, rank). */
+  private[ops] def pageRankSql(
+      edgeCtes: String, iters: Int, damping: Double,
+      seed: Option[String] = None,
+      out: String => String = r => s"SELECT node, rank FROM $r"): String = {
     val base = 1.0 - damping
-    val edges = edges0.select("src", "dst").distinct()
-    val deg = edges.groupBy(col("src").as("dnode"))
-      .agg(count(lit(1)).as("deg"))
-    val ewd = edges.join(deg, col("src") === col("dnode"))
-      .select(col("src"), col("dst"), col("deg")).localCheckpoint(true)
-    val nodes = ewd.select(col("src").as("node"))
-      .union(ewd.select(col("dst").as("node"))).distinct().localCheckpoint(true)
-    val srcFlag = isSource(col("node"))
-    val nSrcRow = nodes.agg(
-      sum(when(srcFlag, 1L).otherwise(0L)).as("ns"))
-    def teleport: Column =
-      when(srcFlag, lit(1.0) / col("ns").cast("double")).otherwise(lit(0.0))
-    def fresh(sums: Option[DataFrame]): DataFrame = sums match {
-      case None =>
-        nodes.crossJoin(broadcast(nSrcRow))
-          .select(col("node"), teleport.as("rank"))
-      case Some(sg) =>
-        nodes.crossJoin(broadcast(nSrcRow))
-          .join(sg, Seq("node"), "left")
-          .select(col("node"),
-            (lit(base) * teleport +
-              lit(damping) *
-                (coalesce(col("sg").cast("double"), lit(0.0))
-                  / lit(Grid))).as("rank"))
+    val uniform = "CAST(1 AS DOUBLE) / CAST(nn.n AS DOUBLE)"
+    val (count, tele) = seed match {
+      case None => ("COUNT(*)", uniform)
+      case Some(p) =>
+        (s"COUNT(CASE WHEN $p THEN 1 END)", s"CASE WHEN $p THEN $uniform ELSE 0.0 END")
     }
-    var rank = fresh(None)
-    for (i <- 1 to iters) {
-      val sums = ewd.join(rank, col("src") === col("node"))
-        .select(col("dst"),
-          round(col("rank") / col("deg").cast("double") * Grid)
-            .cast("long").as("g"))
-        .groupBy(col("dst").as("node")).agg(sum(col("g")).as("sg"))
-      rank = fresh(Some(sums))
-      if (i % ckptEvery == 0 && i < iters) rank = rank.localCheckpoint(true)
-    }
-    rank
-  }
-
-  /** Registered-query PPR over the supplier↔part graph: seeds are the
-    * supplier nodes (even ids) — "parts reachable from the supplier
-    * side", the bipartite proximity ranking. */
-  def supplierPartPPR(lineitem: DataFrame, iters: Int = 3): DataFrame = {
-    val e = lineitem.select(
-      (col("l_suppkey") * 2).as("src"),
-      (col("l_partkey") * 2 + 1).as("dst"))
-    pageRankPersonalized(
-      e.union(e.select(col("dst").as("src"), col("src").as("dst"))),
-      node => node % 2 === 0, iters)
-  }
-
-  def supplierPartPPRSql(iters: Int = 3, damping: Double = 0.85): String = {
-    val base = 1.0 - damping
-    val tele = s"CASE WHEN nd.node % 2 = 0 " +
-      s"THEN CAST(1 AS DOUBLE) / CAST(nn.ns AS DOUBLE) ELSE 0.0 END"
-    def stepSql(i: Int): String = {
-      val prev = if (i == 1) "r0" else s"r${i - 1}"
+    def stepSql(i: Int): String =
       s"""c$i AS (
          |  SELECT e.dst AS node,
          |    SUM(CAST(ROUND(r.rank / CAST(d.deg AS DOUBLE)
          |        * 1000000000000.0) AS BIGINT)) AS sg
          |  FROM edges e
-         |  JOIN $prev r ON e.src = r.node
+         |  JOIN r${i - 1} r ON e.src = r.node
          |  JOIN deg d ON e.src = d.dnode
          |  GROUP BY 1),
          |r$i AS (
          |  SELECT nd.node,
-         |    $base * $tele
+         |    $base * ($tele)
          |    + $damping * (COALESCE(CAST(c$i.sg AS DOUBLE), 0.0)
          |                  / 1000000000000.0) AS rank
          |  FROM nodes nd LEFT JOIN c$i USING (node), nn)""".stripMargin
-    }
-    s"""WITH base_e AS (
-       |  SELECT DISTINCT l_suppkey * 2 AS src, l_partkey * 2 + 1 AS dst
-       |  FROM lineitem),
-       |edges AS (SELECT src, dst FROM base_e
-       |          UNION SELECT dst, src FROM base_e),
+    s"""WITH $edgeCtes,
        |deg AS (SELECT src AS dnode, COUNT(*) AS deg FROM edges GROUP BY 1),
        |nodes AS (SELECT src AS node FROM edges
        |          UNION SELECT dst FROM edges),
-       |nn AS (SELECT SUM(CASE WHEN node % 2 = 0 THEN 1 ELSE 0 END) AS ns
-       |       FROM nodes),
-       |r0 AS (SELECT node,
-       |         CASE WHEN node % 2 = 0
-       |           THEN CAST(1 AS DOUBLE) / CAST(nn.ns AS DOUBLE)
-       |           ELSE 0.0 END AS rank
-       |       FROM nodes nd, nn),
+       |nn AS (SELECT $count AS n FROM nodes),
+       |r0 AS (SELECT node, $tele AS rank
+       |       FROM nodes, nn),
        |${(1 to iters).map(stepSql).mkString(",\n")}
-       |SELECT node, rank FROM r$iters""".stripMargin
+       |${out(s"r$iters")}""".stripMargin
   }
 
-  /** The registered-query graph: the bipartite supplier↔part relation
-    * from lineitem (suppliers at 2k, parts at 2k+1), symmetrized so no
-    * node dangles. Rank concentrates on parts stocked by many
-    * suppliers and suppliers stocking popular parts. */
-  def supplierPartRank(lineitem: DataFrame, iters: Int = 3): DataFrame = {
-    val e = lineitem.select(
+  /** The registered-query graph: the bipartite supplier→part relation
+    * from lineitem (suppliers at 2k, parts at 2k+1), directed. HITS
+    * reads it as it is; every other supplier↔part query reads it
+    * `symmetric`, so no node dangles. */
+  private def supplierPartEdges(lineitem: DataFrame): DataFrame =
+    lineitem.select(
       (col("l_suppkey") * 2).as("src"),
       (col("l_partkey") * 2 + 1).as("dst"))
-    pageRank(e.union(e.select(col("dst").as("src"), col("src").as("dst"))),
-      iters)
-  }
+
+  /** `e` with each edge in both directions. */
+  private def symmetric(e: DataFrame): DataFrame =
+    e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+
+  /** SQL twin of `supplierPartEdges` as the distinct CTE `name`. */
+  private def supplierPartDirectedSql(name: String): String =
+    s"""$name AS (
+       |  SELECT DISTINCT l_suppkey * 2 AS src, l_partkey * 2 + 1 AS dst
+       |  FROM lineitem)""".stripMargin
+
+  /** SQL twin of `symmetric(supplierPartEdges(lineitem))`: the CTEs
+    * `base_e` (directed) and `name` (both directions, distinct). */
+  private def supplierPartEdgesSql(name: String = "edges"): String =
+    s"""${supplierPartDirectedSql("base_e")},
+       |$name AS (SELECT src, dst FROM base_e
+       |${" " * (name.length + 5)}UNION SELECT dst, src FROM base_e)""".stripMargin
+
+  /** Registered-query PageRank over the symmetric supplier↔part graph:
+    * rank concentrates on parts stocked by many suppliers and suppliers
+    * stocking popular parts. */
+  def supplierPartRank(lineitem: DataFrame, iters: Int = 3): DataFrame =
+    pageRank(symmetric(supplierPartEdges(lineitem)), iters)
+
+  def supplierPartRankSql(iters: Int = 3, damping: Double = 0.85): String =
+    pageRankSql(supplierPartEdgesSql(), iters, damping)
+
+  /** Registered-query personalized PageRank over the same graph, seeded
+    * at the supplier nodes (even ids) — "parts reachable from the
+    * supplier side", the bipartite proximity ranking. */
+  def supplierPartPPR(lineitem: DataFrame, iters: Int = 3): DataFrame =
+    pageRank(symmetric(supplierPartEdges(lineitem)), iters,
+      isSource = node => node % 2 === 0)
+
+  def supplierPartPPRSql(iters: Int = 3, damping: Double = 0.85): String =
+    pageRankSql(supplierPartEdgesSql(), iters, damping, seed = Some("node % 2 = 0"))
 
   /** K-core peeling (Batagelj-Zaveršnik by rounds): each superstep
     * drops every node whose CURRENT degree is below k, then restricts
@@ -245,12 +239,8 @@ object GraphOps {
 
   /** kCore over the supplier↔part bipartite graph (same node encoding
     * as supplierPartRank). */
-  def supplierPartKCore(lineitem: DataFrame, k: Int = 26, rounds: Int = 4): DataFrame = {
-    val e = lineitem.select(
-      (col("l_suppkey") * 2).as("src"),
-      (col("l_partkey") * 2 + 1).as("dst"))
-    kCore(e.union(e.select(col("dst").as("src"), col("src").as("dst"))), k, rounds)
-  }
+  def supplierPartKCore(lineitem: DataFrame, k: Int = 26, rounds: Int = 4): DataFrame =
+    kCore(symmetric(supplierPartEdges(lineitem)), k, rounds)
 
   def supplierPartKCoreSql(k: Int = 26, rounds: Int = 4): String = {
     val steps = (1 to rounds).map { i =>
@@ -259,11 +249,7 @@ object GraphOps {
          |  WHERE e.src IN (SELECT src FROM k$i)
          |    AND e.dst IN (SELECT src FROM k$i))""".stripMargin
     }.mkString(",\n")
-    s"""WITH base_e AS (
-       |  SELECT DISTINCT l_suppkey * 2 AS src, l_partkey * 2 + 1 AS dst
-       |  FROM lineitem),
-       |e0 AS (SELECT src, dst FROM base_e
-       |       UNION SELECT dst, src FROM base_e),
+    s"""WITH ${supplierPartEdgesSql("e0")},
        |$steps
        |SELECT src AS node, COUNT(*) AS deg FROM e$rounds GROUP BY 1""".stripMargin
   }
@@ -377,19 +363,11 @@ object GraphOps {
       lineitem: DataFrame, baseSupport: Int = 2): DataFrame =
     triangleCounts(coOrderEdgesAuto(lineitem, baseSupport))
 
-  def coOrderTrianglesAutoSql(baseSupport: Int = 2): String =
-    trianglesBodySql(coOrderEdgesAutoCteSql(baseSupport))
-
-  /** The fixed-threshold `e` CTE shared by the non-auto twins. */
-  private def coOrderEdgesCteSql(minSupport: Int): String =
-    s"""e AS (
-       |  SELECT x.l_partkey AS a, y.l_partkey AS b
-       |  FROM lineitem x JOIN lineitem y ON x.l_orderkey = y.l_orderkey
-       |    AND x.l_partkey < y.l_partkey
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $minSupport)""".stripMargin
-
-  private def trianglesBodySql(eChain: String): String =
-    s"""WITH $eChain,
+  /** The CTEs the triangle twins share over [[coOrderEdgesAuto]]'s `e`:
+    * degrees `deg`, the degree-oriented edges `o`, the wedges `w` and
+    * the closed wedges `t`, one row per triangle. */
+  private def trianglesCtesSql(baseSupport: Int): String =
+    s"""WITH ${coOrderEdgesAutoCteSql(baseSupport)},
        |deg AS (SELECT n, COUNT(*) AS d FROM (
        |    SELECT a AS n FROM e UNION ALL SELECT b FROM e) q GROUP BY n),
        |o AS (SELECT
@@ -399,15 +377,15 @@ object GraphOps {
        |w AS (SELECT o1.u AS x, o1.v AS y, o2.v AS z
        |  FROM o o1 JOIN o o2 ON o1.v = o2.u),
        |t AS (SELECT w.x, w.y, w.z
-       |  FROM w JOIN o ON w.x = o.u AND w.z = o.v)
+       |  FROM w JOIN o ON w.x = o.u AND w.z = o.v)""".stripMargin
+
+  def coOrderTrianglesAutoSql(baseSupport: Int = 2): String =
+    s"""${trianglesCtesSql(baseSupport)}
        |SELECT node, COUNT(*) AS n_tri FROM (
        |  SELECT x AS node FROM t
        |  UNION ALL SELECT y FROM t
        |  UNION ALL SELECT z FROM t) q
        |GROUP BY node""".stripMargin
-
-  def coOrderTrianglesSql(minSupport: Int = 2): String =
-    trianglesBodySql(coOrderEdgesCteSql(minSupport))
 
   /** Local clustering coefficient per node: cc(v) = 2·T_v / (d_v·(d_v−1))
     * — "how close is v's neighborhood to a clique", the standard local
@@ -432,10 +410,7 @@ object GraphOps {
           .otherwise(lit(0.0)).as("coef"))
   }
 
-  def coOrderClustering(lineitem: DataFrame, minSupport: Int = 2): DataFrame =
-    clusteringCoefficient(coOrderEdges(lineitem, minSupport))
-
-  /** [[coOrderClustering]] over the duplication-calibrated edge set
+  /** [[clusteringCoefficient]] over the duplication-calibrated edge set
     * (see [[coOrderEdgesAuto]]) — clustering shares the triangle
     * machinery's wedge join, so it walks the same |E|^1.5 cliff under
     * a saturated fixed threshold. */
@@ -444,23 +419,7 @@ object GraphOps {
     clusteringCoefficient(coOrderEdgesAuto(lineitem, baseSupport))
 
   def coOrderClusteringAutoSql(baseSupport: Int = 2): String =
-    clusteringBodySql(coOrderEdgesAutoCteSql(baseSupport))
-
-  def coOrderClusteringSql(minSupport: Int = 2): String =
-    clusteringBodySql(coOrderEdgesCteSql(minSupport))
-
-  private def clusteringBodySql(eChain: String): String =
-    s"""WITH $eChain,
-       |deg AS (SELECT n, COUNT(*) AS d FROM (
-       |    SELECT a AS n FROM e UNION ALL SELECT b FROM e) q GROUP BY n),
-       |o AS (SELECT
-       |    CASE WHEN da.d <= db.d THEN e.a ELSE e.b END AS u,
-       |    CASE WHEN da.d <= db.d THEN e.b ELSE e.a END AS v
-       |  FROM e JOIN deg da ON e.a = da.n JOIN deg db ON e.b = db.n),
-       |w AS (SELECT o1.u AS x, o1.v AS y, o2.v AS z
-       |  FROM o o1 JOIN o o2 ON o1.v = o2.u),
-       |t AS (SELECT w.x, w.y, w.z
-       |  FROM w JOIN o ON w.x = o.u AND w.z = o.v),
+    s"""${trianglesCtesSql(baseSupport)},
        |cnt AS (SELECT node, COUNT(*) AS n_tri FROM (
        |  SELECT x AS node FROM t
        |  UNION ALL SELECT y FROM t
@@ -686,40 +645,6 @@ object GraphOps {
        |JOIN item_supp sb ON p.b = sb.item, n_orders n
        |ORDER BY lift DESC, p.a, p.b LIMIT $k""".stripMargin
 
-  def supplierPartRankSql(iters: Int = 3, damping: Double = 0.85): String = {
-    val base = 1.0 - damping
-    def stepSql(i: Int): String = {
-      val prev = if (i == 1) "r0" else s"r${i - 1}"
-      s"""c$i AS (
-         |  SELECT e.dst AS node,
-         |    SUM(CAST(ROUND(r.rank / CAST(d.deg AS DOUBLE)
-         |        * 1000000000000.0) AS BIGINT)) AS sg
-         |  FROM edges e
-         |  JOIN $prev r ON e.src = r.node
-         |  JOIN deg d ON e.src = d.dnode
-         |  GROUP BY 1),
-         |r$i AS (
-         |  SELECT nd.node,
-         |    $base * (CAST(1 AS DOUBLE) / CAST(nn.n AS DOUBLE))
-         |    + $damping * (COALESCE(CAST(c$i.sg AS DOUBLE), 0.0)
-         |                  / 1000000000000.0) AS rank
-         |  FROM nodes nd LEFT JOIN c$i USING (node), nn)""".stripMargin
-    }
-    s"""WITH base_e AS (
-       |  SELECT DISTINCT l_suppkey * 2 AS src, l_partkey * 2 + 1 AS dst
-       |  FROM lineitem),
-       |edges AS (SELECT src, dst FROM base_e
-       |          UNION SELECT dst, src FROM base_e),
-       |deg AS (SELECT src AS dnode, COUNT(*) AS deg FROM edges GROUP BY 1),
-       |nodes AS (SELECT src AS node FROM edges
-       |          UNION SELECT dst FROM edges),
-       |nn AS (SELECT COUNT(*) AS n FROM nodes),
-       |r0 AS (SELECT node, CAST(1 AS DOUBLE) / CAST(nn.n AS DOUBLE) AS rank
-       |       FROM nodes, nn),
-       |${(1 to iters).map(stepSql).mkString(",\n")}
-       |SELECT node, rank FROM r$iters""".stripMargin
-  }
-
   /** Multi-source BFS hop distances — the third member of the
     * iterative-graph family (label propagation converges a partition,
     * PageRank a score, BFS a DISTANCE). Each superstep relaxes
@@ -755,13 +680,9 @@ object GraphOps {
     * seeded at suppliers 1-3 — "which parts/suppliers are within k
     * co-supply hops of these suppliers". */
   def supplierPartBfs(lineitem: DataFrame, iters: Int = 3): DataFrame = {
-    val e = lineitem.select(
-      (col("l_suppkey") * 2).as("src"),
-      (col("l_partkey") * 2 + 1).as("dst"))
-    val edges = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
     val seeds = lineitem.filter(col("l_suppkey") <= 3)
       .select((col("l_suppkey") * 2).as("node")).distinct()
-    bfsDistances(edges, seeds, iters)
+    bfsDistances(symmetric(supplierPartEdges(lineitem)), seeds, iters)
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007) — the
@@ -778,15 +699,14 @@ object GraphOps {
     * node-keyed aggs, all shuffling on node ids; state is one
     * (node, label) row per node. Per-round eager checkpoint keeps the
     * plan depth constant exactly as kCore/connectedComponents. */
-  def labelPropagation(
-      edges0: DataFrame, rounds: Int = 3, ckptEvery: Int = 8): DataFrame = {
+  def labelPropagation(edges0: DataFrame, rounds: Int = 3): DataFrame = {
     val edges = edges0.select("src", "dst").distinct().localCheckpoint(true)
     var labels = edges.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
     // Rounds chain LAZILY (the pagerank r11 lesson): the label relation
     // is referenced exactly once per round (the edge join), so lineage
     // is linear and a per-round eager checkpoint is pure job-scheduling
-    // overhead; ckptEvery bounds plan depth on long runs. Integer-only
+    // overhead; CkptEvery bounds plan depth on long runs. Integer-only
     // arithmetic — nothing to snap.
     for (i <- 1 to rounds) {
       val counts = edges.join(labels, edges("dst") === labels("node"))
@@ -795,22 +715,19 @@ object GraphOps {
       labels = counts.groupBy("node")
         .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
         .select(col("node"), (-col("m.nl")).as("label"))
-      if (i % ckptEvery == 0 && i < rounds) labels = labels.localCheckpoint(true)
+      if (i % CkptEvery == 0 && i < rounds) labels = labels.localCheckpoint(true)
     }
     labels
   }
 
   /** LP over the supplier↔part bipartite graph (same encoding as
     * [[supplierPartRank]]). */
-  def supplierPartLabelProp(lineitem: DataFrame, rounds: Int = 3): DataFrame = {
-    val e = lineitem.select(
-      (col("l_suppkey") * 2).as("src"),
-      (col("l_partkey") * 2 + 1).as("dst"))
-    labelPropagation(
-      e.union(e.select(col("dst").as("src"), col("src").as("dst"))), rounds)
-  }
+  def supplierPartLabelProp(lineitem: DataFrame, rounds: Int = 3): DataFrame =
+    labelPropagation(symmetric(supplierPartEdges(lineitem)), rounds)
 
-  def supplierPartLabelPropSql(rounds: Int = 3): String = {
+  /** SQL twin of [[labelPropagation]]'s rounds over the CTE `edges`:
+    * `l0` (every src its own label) through `l<rounds>`. */
+  private def labelPropRoundsSql(rounds: Int): String = {
     def stepSql(i: Int): String =
       s"""l$i AS (SELECT node, label FROM (
          |  SELECT e.src AS node, l.label, COUNT(*) AS cnt,
@@ -818,15 +735,14 @@ object GraphOps {
          |      ORDER BY COUNT(*) DESC, l.label ASC) AS rn
          |  FROM edges e JOIN l${i - 1} l ON e.dst = l.node
          |  GROUP BY e.src, l.label) t WHERE rn = 1)""".stripMargin
-    s"""WITH base_e AS (
-       |  SELECT DISTINCT l_suppkey * 2 AS src, l_partkey * 2 + 1 AS dst
-       |  FROM lineitem),
-       |edges AS (SELECT src, dst FROM base_e
-       |          UNION SELECT dst, src FROM base_e),
-       |l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges),
-       |${(1 to rounds).map(stepSql).mkString(",\n")}
-       |SELECT node, label FROM l$rounds""".stripMargin
+    s"""l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges),
+       |${(1 to rounds).map(stepSql).mkString(",\n")}""".stripMargin
   }
+
+  def supplierPartLabelPropSql(rounds: Int = 3): String =
+    s"""WITH ${supplierPartEdgesSql()},
+       |${labelPropRoundsSql(rounds)}
+       |SELECT node, label FROM l$rounds""".stripMargin
 
   /** Newman modularity Q of a community assignment over a symmetric
     * edge relation (both directions stored) — the "did the clustering
@@ -893,29 +809,13 @@ object GraphOps {
     * lesson — 29 shuffles measured lazy vs 12 checkpointed). Same for
     * the symmetric edge relation (m / degree / intra references). */
   def supplierPartModularity(lineitem: DataFrame, rounds: Int = 3): DataFrame = {
-    val e = lineitem.select(
-      (col("l_suppkey") * 2).as("src"),
-      (col("l_partkey") * 2 + 1).as("dst"))
-    val edges = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(true)
+    val edges = symmetric(supplierPartEdges(lineitem)).distinct().localCheckpoint(true)
     modularity(edges, labelPropagation(edges, rounds).localCheckpoint(true))
   }
 
-  def supplierPartModularitySql(rounds: Int = 3): String = {
-    def stepSql(i: Int): String =
-      s"""l$i AS (SELECT node, label FROM (
-         |  SELECT e.src AS node, l.label, COUNT(*) AS cnt,
-         |    ROW_NUMBER() OVER (PARTITION BY e.src
-         |      ORDER BY COUNT(*) DESC, l.label ASC) AS rn
-         |  FROM edges e JOIN l${i - 1} l ON e.dst = l.node
-         |  GROUP BY e.src, l.label) t WHERE rn = 1)""".stripMargin
-    s"""WITH base_e AS (
-       |  SELECT DISTINCT l_suppkey * 2 AS src, l_partkey * 2 + 1 AS dst
-       |  FROM lineitem),
-       |edges AS (SELECT src, dst FROM base_e
-       |          UNION SELECT dst, src FROM base_e),
-       |l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges),
-       |${(1 to rounds).map(stepSql).mkString(",\n")},
+  def supplierPartModularitySql(rounds: Int = 3): String =
+    s"""WITH ${supplierPartEdgesSql()},
+       |${labelPropRoundsSql(rounds)},
        |m AS (SELECT COUNT(*) AS md FROM edges),
        |deg AS (SELECT src AS node, COUNT(*) AS deg FROM edges GROUP BY src),
        |dc AS (SELECT l.label, SUM(d.deg) AS dc
@@ -935,7 +835,6 @@ object GraphOps {
        |  CAST(CAST(CAST(md AS HUGEINT) * si - sd2 AS VARCHAR) AS DOUBLE)
        |    / CAST(CAST(CAST(md AS HUGEINT) * md AS VARCHAR) AS DOUBLE) AS q
        |FROM sums CROSS JOIN m""".stripMargin
-  }
 
   // -------------------------------------------------------------------
   // HITS hubs & authorities (Kleinberg 1999, "Authoritative sources in
@@ -997,9 +896,7 @@ object GraphOps {
     * encoding as supplierPartRank; edges stay DIRECTED — hub and
     * authority sides are disjoint by construction). */
   def supplierPartHits(lineitem: DataFrame, iters: Int = 3): DataFrame =
-    hits(lineitem.select(
-      (col("l_suppkey") * 2).as("src"),
-      (col("l_partkey") * 2 + 1).as("dst")), iters)
+    hits(supplierPartEdges(lineitem), iters)
 
   def supplierPartHitsSql(iters: Int = 3): String = {
     def stepSql(i: Int): String = {
@@ -1023,9 +920,7 @@ object GraphOps {
          |    / CAST((SELECT MAX(sh) FROM hs$i) AS DOUBLE) AS h
          |  FROM hs$i)""".stripMargin
     }
-    s"""WITH edges AS (
-       |  SELECT DISTINCT l_suppkey * 2 AS src, l_partkey * 2 + 1 AS dst
-       |  FROM lineitem),
+    s"""WITH ${supplierPartDirectedSql("edges")},
        |h0 AS (SELECT DISTINCT src AS node, 1.0 AS h FROM edges),
        |${(1 to iters).map(stepSql).mkString(",\n")}
        |SELECT node, h AS score, 'hub' AS kind FROM h$iters
@@ -1042,11 +937,7 @@ object GraphOps {
          |    SELECT e.dst AS node, d.dist + 1 AS dist
          |    FROM d${i - 1} d JOIN edges e ON e.src = d.node)
          |  GROUP BY 1)""".stripMargin
-    s"""WITH base_e AS (
-       |  SELECT DISTINCT l_suppkey * 2 AS src, l_partkey * 2 + 1 AS dst
-       |  FROM lineitem),
-       |edges AS (SELECT src, dst FROM base_e
-       |          UNION SELECT dst, src FROM base_e),
+    s"""WITH ${supplierPartEdgesSql()},
        |d0 AS (SELECT DISTINCT l_suppkey * 2 AS node, CAST(0 AS BIGINT) AS dist
        |       FROM lineitem WHERE l_suppkey <= 3),
        |${(1 to iters).map(stepSql).mkString(",\n")}

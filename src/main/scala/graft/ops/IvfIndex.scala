@@ -122,10 +122,7 @@ object IvfIndex {
 
   def annRecallSql(nlist: Int = 16, maxIter: Int = 5, k: Int = 10,
       nprobes: Seq[Int] = Seq(1, 2, 4)): String = {
-    val steps = (1 to maxIter).map { i =>
-      s"a$i AS (${KMeansND.assignSql("ptsnd", s"c${i - 1}")}), " +
-        s"c$i AS (${KMeansND.recomputeSql("ptsnd", s"a$i")})"
-    }.mkString(", ")
+    val steps = KMeansND.lloydStepsSql(maxIter)
     val fin = s"c$maxIter"
     val cosExpr =
       s"""${KMeansND.dotSql("p.vec", "q.vec")} /
@@ -181,10 +178,7 @@ object IvfIndex {
     * `convergence = false` (no data-dependent early exit). */
   def ivfTopKSql(nlist: Int = 16, maxIter: Int = 5, k: Int = 10,
       nprobe: Int = 4): String = {
-    val steps = (1 to maxIter).map { i =>
-      s"a$i AS (${KMeansND.assignSql("ptsnd", s"c${i - 1}")}), " +
-        s"c$i AS (${KMeansND.recomputeSql("ptsnd", s"a$i")})"
-    }.mkString(", ")
+    val steps = KMeansND.lloydStepsSql(maxIter)
     val fin = s"c$maxIter"
     graft.Tables.withVecsCents(
       s""", c0 AS (SELECT cid, cvec FROM centsnd), $steps,

@@ -249,13 +249,13 @@ object Multimodal {
     (r << 16) | (g << 8) | b
   }
 
-  // The default ImageIO stream cache spools every encode AND decode
-  // through a temp FILE on disk (FileCacheImageInput/OutputStream) —
-  // per image, under 32 concurrent tasks. Memory-cached streams plus
-  // per-thread reader/writer instances (the registry scan inside
-  // ImageIO.read/write is a per-call cost) keep the codec itself the
-  // only work. Output bytes/pixels are identical — same PNG plugin.
-  javax.imageio.ImageIO.setUseCache(false)
+  // ImageIO.read/write would spool every encode AND decode through a
+  // temp FILE on disk (FileCacheImageInput/OutputStream) — per image,
+  // under 32 concurrent tasks. encodePng/decodePng build memory-cached
+  // streams themselves, so the JVM-global ImageIO.setUseCache is never
+  // touched; with per-thread reader/writer instances (the registry
+  // scan inside ImageIO.read/write is a per-call cost) the codec itself
+  // is the only work.
   private val tlPngWriter =
     ThreadLocal.withInitial[javax.imageio.ImageWriter](() =>
       javax.imageio.ImageIO.getImageWritersByFormatName("png").next())

@@ -392,28 +392,11 @@ object PqIndex {
       nprobe: Int = 2, dim: Int = 64): String = {
     require(dim % m == 0)
     val subDim = dim / m
-    val coarseSteps = (1 to maxIterC).map { i =>
-      s"cca$i AS (${KMeansND.assignSql("ptsnd", s"cc${i - 1}")}), " +
-        s"cc$i AS (${KMeansND.recomputeSql("ptsnd", s"cca$i")})"
-    }.mkString(", ")
+    val coarseSteps = KMeansND.lloydStepsSql(maxIterC, a = "cca", c = "cc")
     val ccFin = s"cc$maxIterC"
     val perSub = (0 until m).map { s =>
-      val lo = s * subDim + 1
-      val hi = s * subDim + subDim
-      val sub = s"sub$s"
-      val subRel =
-        s"$sub AS (SELECT id, list_slice(vec, $lo, $hi) AS vec FROM resid)"
-      val init =
-        s"""s${s}c0 AS (SELECT CAST(rn - 1 AS INT) AS cid, vec AS cvec FROM
-           |  (SELECT vec, ROW_NUMBER() OVER (ORDER BY id) AS rn FROM $sub) t
-           |  WHERE rn <= $nlist)""".stripMargin
-      val steps = (1 to maxIter).map { i =>
-        s"s${s}a$i AS (${KMeansND.assignSql(sub, s"s${s}c${i - 1}")}), " +
-          s"s${s}c$i AS (${KMeansND.recomputeSql(sub, s"s${s}a$i")})"
-      }.mkString(", ")
-      val codes =
-        s"codes$s AS (SELECT id, cid AS code$s FROM (${KMeansND.assignSql(sub, s"s${s}c$maxIter")}) a)"
-      s"$subRel, $init, $steps, $codes"
+      s"${subspaceSql(s, subDim, "resid", nlist, maxIter)}, codes$s AS (SELECT id, cid AS code$s " +
+        s"FROM (${KMeansND.assignSql(s"sub$s", s"s${s}c$maxIter")}) a)"
     }.mkString(", ")
     val codeJoin = (1 until m)
       .map(s => s"JOIN codes$s ON codes0.id = codes$s.id").mkString(" ")
@@ -454,9 +437,20 @@ object PqIndex {
       nlistC)
   }
 
-  /** DuckDB twin: per subspace, the sliced relation, `maxIter` unrolled
-    * decimal-exact Lloyd steps, final code assignment; then the ADC join
-    * with the identical left-to-right subspace fold. */
+  /** Subspace `s`'s CTEs over `from`'s vectors: `sub<s>`, their s-th
+    * `subDim`-wide slice; `s<s>c0`, its `nlist` lowest-id slices (the
+    * `train` init); and `maxIter` unrolled decimal-exact Lloyd steps up
+    * to the codebook `s<s>c<maxIter>`. */
+  private def subspaceSql(s: Int, subDim: Int, from: String, nlist: Int,
+      maxIter: Int): String = {
+    val sub = s"sub$s"
+    s"$sub AS (SELECT id, list_slice(vec, ${s * subDim + 1}, ${s * subDim + subDim}) AS vec " +
+      s"""FROM $from), s${s}c0 AS (SELECT CAST(rn - 1 AS INT) AS cid, vec AS cvec FROM
+         |  (SELECT vec, ROW_NUMBER() OVER (ORDER BY id) AS rn FROM $sub) t
+         |  WHERE rn <= $nlist), """.stripMargin +
+      KMeansND.lloydStepsSql(maxIter, sub, s"s${s}a", s"s${s}c")
+  }
+
   /** Quantization-distortion report — the PQ fidelity dial read
     * together with `emb_ann_recall` before flipping a vector store to
     * codes: per subspace, the mean squared error between sub-vectors
@@ -499,26 +493,10 @@ object PqIndex {
     require(dim % m == 0)
     val subDim = dim / m
     val perSub = (0 until m).map { s =>
-      val lo = s * subDim + 1
-      val hi = s * subDim + subDim
-      val sub = s"sub$s"
-      val subRel =
-        s"$sub AS (SELECT id, list_slice(vec, $lo, $hi) AS vec FROM ptsnd)"
-      val init =
-        s"""s${s}c0 AS (SELECT CAST(rn - 1 AS INT) AS cid, vec AS cvec FROM
-           |  (SELECT vec, ROW_NUMBER() OVER (ORDER BY id) AS rn FROM $sub) t
-           |  WHERE rn <= $nlist)""".stripMargin
-      val steps = (1 to maxIter).map { i =>
-        s"s${s}a$i AS (${KMeansND.assignSql(sub, s"s${s}c${i - 1}")}), " +
-          s"s${s}c$i AS (${KMeansND.recomputeSql(sub, s"s${s}a$i")})"
-      }.mkString(", ")
-      val dist =
-        s"""dist$s AS (
-           |  SELECT CAST($s AS BIGINT) AS subspace,
-           |    CAST(ROUND(sqdist * 1000000000000.0) AS BIGINT) AS g
-           |  FROM (${KMeansND.assignSql(sub, s"s${s}c$maxIter")}) a)"""
-          .stripMargin
-      s"$subRel, $init, $steps, $dist"
+      s"""${subspaceSql(s, subDim, "ptsnd", nlist, maxIter)}, dist$s AS (
+         |  SELECT CAST($s AS BIGINT) AS subspace,
+         |    CAST(ROUND(sqdist * 1000000000000.0) AS BIGINT) AS g
+         |  FROM (${KMeansND.assignSql(s"sub$s", s"s${s}c$maxIter")}) a)""".stripMargin
     }.mkString(", ")
     val unionAllDist = (0 until m)
       .map(s => s"SELECT subspace, g FROM dist$s")
@@ -538,27 +516,16 @@ object PqIndex {
       nlist)
   }
 
+  /** DuckDB twin of [[pqTopK]]: per subspace, the sliced relation,
+    * `maxIter` unrolled decimal-exact Lloyd steps, final code assignment;
+    * then the ADC join with the identical left-to-right subspace fold. */
   def pqTopKSql(m: Int = 4, nlist: Int = 16, maxIter: Int = 3,
       queryId: Long = 0L, k: Int = 10, dim: Int = 64): String = {
     require(dim % m == 0)
     val subDim = dim / m
     val perSub = (0 until m).map { s =>
-      val lo = s * subDim + 1
-      val hi = s * subDim + subDim
-      val sub = s"sub$s"
-      val subRel =
-        s"$sub AS (SELECT id, list_slice(vec, $lo, $hi) AS vec FROM ptsnd)"
-      val init =
-        s"""s${s}c0 AS (SELECT CAST(rn - 1 AS INT) AS cid, vec AS cvec FROM
-           |  (SELECT vec, ROW_NUMBER() OVER (ORDER BY id) AS rn FROM $sub) t
-           |  WHERE rn <= $nlist)""".stripMargin
-      val steps = (1 to maxIter).map { i =>
-        s"s${s}a$i AS (${KMeansND.assignSql(sub, s"s${s}c${i - 1}")}), " +
-          s"s${s}c$i AS (${KMeansND.recomputeSql(sub, s"s${s}a$i")})"
-      }.mkString(", ")
-      val codes =
-        s"codes$s AS (SELECT id, cid AS code$s FROM (${KMeansND.assignSql(sub, s"s${s}c$maxIter")}) a)"
-      s"$subRel, $init, $steps, $codes"
+      s"${subspaceSql(s, subDim, "ptsnd", nlist, maxIter)}, codes$s AS (SELECT id, cid AS code$s " +
+        s"FROM (${KMeansND.assignSql(s"sub$s", s"s${s}c$maxIter")}) a)"
     }.mkString(", ")
     val codeJoin = (1 until m)
       .map(s => s"JOIN codes$s ON codes0.id = codes$s.id").mkString(" ")

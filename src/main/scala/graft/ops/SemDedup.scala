@@ -63,10 +63,7 @@ object SemDedup {
     * [[IvfIndex.ivfTopKSql]]), then the identical within-cluster pair
     * join with left-to-right IEEE cosine folds. */
   private def pairsCte(nlist: Int, tau: Double, maxIter: Int): String = {
-    val steps = (1 to maxIter).map { i =>
-      s"a$i AS (${KMeansND.assignSql("ptsnd", s"c${i - 1}")}), " +
-        s"c$i AS (${KMeansND.recomputeSql("ptsnd", s"a$i")})"
-    }.mkString(", ")
+    val steps = KMeansND.lloydStepsSql(maxIter)
     s""", c0 AS (SELECT cid, cvec FROM centsnd), $steps,
        |lists AS (${KMeansND.assignSql("ptsnd", s"c$maxIter")}),
        |pairs AS (

@@ -1722,7 +1722,7 @@ object TextOps {
     }.reduce(_ unionAll _)
     val edges = byOffset.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(byOffset.select(col("b").as("src"), col("a").as("dst")))
-    graft.ops.GraphOps.pageRank(edges, iters, damping)
+    GraphOps.pageRank(edges, iters, damping)
       .orderBy(col("rank").desc, col("node").asc)
       .limit(topN)
       .select(col("node").as("token"), col("rank"))
@@ -1731,45 +1731,22 @@ object TextOps {
   def textRankSql(
       window: Int = 2, iters: Int = 3, damping: Double = 0.85,
       topN: Int = 50): String = {
-    val base = 1.0 - damping
     val offsets = (1 to window).map { d =>
       s"""SELECT unnest(tk[1:len(tk)-$d]) AS a,
          |       unnest(tk[${1 + d}:len(tk)]) AS b
          |  FROM toks WHERE len(tk) > $d""".stripMargin
     }.mkString("\n  UNION ALL ")
-    def stepSql(i: Int): String = {
-      val prev = if (i == 1) "r0" else s"r${i - 1}"
-      s"""c$i AS (
-         |  SELECT e.dst AS node,
-         |    SUM(CAST(ROUND(r.rank / CAST(d.deg AS DOUBLE)
-         |        * 1000000000000.0) AS BIGINT)) AS sg
-         |  FROM edges e
-         |  JOIN $prev r ON e.src = r.node
-         |  JOIN deg d ON e.src = d.dnode
-         |  GROUP BY 1),
-         |r$i AS (
-         |  SELECT nd.node,
-         |    $base * (CAST(1 AS DOUBLE) / CAST(nn.n AS DOUBLE))
-         |    + $damping * (COALESCE(CAST(c$i.sg AS DOUBLE), 0.0)
-         |                  / 1000000000000.0) AS rank
-         |  FROM nodes nd LEFT JOIN c$i USING (node), nn)""".stripMargin
-    }
-    s"""WITH toks AS (SELECT $tokensSql AS tk FROM documents),
-       |off AS (
-       |  $offsets),
-       |base_e AS (
-       |  SELECT a AS src, b AS dst FROM off
-       |  UNION ALL SELECT b, a FROM off),
-       |edges AS (SELECT DISTINCT src, dst FROM base_e),
-       |deg AS (SELECT src AS dnode, COUNT(*) AS deg FROM edges GROUP BY 1),
-       |nodes AS (SELECT src AS node FROM edges
-       |          UNION SELECT dst FROM edges),
-       |nn AS (SELECT COUNT(*) AS n FROM nodes),
-       |r0 AS (SELECT node, CAST(1 AS DOUBLE) / CAST(nn.n AS DOUBLE) AS rank
-       |       FROM nodes, nn),
-       |${(1 to iters).map(stepSql).mkString(",\n")}
-       |SELECT node AS token, rank FROM r$iters
-       |ORDER BY rank DESC, node ASC LIMIT $topN""".stripMargin
+    GraphOps.pageRankSql(
+      s"""toks AS (SELECT $tokensSql AS tk FROM documents),
+         |off AS (
+         |  $offsets),
+         |base_e AS (
+         |  SELECT a AS src, b AS dst FROM off
+         |  UNION ALL SELECT b, a FROM off),
+         |edges AS (SELECT DISTINCT src, dst FROM base_e)""".stripMargin,
+      iters, damping,
+      out = r => s"""SELECT node AS token, rank FROM $r
+                    |ORDER BY rank DESC, node ASC LIMIT $topN""".stripMargin)
   }
 
   /** Pointwise mutual information over the ±window skipgram pair

@@ -217,4 +217,20 @@ class KMeansNDSpec extends SparkSpec with JobCounting {
     intercept[Exception](fit(rows :+ ((400L, Seq.fill(8)(Double.NaN))), sc.defaultParallelism, 3))
     assert(sc.getPersistentRDDs.keySet == before)
   }
+
+  test("fit on an empty input raises and leaks no cache") {
+    val sc = spark.sparkContext
+    val init = Seq(CentND(0, Seq(0.0, 0.0)), CentND(1, Seq(1.0, 1.0)))
+    // a 0-partition relation, and a multi-partition one filtered to empty
+    val noParts = Seq.empty[(Long, Seq[Double])].toDF("id", "vec")
+    val filtered = sc.parallelize(Seq.tabulate(20)(i => (i.toLong, Seq(i.toDouble, 0.0))), 3)
+      .toDF("id", "vec").filter($"id" < 0L)
+    assert(noParts.rdd.getNumPartitions == 0 && filtered.rdd.getNumPartitions == 3)
+    val before = sc.getPersistentRDDs.keySet
+    for (empty <- Seq(noParts, filtered)) {
+      val e = intercept[IllegalArgumentException](KMeansND.fit(empty, init, maxIter = 3))
+      assert(e.getMessage.endsWith("fit: the k-means input holds no points"), e.getMessage)
+      assert(sc.getPersistentRDDs.keySet == before)
+    }
+  }
 }

@@ -252,6 +252,15 @@ class EventAndMultimodalSpec extends SparkSpec {
     assert(perDoc.map(_.getLong(0)).toSeq == Seq(4L))
   }
 
+  test("PNG codec leaves the JVM-global ImageIO cache setting as it found it") {
+    // encodePng/decodePng bring their own memory-cached streams; the
+    // codec must not flip ImageIO.setUseCache for every other user of
+    // ImageIO in the JVM (its default is true)
+    val png = Multimodal.encodePng(7L, 4, 3)
+    assert(Multimodal.decodeChannelSums(png)._1 == 4)
+    assert(javax.imageio.ImageIO.getUseCache)
+  }
+
   test("real PNG codec: golden image round-trips pixel-exact; batched path matches direct decode") {
     // golden 3x2 image for doc_id=42: decode must reproduce every pixel
     val png = Multimodal.encodePng(42L, 3, 2)

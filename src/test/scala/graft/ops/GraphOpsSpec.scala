@@ -33,8 +33,8 @@ class GraphOpsSpec extends SparkSpec {
     // conserved (symmetrized graph, no dangling nodes)
     val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L),
       (3L, 4L), (4L, 3L)).toDF("src", "dst")
-    val r = GraphOps.pageRankPersonalized(
-      edges, node => node === 1L, iters = 8).collect()
+    val r = GraphOps.pageRank(
+      edges, iters = 8, isSource = node => node === 1L).collect()
       .map(x => x.getLong(0) -> x.getDouble(1)).toMap
     assert(r(1L) == r.values.max, s"seed must lead: $r")
     assert(r(4L) == r.values.min, s"far end must trail: $r")
@@ -42,8 +42,8 @@ class GraphOpsSpec extends SparkSpec {
     // uniform seed set == plain PageRank teleport: all-nodes predicate
     // reproduces the classic fixed point on the 2-cycle
     val cyc = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
-    val u = GraphOps.pageRankPersonalized(cyc,
-      _ => org.apache.spark.sql.functions.lit(true), iters = 5)
+    val u = GraphOps.pageRank(cyc, iters = 5,
+      isSource = _ => org.apache.spark.sql.functions.lit(true))
       .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
     assert(u(1L) == 0.5 && u(2L) == 0.5)
   }
