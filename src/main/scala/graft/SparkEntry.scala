@@ -979,9 +979,9 @@ object SparkEntry {
     // no per-doc sort of the posting relation)
     "text_keyphrases" -> ((s, dir) =>
       graft.ops.RetrievalOps.keyphrases(Tables.table(s, dir, "documents"))),
-    // kNN majority-vote label transfer over the LSH-blocked knn graph;
-    // both the per-source top-k and the vote argmax run through the
-    // custom TopKPerKey physical operator (no Window, no per-group sort)
+    // kNN majority-vote label transfer over the LSH-blocked knn graph
+    // kernel; the vote argmax runs through the custom TopKPerKey
+    // physical operator (no Window, no per-group sort)
     "emb_knn_classify" -> ((s, dir) =>
       graft.ops.EmbeddingOps.knnClassifyAuto(
         Tables.table(s, dir, "embeddings"))),

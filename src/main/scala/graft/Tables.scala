@@ -122,9 +122,7 @@ object Tables {
     s"""WITH ptsnd AS (SELECT vec_id AS id,
        |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
        |  FROM embeddings),
-       |centsnd AS (SELECT CAST(rn - 1 AS INT) AS cid, vec AS cvec FROM
-       |  (SELECT vec, ROW_NUMBER() OVER (ORDER BY id) AS rn FROM ptsnd) t
-       |  WHERE rn <= $k)
+       |centsnd AS (${graft.kmeans.KMeansND.lowestIdsSql("ptsnd", k)})
        |$tail""".stripMargin
 
   def centsSqlBody(k: Int): String =

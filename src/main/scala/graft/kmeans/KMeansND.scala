@@ -97,6 +97,13 @@ object KMeansND {
        |        (a, b) -> a + b), c.cid) AS rn
        |  FROM $ptsRel p CROSS JOIN $centsRel c) t WHERE rn = 1""".stripMargin
 
+  /** DuckDB twin of [[initFromLowestIds]]: the vectors of the `k` lowest
+    * ids of `ptsRel` as centroids `(cid, cvec)`, cid 0 for the lowest. */
+  def lowestIdsSql(ptsRel: String, k: Int): String =
+    s"""SELECT CAST(rn - 1 AS INT) AS cid, vec AS cvec FROM
+       |  (SELECT vec, ROW_NUMBER() OVER (ORDER BY id) AS rn FROM $ptsRel) t
+       |  WHERE rn <= $k""".stripMargin
+
   /** DuckDB twin of `maxIter` fixed Lloyd steps over `ptsRel`, unrolled
     * as chained CTEs from the caller's centroid relation `<c>0`: step i
     * assigns into `<a>i` against `<c>(i-1)` and recomputes `<c>i` from

@@ -160,20 +160,22 @@ object EmbeddingOps {
     s"nb AS (SELECT CAST($AutoMinBits + $steps AS INT) AS bits FROM $table)"
   }
 
-  /** [[lshBuckets]] at the data-dependent width: one count, then the
+  /** The data-dependent width's planes for `n` vectors: per table the
     * first autoBits(n) of the AutoMaxBits-wide seeded planes. */
+  private[ops] def autoPlanes(
+      n: Long, dim: Int, numTables: Int, seed: Long): Seq[Seq[Array[Double]]] =
+    hyperplanes(dim, AutoMaxBits, numTables, seed).map(_.take(autoBits(n)))
+
+  /** [[lshBuckets]] at the data-dependent width: one count, then the
+    * [[autoPlanes]]. */
   def lshBucketsAuto(
       embs: DataFrame, dim: Int = 64, numTables: Int = 8,
-      seed: Long = 42L): DataFrame = {
-    val bits = autoBits(embs.count())
-    val tables = hyperplanes(dim, AutoMaxBits, numTables, seed)
-      .map(_.take(bits))
+      seed: Long = 42L): DataFrame =
     embs.select(
         col("vec_id"),
-        posexplode(array(tables.map(planes =>
+        posexplode(array(autoPlanes(embs.count(), dim, numTables, seed).map(planes =>
           bucketExpr(col("embedding"), planes)): _*)))
       .toDF("vec_id", "table", "bucket")
-  }
 
   private def bucketExpr(emb: Column, planes: Seq[Array[Double]]): Column =
     planes.zipWithIndex.map { case (p, i) =>
@@ -594,57 +596,42 @@ object EmbeddingOps {
        |  FROM scored) s WHERE rn <= $k""".stripMargin
   }
 
-  /** DuckDB twin of `cosineNearDups` — same inlined-hyperplane buckets,
-    * pair join within (table, bucket), exact-cosine verify. */
   // -------------------------------------------------------------------
   // k-NN graph: every vector's top-k neighbors among its LSH-bucket
   // candidates — the structure semantic-dedup clustering, curriculum
   // ordering, and graph-based corpus analysis consume. Same blocked
   // candidate generation as cosineNearDups (never all-pairs: only
-  // co-bucketed vectors meet), then a per-source top-k via the custom
-  // TopKPerKey physical operator (partial k-row heaps → key exchange of
-  // ≤ k·partitions rows/key → final merge emitting the rank from the
-  // heap drain) — no Window, no per-group Sort: each vector's candidate
-  // list never materializes sorted. Directed output:
-  // (vec_id, neighbor, cosine, rank).
+  // co-bucketed vectors meet), run as one kernel pass over primitive
+  // vectors ([[KnnGraph]]): one scan buckets each vector in every table
+  // and shuffles one copy per table under its (table, bucket); each
+  // reduce task scores its co-bucketed pairs once into bounded per-id
+  // heaps; one id-keyed shuffle merges the heaps and emits the rank.
+  // No query is planned per stage and nothing is cached: the
+  // consumer's action runs the whole graph as one job. Directed
+  // output: (vec_id, neighbor, cosine, rank), ordered (cosine DESC,
+  // neighbor ASC) exactly as the twins' ROW_NUMBER.
   // -------------------------------------------------------------------
+  /** Each vector's top-`k` neighbors by exact cosine among the vectors
+    * it shares a bucket with in one of `numTables` seeded
+    * `numBits`-plane LSH tables, as (vec_id, neighbor, cosine, rank).
+    * `vec_id` is a key; a null `vec_id` or `embedding`, a vector whose
+    * length is not `dim`, or a null, NaN or infinite component raises
+    * an `IllegalArgumentException` in the consumer's job. */
   def knnGraph(
       embs: DataFrame, k: Int = 3, dim: Int = 64,
       numBits: Int = 6, numTables: Int = 8, seed: Long = 42L): DataFrame =
-    knnGraphFrom(lshBuckets(embs, dim, numBits, numTables, seed), embs, k)
+    KnnGraph(embs, Some(numBits), numTables, seed, dim, k, labelled = false)
 
   /** [[knnGraph]] at the data-dependent LSH width — the registered
-    * default since r15: bits = autoBits(count), so the candidate join
-    * stays linear in corpus size instead of quadratic (fixed bits =
-    * fixed bucket count). [[autoRecall]] pins its accuracy per SF. */
+    * default since r15: bits = autoBits(count), so the candidate pairs
+    * stay linear in corpus size instead of quadratic (fixed bits =
+    * fixed bucket count). One count job, then the kernel over the
+    * AutoMaxBits planes' prefix slice. [[autoRecall]] pins its
+    * accuracy per SF. */
   def knnGraphAuto(
       embs: DataFrame, k: Int = 3, dim: Int = 64,
       numTables: Int = 8, seed: Long = 42L): DataFrame =
-    knnGraphFrom(lshBucketsAuto(embs, dim, numTables, seed), embs, k)
-
-  private def knnGraphFrom(
-      rawBuckets: DataFrame, embs: DataFrame, k: Int): DataFrame = {
-    val buckets = rawBuckets.cache()
-    val pairs = buckets.select(col("vec_id").as("ida"), col("table"), col("bucket"))
-      .join(buckets.select(col("vec_id").as("idb"), col("table"), col("bucket")),
-        Seq("table", "bucket"))
-      .filter(col("ida") =!= col("idb"))
-      .select("ida", "idb").distinct()
-    val e = embs.select(col("vec_id"), col("embedding"),
-      l2Norm(col("embedding")).as("nrm"))
-    val scored = pairs
-      .join(e.select(col("vec_id").as("ida"), col("embedding").as("ea"),
-        col("nrm").as("na")), Seq("ida"))
-      .join(e.select(col("vec_id").as("idb"), col("embedding").as("eb"),
-        col("nrm").as("nb")), Seq("idb"))
-      .select(col("ida"), col("idb"),
-        (dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cosine"))
-    org.apache.spark.sql.graft.TopKPerKey(
-        scored, Seq("ida"), Seq(("cosine", false), ("idb", true)), k,
-        rankCol = Some("rank"))
-      .select(col("ida").as("vec_id"), col("idb").as("neighbor"),
-        col("cosine"), col("rank"))
-  }
+    KnnGraph(embs, None, numTables, seed, dim, k, labelled = false)
 
   /** Exact vector dedup: one row per distinct embedding, keeping the
     * lowest vec_id — the pass a real corpus runs BEFORE any
@@ -707,57 +694,22 @@ object EmbeddingOps {
   /** Hard-negative mining for contrastive training: per anchor, the
     * top-k most-similar vectors with a DIFFERENT label — the pairs a
     * reranker/embedding trainer needs most (near the anchor yet
-    * wrong). Same LSH-blocked candidate machinery as [[knnGraph]]
-    * (never all-pairs) with the label-mismatch filter applied to the
-    * candidate stream BEFORE the exact rescore, so same-label
-    * candidates never pay the dot product. */
+    * wrong), as (vec_id, negative, neg_label, cosine, rank). The
+    * [[knnGraph]] kernel with the label-mismatch test applied to each
+    * co-bucketed pair BEFORE the exact rescore, so same-label pairs
+    * (and any pair with a null label) never pay the dot product. Same
+    * input errors as [[knnGraph]]. */
   def hardNegatives(
       embs: DataFrame, k: Int = 3, dim: Int = 64,
       numBits: Int = 6, numTables: Int = 8, seed: Long = 42L): DataFrame =
-    hardNegativesFrom(
-      lshBuckets(embs, dim, numBits, numTables, seed), embs, k)
+    KnnGraph(embs, Some(numBits), numTables, seed, dim, k, labelled = true)
 
   /** [[hardNegatives]] at the data-dependent LSH width (see
     * [[knnGraphAuto]]) — the registered default since r15. */
   def hardNegativesAuto(
       embs: DataFrame, k: Int = 3, dim: Int = 64,
       numTables: Int = 8, seed: Long = 42L): DataFrame =
-    hardNegativesFrom(lshBucketsAuto(embs, dim, numTables, seed), embs, k)
-
-  private def hardNegativesFrom(
-      rawBuckets: DataFrame, embs: DataFrame, k: Int): DataFrame = {
-    // labels ride the bucket relation (one int per bucket row) so the
-    // label-mismatch filter lands BEFORE the pair distinct: same-label
-    // pairs never reach the distinct's shuffle, and the pair-sized
-    // label joins of the naive shape disappear entirely. (lb is
-    // functionally determined by idb, so distinct over (ida,idb,lb)
-    // has exactly the cardinality of distinct over (ida,idb).)
-    val lab = embs.select(col("vec_id"), col("label"))
-    val buckets = rawBuckets.join(lab, Seq("vec_id")).cache()
-    val pairs = buckets.select(col("vec_id").as("ida"), col("table"),
-        col("bucket"), col("label").as("la"))
-      .join(buckets.select(col("vec_id").as("idb"), col("table"),
-        col("bucket"), col("label").as("lb")), Seq("table", "bucket"))
-      .filter(col("ida") =!= col("idb") && col("la") =!= col("lb"))
-      .select("ida", "idb", "lb").distinct()
-    val e = embs.select(col("vec_id"), col("embedding"),
-      l2Norm(col("embedding")).as("nrm"))
-    val scored = pairs
-      .join(e.select(col("vec_id").as("ida"), col("embedding").as("ea"),
-        col("nrm").as("na")), Seq("ida"))
-      .join(e.select(col("vec_id").as("idb"), col("embedding").as("eb"),
-        col("nrm").as("nb")), Seq("idb"))
-      .select(col("ida"), col("idb"), col("lb"),
-        (dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cosine"))
-    // bounded-heap per-key top-k (no Window: candidate lists never
-    // materialize sorted) — same (cosine desc, idb asc) total order as
-    // the row_number formulation, so the output is value-identical.
-    org.apache.spark.sql.graft.TopKPerKey(
-        scored, Seq("ida"), Seq(("cosine", false), ("idb", true)), k,
-        rankCol = Some("rank"))
-      .select(col("ida").as("vec_id"), col("idb").as("negative"),
-        col("lb").as("neg_label"), col("cosine"), col("rank"))
-  }
+    KnnGraph(embs, None, numTables, seed, dim, k, labelled = true)
 
   def hardNegativesAutoSql(
       k: Int = 3, dim: Int = 64, numTables: Int = 8,
@@ -794,10 +746,10 @@ object EmbeddingOps {
   /** kNN majority-vote classification over the embedding space — the
     * label-transfer primitive (propagate a small labeled seed set onto
     * unlabeled vectors, audit embedding quality via self-consistency).
-    * Composes [[knnGraph]] (LSH-blocked candidates, exact rescore,
-    * per-source top-k via the custom TopKPerKey physical operator) with
-    * a (vec_id, label) vote count and a second TopKPerKey at k=1 for
-    * the argmax — no Window, no per-group sort anywhere in the plan.
+    * Composes [[knnGraph]] (the LSH-blocked kernel: exact rescore,
+    * per-source top-k heaps) with a (vec_id, label) vote count and a
+    * TopKPerKey at k=1 for the argmax — no Window, no per-group sort
+    * anywhere in the plan.
     * Tie-break: most votes, then smallest label (total order → both
     * engines agree). Output: (vec_id, pred_label, votes, label,
     * correct).

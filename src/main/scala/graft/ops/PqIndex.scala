@@ -394,17 +394,7 @@ object PqIndex {
     val subDim = dim / m
     val coarseSteps = KMeansND.lloydStepsSql(maxIterC, a = "cca", c = "cc")
     val ccFin = s"cc$maxIterC"
-    val perSub = (0 until m).map { s =>
-      s"${subspaceSql(s, subDim, "resid", nlist, maxIter)}, codes$s AS (SELECT id, cid AS code$s " +
-        s"FROM (${KMeansND.assignSql(s"sub$s", s"s${s}c$maxIter")}) a)"
-    }.mkString(", ")
-    val codeJoin = (1 until m)
-      .map(s => s"JOIN codes$s ON codes0.id = codes$s.id").mkString(" ")
-    val bookJoin = (0 until m)
-      .map(s => s"JOIN s${s}c$maxIter b$s ON codes$s.code$s = b$s.cid").mkString(" ")
-    val adc = (0 until m)
-      .map(s => KMeansND.sqDistSql(s"list_slice(r.qres, ${s * subDim + 1}, ${s * subDim + subDim})", s"b$s.cvec"))
-      .reduceLeft((a, b) => s"($a + $b)")
+    val Adc(perSub, codeJoin, bookJoin, adc) = adcSql(m, subDim, "resid", nlist, maxIter, "r.qres")
     // lists/resid are AS MATERIALIZED: the four subspace chains each
     // reference resid, and default inlining would re-run the whole
     // coarse Lloyd chain once per subspace (measured 116 s → ~10 s at
@@ -437,6 +427,32 @@ object PqIndex {
       nlistC)
   }
 
+  /** The pieces of an ADC query over `m` subspace codebooks, as
+    * [[adcSql]] emits them. */
+  private final case class Adc(ctes: String, codeJoin: String, bookJoin: String, dist: String)
+
+  /** The ADC pieces over `from`'s vectors: per subspace s its
+    * [[subspaceSql]] chain and `codes<s>` (each vector's code), the
+    * joins from `codes0` to the other codes and of each code to its
+    * codeword `b<s>`, and the distance: the left-to-right sum over the
+    * subspaces of the squared distance from the s-th slice of `vec` (a
+    * SQL list expression) to codeword `b<s>`. */
+  private def adcSql(m: Int, subDim: Int, from: String, nlist: Int, maxIter: Int,
+      vec: String): Adc = {
+    val ctes = (0 until m).map { s =>
+      s"${subspaceSql(s, subDim, from, nlist, maxIter)}, codes$s AS (SELECT id, cid AS code$s " +
+        s"FROM (${KMeansND.assignSql(s"sub$s", s"s${s}c$maxIter")}) a)"
+    }.mkString(", ")
+    val codeJoin = (1 until m)
+      .map(s => s"JOIN codes$s ON codes0.id = codes$s.id").mkString(" ")
+    val bookJoin = (0 until m)
+      .map(s => s"JOIN s${s}c$maxIter b$s ON codes$s.code$s = b$s.cid").mkString(" ")
+    val dist = (0 until m)
+      .map(s => KMeansND.sqDistSql(s"list_slice($vec, ${s * subDim + 1}, ${s * subDim + subDim})", s"b$s.cvec"))
+      .reduceLeft((a, b) => s"($a + $b)")
+    Adc(ctes, codeJoin, bookJoin, dist)
+  }
+
   /** Subspace `s`'s CTEs over `from`'s vectors: `sub<s>`, their s-th
     * `subDim`-wide slice; `s<s>c0`, its `nlist` lowest-id slices (the
     * `train` init); and `maxIter` unrolled decimal-exact Lloyd steps up
@@ -445,9 +461,7 @@ object PqIndex {
       maxIter: Int): String = {
     val sub = s"sub$s"
     s"$sub AS (SELECT id, list_slice(vec, ${s * subDim + 1}, ${s * subDim + subDim}) AS vec " +
-      s"""FROM $from), s${s}c0 AS (SELECT CAST(rn - 1 AS INT) AS cid, vec AS cvec FROM
-         |  (SELECT vec, ROW_NUMBER() OVER (ORDER BY id) AS rn FROM $sub) t
-         |  WHERE rn <= $nlist), """.stripMargin +
+      s"FROM $from), s${s}c0 AS (${KMeansND.lowestIdsSql(sub, nlist)}), " +
       KMeansND.lloydStepsSql(maxIter, sub, s"s${s}a", s"s${s}c")
   }
 
@@ -523,17 +537,7 @@ object PqIndex {
       queryId: Long = 0L, k: Int = 10, dim: Int = 64): String = {
     require(dim % m == 0)
     val subDim = dim / m
-    val perSub = (0 until m).map { s =>
-      s"${subspaceSql(s, subDim, "ptsnd", nlist, maxIter)}, codes$s AS (SELECT id, cid AS code$s " +
-        s"FROM (${KMeansND.assignSql(s"sub$s", s"s${s}c$maxIter")}) a)"
-    }.mkString(", ")
-    val codeJoin = (1 until m)
-      .map(s => s"JOIN codes$s ON codes0.id = codes$s.id").mkString(" ")
-    val bookJoin = (0 until m)
-      .map(s => s"JOIN s${s}c$maxIter b$s ON codes$s.code$s = b$s.cid").mkString(" ")
-    val adc = (0 until m)
-      .map(s => KMeansND.sqDistSql(s"list_slice(q.vec, ${s * subDim + 1}, ${s * subDim + subDim})", s"b$s.cvec"))
-      .reduceLeft((a, b) => s"($a + $b)")
+    val Adc(perSub, codeJoin, bookJoin, adc) = adcSql(m, subDim, "ptsnd", nlist, maxIter, "q.vec")
     graft.Tables.withVecsCents(
       s""", $perSub,
          |q AS (SELECT vec FROM ptsnd WHERE id = $queryId)

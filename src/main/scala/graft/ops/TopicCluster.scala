@@ -85,24 +85,15 @@ object TopicCluster {
        |  GROUP BY doc_id) g""".stripMargin
 
   /** Chained-CTE twin of `cluster`: seeds from the k lowest ids, then
-    * `iters - 1` recompute rounds + the final assignment. */
+    * `iters - 1` Lloyd steps (`KMeansND.lloydStepsSql`) + the final
+    * assignment. */
   def clusterSql(dim: Int = 64, k: Int = 8, iters: Int = 3,
       seed: Int = 42): String = {
-    val rounds = new StringBuilder
-    var centsRel = "cents0"
-    for (r <- 1 until iters) {
-      rounds ++=
-        s""",
-           |a$r AS (${KMeansND.assignSql("vecs", centsRel)}),
-           |cents$r AS (${KMeansND.recomputeSql("vecs", s"a$r")})""".stripMargin
-      centsRel = s"cents$r"
-    }
+    val steps =
+      if (iters > 1) ", " + KMeansND.lloydStepsSql(iters - 1, "vecs", "a", "cents") else ""
     s"""WITH vecs AS (${denseFeaturesSql(dim, seed)}),
-       |cents0 AS (
-       |  SELECT CAST(rn - 1 AS INT) AS cid, vec AS cvec FROM
-       |    (SELECT vec, ROW_NUMBER() OVER (ORDER BY id) AS rn FROM vecs) t
-       |  WHERE rn <= $k)$rounds
-       |${KMeansND.assignSql("vecs", centsRel)}""".stripMargin
+       |cents0 AS (${KMeansND.lowestIdsSql("vecs", k)})$steps
+       |${KMeansND.assignSql("vecs", s"cents${math.max(iters - 1, 0)}")}""".stripMargin
   }
 
   /** Adjusted Rand Index (Hubert & Arabie 1985) between the topic

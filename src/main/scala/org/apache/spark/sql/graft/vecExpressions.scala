@@ -369,4 +369,8 @@ case class PExp(child: Expression) extends UnaryExpression with ExpectsInputType
 object VecBridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
   def column(e: Expression): Column = ExpressionUtils.column(e)
+
+  /** The error ANSI-mode `/` raises on a zero divisor (DIVIDE_BY_ZERO). */
+  def divideByZero(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
 }

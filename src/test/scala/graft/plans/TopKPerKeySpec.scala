@@ -94,14 +94,14 @@ class TopKPerKeySpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("knnGraph routes through TopKPerKey: no Window, no Sort in the plan") {
+  test("topTokensPerLang routes through TopKPerKey: no Window, no Sort in the plan") {
     val key = "spark.sql.adaptive.enabled"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "false")
     try {
-      val embs = spark.read
-        .parquet("/root/testdata/sf0.001/embeddings.parquet")
-      val plan = graft.ops.EmbeddingOps.knnGraph(embs)
+      val docs = spark.read
+        .parquet("/root/testdata/sf0.001/documents.parquet")
+      val plan = graft.ops.CuratePipeline.topTokensPerLang(docs)
         .queryExecution.executedPlan
       val execs = plan.collect { case e: TopKPerKeyExec => e }
       assert(execs.map(_.partial).sorted == Seq(false, true),
