@@ -114,6 +114,27 @@ class TopKPerKeySpec extends SparkSpec {
     } finally spark.conf.set(key, prev)
   }
 
+  // the DataFrame formulation of knnGraph, kept as the kernel's reference
+  test("knnGraph routes through TopKPerKey: no Window, no Sort in the plan") {
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      val embs = spark.read
+        .parquet("/root/testdata/sf0.001/embeddings.parquet")
+      val plan = graft.ops.KnnGraphDataFrame.knnGraph(embs)
+        .queryExecution.executedPlan
+      val execs = plan.collect { case e: TopKPerKeyExec => e }
+      assert(execs.map(_.partial).sorted == Seq(false, true),
+        s"expected partial+final heap operators, got ${execs.map(_.partial)}")
+      assert(execs.exists(e => !e.partial && e.rankAttr.isDefined),
+        "final stage must emit the rank")
+      val planStr = plan.toString
+      assert(!planStr.contains("Window"), "must not plan a Window")
+      assert(!planStr.contains("Sort "), "must not plan a per-group Sort")
+    } finally spark.conf.set(key, prev)
+  }
+
   test("groups smaller than k pass through whole; total order breaks ties") {
     val df = Seq(
       ("a", 1L, 5.0), ("a", 2L, 5.0), ("a", 3L, 5.0), ("a", 4L, 1.0),
