@@ -245,102 +245,88 @@ object Bench {
     // pq_topk, ivfpq_topk...) pay in their timed bodies — record their
     // seconds so BENCH_DETAIL explains those line items from JSON alone.
     val buildSecs = scala.collection.mutable.Map.empty[String, Double]
-    val runIvfIndexed = only.forall(_.contains("ivf_topk_indexed"))
-    val ivfIndexed: Option[QueryResult] = if (!runIvfIndexed) None else Some {
-      try {
-        val embs = Tables.table(spark, sfDir, "embeddings")
-        val tb0 = System.nanoTime()
+    /** The seconds of `body`, an untimed index build, as buildSecs(key). */
+    def timeBuild[A](key: String)(body: => A): A = {
+      val tb0 = System.nanoTime()
+      val built = body
+      buildSecs(key) = (System.nanoTime() - tb0) / 1e9
+      built
+    }
+    /** The `name` entry, unless SPARK_GRAFT_ONLY leaves it out: `setup`
+      * builds and persists its index (untimed) and returns the probe,
+      * whose execution is the timed body. */
+    def indexed(name: String)(setup: => () => DataFrame): Option[QueryResult] =
+      if (!only.forall(_.contains(name))) None else Some {
+        val res = try {
+          val probe = setup
+          val (runs, best, err) = bestOf(3)(execute(probe()))
+          (name, runs, best, err)
+        } catch { case e: Throwable =>
+          (name, Seq(-1.0), -1.0,
+            Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"))
+        }
+        loads += name -> loadNow()
+        res
+      }
+    val ivfIndexed = indexed("ivf_topk_indexed") {
+      val embs = Tables.table(spark, sfDir, "embeddings")
+      val path = "target/bench_ivf_index.parquet"
+      val built = timeBuild("ivf_topk") {
         val built = ops.IvfIndex.build(embs, nlist = 16, maxIter = 5,
           convergence = false)
-        val path = "target/bench_ivf_index.parquet"
         ops.IvfIndex.writeIndex(built, path)
-        buildSecs("ivf_topk") = (System.nanoTime() - tb0) / 1e9
-        val q = ops.IvfIndex.vectors(embs)
-          .filter(org.apache.spark.sql.functions.col("id") === 0L)
-          .collect()(0).getSeq[Double](1)
-        val idx = ops.IvfIndex.readIndex(spark, path, built.centroids)
-        val (runs, best, err) =
-          bestOf(3)(execute(ops.IvfIndex.search(spark, idx, q, k = 10, nprobe = 4)))
-        ("ivf_topk_indexed", runs, best, err)
-      } catch { case e: Throwable =>
-        ("ivf_topk_indexed", Seq(-1.0), -1.0,
-          Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"))
+        built
       }
+      val q = ops.IvfIndex.vectors(embs)
+        .filter(org.apache.spark.sql.functions.col("id") === 0L)
+        .collect()(0).getSeq[Double](1)
+      val idx = ops.IvfIndex.readIndex(spark, path, built.centroids)
+      () => ops.IvfIndex.search(spark, idx, q, k = 10, nprobe = 4)
     }
-    ivfIndexed.foreach(_ => loads += "ivf_topk_indexed" -> loadNow())
     // Same amortization for PQ: codebooks + codes persisted once
     // (untimed); the timed body reads ONLY the codes table + rescores.
-    val runPqIndexed = only.forall(_.contains("pq_topk_indexed"))
-    val pqIndexed: Option[QueryResult] = if (!runPqIndexed) None else Some {
-      try {
-        val embs = Tables.table(spark, sfDir, "embeddings")
-        val vecs = ops.IvfIndex.vectors(embs)
-        val tb0 = System.nanoTime()
+    val pqIndexed = indexed("pq_topk_indexed") {
+      val embs = Tables.table(spark, sfDir, "embeddings")
+      val vecs = ops.IvfIndex.vectors(embs)
+      val path = "target/bench_pq_index.parquet"
+      timeBuild("pq_topk") {
         val cb = ops.PqIndex.train(vecs, m = 4, nlist = 16, maxIter = 3)
-        val path = "target/bench_pq_index.parquet"
         ops.PqIndex.writeIndex(vecs, cb, path)
-        buildSecs("pq_topk") = (System.nanoTime() - tb0) / 1e9
-        val q = vecs
-          .filter(org.apache.spark.sql.functions.col("id") === 0L)
-          .collect()(0).getSeq[Double](1)
-        val (runs, best, err) =
-          bestOf(3)(execute(ops.PqIndex.searchIndex(spark, path, q, k = 10)))
-        ("pq_topk_indexed", runs, best, err)
-      } catch { case e: Throwable =>
-        ("pq_topk_indexed", Seq(-1.0), -1.0,
-          Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"))
       }
+      val q = vecs
+        .filter(org.apache.spark.sql.functions.col("id") === 0L)
+        .collect()(0).getSeq[Double](1)
+      () => ops.PqIndex.searchIndex(spark, path, q, k = 10)
     }
-    pqIndexed.foreach(_ => loads += "pq_topk_indexed" -> loadNow())
     // SQ8: codes + grid persisted once (untimed); the timed body reads
     // only the 1-int/dim codes table + the d-row grid.
-    val runSq8Indexed = only.forall(_.contains("emb_sq8_topk_indexed"))
-    val sq8Indexed: Option[QueryResult] = if (!runSq8Indexed) None else Some {
-      try {
-        val embs = Tables.table(spark, sfDir, "embeddings")
-        val path = "target/bench_sq8_index.parquet"
-        val tb0 = System.nanoTime()
-        ops.QuantOps.writeSq8Index(embs, path)
-        buildSecs("emb_sq8_topk") = (System.nanoTime() - tb0) / 1e9
-        val q = embs
-          .filter(org.apache.spark.sql.functions.col("vec_id") === 0L)
-          .select(org.apache.spark.sql.functions.col("embedding")
-            .cast("array<double>"))
-          .head().getSeq[Double](0)
-        val (runs, best, err) = bestOf(3)(
-          execute(ops.QuantOps.searchSq8Index(spark, path, q, 0L, k = 10)))
-        ("emb_sq8_topk_indexed", runs, best, err)
-      } catch { case e: Throwable =>
-        ("emb_sq8_topk_indexed", Seq(-1.0), -1.0,
-          Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"))
-      }
+    val sq8Indexed = indexed("emb_sq8_topk_indexed") {
+      val embs = Tables.table(spark, sfDir, "embeddings")
+      val path = "target/bench_sq8_index.parquet"
+      timeBuild("emb_sq8_topk")(ops.QuantOps.writeSq8Index(embs, path))
+      val q = embs
+        .filter(org.apache.spark.sql.functions.col("vec_id") === 0L)
+        .select(org.apache.spark.sql.functions.col("embedding")
+          .cast("array<double>"))
+        .head().getSeq[Double](0)
+      () => ops.QuantOps.searchSq8Index(spark, path, q, 0L, k = 10)
     }
-    sq8Indexed.foreach(_ => loads += "emb_sq8_topk_indexed" -> loadNow())
     // And for the composed IVFADC: coarse lists + residual codebooks +
     // codes persisted once (untimed); the timed body is the partition-
     // pruned codes probe + ADC rescore — the production search path.
-    val runIvfPqIndexed = only.forall(_.contains("ivfpq_topk_indexed"))
-    val ivfPqIndexed: Option[QueryResult] = if (!runIvfPqIndexed) None else Some {
-      try {
-        val embs = Tables.table(spark, sfDir, "embeddings")
-        val path = "target/bench_ivfpq_index.parquet"
-        val tb0 = System.nanoTime()
+    val ivfPqIndexed = indexed("ivfpq_topk_indexed") {
+      val embs = Tables.table(spark, sfDir, "embeddings")
+      val path = "target/bench_ivfpq_index.parquet"
+      timeBuild("ivfpq_topk") {
         ops.PqIndex.writeIvfPqIndex(embs, nlistC = 8, maxIterC = 3,
           m = 4, nlist = 16, maxIter = 3, path)
-        buildSecs("ivfpq_topk") = (System.nanoTime() - tb0) / 1e9
-        buildSecs("ivfpq_topk_refined") = buildSecs("ivfpq_topk")
-        val q = ops.IvfIndex.vectors(embs)
-          .filter(org.apache.spark.sql.functions.col("id") === 0L)
-          .head().getSeq[Double](1)
-        val (runs, best, err) = bestOf(3)(
-          execute(ops.PqIndex.searchIvfPqIndex(spark, path, q, k = 10, nprobe = 2)))
-        ("ivfpq_topk_indexed", runs, best, err)
-      } catch { case e: Throwable =>
-        ("ivfpq_topk_indexed", Seq(-1.0), -1.0,
-          Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"))
       }
+      buildSecs("ivfpq_topk_refined") = buildSecs("ivfpq_topk")
+      val q = ops.IvfIndex.vectors(embs)
+        .filter(org.apache.spark.sql.functions.col("id") === 0L)
+        .head().getSeq[Double](1)
+      () => ops.PqIndex.searchIvfPqIndex(spark, path, q, k = 10, nprobe = 2)
     }
-    ivfPqIndexed.foreach(_ => loads += "ivfpq_topk_indexed" -> loadNow())
     if (runFit) loads += "kmeans_fit10" -> loadNow()
 
     val all = results ++ ivfIndexed.toSeq ++ pqIndexed.toSeq ++

@@ -222,33 +222,15 @@ object Dedup {
       histCond: String => String, batchCond: String => String,
       n: Int = 3, numPerm: Int = 64, rowsPerBand: Int = 4,
       threshold: Double = 0.8, maxDf: Int = DefaultMaxDf): String = {
-    val numBands = numPerm / rowsPerBand
-    val mins = affineConsts(numPerm).zipWithIndex
-      .map { case ((a, b), p) => s"MIN(($a * h + $b) % $MinhashPrime) AS m$p" }
-      .mkString(",\n    ")
-    val bands = (0 until numBands).map { b =>
-      val cols = (b * rowsPerBand until (b + 1) * rowsPerBand)
-        .map(p => s"CAST(m$p AS VARCHAR)").mkString(" || ',' || ")
-      s"SELECT doc_id, $b AS band, md5($cols) AS bucket FROM sigs"
-    }.mkString("\n  UNION ALL ")
     s"""WITH sh0 AS (${shinglesSql(n)}),
        |hs AS (SELECT doc_id, ${md5Base30Sql("shingle")} AS h FROM sh0),
-       |sigs AS (SELECT doc_id,
-       |    $mins
-       |  FROM hs GROUP BY doc_id),
-       |buckets AS (
-       |  $bands),
+       |${bandsSql(numPerm, rowsPerBand)},
        |cands AS (
        |  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
        |  FROM buckets a JOIN buckets b
        |    ON a.band = b.band AND a.bucket = b.bucket
        |  WHERE ${histCond("a.doc_id")} AND ${batchCond("b.doc_id")}),
-       |cids AS (SELECT da AS doc_id FROM cands UNION SELECT db FROM cands),
-       |sh AS (SELECT doc_id, shingle FROM sh0
-       |  WHERE shingle IN (
-       |    SELECT shingle FROM sh0 GROUP BY shingle HAVING COUNT(*) <= $maxDf)
-       |  AND doc_id IN (SELECT doc_id FROM cids)),
-       |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
+       |${candShinglesSql(maxDf)},
        |verified AS (
        |  SELECT i.da, i.db FROM (
        |    SELECT a.doc_id AS da, b.doc_id AS db, COUNT(*) AS inter
@@ -329,25 +311,35 @@ object Dedup {
   // -------------------------------------------------------------------
   def ngramJaccardPairs(
       docs: DataFrame, n: Int = 3, threshold: Double = 0.8,
-      maxDf: Int = DefaultMaxDf): DataFrame = {
-    val sh = cappedShingles(shingles(docs, n), maxDf).cache()
+      maxDf: Int = DefaultMaxDf): DataFrame =
+    overlaps(cappedShingles(shingles(docs, n), maxDf).cache())
+      .withColumn("jaccard", jaccard)
+      .filter(col("jaccard") >= threshold)
+      .select("da", "db", "inter", "jaccard")
+
+  /** Shingle overlap of every two docs of `sh` (doc_id, shingle) that
+    * share a shingle: (da < db, inter = |A∩B|, sza = |A|, szb = |B|).
+    * The shuffle key is the shingle; `keep` may narrow the pair stream
+    * before the pair count (to LSH candidates, in [[verifyCandidates]]). */
+  private def overlaps(
+      sh: DataFrame, keep: DataFrame => DataFrame = d => d): DataFrame = {
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val a = sh.select(col("doc_id").as("da"), col("shingle"))
     val b = sh.select(col("doc_id").as("db"), col("shingle"))
-    val inter = a.join(b, Seq("shingle"))
-      .filter(col("da") < col("db"))
+    keep(a.join(b, Seq("shingle")).filter(col("da") < col("db")))
       .groupBy("da", "db").agg(count(lit(1)).as("inter"))
-    inter
       .join(sizes.select(col("doc_id").as("da"), col("sz").as("sza")), Seq("da"))
       .join(sizes.select(col("doc_id").as("db"), col("sz").as("szb")), Seq("db"))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sza") + col("szb") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select("da", "db", "inter", "jaccard")
   }
 
-  def ngramJaccardPairsSql(
-      n: Int = 3, threshold: Double = 0.8, maxDf: Int = DefaultMaxDf): String =
+  /** |A∩B| / |A∪B| over [[overlaps]]' columns. */
+  private val jaccard =
+    col("inter").cast("double") / (col("sza") + col("szb") - col("inter"))
+
+  /** SQL twin of [[overlaps]] over the DF-capped shingles, closed by
+    * the pair `measure` columns and the `keep` predicate. */
+  private def overlapsSql(
+      n: Int, maxDf: Int, measure: String, keep: String): String =
     s"""WITH sh0 AS (${shinglesSql(n)}),
        |sh AS (SELECT doc_id, shingle FROM sh0 WHERE shingle IN (
        |  SELECT shingle FROM sh0 GROUP BY shingle HAVING COUNT(*) <= $maxDf)),
@@ -357,11 +349,17 @@ object Dedup {
        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
        |  GROUP BY 1, 2)
        |SELECT da, db, inter,
-       |       CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter) AS jaccard
+       |       $measure
        |FROM inter
        |JOIN sizes sa ON da = sa.doc_id
        |JOIN sizes sb ON db = sb.doc_id
-       |WHERE CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter) >= $threshold""".stripMargin
+       |WHERE $keep""".stripMargin
+
+  def ngramJaccardPairsSql(
+      n: Int = 3, threshold: Double = 0.8, maxDf: Int = DefaultMaxDf): String =
+    overlapsSql(n, maxDf,
+      "CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter) AS jaccard",
+      s"CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter) >= $threshold")
 
   /** Directed n-gram CONTAINMENT pairs: c(a→b) = |A∩B| / |A| — the
     * asymmetric cousin of Jaccard that resemblance misses (a short
@@ -369,46 +367,25 @@ object Dedup {
     * Broder 1997 distinguishes exactly these two). Reports both
     * directions per unordered pair and keeps those where either side is
     * ≥ `threshold` — the "doc A is (nearly) inside doc B" detector for
-    * quote/boilerplate/subset dedup. Same DF-capped inverted-index
-    * blocking and intersection join as [[ngramJaccardPairs]]; the only
-    * change is the denominator. */
+    * quote/boilerplate/subset dedup. The DF-capped inverted-index
+    * blocking and intersection join are [[overlaps]], as for
+    * [[ngramJaccardPairs]]; only the measure differs. */
   def ngramContainmentPairs(
       docs: DataFrame, n: Int = 3, threshold: Double = 0.9,
-      maxDf: Int = DefaultMaxDf): DataFrame = {
-    val sh = cappedShingles(shingles(docs, n), maxDf).cache()
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val a = sh.select(col("doc_id").as("da"), col("shingle"))
-    val b = sh.select(col("doc_id").as("db"), col("shingle"))
-    val inter = a.join(b, Seq("shingle"))
-      .filter(col("da") < col("db"))
-      .groupBy("da", "db").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("da"), col("sz").as("sza")), Seq("da"))
-      .join(sizes.select(col("doc_id").as("db"), col("sz").as("szb")), Seq("db"))
+      maxDf: Int = DefaultMaxDf): DataFrame =
+    overlaps(cappedShingles(shingles(docs, n), maxDf).cache())
       .withColumn("cont_ab", col("inter").cast("double") / col("sza"))
       .withColumn("cont_ba", col("inter").cast("double") / col("szb"))
       .filter(greatest(col("cont_ab"), col("cont_ba")) >= threshold)
       .select("da", "db", "inter", "cont_ab", "cont_ba")
-  }
 
   def ngramContainmentPairsSql(
       n: Int = 3, threshold: Double = 0.9, maxDf: Int = DefaultMaxDf): String =
-    s"""WITH sh0 AS (${shinglesSql(n)}),
-       |sh AS (SELECT doc_id, shingle FROM sh0 WHERE shingle IN (
-       |  SELECT shingle FROM sh0 GROUP BY shingle HAVING COUNT(*) <= $maxDf)),
-       |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-       |inter AS (
-       |  SELECT a.doc_id AS da, b.doc_id AS db, COUNT(*) AS inter
-       |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2)
-       |SELECT da, db, inter,
-       |       CAST(inter AS DOUBLE) / sa.sz AS cont_ab,
-       |       CAST(inter AS DOUBLE) / sb.sz AS cont_ba
-       |FROM inter
-       |JOIN sizes sa ON da = sa.doc_id
-       |JOIN sizes sb ON db = sb.doc_id
-       |WHERE GREATEST(CAST(inter AS DOUBLE) / sa.sz,
-       |               CAST(inter AS DOUBLE) / sb.sz) >= $threshold""".stripMargin
+    overlapsSql(n, maxDf,
+      """CAST(inter AS DOUBLE) / sa.sz AS cont_ab,
+        |       CAST(inter AS DOUBLE) / sb.sz AS cont_ba""".stripMargin,
+      s"""GREATEST(CAST(inter AS DOUBLE) / sa.sz,
+         |               CAST(inter AS DOUBLE) / sb.sz) >= $threshold""".stripMargin)
 
   /** Cross-source near-dup matrix — which sources copy which: the
     * verified n-gram Jaccard pair relation aggregated by unordered
@@ -608,18 +585,30 @@ object Dedup {
   // 16 bands × 4 rows, j=0.8 docs collide w.p. ~99.98%.
   // -------------------------------------------------------------------
   def minhashSignatures(
-      docs: DataFrame, n: Int = 3, numPerm: Int = 64): DataFrame = {
+      docs: DataFrame, n: Int = 3, numPerm: Int = 64): DataFrame =
+    signatures(docs, n, numPerm, xxBase30)
+
+  /** Signatures over the md5-affine family: one md5 base hash per
+    * shingle, the same DAG as [[minhashSignatures]] ([[signatures]]). */
+  def minhashSignaturesMd5(
+      docs: DataFrame, n: Int = 3, numPerm: Int = 64): DataFrame =
+    signatures(docs, n, numPerm, md5Base30)
+
+  /** (doc_id, sig): numPerm affine permutations of the 30-bit `base`
+    * hash of each shingle, min-folded per doc. */
+  private def signatures(
+      docs: DataFrame, n: Int, numPerm: Int, base: Column => Column): DataFrame = {
     // Shape matters twice. (1) A nested transform(sequence, p ->
     // array_min(transform(sh, ...))) would be a CodegenFallback
     // (interpreted) per row — exploding shingles and taking numPerm
     // min() aggregates keeps everything inside whole-stage codegen +
     // a partial/final HashAggregate, and the shuffle carries only
     // numPerm longs per doc. (2) The shingle STRING is hashed exactly
-    // once (xxBase30, projected before the aggregate); the numPerm
+    // once (projected before the aggregate); the numPerm
     // permutations are affine Carter-Wegman transforms of that long —
     // numPerm string hashes per shingle made this 3x slower at sf1.
     val hs = shingles(docs, n)
-      .select(col("doc_id"), xxBase30(col("shingle")).as("h"))
+      .select(col("doc_id"), base(col("shingle")).as("h"))
     val aggs = affineConsts(numPerm).zipWithIndex.map { case ((a, b), p) =>
       min((lit(a) * col("h") + lit(b)) % MinhashPrime).as(s"m$p")
     }
@@ -628,20 +617,44 @@ object Dedup {
         array((0 until numPerm).map(p => col(s"m$p")): _*).as("sig"))
   }
 
-  /** Signatures over the md5-affine family: one md5 base hash per
-    * shingle (projected BEFORE the aggregate so it is computed once),
-    * then numPerm affine permutations as min-aggregate columns. */
-  def minhashSignaturesMd5(
-      docs: DataFrame, n: Int = 3, numPerm: Int = 64): DataFrame = {
-    val hs = shingles(docs, n)
-      .select(col("doc_id"), md5Base30(col("shingle")).as("h"))
-    val aggs = affineConsts(numPerm).zipWithIndex.map { case ((a, b), p) =>
-      min((lit(a) * col("h") + lit(b)) % MinhashPrime).as(s"m$p")
-    }
-    hs.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-      .select(col("doc_id"),
-        array((0 until numPerm).map(p => col(s"m$p")): _*).as("sig"))
+  /** SQL twin of [[signatures]] (over a CTE `hs(doc_id, h)`) and of the
+    * banding in [[lshCandidatePairsFromSigs]]: CTEs `sigs(doc_id,
+    * m0..)` and `buckets(doc_id, band, bucket)`. */
+  private def bandsSql(numPerm: Int, rowsPerBand: Int): String = {
+    val mins = affineConsts(numPerm).zipWithIndex
+      .map { case ((a, b), p) => s"MIN(($a * h + $b) % $MinhashPrime) AS m$p" }
+      .mkString(",\n    ")
+    val bands = (0 until numPerm / rowsPerBand).map { b =>
+      val cols = (b * rowsPerBand until (b + 1) * rowsPerBand)
+        .map(p => s"CAST(m$p AS VARCHAR)").mkString(" || ',' || ")
+      s"SELECT doc_id, $b AS band, md5($cols) AS bucket FROM sigs"
+    }.mkString("\n  UNION ALL ")
+    s"""sigs AS (SELECT doc_id,
+       |    $mins
+       |  FROM hs GROUP BY doc_id),
+       |buckets AS (
+       |  $bands)""".stripMargin
   }
+
+  /** [[bandsSql]] plus CTE `cands(da, db)`, da < db: the SQL twin of
+    * [[lshCandidatePairsFromSigs]]. */
+  private def candidatesSql(numPerm: Int, rowsPerBand: Int): String =
+    s"""${bandsSql(numPerm, rowsPerBand)},
+       |cands AS (
+       |  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
+       |  FROM buckets a JOIN buckets b
+       |    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id)""".stripMargin
+
+  /** CTEs `cids`, `sh` (the DF-capped shingles of `sh0` of candidate
+    * docs) and `sizes`: the SQL twin of the verify input in
+    * [[verifyCandidates]] and [[survivorsOfCross]]. */
+  private def candShinglesSql(maxDf: Int): String =
+    s"""cids AS (SELECT da AS doc_id FROM cands UNION SELECT db FROM cands),
+       |sh AS (SELECT doc_id, shingle FROM sh0
+       |  WHERE shingle IN (
+       |    SELECT shingle FROM sh0 GROUP BY shingle HAVING COUNT(*) <= $maxDf)
+       |  AND doc_id IN (SELECT doc_id FROM cids)),
+       |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id)""".stripMargin
 
   def lshCandidatePairs(
       docs: DataFrame, n: Int = 3, numPerm: Int = 64, rowsPerBand: Int = 4,
@@ -694,17 +707,8 @@ object Dedup {
       .unionAll(cands.select(col("db").as("doc_id"))).distinct()
     val sh = cappedShingles(shingles(docs, n), maxDf)
       .join(candIds, Seq("doc_id"), "left_semi").cache()
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val a = sh.select(col("doc_id").as("da"), col("shingle"))
-    val b = sh.select(col("doc_id").as("db"), col("shingle"))
-    val inter = a.join(b, Seq("shingle")).filter(col("da") < col("db"))
-      .join(cands, Seq("da", "db"), "left_semi")
-      .groupBy("da", "db").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("da"), col("sz").as("sza")), Seq("da"))
-      .join(sizes.select(col("doc_id").as("db"), col("sz").as("szb")), Seq("db"))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sza") + col("szb") - col("inter")))
+    overlaps(sh, _.join(cands, Seq("da", "db"), "left_semi"))
+      .withColumn("jaccard", jaccard)
       .filter(col("jaccard") >= threshold)
       .select("da", "db", "jaccard")
   }
@@ -880,27 +884,37 @@ object Dedup {
       when(bitSum > 0, lit(1L << j)).otherwise(lit(0L))
     }.reduce(_ + _)
 
-  def simhashes(docs: DataFrame): DataFrame = {
-    // explode tokens (multiset — weights count), one codegen'd
-    // HashAggregate computing the 64 signed bit sums, then compose the
-    // 64-bit signature from the sums.
+  def simhashes(docs: DataFrame): DataFrame = simhashesOf(docs, xxhash64(_), 64)
+
+  /** (doc_id, simhash) over the low `bits` bits of each token's `hash`:
+    * explode tokens (multiset — weights count), one codegen'd
+    * HashAggregate computing the signed bit sums, then compose the
+    * signature from the sums. */
+  private def simhashesOf(
+      docs: DataFrame, hash: Column => Column, bits: Int): DataFrame = {
     val tok = TextOps.explodedTokens(docs, "t", col("doc_id"))
-    val h = xxhash64(col("t"))
-    val aggs = (0 until 64).map(j =>
+    val h = hash(col("t"))
+    val aggs = (0 until bits).map(j =>
       sum(when(shiftright(h, j).bitwiseAND(1) === 1, 1L).otherwise(-1L)).as(s"b$j"))
     tok.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
       .select(col("doc_id"),
-        (0 until 64).map(j =>
+        (0 until bits).map(j =>
           when(col(s"b$j") > 0, lit(1L << j)).otherwise(lit(0L))
         ).reduce(_ + _).as("simhash"))
   }
 
   /** Candidate pairs with Hamming distance <= maxHamming (pigeonhole
     * chunk join), verified by an exact popcount on the XOR. */
-  def simhashNearDups(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
+  def simhashNearDups(docs: DataFrame, maxHamming: Int = 3): DataFrame =
+    hammingPairs(simhashes(docs), 64, maxHamming)
+
+  /** Pairs of `sh` (doc_id, simhash) signatures of `bits` bits within
+    * `maxHamming`: the bits split into maxHamming + 1 chunks, pairs
+    * agreeing on a whole chunk join, the XOR popcount verifies. */
+  private def hammingPairs(
+      sh: DataFrame, bits: Int, maxHamming: Int): DataFrame = {
     val chunks = maxHamming + 1
-    val bitsPer = 64 / chunks
-    val sh = simhashes(docs)
+    val bitsPer = bits / chunks
     val chunked = sh.select(
         col("doc_id"), col("simhash"),
         posexplode(array((0 until chunks).map { c =>
@@ -1159,15 +1173,6 @@ object Dedup {
   def bbitMinhashSql(
       n: Int = 3, numPerm: Int = 64, rowsPerBand: Int = 4,
       b: Int = 1): String = {
-    val numBands = numPerm / rowsPerBand
-    val mins = affineConsts(numPerm).zipWithIndex
-      .map { case ((a, bb), p) => s"MIN(($a * h + $bb) % $MinhashPrime) AS m$p" }
-      .mkString(",\n    ")
-    val bands = (0 until numBands).map { bd =>
-      val cols = (bd * rowsPerBand until (bd + 1) * rowsPerBand)
-        .map(p => s"CAST(m$p AS VARCHAR)").mkString(" || ',' || ")
-      s"SELECT doc_id, $bd AS band, md5($cols) AS bucket FROM sigs"
-    }.mkString("\n  UNION ALL ")
     val modB = 1L << b
     val cE = graft.functions.PortableMath.dlitE(1.0 / modB.toDouble)
     val npE = graft.functions.PortableMath.dlitE(numPerm.toDouble)
@@ -1179,15 +1184,7 @@ object Dedup {
       .mkString(" + ")
     s"""WITH sh0 AS (${shinglesSql(n)}),
        |hs AS (SELECT doc_id, ${md5Base30Sql("shingle")} AS h FROM sh0),
-       |sigs AS (SELECT doc_id,
-       |    $mins
-       |  FROM hs GROUP BY doc_id),
-       |buckets AS (
-       |  $bands),
-       |cands AS (
-       |  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-       |  FROM buckets a JOIN buckets b
-       |    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
+       |${candidatesSql(numPerm, rowsPerBand)},
        |agr AS (
        |  SELECT c.da, c.db,
        |    CAST($agreeFull AS BIGINT) AS agree_full,
@@ -1266,15 +1263,6 @@ object Dedup {
   def weightedJaccardPairsSql(
       n: Int = 3, numPerm: Int = 64, rowsPerBand: Int = 4,
       threshold: Double = 0.8, maxDf: Int = DefaultMaxDf): String = {
-    val numBands = numPerm / rowsPerBand
-    val mins = affineConsts(numPerm).zipWithIndex
-      .map { case ((a, bb), p) => s"MIN(($a * h + $bb) % $MinhashPrime) AS m$p" }
-      .mkString(",\n    ")
-    val bands = (0 until numBands).map { bd =>
-      val cols = (bd * rowsPerBand until (bd + 1) * rowsPerBand)
-        .map(p => s"CAST(m$p AS VARCHAR)").mkString(" || ',' || ")
-      s"SELECT doc_id, $bd AS band, md5($cols) AS bucket FROM sigs"
-    }.mkString("\n  UNION ALL ")
     val thr = graft.functions.PortableMath.dlitE(threshold)
     s"""WITH shm AS (
        |  SELECT doc_id,
@@ -1287,15 +1275,7 @@ object Dedup {
        |  FROM shm GROUP BY doc_id, shingle),
        |hs AS (SELECT doc_id, ${md5Base30Sql("shingle")} AS h
        |  FROM (SELECT DISTINCT doc_id, shingle FROM shm) s),
-       |sigs AS (SELECT doc_id,
-       |    $mins
-       |  FROM hs GROUP BY doc_id),
-       |buckets AS (
-       |  $bands),
-       |cands AS (
-       |  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-       |  FROM buckets a JOIN buckets b
-       |    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
+       |${candidatesSql(numPerm, rowsPerBand)},
        |cids AS (SELECT da AS doc_id FROM cands UNION SELECT db FROM cands),
        |cnts AS (SELECT doc_id, shingle, cnt FROM shc
        |  WHERE shingle IN (
@@ -1333,32 +1313,10 @@ object Dedup {
   def minhashNearDupsMd5Sql(
       n: Int = 3, numPerm: Int = 64, rowsPerBand: Int = 4,
       threshold: Double = 0.8, maxDf: Int = DefaultMaxDf): String = {
-    val numBands = numPerm / rowsPerBand
-    val mins = affineConsts(numPerm).zipWithIndex
-      .map { case ((a, b), p) => s"MIN(($a * h + $b) % $MinhashPrime) AS m$p" }
-      .mkString(",\n    ")
-    val bands = (0 until numBands).map { b =>
-      val cols = (b * rowsPerBand until (b + 1) * rowsPerBand)
-        .map(p => s"CAST(m$p AS VARCHAR)").mkString(" || ',' || ")
-      s"SELECT doc_id, $b AS band, md5($cols) AS bucket FROM sigs"
-    }.mkString("\n  UNION ALL ")
     s"""WITH sh0 AS (${shinglesSql(n)}),
        |hs AS (SELECT doc_id, ${md5Base30Sql("shingle")} AS h FROM sh0),
-       |sigs AS (SELECT doc_id,
-       |    $mins
-       |  FROM hs GROUP BY doc_id),
-       |buckets AS (
-       |  $bands),
-       |cands AS (
-       |  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-       |  FROM buckets a JOIN buckets b
-       |    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
-       |cids AS (SELECT da AS doc_id FROM cands UNION SELECT db FROM cands),
-       |sh AS (SELECT doc_id, shingle FROM sh0
-       |  WHERE shingle IN (
-       |    SELECT shingle FROM sh0 GROUP BY shingle HAVING COUNT(*) <= $maxDf)
-       |  AND doc_id IN (SELECT doc_id FROM cids)),
-       |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
+       |${candidatesSql(numPerm, rowsPerBand)},
+       |${candShinglesSql(maxDf)},
        |inter AS (
        |  SELECT a.doc_id AS da, b.doc_id AS db, COUNT(*) AS inter
        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
@@ -1373,44 +1331,16 @@ object Dedup {
        |WHERE CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter) >= $threshold""".stripMargin
   }
 
-  /** [[simhashes]] over the md5-60 family: 60-bit signature (bit j =
-    * sign of the ±1 sum over token hashes' bit j). */
-  def simhashesMd5(docs: DataFrame): DataFrame = {
-    val tok = TextOps.explodedTokens(docs, "t", col("doc_id"))
-    val h = md5Hash60(0, col("t"))
-    val aggs = (0 until 60).map(j =>
-      sum(when(shiftright(h, j).bitwiseAND(1) === 1, 1L).otherwise(-1L)).as(s"b$j"))
-    tok.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-      .select(col("doc_id"),
-        (0 until 60).map(j =>
-          when(col(s"b$j") > 0, lit(1L << j)).otherwise(lit(0L))
-        ).reduce(_ + _).as("simhash"))
-  }
+  /** [[simhashes]] over the md5-60 family ([[simhashesOf]]): 60-bit
+    * signature (bit j = sign of the ±1 sum over token hashes' bit j). */
+  def simhashesMd5(docs: DataFrame): DataFrame =
+    simhashesOf(docs, md5Hash60(0, _), 60)
 
-  /** [[simhashNearDups]] over the md5-60 family: 60-bit signatures,
-    * pigeonhole chunks of 15 bits (maxHamming=3 → 4 chunks). */
-  def simhashNearDupsMd5(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val chunks = maxHamming + 1
-    val bitsPer = 60 / chunks
-    val sh = simhashesMd5(docs)
-    val chunked = sh.select(
-        col("doc_id"), col("simhash"),
-        posexplode(array((0 until chunks).map { c =>
-          shiftright(col("simhash"), c * bitsPer)
-            .bitwiseAND((1L << bitsPer) - 1)
-        }: _*)))
-      .toDF("doc_id", "simhash", "chunk", "val")
-    val a = chunked.select(col("doc_id").as("da"), col("simhash").as("ha"),
-      col("chunk"), col("val"))
-    val b = chunked.select(col("doc_id").as("db"), col("simhash").as("hb"),
-      col("chunk"), col("val"))
-    a.join(b, Seq("chunk", "val"))
-      .filter(col("da") < col("db"))
-      .select(col("da"), col("db"),
-        bit_count(col("ha").bitwiseXOR(col("hb"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
+  /** [[simhashNearDups]] over the md5-60 family ([[hammingPairs]]):
+    * 60-bit signatures, pigeonhole chunks of 15 bits (maxHamming=3 → 4
+    * chunks). */
+  def simhashNearDupsMd5(docs: DataFrame, maxHamming: Int = 3): DataFrame =
+    hammingPairs(simhashesMd5(docs), 60, maxHamming)
 
   def simhashNearDupsMd5Sql(maxHamming: Int = 3): String = {
     val chunks = maxHamming + 1

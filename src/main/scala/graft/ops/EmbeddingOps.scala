@@ -469,7 +469,14 @@ object EmbeddingOps {
        |  SELECT DISTINCT b.vec_id FROM buckets b
        |  JOIN probes p ON b.tbl = p.tbl AND b.bucket = p.bucket
        |  WHERE b.vec_id <> $queryId),
-       |q AS (SELECT embedding AS q_emb,
+       |${rerankSql(queryId, k, dim)}""".stripMargin
+  }
+
+  /** The exact-cosine top-k rerank of a CTE `cand(vec_id)` against
+    * vector `queryId`, closing the LSH and RP auto twins: CTEs `q`,
+    * `scored`, then the ranked SELECT. */
+  private def rerankSql(queryId: Long, k: Int, dim: Int): String =
+    s"""q AS (SELECT embedding AS q_emb,
        |  SQRT(${dotSqlN("embedding", "embedding", dim)}) AS q_norm
        |  FROM embeddings WHERE vec_id = $queryId),
        |scored AS (
@@ -482,7 +489,6 @@ object EmbeddingOps {
        |  SELECT vec_id, cosine,
        |    ROW_NUMBER() OVER (ORDER BY cosine DESC, vec_id ASC) AS rn
        |  FROM scored) s WHERE rn <= $k""".stripMargin
-  }
 
   // -------------------------------------------------------------------
   // Johnson–Lindenstrauss random-projection ANN: project every vector
@@ -581,19 +587,7 @@ object EmbeddingOps {
        |  SELECT pr.vec_id, $distChain AS pd2
        |  FROM pr, qp, np WHERE pr.vec_id <> $queryId
        |  ORDER BY pd2 ASC, pr.vec_id ASC LIMIT ${k * RpOverscan}) c),
-       |q AS (SELECT embedding AS q_emb,
-       |  SQRT(${dotSqlN("embedding", "embedding", dim)}) AS q_norm
-       |  FROM embeddings WHERE vec_id = $queryId),
-       |scored AS (
-       |  SELECT e.vec_id,
-       |    ${dotSqlN("e.embedding", "q.q_emb", dim)}
-       |      / (SQRT(${dotSqlN("e.embedding", "e.embedding", dim)}) * q.q_norm) AS cosine
-       |  FROM embeddings e CROSS JOIN q
-       |  WHERE e.vec_id IN (SELECT vec_id FROM cand))
-       |SELECT vec_id, cosine FROM (
-       |  SELECT vec_id, cosine,
-       |    ROW_NUMBER() OVER (ORDER BY cosine DESC, vec_id ASC) AS rn
-       |  FROM scored) s WHERE rn <= $k""".stripMargin
+       |${rerankSql(queryId, k, dim)}""".stripMargin
   }
 
   // -------------------------------------------------------------------
@@ -980,6 +974,21 @@ object EmbeddingOps {
     * |labels|·dim rows out), k centroid rows broadcast, scoring is a
     * zero-shuffle scan projection + one vec_id-keyed argmin agg. */
   def centroidClassify(embs: DataFrame): DataFrame = {
+    val cents = labelCentroids(embs)
+    embs.crossJoin(broadcast(cents))
+      .select(col("vec_id"), col("label"), col("clabel"),
+        centroidD2.as("d2"))
+      .groupBy("vec_id", "label")
+      .agg(min(struct(col("d2"), col("clabel"))).as("m"))
+      .select(col("vec_id"), col("m.clabel").as("pred_label"),
+        col("m.d2").as("d2"), col("label"),
+        (col("m.clabel") === col("label")).as("correct"))
+  }
+
+  /** (clabel, cvec): each label's mean embedding, its components
+    * summed on the 1e-6 integer grid so the mean is one correctly
+    * rounded division per component. */
+  private def labelCentroids(embs: DataFrame): DataFrame = {
     val Grid = 1.0e6
     val flat = embs.select(col("label").as("clabel"),
         posexplode(col("embedding").cast("array<double>")).as(Seq("pos", "v")))
@@ -990,34 +999,35 @@ object EmbeddingOps {
       .select(col("clabel"), col("pos"),
         (col("s").cast("double") /
           (col("n").cast("double") * Grid)).as("c"))
-    val cents = comp.groupBy("clabel").agg(
+    comp.groupBy("clabel").agg(
       transform(array_sort(collect_list(struct(col("pos"), col("c")))),
         x => x.getField("c")).as("cvec"))
-    embs.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("label"), col("clabel"),
-        (dot(col("embedding"), col("embedding"))
-          - lit(2.0) * dot(col("embedding"), col("cvec"))
-          + dot(col("cvec"), col("cvec"))).as("d2"))
-      .groupBy("vec_id", "label")
-      .agg(min(struct(col("d2"), col("clabel"))).as("m"))
-      .select(col("vec_id"), col("m.clabel").as("pred_label"),
-        col("m.d2").as("d2"), col("label"),
-        (col("m.clabel") === col("label")).as("correct"))
   }
 
+  /** Squared distance of `embedding` to the centroid `cvec`, as
+    * x·x − 2·x·c + c·c over the shared VecDot fold. */
+  private val centroidD2: Column =
+    dot(col("embedding"), col("embedding")) -
+      lit(2.0) * dot(col("embedding"), col("cvec")) +
+      dot(col("cvec"), col("cvec"))
+
+  /** SQL twin of [[labelCentroids]]: CTEs `flat`, `comp`, `cents`. */
+  private val centroidsSql: String =
+    """flat AS (
+      |  SELECT label AS clabel, i AS pos,
+      |    CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 1e6) AS BIGINT) AS g
+      |  FROM embeddings,
+      |    unnest(generate_series(1, len(embedding))) u(i)),
+      |comp AS (
+      |  SELECT clabel, pos,
+      |    CAST(SUM(g) AS DOUBLE) / (CAST(COUNT(*) AS DOUBLE) * 1e6) AS c
+      |  FROM flat GROUP BY clabel, pos),
+      |cents AS (
+      |  SELECT clabel, list(c ORDER BY pos) AS cvec
+      |  FROM comp GROUP BY clabel)""".stripMargin
+
   def centroidClassifySql: String =
-    s"""WITH flat AS (
-       |  SELECT label AS clabel, i AS pos,
-       |    CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 1e6) AS BIGINT) AS g
-       |  FROM embeddings,
-       |    unnest(generate_series(1, len(embedding))) u(i)),
-       |comp AS (
-       |  SELECT clabel, pos,
-       |    CAST(SUM(g) AS DOUBLE) / (CAST(COUNT(*) AS DOUBLE) * 1e6) AS c
-       |  FROM flat GROUP BY clabel, pos),
-       |cents AS (
-       |  SELECT clabel, list(c ORDER BY pos) AS cvec
-       |  FROM comp GROUP BY clabel),
+    s"""WITH $centroidsSql,
        |scored AS (
        |  SELECT e.vec_id, e.label, c.clabel,
        |    ${dotSql("e.embedding", "e.embedding")}
@@ -1211,44 +1221,12 @@ object EmbeddingOps {
       embs: DataFrame, bitsLadder: Seq[Int] = Seq(6, 8, 10), k: Int = 3,
       dim: Int = 64, numTables: Int = 8, seed: Long = 42L,
       anchorMod: Long = 97L): DataFrame = {
-    val e = embs.select(col("vec_id"), col("embedding"),
-      l2Norm(col("embedding")).as("nrm")).cache()
-    val anchors = e.filter(col("vec_id") % anchorMod === 0)
-    val truthScored = e.select(col("vec_id").as("idb"),
-        col("embedding").as("eb"), col("nrm").as("nb"))
-      .crossJoin(broadcast(anchors.select(col("vec_id").as("ida"),
-        col("embedding").as("ea"), col("nrm").as("na"))))
-      .filter(col("ida") =!= col("idb"))
-      .select(col("ida"), col("idb"),
-        (dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cosine"))
-    val truth = org.apache.spark.sql.graft.TopKPerKey(
-        truthScored, Seq("ida"), Seq(("cosine", false), ("idb", true)), k)
-      .select("ida", "idb").localCheckpoint(true)
+    val (e, anchors, truth0) = anchorTruth(embs, k, anchorMod)
+    val truth = truth0.localCheckpoint(true)
     val nA = anchors.count()
     bitsLadder.map { bits =>
-      val buckets = lshBuckets(embs, dim, bits, numTables, seed)
-      val cand = buckets.select(col("vec_id").as("ida"), col("table"),
-          col("bucket"))
-        .filter(col("ida") % anchorMod === 0)
-        .join(buckets.select(col("vec_id").as("idb"), col("table"),
-          col("bucket")), Seq("table", "bucket"))
-        .filter(col("ida") =!= col("idb"))
-        .select("ida", "idb").distinct()
-      val scored = cand
-        .join(e.select(col("vec_id").as("ida"), col("embedding").as("ea"),
-          col("nrm").as("na")), Seq("ida"))
-        .join(e.select(col("vec_id").as("idb"), col("embedding").as("eb"),
-          col("nrm").as("nb")), Seq("idb"))
-        .select(col("ida"), col("idb"),
-          (dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cosine"))
-      val approx = org.apache.spark.sql.graft.TopKPerKey(
-          scored, Seq("ida"), Seq(("cosine", false), ("idb", true)), k)
-        .select("ida", "idb")
-      approx.join(truth, Seq("ida", "idb"), "left_semi")
-        .agg(count(lit(1)).as("n_hit"))
-        .select(lit(bits.toLong).as("num_bits"), lit(nA).as("n_anchors"),
-          col("n_hit"),
-          (col("n_hit").cast("double") / lit((k * nA).toDouble)).as("recall"))
+      recallRow(lshBuckets(embs, dim, bits, numTables, seed), e, truth,
+        bits, nA, k, anchorMod)
     }.reduce(_ unionAll _)
   }
 
@@ -1256,28 +1234,8 @@ object EmbeddingOps {
       bitsLadder: Seq[Int] = Seq(6, 8, 10), k: Int = 3, dim: Int = 64,
       numTables: Int = 8, seed: Long = 42L, anchorMod: Long = 97L): String = {
     val perBits = bitsLadder.map { bits =>
-      val bu = bucketsUnionSql(dim, bits, numTables, seed)
-      s"""buckets$bits AS ($bu),
-         |cand$bits AS (
-         |  SELECT DISTINCT a.vec_id AS ida, b.vec_id AS idb
-         |  FROM buckets$bits a JOIN buckets$bits b
-         |    ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id <> b.vec_id
-         |  WHERE a.vec_id % $anchorMod = 0),
-         |scored$bits AS (
-         |  SELECT p.ida, p.idb,
-         |    ${dotSqlN("ea.embedding", "eb.embedding", dim)}
-         |      / (ea.nrm * eb.nrm) AS cosine
-         |  FROM cand$bits p
-         |  JOIN e ea ON p.ida = ea.vec_id
-         |  JOIN e eb ON p.idb = eb.vec_id),
-         |approx$bits AS (
-         |  SELECT ida, idb FROM (
-         |    SELECT ida, idb, ROW_NUMBER() OVER (PARTITION BY ida
-         |      ORDER BY cosine DESC, idb ASC) AS rn
-         |    FROM scored$bits) s WHERE rn <= $k),
-         |hit$bits AS (
-         |  SELECT COUNT(*) AS n_hit
-         |  FROM approx$bits a JOIN truth t ON a.ida = t.ida AND a.idb = t.idb)""".stripMargin
+      hitSql(bits.toString, bucketsUnionSql(dim, bits, numTables, seed), k,
+        dim, anchorMod)
     }.mkString(",\n")
     val union = bitsLadder.map { bits =>
       s"""SELECT CAST($bits AS BIGINT) AS num_bits, na.n_anchors,
@@ -1285,21 +1243,7 @@ object EmbeddingOps {
          |    / CAST($k * na.n_anchors AS DOUBLE) AS recall
          |FROM hit$bits h CROSS JOIN na""".stripMargin
     }.mkString("\nUNION ALL\n")
-    s"""WITH e AS (SELECT vec_id, embedding,
-       |    SQRT(${dotSqlN("embedding", "embedding", dim)}) AS nrm
-       |  FROM embeddings),
-       |anch AS (SELECT * FROM e WHERE vec_id % $anchorMod = 0),
-       |na AS (SELECT COUNT(*) AS n_anchors FROM anch),
-       |tscored AS (
-       |  SELECT a.vec_id AS ida, b.vec_id AS idb,
-       |    ${dotSqlN("a.embedding", "b.embedding", dim)}
-       |      / (a.nrm * b.nrm) AS cosine
-       |  FROM anch a JOIN e b ON a.vec_id <> b.vec_id),
-       |truth AS (
-       |  SELECT ida, idb FROM (
-       |    SELECT ida, idb, ROW_NUMBER() OVER (PARTITION BY ida
-       |      ORDER BY cosine DESC, idb ASC) AS rn
-       |    FROM tscored) s WHERE rn <= $k),
+    s"""WITH ${anchorTruthSql(k, dim, anchorMod)},
        |$perBits
        |$union""".stripMargin
   }
@@ -1327,12 +1271,25 @@ object EmbeddingOps {
     * anchor sample — the accuracy pin for the registered default
     * ([[knnGraphAuto]] and family): as corpus size moves the derived
     * bits, this row shows what the narrower buckets cost in recall.
-    * Same determinism recipe as [[lshRecallCurve]] (tie-broken top-k
-    * sets, integer hit count, one final IEEE division). */
+    * Truth and row come from [[anchorTruth]] and [[recallRow]], as in
+    * [[lshRecallCurve]] (tie-broken top-k sets, integer hit count, one
+    * final IEEE division). */
   def autoRecall(
       embs: DataFrame, k: Int = 3, dim: Int = 64, numTables: Int = 8,
       seed: Long = 42L, anchorMod: Long = 97L): DataFrame = {
     val bits = autoBits(embs.count())
+    val (e, anchors, truth) = anchorTruth(embs, k, anchorMod)
+    val nA = anchors.count()
+    recallRow(lshBucketsAuto(embs, dim, numTables, seed), e, truth,
+      bits, nA, k, anchorMod)
+  }
+
+  /** The anchor sample's exact top-k: `e` (vec_id, embedding, nrm),
+    * cached; the anchors, vec_id ≡ 0 mod `anchorMod`; and `truth`
+    * (ida, idb), each anchor's k nearest by cosine over the whole
+    * corpus, tie-broken (cosine desc, idb asc). */
+  private def anchorTruth(embs: DataFrame, k: Int, anchorMod: Long)
+      : (DataFrame, DataFrame, DataFrame) = {
     val e = embs.select(col("vec_id"), col("embedding"),
       l2Norm(col("embedding")).as("nrm")).cache()
     val anchors = e.filter(col("vec_id") % anchorMod === 0)
@@ -1341,13 +1298,23 @@ object EmbeddingOps {
       .crossJoin(broadcast(anchors.select(col("vec_id").as("ida"),
         col("embedding").as("ea"), col("nrm").as("na"))))
       .filter(col("ida") =!= col("idb"))
-      .select(col("ida"), col("idb"),
-        (dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cosine"))
+      .select(col("ida"), col("idb"), pairCosine)
     val truth = org.apache.spark.sql.graft.TopKPerKey(
         truthScored, Seq("ida"), Seq(("cosine", false), ("idb", true)), k)
       .select("ida", "idb")
-    val nA = anchors.count()
-    val buckets = lshBucketsAuto(embs, dim, numTables, seed)
+    (e, anchors, truth)
+  }
+
+  private def pairCosine: Column =
+    (dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cosine")
+
+  /** One recall row (num_bits = `bits`, n_anchors, n_hit, recall): the
+    * anchors' top-k among their co-bucketed candidates in `buckets`
+    * (vec_id, table, bucket), scored over [[anchorTruth]]'s `e`,
+    * matched against its `truth`. */
+  private def recallRow(
+      buckets: DataFrame, e: DataFrame, truth: DataFrame, bits: Int,
+      nA: Long, k: Int, anchorMod: Long): DataFrame = {
     val cand = buckets.select(col("vec_id").as("ida"), col("table"),
         col("bucket"))
       .filter(col("ida") % anchorMod === 0)
@@ -1360,8 +1327,7 @@ object EmbeddingOps {
         col("nrm").as("na")), Seq("ida"))
       .join(e.select(col("vec_id").as("idb"), col("embedding").as("eb"),
         col("nrm").as("nb")), Seq("idb"))
-      .select(col("ida"), col("idb"),
-        (dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cosine"))
+      .select(col("ida"), col("idb"), pairCosine)
     val approx = org.apache.spark.sql.graft.TopKPerKey(
         scored, Seq("ida"), Seq(("cosine", false), ("idb", true)), k)
       .select("ida", "idb")
@@ -1372,12 +1338,10 @@ object EmbeddingOps {
         (col("n_hit").cast("double") / lit((k * nA).toDouble)).as("recall"))
   }
 
-  def autoRecallSql(
-      k: Int = 3, dim: Int = 64, numTables: Int = 8, seed: Long = 42L,
-      anchorMod: Long = 97L): String = {
-    val bu = bucketsUnionAutoSql(dim, numTables, seed)
-    s"""WITH ${autoBitsCteSql()},
-       |e AS (SELECT vec_id, embedding,
+  /** SQL twin of [[anchorTruth]]: CTEs `e`, `anch`, `na` (n_anchors),
+    * `tscored` and `truth`. */
+  private def anchorTruthSql(k: Int, dim: Int, anchorMod: Long): String =
+    s"""e AS (SELECT vec_id, embedding,
        |    SQRT(${dotSqlN("embedding", "embedding", dim)}) AS nrm
        |  FROM embeddings),
        |anch AS (SELECT * FROM e WHERE vec_id % $anchorMod = 0),
@@ -1391,28 +1355,42 @@ object EmbeddingOps {
        |  SELECT ida, idb FROM (
        |    SELECT ida, idb, ROW_NUMBER() OVER (PARTITION BY ida
        |      ORDER BY cosine DESC, idb ASC) AS rn
-       |    FROM tscored) s WHERE rn <= $k),
-       |buckets AS ($bu),
-       |cand AS (
+       |    FROM tscored) s WHERE rn <= $k)""".stripMargin
+
+  /** SQL twin of [[recallRow]] up to its hit count, over the bucket
+    * union `bu`: CTEs `buckets`, `cand`, `scored`, `approx` and `hit`
+    * (n_hit), each name suffixed by `sfx`. */
+  private def hitSql(
+      sfx: String, bu: String, k: Int, dim: Int, anchorMod: Long): String =
+    s"""buckets$sfx AS ($bu),
+       |cand$sfx AS (
        |  SELECT DISTINCT a.vec_id AS ida, b.vec_id AS idb
-       |  FROM buckets a JOIN buckets b
+       |  FROM buckets$sfx a JOIN buckets$sfx b
        |    ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id <> b.vec_id
        |  WHERE a.vec_id % $anchorMod = 0),
-       |scored AS (
+       |scored$sfx AS (
        |  SELECT p.ida, p.idb,
        |    ${dotSqlN("ea.embedding", "eb.embedding", dim)}
        |      / (ea.nrm * eb.nrm) AS cosine
-       |  FROM cand p
+       |  FROM cand$sfx p
        |  JOIN e ea ON p.ida = ea.vec_id
        |  JOIN e eb ON p.idb = eb.vec_id),
-       |approx AS (
+       |approx$sfx AS (
        |  SELECT ida, idb FROM (
        |    SELECT ida, idb, ROW_NUMBER() OVER (PARTITION BY ida
        |      ORDER BY cosine DESC, idb ASC) AS rn
-       |    FROM scored) s WHERE rn <= $k),
-       |hit AS (
+       |    FROM scored$sfx) s WHERE rn <= $k),
+       |hit$sfx AS (
        |  SELECT COUNT(*) AS n_hit
-       |  FROM approx a JOIN truth t ON a.ida = t.ida AND a.idb = t.idb)
+       |  FROM approx$sfx a JOIN truth t ON a.ida = t.ida AND a.idb = t.idb)""".stripMargin
+
+  def autoRecallSql(
+      k: Int = 3, dim: Int = 64, numTables: Int = 8, seed: Long = 42L,
+      anchorMod: Long = 97L): String = {
+    val bu = bucketsUnionAutoSql(dim, numTables, seed)
+    s"""WITH ${autoBitsCteSql()},
+       |${anchorTruthSql(k, dim, anchorMod)},
+       |${hitSql("", bu, k, dim, anchorMod)}
        |SELECT CAST(nb.bits AS BIGINT) AS num_bits, na.n_anchors, h.n_hit,
        |  CAST(h.n_hit AS DOUBLE)
        |    / CAST($k * na.n_anchors AS DOUBLE) AS recall
@@ -1544,8 +1522,8 @@ object EmbeddingOps {
 
   /** Diversity-preserving density prune (the SemDeDup/DataComp-style
     * redundancy cut): rank each vector within its label by distance to
-    * the label centroid (grid-exact mean, same recipe as
-    * [[centroidClassify]]) and keep alternating ranks — a deterministic
+    * the label centroid (the grid-exact mean of [[labelCentroids]],
+    * as in [[centroidClassify]]) and keep alternating ranks — a deterministic
     * 2× downsample that preserves the full radial distribution (both
     * the diverse rim and the dense core stay represented, unlike a
     * plain nearest-half cut which deletes the mode). Emits the census
@@ -1557,43 +1535,18 @@ object EmbeddingOps {
     * data-sized shuffle is the per-label rank window (keyed on label —
     * salt or pre-bucket by label at extreme skew). */
   def diversityPrune(embs: DataFrame): DataFrame = {
-    val Grid = 1.0e6
-    val flat = embs.select(col("label").as("clabel"),
-        posexplode(col("embedding").cast("array<double>")).as(Seq("pos", "v")))
-      .select(col("clabel"), col("pos"),
-        round(col("v") * Grid).cast("long").as("g"))
-    val comp = flat.groupBy("clabel", "pos")
-      .agg(sum("g").as("s"), count(lit(1)).as("n"))
-      .select(col("clabel"), col("pos"),
-        (col("s").cast("double") /
-          (col("n").cast("double") * Grid)).as("c"))
-    val cents = comp.groupBy("clabel").agg(
-      transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-        x => x.getField("c")).as("cvec"))
+    val cents = labelCentroids(embs)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("label").orderBy(col("d2").desc, col("vec_id").asc)
     embs.join(broadcast(cents), col("label") === col("clabel"))
       .select(col("vec_id"), col("label"),
-        (dot(col("embedding"), col("embedding"))
-          - lit(2.0) * dot(col("embedding"), col("cvec"))
-          + dot(col("cvec"), col("cvec"))).as("d2"))
+        centroidD2.as("d2"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .withColumn("kept", col("rank") % 2 === 1)
   }
 
   def diversityPruneSql(dim: Int = 64): String =
-    s"""WITH flat AS (
-       |  SELECT label AS clabel, i AS pos,
-       |    CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 1e6) AS BIGINT) AS g
-       |  FROM embeddings,
-       |    unnest(generate_series(1, len(embedding))) u(i)),
-       |comp AS (
-       |  SELECT clabel, pos,
-       |    CAST(SUM(g) AS DOUBLE) / (CAST(COUNT(*) AS DOUBLE) * 1e6) AS c
-       |  FROM flat GROUP BY clabel, pos),
-       |cents AS (
-       |  SELECT clabel, list(c ORDER BY pos) AS cvec
-       |  FROM comp GROUP BY clabel),
+    s"""WITH $centroidsSql,
        |scored AS (
        |  SELECT e.vec_id, e.label,
        |    ${dotSqlN("e.embedding", "e.embedding", dim)}

@@ -353,21 +353,8 @@ object EventOps {
 
   def typeSketchesDetSql(
       domain: Double = 1000.0, bins: Int = 1000): String = {
-    val width = domain / bins
-    def est(q: Double) =
-      s"MIN(CASE WHEN cum >= CEIL($q * n) THEN (bin + 1) * CAST($width AS DOUBLE) END)"
-    val plogSql = graft.functions.PortableMath.plogSql(
-      s"CAST($HllM AS DOUBLE) / zeros")
-    s"""WITH hist AS (
-       |  SELECT event_type,
-       |    LEAST(GREATEST(CAST(FLOOR(value / $width) AS BIGINT), 0), ${bins - 1}) AS bin,
-       |    COUNT(*) AS c
-       |  FROM events GROUP BY 1, 2),
-       |cum AS (
-       |  SELECT event_type, bin, c,
-       |    CAST(SUM(c) OVER (PARTITION BY event_type ORDER BY bin) AS BIGINT) AS cum,
-       |    CAST(SUM(c) OVER (PARTITION BY event_type) AS BIGINT) AS n
-       |  FROM hist),
+    val est = binEstSql(domain / bins)
+    s"""WITH ${histSql(domain, bins)},
        |qb AS (
        |  SELECT event_type,
        |    ${est(0.5)} AS p50_est,
@@ -379,33 +366,12 @@ object EventOps {
        |    CAST(('0x' || substr(md5('0|' || CAST(user_id AS VARCHAR)), 1, 15))
        |      AS BIGINT) AS h
        |  FROM events),
-       |rr AS (
-       |  SELECT event_type, h & ${HllM - 1} AS bucket,
-       |    CASE WHEN (h >> $HllBits) = 0 THEN 53
-       |         ELSE 53 - length(bin(h >> $HllBits)) END AS rho
-       |  FROM hh),
-       |regs AS (
-       |  SELECT event_type, bucket, MAX(rho) AS reg
-       |  FROM rr GROUP BY 1, 2),
-       |pt AS (
-       |  SELECT event_type,
-       |    SUM(CAST(1 AS BIGINT) << CAST(53 - reg AS INT)) AS s_int,
-       |    COUNT(*) AS nonzero
-       |  FROM regs GROUP BY 1),
-       |hest AS (
-       |  SELECT event_type,
-       |    CAST($HllM AS DOUBLE) - CAST(nonzero AS DOUBLE) AS zeros,
-       |    CAST($HllAlphaM2 AS DOUBLE) * CAST(9007199254740992 AS DOUBLE)
-       |      / CAST((CAST($HllM AS BIGINT) - nonzero)
-       |             * CAST(9007199254740992 AS BIGINT) + s_int AS DOUBLE)
-       |      AS raw
-       |  FROM pt),
+       |${registersSql("hh")},
+       |${estimateSql("event_type", "regs")},
        |hll AS (
        |  SELECT event_type,
-       |    CASE WHEN raw <= CAST(${2.5 * HllM} AS DOUBLE) AND zeros > 0
-       |         THEN CAST($HllM AS DOUBLE) * ($plogSql)
-       |         ELSE raw END AS est_users
-       |  FROM hest)
+       |    ${estUsersSql("    ")}
+       |  FROM est)
        |SELECT q.event_type, q.p50_est, q.p95_est, h.est_users, q.n
        |FROM qb q JOIN hll h USING (event_type)""".stripMargin
   }
@@ -435,29 +401,37 @@ object EventOps {
     * exact count alongside (same shuffle key, so the comparison is
     * free). */
   def hllUsers(events: DataFrame): DataFrame = {
-    import graft.functions.PortableMath.plog
+    val exact = events.groupBy("event_type")
+      .agg(countDistinct(col("user_id")).as("exact_users"))
+    registerSums(registers(events, col("event_type")), "event_type")
+      .select(col("event_type"), hllEstimate.as("est_users"))
+      .join(exact, Seq("event_type"))
+  }
+
+  /** (key, bucket, reg) HLL registers of `user_id` per `key`: the
+    * md5-60 hash's low [[HllBits]] bits pick the bucket, its 52-bit
+    * suffix gives rho. */
+  private def registers(events: DataFrame, key: Column): DataFrame = {
     val h = Dedup.md5Hash60(0, col("user_id").cast("string"))
     val w = shiftright(h, HllBits)      // 52-bit suffix
     val rho = when(w === 0L, lit(53L))
       .otherwise(lit(53L) - length(bin(w)))
-    val regs = events
-      .select(col("event_type"),
-        h.bitwiseAND(lit((HllM - 1).toLong)).as("bucket"), rho.as("rho"))
-      .groupBy("event_type", "bucket").agg(max("rho").as("reg"))
-    // Σ 2^-reg on the exact 2^53 integer grid: reg ≤ 53 so each term
-    // 2^(53-reg) is an exact long; EMPTY registers have M_j = 0 and
-    // contribute 2^0 = 1 each (zeros·2^53 on the grid). The total fits
-    // in 2^62 and int64→double is correctly rounded in both engines.
-    val perType = regs.groupBy("event_type").agg(
+    val keyed = events.select(key,
+      h.bitwiseAND(lit((HllM - 1).toLong)).as("bucket"), rho.as("rho"))
+    keyed.groupBy(keyed.columns.head, "bucket").agg(max("rho").as("reg"))
+  }
+
+  /** (s_int, nonzero) of `regs` (key, bucket, reg) per `key`, the input
+    * of [[hllEstimate]]: Σ 2^-reg on the exact 2^53 integer grid (reg ≤
+    * 53 so each term 2^(53-reg) is an exact long; EMPTY registers have
+    * M_j = 0 and contribute 2^0 = 1 each, zeros·2^53 on the grid; the
+    * total fits in 2^62 and int64→double is correctly rounded in both
+    * engines) and the count of nonzero registers. */
+  private def registerSums(regs: DataFrame, key: String): DataFrame =
+    regs.groupBy(key).agg(
       sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(53 - reg AS INT))"))
         .as("s_int"),
       count(lit(1)).as("nonzero"))
-    val exact = events.groupBy("event_type")
-      .agg(countDistinct(col("user_id")).as("exact_users"))
-    perType
-      .select(col("event_type"), hllEstimate.as("est_users"))
-      .join(exact, Seq("event_type"))
-  }
 
   /** The HLL estimate over already-aggregated (s_int, nonzero) columns
     * — alpha bias correction + small-range linear counting; shared by
@@ -475,44 +449,60 @@ object EventOps {
       m * plog(m / zeros)).otherwise(raw)
   }
 
-  def hllUsersSql: String = {
-    val plogSql = graft.functions.PortableMath.plogSql(
-      s"CAST($HllM AS DOUBLE) / zeros")
-    s"""WITH h AS (
-       |  SELECT event_type, user_id,
-       |    CAST(('0x' || substr(md5('0|' || CAST(user_id AS VARCHAR)), 1, 15))
-       |      AS BIGINT) AS h
-       |  FROM events),
-       |rr AS (
+  /** SQL twin of [[registers]] keyed by event_type over a CTE
+    * `from(event_type, h)`: CTEs `rr` (bucket, rho) and `regs`. */
+  private def registersSql(from: String): String =
+    s"""rr AS (
        |  SELECT event_type, h & ${HllM - 1} AS bucket,
        |    CASE WHEN (h >> $HllBits) = 0 THEN 53
        |         ELSE 53 - length(bin(h >> $HllBits)) END AS rho
-       |  FROM h),
+       |  FROM $from),
        |regs AS (
        |  SELECT event_type, bucket, MAX(rho) AS reg
-       |  FROM rr GROUP BY 1, 2),
-       |pt AS (
-       |  SELECT event_type,
+       |  FROM rr GROUP BY 1, 2)""".stripMargin
+
+  /** SQL twin of [[registerSums]] over `regs` and of [[hllEstimate]]'s
+    * inputs: CTEs `pt` (key, s_int, nonzero) and `est` (key, zeros,
+    * raw), which [[estUsersSql]] reads. */
+  private def estimateSql(key: String, regs: String): String =
+    s"""pt AS (
+       |  SELECT $key,
        |    SUM(CAST(1 AS BIGINT) << CAST(53 - reg AS INT)) AS s_int,
        |    COUNT(*) AS nonzero
-       |  FROM regs GROUP BY 1),
+       |  FROM $regs GROUP BY 1),
        |est AS (
-       |  SELECT event_type,
+       |  SELECT $key,
        |    CAST($HllM AS DOUBLE) - CAST(nonzero AS DOUBLE) AS zeros,
        |    CAST($HllAlphaM2 AS DOUBLE) * CAST(9007199254740992 AS DOUBLE)
        |      / CAST((CAST($HllM AS BIGINT) - nonzero)
        |             * CAST(9007199254740992 AS BIGINT) + s_int AS DOUBLE)
        |      AS raw
-       |  FROM pt)
+       |  FROM pt)""".stripMargin
+
+  /** SQL twin of [[hllEstimate]], as `est_users`; its continuation
+    * lines are indented by `pad`. */
+  private def estUsersSql(pad: String): String = {
+    val plogSql = graft.functions.PortableMath.plogSql(
+      s"CAST($HllM AS DOUBLE) / zeros")
+    s"""CASE WHEN raw <= CAST(${2.5 * HllM} AS DOUBLE) AND zeros > 0
+       |$pad     THEN CAST($HllM AS DOUBLE) * ($plogSql)
+       |$pad     ELSE raw END AS est_users""".stripMargin
+  }
+
+  def hllUsersSql: String =
+    s"""WITH h AS (
+       |  SELECT event_type, user_id,
+       |    CAST(('0x' || substr(md5('0|' || CAST(user_id AS VARCHAR)), 1, 15))
+       |      AS BIGINT) AS h
+       |  FROM events),
+       |${registersSql("h")},
+       |${estimateSql("event_type", "regs")}
        |SELECT e.event_type,
-       |  CASE WHEN raw <= CAST(${2.5 * HllM} AS DOUBLE) AND zeros > 0
-       |       THEN CAST($HllM AS DOUBLE) * ($plogSql)
-       |       ELSE raw END AS est_users,
+       |  ${estUsersSql("  ")},
        |  x.exact_users
        |FROM est e JOIN (
        |  SELECT event_type, COUNT(DISTINCT user_id) AS exact_users
        |  FROM events GROUP BY 1) x USING (event_type)""".stripMargin
-  }
 
   /** Rolling-window HLL merge: per-DAY register relations merged into a
     * trailing `windowDays` estimate per day — the MERGEABILITY demo
@@ -525,14 +515,7 @@ object EventOps {
     * The window join is an EQUI join via a generated offset relation
     * (day, day−k), never a theta/BNLJ range probe. */
   def hllUsersRolling(events: DataFrame, windowDays: Int = 3): DataFrame = {
-    val h = Dedup.md5Hash60(0, col("user_id").cast("string"))
-    val w = shiftright(h, HllBits)
-    val rho = when(w === 0L, lit(53L))
-      .otherwise(lit(53L) - length(bin(w)))
-    val regs = events
-      .select(to_date(col("ts")).as("rday"),
-        h.bitwiseAND(lit((HllM - 1).toLong)).as("bucket"), rho.as("rho"))
-      .groupBy("rday", "bucket").agg(max("rho").as("reg"))
+    val regs = registers(events, to_date(col("ts")).as("rday"))
     val days = regs.select(col("rday").as("day")).distinct()
     val offsets = days.sparkSession.range(windowDays)
       .select(col("id").cast("int").as("k"))
@@ -540,21 +523,15 @@ object EventOps {
       .select(col("day"), date_sub(col("day"), col("k")).as("src_day"))
     val merged = dayOff.join(regs, col("src_day") === col("rday"))
       .groupBy("day", "bucket").agg(max("reg").as("reg"))
-    val perDay = merged.groupBy("day").agg(
-      sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(53 - reg AS INT))"))
-        .as("s_int"),
-      count(lit(1)).as("nonzero"))
     val exact = dayOff
       .join(events.select(to_date(col("ts")).as("eday"), col("user_id")),
         col("eday") === col("src_day"))
       .groupBy("day").agg(countDistinct(col("user_id")).as("exact_users"))
-    perDay.select(col("day"), hllEstimate.as("est_users"))
+    registerSums(merged, "day").select(col("day"), hllEstimate.as("est_users"))
       .join(exact, Seq("day"))
   }
 
-  def hllUsersRollingSql(windowDays: Int = 3): String = {
-    val plogSql = graft.functions.PortableMath.plogSql(
-      s"CAST($HllM AS DOUBLE) / zeros")
+  def hllUsersRollingSql(windowDays: Int = 3): String =
     s"""WITH h AS (
        |  SELECT CAST(ts AS DATE) AS rday,
        |    CAST(('0x' || substr(md5('0|' || CAST(user_id AS VARCHAR)), 1, 15))
@@ -574,30 +551,15 @@ object EventOps {
        |  SELECT o.day, r.bucket, MAX(r.reg) AS reg
        |  FROM dayoff o JOIN regs r ON r.rday = o.src_day
        |  GROUP BY 1, 2),
-       |pt AS (
-       |  SELECT day,
-       |    SUM(CAST(1 AS BIGINT) << CAST(53 - reg AS INT)) AS s_int,
-       |    COUNT(*) AS nonzero
-       |  FROM wnd GROUP BY 1),
-       |est AS (
-       |  SELECT day,
-       |    CAST($HllM AS DOUBLE) - CAST(nonzero AS DOUBLE) AS zeros,
-       |    CAST($HllAlphaM2 AS DOUBLE) * CAST(9007199254740992 AS DOUBLE)
-       |      / CAST((CAST($HllM AS BIGINT) - nonzero)
-       |             * CAST(9007199254740992 AS BIGINT) + s_int AS DOUBLE)
-       |      AS raw
-       |  FROM pt),
+       |${estimateSql("day", "wnd")},
        |exact AS (
        |  SELECT o.day, COUNT(DISTINCT e.user_id) AS exact_users
        |  FROM dayoff o JOIN events e ON CAST(e.ts AS DATE) = o.src_day
        |  GROUP BY 1)
        |SELECT e.day,
-       |  CASE WHEN raw <= CAST(${2.5 * HllM} AS DOUBLE) AND zeros > 0
-       |       THEN CAST($HllM AS DOUBLE) * ($plogSql)
-       |       ELSE raw END AS est_users,
+       |  ${estUsersSql("  ")},
        |  x.exact_users
        |FROM est e JOIN exact x USING (day)""".stripMargin
-  }
 
   /** KMV (k-minimum-values) distinct-user sketch per event_type — the
     * order-statistics member of the sketch family (Bar-Yossef et al.
@@ -828,10 +790,20 @@ object EventOps {
   }
 
   def binnedQuantilesSql(domain: Double = 1000.0, bins: Int = 1000): String = {
+    val est = binEstSql(domain / bins)
+    s"""WITH ${histSql(domain, bins)}
+       |SELECT event_type,
+       |  ${est(0.5)} AS p50_est,
+       |  ${est(0.95)} AS p95_est,
+       |  MAX(n) AS n
+       |FROM cum GROUP BY event_type""".stripMargin
+  }
+
+  /** SQL twin of [[binnedQuantiles]]' histogram: CTEs `hist(event_type,
+    * bin, c)` and `cum` (adds the running `cum` and the type total `n`). */
+  private def histSql(domain: Double, bins: Int): String = {
     val width = domain / bins
-    def est(q: Double) =
-      s"MIN(CASE WHEN cum >= CEIL($q * n) THEN (bin + 1) * CAST($width AS DOUBLE) END)"
-    s"""WITH hist AS (
+    s"""hist AS (
        |  SELECT event_type,
        |    LEAST(GREATEST(CAST(FLOOR(value / $width) AS BIGINT), 0), ${bins - 1}) AS bin,
        |    COUNT(*) AS c
@@ -840,13 +812,12 @@ object EventOps {
        |  SELECT event_type, bin, c,
        |    CAST(SUM(c) OVER (PARTITION BY event_type ORDER BY bin) AS BIGINT) AS cum,
        |    CAST(SUM(c) OVER (PARTITION BY event_type) AS BIGINT) AS n
-       |  FROM hist)
-       |SELECT event_type,
-       |  ${est(0.5)} AS p50_est,
-       |  ${est(0.95)} AS p95_est,
-       |  MAX(n) AS n
-       |FROM cum GROUP BY event_type""".stripMargin
+       |  FROM hist)""".stripMargin
   }
+
+  /** The quantile-q estimate over [[histSql]]'s `cum`, bins `width` wide. */
+  private def binEstSql(width: Double): Double => String = q =>
+    s"MIN(CASE WHEN cum >= CEIL($q * n) THEN (bin + 1) * CAST($width AS DOUBLE) END)"
 
   /** Sessionization (gaps-and-islands): a new session starts when the
     * gap to the user's previous event exceeds `gapMinutes`. Returns
@@ -1296,36 +1267,18 @@ object EventOps {
     * n ~ 10^7 per group; beyond that, center x on a per-group epoch
     * offset first (same algebra, smaller grid). */
   def typeTrend(events: DataFrame): DataFrame = {
-    val Dec = org.apache.spark.sql.types.DecimalType(38, 0)
+    import LeastSquares.dbl
     val x = expr("unix_micros(ts) div 1000000")
     val y = round(col("value") * 100).cast("long")
-    val stats = events
-      .select(col("event_type"), x.as("x"), y.as("y"))
-      .groupBy("event_type")
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("x").cast(Dec)).as("sx"),
-        sum(col("y").cast(Dec)).as("sy"),
-        sum((col("x") * col("y")).cast(Dec)).as("sxy"),
-        sum((col("x") * col("x")).cast(Dec)).as("sxx"),
-        sum((col("y") * col("y")).cast(Dec)).as("syy"))
-    def dbl(c: Column): Column = c.cast("string").cast("double")
-    val nd = col("n").cast(Dec)
-    val num = nd * col("sxy") - col("sx") * col("sy")
-    val den = nd * col("sxx") - col("sx") * col("sx")
-    val deny = nd * col("syy") - col("sy") * col("sy")
-    // degenerate groups (all x equal / all y equal) → NULL, not a
-    // divide-by-zero: ANSI Spark throws where DuckDB would emit ±inf
-    val slope = when(den === lit(0).cast(Dec), lit(null).cast("double"))
-      .otherwise(dbl(num) / dbl(den) / lit(100.0))
+    val stats = LeastSquares.sums(
+      events.select(col("event_type"), x.as("x"), y.as("y")), "event_type")
+    val slope = LeastSquares.slope(_ / lit(100.0))
     stats.select(
       col("event_type"), col("n"),
       slope.as("slope"),
       ((dbl(col("sy")) / lit(100.0) - slope * dbl(col("sx")))
         / col("n").cast("double")).as("intercept"),
-      when(den === lit(0).cast(Dec) || deny === lit(0).cast(Dec),
-        lit(null).cast("double"))
-        .otherwise(dbl(num) * dbl(num) / (dbl(den) * dbl(deny))).as("r2"))
+      LeastSquares.r2.as("r2"))
   }
 
   val typeTrendSql: String =

@@ -1489,11 +1489,19 @@ object TextOps {
   // |vocab|²-bounded (in practice Zipf-collapsed) partial counts.
   // -------------------------------------------------------------------
   def skipgramPairs(
-      docs: DataFrame, window: Int = 2, topN: Int = 100): DataFrame = {
+      docs: DataFrame, window: Int = 2, topN: Int = 100): DataFrame =
+    pairCounts(docs, window)
+      .orderBy(col("cnt").desc, col("center").asc, col("context").asc)
+      .limit(topN)
+
+  /** Every doc's token pairs (a, b) with b 1 to `window` tokens after
+    * a: one exploded relation per offset d, the token array zipped
+    * against its d-shifted copy (slice + zip + explode — codegen array
+    * ops, no position self-join). */
+  private def windowPairs(docs: DataFrame, window: Int): DataFrame = {
     val tk = tokens(col("text"))
     val docsTk = docs.select(tk.as("tk")).filter(size(col("tk")) >= 2)
-    // one exploded relation per offset d in [1, window]: (t_i, t_{i+d})
-    val byOffset = (1 to window).map { d =>
+    (1 to window).map { d =>
       docsTk
         .filter(size(col("tk")) > d)
         .select(explode(arrays_zip(
@@ -1501,33 +1509,77 @@ object TextOps {
           slice(col("tk"), lit(1 + d), size(col("tk")) - d).as("b"))).as("pr"))
         .select(col("pr.a").as("a"), col("pr.b").as("b"))
     }.reduce(_ unionAll _)
-    // symmetric emission: (center, context) both directions
-    byOffset
+  }
+
+  /** [[windowPairs]] emitted both ways as (center, context), counted. */
+  private def pairCounts(docs: DataFrame, window: Int): DataFrame =
+    windowPairs(docs, window)
       .select(explode(array(
         struct(col("a").as("center"), col("b").as("context")),
         struct(col("b").as("center"), col("a").as("context")))).as("p"))
       .select(col("p.center").as("center"), col("p.context").as("context"))
       .groupBy("center", "context").agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc, col("center").asc, col("context").asc)
-      .limit(topN)
+
+  /** [[pairCounts]] of at least `minCount`, with both tokens' marginals
+    * (`ca`, `cb`: vocabulary-sized broadcasts) and the 1-row pair
+    * `total` — the cells the PMI and LLR scores read. */
+  private def pairMarginals(
+      docs: DataFrame, window: Int, minCount: Int): DataFrame = {
+    val pairs = pairCounts(docs, window)
+    val marg = pairs.groupBy("center").agg(sum("cnt").as("m"))
+    val total = pairs.agg(sum("cnt").as("total"))
+    pairs
+      .filter(col("cnt") >= minCount)
+      .join(broadcast(marg.select(col("center"), col("m").as("ca"))), "center")
+      .join(broadcast(marg.select(col("center").as("context"), col("m").as("cb"))),
+        "context")
+      .crossJoin(broadcast(total))
   }
 
-  def skipgramPairsSql(window: Int = 2, topN: Int = 100): String = {
+  /** SQL twin of [[windowPairs]]: CTEs `toks` and `off(a, b)`. */
+  private def windowPairsSql(window: Int): String = {
     val offsets = (1 to window).map { d =>
       s"""SELECT unnest(tk[1:len(tk)-$d]) AS a,
          |       unnest(tk[${1 + d}:len(tk)]) AS b
          |  FROM toks WHERE len(tk) > $d""".stripMargin
     }.mkString("\n  UNION ALL ")
-    s"""WITH toks AS (SELECT $tokensSql AS tk FROM documents),
+    s"""toks AS (SELECT $tokensSql AS tk FROM documents),
        |off AS (
-       |  $offsets),
+       |  $offsets)""".stripMargin
+  }
+
+  /** SQL twin of [[pairCounts]]'s stream: [[windowPairsSql]] plus CTE
+    * `sym(center, context)`. */
+  private def symPairsSql(window: Int): String =
+    s"""${windowPairsSql(window)},
        |sym AS (
        |  SELECT a AS center, b AS context FROM off
-       |  UNION ALL SELECT b, a FROM off)
+       |  UNION ALL SELECT b, a FROM off)""".stripMargin
+
+  /** SQL twin of [[pairMarginals]]: the WITH clause (through CTEs
+    * `pairs`, `marg`, `tot`) and, from [[pairMarginalsFromSql]], the
+    * joins; the caller writes the score between them. */
+  private def pairMarginalsSql(window: Int): String =
+    s"""WITH ${symPairsSql(window)},
+       |pairs AS MATERIALIZED (
+       |  SELECT center, context, COUNT(*) AS cnt
+       |  FROM sym GROUP BY 1, 2),
+       |marg AS MATERIALIZED (
+       |  SELECT center, SUM(cnt) AS m FROM pairs GROUP BY center),
+       |tot AS (SELECT SUM(cnt) AS total FROM pairs)""".stripMargin
+
+  private def pairMarginalsFromSql(minCount: Int): String =
+    s"""FROM pairs p
+       |JOIN marg ca ON p.center = ca.center
+       |JOIN marg cb ON p.context = cb.center
+       |CROSS JOIN tot t
+       |WHERE p.cnt >= $minCount""".stripMargin
+
+  def skipgramPairsSql(window: Int = 2, topN: Int = 100): String =
+    s"""WITH ${symPairsSql(window)}
        |SELECT center, context, COUNT(*) AS cnt
        |FROM sym GROUP BY 1, 2
        |ORDER BY cnt DESC, center ASC, context ASC LIMIT $topN""".stripMargin
-  }
 
   // -------------------------------------------------------------------
   // Token burstiness (Church & Gale, "Poisson Mixtures", 1995): the
@@ -1590,13 +1642,12 @@ object TextOps {
   // map-side-combinable aggs — then one cumulative window over the
   // ≤ 256-row bucket relation (bounded at ANY corpus size; the
   // checkpoint width derives from max(doc_id), so the relation never
-  // grows with the data) and the same 1e-6-grid OLS as zipfSlope on
-  // (ln N, ln V). Output: (n, beta, r2).
+  // grows with the data) and the 1e-6-grid exact fit of
+  // [[LeastSquares]] on (ln N, ln V). Output: (n, beta, r2).
   // -------------------------------------------------------------------
   def heapsFit(docs: DataFrame, checkpoints: Int = 256): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.functions.PortableMath.plog
-    val Dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val stepDf = docs.agg(
       (expr(s"max(doc_id) div $checkpoints") + 1).as("step"))
     val lens = docs
@@ -1620,25 +1671,7 @@ object TextOps {
     val xy = curve.select(
       round(plog(col("nn").cast("double")) * 1e6).cast("long").as("x"),
       round(plog(col("vv").cast("double")) * 1e6).cast("long").as("y"))
-    val stats = xy.agg(
-      count(lit(1)).as("n"),
-      sum(col("x").cast(Dec)).as("sx"),
-      sum(col("y").cast(Dec)).as("sy"),
-      sum((col("x") * col("y")).cast(Dec)).as("sxy"),
-      sum((col("x") * col("x")).cast(Dec)).as("sxx"),
-      sum((col("y") * col("y")).cast(Dec)).as("syy"))
-    def dbl(c: Column): Column = c.cast("string").cast("double")
-    val nd = col("n").cast(Dec)
-    val num = nd * col("sxy") - col("sx") * col("sy")
-    val den = nd * col("sxx") - col("sx") * col("sx")
-    val deny = nd * col("syy") - col("sy") * col("sy")
-    stats.select(
-      col("n"),
-      when(den === 0, lit(null).cast("double"))
-        .otherwise(dbl(num) / dbl(den)).as("beta"),
-      // a constant-V curve (deny = 0) has no explainable variance
-      when(den === 0 || deny === 0, lit(null).cast("double"))
-        .otherwise(dbl(num) * dbl(num) / (dbl(den) * dbl(deny))).as("r2"))
+    LeastSquares.fit(xy, "beta")
   }
 
   def heapsFitSql(checkpoints: Int = 256): String = {
@@ -1672,32 +1705,14 @@ object TextOps {
        |         CAST(ROUND((${plogSql("CAST(vv AS DOUBLE)")}) * 1e6)
        |           AS BIGINT) AS y
        |  FROM cum WHERE nn >= 1 AND vv >= 1),
-       |st AS (
-       |  SELECT COUNT(*) AS n,
-       |    SUM(CAST(x AS HUGEINT)) AS sx, SUM(CAST(y AS HUGEINT)) AS sy,
-       |    SUM(CAST(x * y AS HUGEINT)) AS sxy,
-       |    SUM(CAST(x * x AS HUGEINT)) AS sxx,
-       |    SUM(CAST(y * y AS HUGEINT)) AS syy
-       |  FROM xy)
-       |SELECT n,
-       |  CASE WHEN n * sxx - sx * sx = 0 THEN NULL
-       |    ELSE CAST(CAST(n * sxy - sx * sy AS VARCHAR) AS DOUBLE)
-       |      / CAST(CAST(n * sxx - sx * sx AS VARCHAR) AS DOUBLE)
-       |  END AS beta,
-       |  CASE WHEN n * sxx - sx * sx = 0 OR n * syy - sy * sy = 0 THEN NULL
-       |    ELSE CAST(CAST(n * sxy - sx * sy AS VARCHAR) AS DOUBLE)
-       |      * CAST(CAST(n * sxy - sx * sy AS VARCHAR) AS DOUBLE)
-       |      / (CAST(CAST(n * sxx - sx * sx AS VARCHAR) AS DOUBLE)
-       |         * CAST(CAST(n * syy - sy * sy AS VARCHAR) AS DOUBLE))
-       |  END AS r2
-       |FROM st""".stripMargin
+       |${LeastSquares.fitSql("beta")}""".stripMargin
   }
 
   // -------------------------------------------------------------------
   // TextRank keyword extraction (Mihalcea & Tarau, EMNLP 2004):
   // PageRank over the undirected token co-occurrence graph (edge ⇔
   // the two tokens appear within ±window of each other). Composes the
-  // skipgram pair stream with [[GraphOps.pageRank]] — the SAME
+  // pair stream of [[windowPairs]] with [[GraphOps.pageRank]] — the SAME
   // superstep operator the entity-graph queries run, here on VARCHAR
   // nodes — so the iterative machinery is verified once and reused.
   // No stopword filter: rank concentration on function words is
@@ -1710,16 +1725,7 @@ object TextOps {
   def textRank(
       docs: DataFrame, window: Int = 2, iters: Int = 3,
       damping: Double = 0.85, topN: Int = 50): DataFrame = {
-    val tk = tokens(col("text"))
-    val docsTk = docs.select(tk.as("tk")).filter(size(col("tk")) >= 2)
-    val byOffset = (1 to window).map { d =>
-      docsTk
-        .filter(size(col("tk")) > d)
-        .select(explode(arrays_zip(
-          slice(col("tk"), lit(1), size(col("tk")) - d).as("a"),
-          slice(col("tk"), lit(1 + d), size(col("tk")) - d).as("b"))).as("pr"))
-        .select(col("pr.a").as("a"), col("pr.b").as("b"))
-    }.reduce(_ unionAll _)
+    val byOffset = windowPairs(docs, window)
     val edges = byOffset.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(byOffset.select(col("b").as("src"), col("a").as("dst")))
     GraphOps.pageRank(edges, iters, damping)
@@ -1730,16 +1736,9 @@ object TextOps {
 
   def textRankSql(
       window: Int = 2, iters: Int = 3, damping: Double = 0.85,
-      topN: Int = 50): String = {
-    val offsets = (1 to window).map { d =>
-      s"""SELECT unnest(tk[1:len(tk)-$d]) AS a,
-         |       unnest(tk[${1 + d}:len(tk)]) AS b
-         |  FROM toks WHERE len(tk) > $d""".stripMargin
-    }.mkString("\n  UNION ALL ")
+      topN: Int = 50): String =
     GraphOps.pageRankSql(
-      s"""toks AS (SELECT $tokensSql AS tk FROM documents),
-         |off AS (
-         |  $offsets),
+      s"""${windowPairsSql(window)},
          |base_e AS (
          |  SELECT a AS src, b AS dst FROM off
          |  UNION ALL SELECT b, a FROM off),
@@ -1747,7 +1746,6 @@ object TextOps {
       iters, damping,
       out = r => s"""SELECT node AS token, rank FROM $r
                     |ORDER BY rank DESC, node ASC LIMIT $topN""".stripMargin)
-  }
 
   /** Pointwise mutual information over the ±window skipgram pair
     * stream — the word-association score classic embedding pipelines
@@ -1766,30 +1764,7 @@ object TextOps {
   def pmiTopK(docs: DataFrame, window: Int = 2, minCount: Int = 5,
       topN: Int = 100): DataFrame = {
     import graft.functions.PortableMath.plog
-    val tk = tokens(col("text"))
-    val docsTk = docs.select(tk.as("tk")).filter(size(col("tk")) >= 2)
-    val byOffset = (1 to window).map { d =>
-      docsTk
-        .filter(size(col("tk")) > d)
-        .select(explode(arrays_zip(
-          slice(col("tk"), lit(1), size(col("tk")) - d).as("a"),
-          slice(col("tk"), lit(1 + d), size(col("tk")) - d).as("b"))).as("pr"))
-        .select(col("pr.a").as("a"), col("pr.b").as("b"))
-    }.reduce(_ unionAll _)
-    val pairs = byOffset
-      .select(explode(array(
-        struct(col("a").as("center"), col("b").as("context")),
-        struct(col("b").as("center"), col("a").as("context")))).as("p"))
-      .select(col("p.center").as("center"), col("p.context").as("context"))
-      .groupBy("center", "context").agg(count(lit(1)).as("cnt"))
-    val marg = pairs.groupBy("center").agg(sum("cnt").as("m"))
-    val total = pairs.agg(sum("cnt").as("total"))
-    pairs
-      .filter(col("cnt") >= minCount)
-      .join(broadcast(marg.select(col("center"), col("m").as("ca"))), "center")
-      .join(broadcast(marg.select(col("center").as("context"), col("m").as("cb"))),
-        "context")
-      .crossJoin(broadcast(total))
+    pairMarginals(docs, window, minCount)
       .select(col("center"), col("context"), col("cnt"),
         (plog((col("cnt") * col("total")).cast("double")) -
           plog((col("ca") * col("cb")).cast("double"))).as("pmi"))
@@ -1799,31 +1774,11 @@ object TextOps {
 
   def pmiTopKSql(window: Int = 2, minCount: Int = 5, topN: Int = 100): String = {
     import graft.functions.PortableMath.plogSql
-    val offsets = (1 to window).map { d =>
-      s"""SELECT unnest(tk[1:len(tk)-$d]) AS a,
-         |       unnest(tk[${1 + d}:len(tk)]) AS b
-         |  FROM toks WHERE len(tk) > $d""".stripMargin
-    }.mkString("\n  UNION ALL ")
-    s"""WITH toks AS (SELECT $tokensSql AS tk FROM documents),
-       |off AS (
-       |  $offsets),
-       |sym AS (
-       |  SELECT a AS center, b AS context FROM off
-       |  UNION ALL SELECT b, a FROM off),
-       |pairs AS MATERIALIZED (
-       |  SELECT center, context, COUNT(*) AS cnt
-       |  FROM sym GROUP BY 1, 2),
-       |marg AS MATERIALIZED (
-       |  SELECT center, SUM(cnt) AS m FROM pairs GROUP BY center),
-       |tot AS (SELECT SUM(cnt) AS total FROM pairs)
+    s"""${pairMarginalsSql(window)}
        |SELECT p.center, p.context, p.cnt,
        |  ${plogSql("CAST(p.cnt * t.total AS DOUBLE)")} -
        |  ${plogSql("CAST(ca.m * cb.m AS DOUBLE)")} AS pmi
-       |FROM pairs p
-       |JOIN marg ca ON p.center = ca.center
-       |JOIN marg cb ON p.context = cb.center
-       |CROSS JOIN tot t
-       |WHERE p.cnt >= $minCount
+       |${pairMarginalsFromSql(minCount)}
        |ORDER BY pmi DESC, p.center ASC, p.context ASC LIMIT $topN""".stripMargin
   }
 
@@ -1836,31 +1791,13 @@ object TextOps {
   // cells contribute 0. Every logarithm is taken of a SINGLE integer
   // (plog k + plog N − plog row − plog col — the same value tree in
   // both engines, and no k·N product to overflow 2^53 at corpus
-  // scale), so scores are bit-stable. Same pair/marginal machinery as
-  // [[pmiTopK]]: one pair shuffle, vocab-sized broadcast marginals,
-  // TakeOrdered selection.
+  // scale), so scores are bit-stable. Pairs and marginals come from
+  // [[pairMarginals]], as for [[pmiTopK]]: one pair shuffle,
+  // vocab-sized broadcast marginals, TakeOrdered selection.
   // -------------------------------------------------------------------
   def llrTopK(docs: DataFrame, window: Int = 2, minCount: Int = 5,
       topN: Int = 100): DataFrame = {
     import graft.functions.PortableMath.plog
-    val tk = tokens(col("text"))
-    val docsTk = docs.select(tk.as("tk")).filter(size(col("tk")) >= 2)
-    val byOffset = (1 to window).map { d =>
-      docsTk
-        .filter(size(col("tk")) > d)
-        .select(explode(arrays_zip(
-          slice(col("tk"), lit(1), size(col("tk")) - d).as("a"),
-          slice(col("tk"), lit(1 + d), size(col("tk")) - d).as("b"))).as("pr"))
-        .select(col("pr.a").as("a"), col("pr.b").as("b"))
-    }.reduce(_ unionAll _)
-    val pairs = byOffset
-      .select(explode(array(
-        struct(col("a").as("center"), col("b").as("context")),
-        struct(col("b").as("center"), col("a").as("context")))).as("p"))
-      .select(col("p.center").as("center"), col("p.context").as("context"))
-      .groupBy("center", "context").agg(count(lit(1)).as("cnt"))
-    val marg = pairs.groupBy("center").agg(sum("cnt").as("m"))
-    val total = pairs.agg(sum("cnt").as("total"))
     def term(k: Column, r: Column, c: Column, n: Column): Column =
       when(k > 0,
         k.cast("double") * (plog(k.cast("double")) + plog(n.cast("double"))
@@ -1870,12 +1807,7 @@ object TextOps {
     val k12 = col("ca") - col("cnt")
     val k21 = col("cb") - col("cnt")
     val k22 = col("total") - col("ca") - col("cb") + col("cnt")
-    pairs
-      .filter(col("cnt") >= minCount)
-      .join(broadcast(marg.select(col("center"), col("m").as("ca"))), "center")
-      .join(broadcast(marg.select(col("center").as("context"), col("m").as("cb"))),
-        "context")
-      .crossJoin(broadcast(total))
+    pairMarginals(docs, window, minCount)
       .select(col("center"), col("context"), col("cnt"),
         (lit(2.0) * (
           term(k11, col("ca"), col("cb"), col("total"))
@@ -1889,11 +1821,6 @@ object TextOps {
 
   def llrTopKSql(window: Int = 2, minCount: Int = 5, topN: Int = 100): String = {
     import graft.functions.PortableMath.plogSql
-    val offsets = (1 to window).map { d =>
-      s"""SELECT unnest(tk[1:len(tk)-$d]) AS a,
-         |       unnest(tk[${1 + d}:len(tk)]) AS b
-         |  FROM toks WHERE len(tk) > $d""".stripMargin
-    }.mkString("\n  UNION ALL ")
     def term(k: String, r: String, c: String): String =
       s"""CASE WHEN $k > 0 THEN CAST($k AS DOUBLE) *
          |  ((${plogSql(s"CAST($k AS DOUBLE)")})
@@ -1907,24 +1834,9 @@ object TextOps {
          | + (${term("cb.m - p.cnt", "t.total - ca.m", "cb.m")})
          | + (${term("t.total - ca.m - cb.m + p.cnt",
               "t.total - ca.m", "t.total - cb.m")}))""".stripMargin
-    s"""WITH toks AS (SELECT $tokensSql AS tk FROM documents),
-       |off AS (
-       |  $offsets),
-       |sym AS (
-       |  SELECT a AS center, b AS context FROM off
-       |  UNION ALL SELECT b, a FROM off),
-       |pairs AS MATERIALIZED (
-       |  SELECT center, context, COUNT(*) AS cnt
-       |  FROM sym GROUP BY 1, 2),
-       |marg AS MATERIALIZED (
-       |  SELECT center, SUM(cnt) AS m FROM pairs GROUP BY center),
-       |tot AS (SELECT SUM(cnt) AS total FROM pairs)
+    s"""${pairMarginalsSql(window)}
        |SELECT p.center, p.context, p.cnt, $llr AS llr
-       |FROM pairs p
-       |JOIN marg ca ON p.center = ca.center
-       |JOIN marg cb ON p.context = cb.center
-       |CROSS JOIN tot t
-       |WHERE p.cnt >= $minCount
+       |${pairMarginalsFromSql(minCount)}
        |ORDER BY llr DESC, p.center ASC, p.context ASC LIMIT $topN""".stripMargin
   }
 
@@ -2162,19 +2074,9 @@ object TextOps {
   def sgnsNegativesSql(
       window: Int = 2, topPairs: Int = 100, k: Int = 5,
       seed: Int = 42): String = {
-    val offsets = (1 to window).map { d =>
-      s"""SELECT unnest(tk[1:len(tk)-$d]) AS a,
-         |       unnest(tk[${1 + d}:len(tk)]) AS b
-         |  FROM toks WHERE len(tk) > $d""".stripMargin
-    }.mkString("\n  UNION ALL ")
     val u = Dedup.md5Hash60Sql(seed,
       "(center || '|' || context || '|' || CAST(neg_idx AS VARCHAR))")
-    s"""WITH toks AS (SELECT $tokensSql AS tk FROM documents),
-       |off AS (
-       |  $offsets),
-       |sym AS (
-       |  SELECT a AS center, b AS context FROM off
-       |  UNION ALL SELECT b, a FROM off),
+    s"""WITH ${symPairsSql(window)},
        |pairs AS (
        |  SELECT center, context, COUNT(*) AS cnt
        |  FROM sym GROUP BY 1, 2
@@ -2217,13 +2119,14 @@ object TextOps {
   // exactness: ln via PortableMath.plog (rank >= 1, cnt >= 1 — always
   // in plog's domain), both coordinates snapped to a 1e6 integer grid
   // (products stay inside BIGINT), sufficient statistics summed in
-  // DECIMAL(38,0)/HUGEINT, floats only at the final divisions. The
-  // grid cancels algebraically in slope and r2 (cov/var ratios).
+  // DECIMAL(38,0)/HUGEINT, floats only at the final divisions
+  // ([[LeastSquares]]). The grid cancels algebraically in slope and r2
+  // (cov/var ratios). A degenerate top-N reads NULL: slope when it
+  // holds one token, r2 also when every token has the same count.
   // -------------------------------------------------------------------
   def zipfSlope(docs: DataFrame, topN: Int = 100): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.functions.PortableMath.plog
-    val Dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val top = tokenCounts(docs)
       .orderBy(col("cnt").desc, col("token").asc).limit(topN)
     // rank over the constant-size top frame (single tiny partition)
@@ -2232,22 +2135,7 @@ object TextOps {
     val xy = ranked.select(
       round(plog(col("rk").cast("double")) * 1e6).cast("long").as("x"),
       round(plog(col("cnt").cast("double")) * 1e6).cast("long").as("y"))
-    val stats = xy.agg(
-      count(lit(1)).as("n"),
-      sum(col("x").cast(Dec)).as("sx"),
-      sum(col("y").cast(Dec)).as("sy"),
-      sum((col("x") * col("y")).cast(Dec)).as("sxy"),
-      sum((col("x") * col("x")).cast(Dec)).as("sxx"),
-      sum((col("y") * col("y")).cast(Dec)).as("syy"))
-    def dbl(c: Column): Column = c.cast("string").cast("double")
-    val nd = col("n").cast(Dec)
-    val num = nd * col("sxy") - col("sx") * col("sy")
-    val den = nd * col("sxx") - col("sx") * col("sx")
-    val deny = nd * col("syy") - col("sy") * col("sy")
-    stats.select(
-      col("n"),
-      (dbl(num) / dbl(den)).as("slope"),
-      (dbl(num) * dbl(num) / (dbl(den) * dbl(deny))).as("r2"))
+    LeastSquares.fit(xy, "slope")
   }
 
   def zipfSlopeSql(topN: Int = 100): String = {
@@ -2265,21 +2153,7 @@ object TextOps {
        |         CAST(ROUND((${plogSql("CAST(cnt AS DOUBLE)")}) * 1e6)
        |           AS BIGINT) AS y
        |  FROM ranked),
-       |st AS (
-       |  SELECT COUNT(*) AS n,
-       |    SUM(CAST(x AS HUGEINT)) AS sx, SUM(CAST(y AS HUGEINT)) AS sy,
-       |    SUM(CAST(x * y AS HUGEINT)) AS sxy,
-       |    SUM(CAST(x * x AS HUGEINT)) AS sxx,
-       |    SUM(CAST(y * y AS HUGEINT)) AS syy
-       |  FROM xy)
-       |SELECT n,
-       |  CAST(CAST(n * sxy - sx * sy AS VARCHAR) AS DOUBLE)
-       |    / CAST(CAST(n * sxx - sx * sx AS VARCHAR) AS DOUBLE) AS slope,
-       |  CAST(CAST(n * sxy - sx * sy AS VARCHAR) AS DOUBLE)
-       |    * CAST(CAST(n * sxy - sx * sy AS VARCHAR) AS DOUBLE)
-       |    / (CAST(CAST(n * sxx - sx * sx AS VARCHAR) AS DOUBLE)
-       |       * CAST(CAST(n * syy - sy * sy AS VARCHAR) AS DOUBLE)) AS r2
-       |FROM st""".stripMargin
+       |${LeastSquares.fitSql("slope")}""".stripMargin
   }
 
   // -------------------------------------------------------------------

@@ -50,6 +50,22 @@ object DedupBench {
         concat(lit(header + " "), col("text"))).otherwise(col("text")).as("text"))
   }
 
+  /** The parquet at `path`, written from `gen` only when absent, so the
+    * deterministic corpora are generated once per size. */
+  private def generated(
+      spark: SparkSession, path: String, gen: => DataFrame): DataFrame = {
+    if (!new java.io.File(path, "_SUCCESS").exists())
+      gen.write.mode("overwrite").parquet(path)
+    spark.read.parquet(path)
+  }
+
+  /** ([[corpus]], [[skewedCorpus]]) of `n` documents, the plain/hot pair
+    * the span and text probes time each operator on. */
+  def plainAndHot(spark: SparkSession, n: Long): (DataFrame, DataFrame) =
+    (generated(spark, s"target/dedup_bench_$n.parquet", corpus(spark, n)),
+      generated(spark, s"target/span_bench_hot_$n.parquet",
+        skewedCorpus(spark, n)))
+
   def main(args: Array[String]): Unit = {
     val sizes = if (args.nonEmpty) args.toSeq.map(_.toLong) else Seq(20000L, 80000L)
     val spark = graft.Sessions.create("DedupBench")
@@ -68,10 +84,8 @@ object DedupBench {
 
     sizes.foreach { n =>
       if (section == "all") {
-      val path = s"target/dedup_bench_$n.parquet"
-      if (!new java.io.File(path, "_SUCCESS").exists())
-        corpus(spark, n).write.mode("overwrite").parquet(path)
-      val docs = spark.read.parquet(path)
+      val docs = generated(spark, s"target/dedup_bench_$n.parquet",
+        corpus(spark, n))
       println(s"DEDUPBENCH === n=$n ===")
       timed(s"n=$n exact          ", graft.ops.Dedup.exact(docs))
       timed(s"n=$n fingerprint    ", graft.ops.Dedup.exactByFingerprint(docs))
@@ -87,10 +101,8 @@ object DedupBench {
       // without the cap the same query is a (0.3n)²-pair bomb (run it
       // yourself with maxDf = Int.MaxValue at n=2000 to watch it go off
       // — deliberately not part of the timed sweep).
-      val skewPath = s"target/dedup_bench_skew_$n.parquet"
-      if (!new java.io.File(skewPath, "_SUCCESS").exists())
-        skewedCorpus(spark, n).write.mode("overwrite").parquet(skewPath)
-      val skewed = spark.read.parquet(skewPath)
+      val skewed = generated(spark, s"target/dedup_bench_skew_$n.parquet",
+        skewedCorpus(spark, n))
       timed(s"n=$n SKEW ngram_jacc", graft.ops.Dedup.ngramJaccardPairs(skewed))
       timed(s"n=$n SKEW minhash   ", graft.ops.Dedup.minhashNearDups(skewed))
       spark.catalog.clearCache()

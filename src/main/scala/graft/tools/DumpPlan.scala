@@ -4,9 +4,10 @@ import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan dumper for the optimization-round evidence files:
   * runMain graft.tools.DumpPlan <sfDir> <outDir> <suffix> [query...]
-  * — writes `<outDir>/<query>_<suffix>.txt` with the query's
-  * `.explain("formatted")` output (the physical plan with pushed
-  * filters, read schemas, join strategies and exchange placement).
+  * — writes `<outDir>/<query>_<suffix>.txt` (a registered or
+  * bench-only query) with the query's `.explain("formatted")` output
+  * (the physical plan with pushed filters, read schemas, join
+  * strategies and exchange placement).
   * AQE is disabled so the dumped tree is the static plan the judge can
   * diff across rounds without runtime re-optimization noise; the same
   * setting PlanAudit uses for its shuffle counts. */
@@ -25,7 +26,8 @@ object DumpPlan {
     names.foreach { name =>
       val out = new java.io.File(outDir, s"${name}_$suffix.txt")
       try {
-        val df = graft.SparkEntry.queries(name)(spark, sfDir)
+        val df = graft.SparkEntry.queries.getOrElse(name,
+          graft.SparkEntry.benchOnly(name))(spark, sfDir)
         val txt = df.queryExecution.explainString(
           ExplainMode.fromString("formatted"))
         val w = new java.io.PrintWriter(out, "UTF-8")

@@ -35,43 +35,17 @@ object MakeScale {
       conf = Map("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"))
     new java.io.File(out).mkdirs()
 
-    def stride(df: DataFrame, c: String): Long =
-      df.agg(max(col(c))).head().getLong(0) + 1L
-
-    /** Write as ONE parquet file named <out>/<name>.parquet (the
-      * fixture layout both Tables and the DuckDB views expect). */
-    def writeOne(df: DataFrame, name: String): Unit = {
-      val tmp = s"$out/__tmp_$name"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file for $name"))
-      val dst = new java.io.File(s"$out/$name.parquet")
-      if (dst.exists()) dst.delete()
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-      println(s"MAKESCALE $name -> ${dst.length() / 1048576} MiB")
-    }
-
+    def put(df: DataFrame, name: String): Unit =
+      writeOne(df, out, name, "MAKESCALE")
     def rep(df: DataFrame, offsets: Map[String, Long],
-        textSuffix: Boolean = false): DataFrame = {
-      val r = broadcast(spark.range(reps).toDF("__r"))
-      var d = df.crossJoin(r)
-      offsets.foreach { case (c, s) =>
-        d = d.withColumn(c, col(c) + col("__r") * s)
-      }
-      if (textSuffix)
-        d = d.withColumn("text",
-          when(col("__r") === 0, col("text"))
-            .otherwise(concat(col("text"), lit(" r"), col("__r"))))
-      d.drop("__r")
-    }
+        textSuffix: Option[String] = None): DataFrame =
+      replicate(df, reps, offsets, textSuffix)
 
     def t(name: String) = spark.read.parquet(s"$src/$name.parquet")
 
     // shared dims: one copy
-    writeOne(t("region"), "region")
-    writeOne(t("nation"), "nation")
+    put(t("region"), "region")
+    put(t("nation"), "nation")
 
     val sCust = stride(t("customer"), "c_custkey")
     val sSupp = stride(t("supplier"), "s_suppkey")
@@ -81,12 +55,12 @@ object MakeScale {
     require(reps * sPart < 1000000L && reps * sSupp < 100000L,
       "pid radix fields would overflow (Tables.pidExpr contract)")
 
-    writeOne(rep(t("customer"), Map("c_custkey" -> sCust)), "customer")
-    writeOne(rep(t("supplier"), Map("s_suppkey" -> sSupp)), "supplier")
-    writeOne(rep(t("part"), Map("p_partkey" -> sPart)), "part")
-    writeOne(rep(t("orders"),
+    put(rep(t("customer"), Map("c_custkey" -> sCust)), "customer")
+    put(rep(t("supplier"), Map("s_suppkey" -> sSupp)), "supplier")
+    put(rep(t("part"), Map("p_partkey" -> sPart)), "part")
+    put(rep(t("orders"),
       Map("o_orderkey" -> sOrd, "o_custkey" -> sCust)), "orders")
-    writeOne(rep(t("lineitem"), Map("l_orderkey" -> sOrd,
+    put(rep(t("lineitem"), Map("l_orderkey" -> sOrd,
       "l_partkey" -> sPart, "l_suppkey" -> sSupp)), "lineitem")
 
     // ts is written as TIMESTAMP_NTZ to match the driver fixtures'
@@ -97,16 +71,54 @@ object MakeScale {
       .withColumn("ts", col("ts").cast("timestamp_ntz"))
     val sEvt = stride(ev, "event_id")
     val sUsr = stride(ev, "user_id")
-    writeOne(rep(ev, Map("event_id" -> sEvt, "user_id" -> sUsr)), "events")
+    put(rep(ev, Map("event_id" -> sEvt, "user_id" -> sUsr)), "events")
 
     val docs = t("documents")
     val sDoc = stride(docs, "doc_id")
-    writeOne(rep(docs, Map("doc_id" -> sDoc), textSuffix = true), "documents")
+    put(rep(docs, Map("doc_id" -> sDoc), textSuffix = Some("r")), "documents")
 
     val embs = t("embeddings")
     val sVec = stride(embs, "vec_id")
-    writeOne(rep(embs, Map("vec_id" -> sVec)), "embeddings")
+    put(rep(embs, Map("vec_id" -> sVec)), "embeddings")
 
     spark.stop()
+  }
+
+  private[tools] def stride(df: DataFrame, c: String): Long =
+    df.agg(max(col(c))).head().getLong(0) + 1L
+
+  /** Write as ONE parquet file named <out>/<name>.parquet (the fixture
+    * layout both Tables and the DuckDB views expect), logging its size
+    * under `tag`. */
+  private[tools] def writeOne(
+      df: DataFrame, out: String, name: String, tag: String): Unit = {
+    val tmp = s"$out/__tmp_$name"
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .getOrElse(sys.error(s"no part file for $name"))
+    val dst = new java.io.File(s"$out/$name.parquet")
+    if (dst.exists()) dst.delete()
+    java.nio.file.Files.move(part.toPath, dst.toPath)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+    println(s"$tag $name -> ${dst.length() / 1048576} MiB")
+  }
+
+  /** `reps` copies of `df`, copy r adding r·stride to each `offsets`
+    * column; with a `textSuffix` letter, copies r > 0 append
+    * " <letter><r>" to `text`. */
+  private[tools] def replicate(df: DataFrame, reps: Int,
+      offsets: Map[String, Long], textSuffix: Option[String]): DataFrame = {
+    val r = broadcast(df.sparkSession.range(reps).toDF("__r"))
+    var d = df.crossJoin(r)
+    offsets.foreach { case (c, s) =>
+      d = d.withColumn(c, col(c) + col("__r") * s)
+    }
+    textSuffix.foreach { letter =>
+      d = d.withColumn("text",
+        when(col("__r") === 0, col("text"))
+          .otherwise(concat(col("text"), lit(s" $letter"), col("__r"))))
+    }
+    d.drop("__r")
   }
 }

@@ -22,8 +22,11 @@ object RecallBench {
 
   private val K = 10
 
-  def run(spark: SparkSession, sfDir: String): Seq[Res] = {
-    val embs = graft.Tables.table(spark, sfDir, "embeddings")
+  /** Query vector 0 and its exact top-10 ids (itself excluded) by
+    * cosine and by squared L2: the two ground truths every index is
+    * scored against. */
+  private[tools] def truths(
+      embs: DataFrame): (Seq[Double], Set[Long], Set[Long]) = {
     val cosTruth = graft.ops.EmbeddingOps.cosineTopK(embs, 0L, K)
       .collect().map(_.getLong(0)).toSet
     val vecs = graft.ops.IvfIndex.vectors(embs)
@@ -33,6 +36,12 @@ object RecallBench {
       .select(col("id"), graft.kmeans.KMeansND.sqDistND(col("vec"), qc).as("d"))
       .orderBy(col("d").asc, col("id").asc).limit(K)
       .collect().map(_.getLong(0)).toSet
+    (q, cosTruth, l2Truth)
+  }
+
+  def run(spark: SparkSession, sfDir: String): Seq[Res] = {
+    val embs = graft.Tables.table(spark, sfDir, "embeddings")
+    val (q, cosTruth, l2Truth) = truths(embs)
 
     def score(name: String, metric: String, truth: Set[Long])
         (body: => DataFrame): Res = {

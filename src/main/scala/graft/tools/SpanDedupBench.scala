@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Scaling probe for the substring-level span dedup (the one r8 surface
   * that shipped without a measured growth curve). Reuses DedupBench's
@@ -48,14 +47,7 @@ object SpanDedupBench {
     graft.ops.SpanDedup.spanStats(warm).write.format("noop").mode("overwrite").save()
 
     sizes.foreach { n =>
-      val plain = s"target/dedup_bench_$n.parquet"
-      if (!new java.io.File(plain, "_SUCCESS").exists())
-        DedupBench.corpus(spark, n).write.mode("overwrite").parquet(plain)
-      val hot = s"target/span_bench_hot_$n.parquet"
-      if (!new java.io.File(hot, "_SUCCESS").exists())
-        DedupBench.skewedCorpus(spark, n).write.mode("overwrite").parquet(hot)
-      val docs = spark.read.parquet(plain)
-      val docsHot = spark.read.parquet(hot)
+      val (docs, docsHot) = DedupBench.plainAndHot(spark, n)
       println(s"SPANBENCH === n=$n ===")
       timed(s"n=$n dup_spans      ", graft.ops.SpanDedup.dupSpans(docs))
       timed(s"n=$n span_stats     ", graft.ops.SpanDedup.spanStats(docs))

@@ -41,14 +41,7 @@ object TextBench {
     noop(graft.ops.TextOps.lmScore(warm))
 
     sizes.foreach { n =>
-      val plain = s"target/dedup_bench_$n.parquet"
-      if (!new java.io.File(plain, "_SUCCESS").exists())
-        DedupBench.corpus(spark, n).write.mode("overwrite").parquet(plain)
-      val hot = s"target/span_bench_hot_$n.parquet"
-      if (!new java.io.File(hot, "_SUCCESS").exists())
-        DedupBench.skewedCorpus(spark, n).write.mode("overwrite").parquet(hot)
-      val docs = spark.read.parquet(plain)
-      val docsHot = spark.read.parquet(hot)
+      val (docs, docsHot) = DedupBench.plainAndHot(spark, n)
       println(s"TEXTBENCH === n=$n ===")
       timed(s"n=$n tokenize_ids     ", graft.ops.TextOps.tokenizeIds(docs))
       timed(s"n=$n tokenize_ids_hot ", graft.ops.TextOps.tokenizeIds(docsHot))

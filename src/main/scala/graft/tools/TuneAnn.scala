@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Operating-point scout for the r16 recall-targeted ANN defaults
   * (VERDICT r15 item 1): recall@10 of each candidate default vs the
@@ -20,15 +19,7 @@ object TuneAnn {
     val n = embs.count()
     println(s"TUNE n=$n autoBits=${graft.ops.EmbeddingOps.autoBits(n)} " +
       s"rpAutoP=${graft.ops.EmbeddingOps.rpAutoP(n)}")
-    val cosTruth = graft.ops.EmbeddingOps.cosineTopK(embs, 0L, K)
-      .collect().map(_.getLong(0)).toSet
-    val vecs = graft.ops.IvfIndex.vectors(embs)
-    val q = vecs.filter(col("id") === 0L).head().getSeq[Double](1)
-    val qc = array(q.map(lit).toIndexedSeq: _*)
-    val l2Truth = vecs.filter(col("id") =!= 0L)
-      .select(col("id"), graft.kmeans.KMeansND.sqDistND(col("vec"), qc).as("d"))
-      .orderBy(col("d").asc, col("id").asc).limit(K)
-      .collect().map(_.getLong(0)).toSet
+    val (_, cosTruth, l2Truth) = RecallBench.truths(embs)
 
     def score(name: String, truth: Set[Long])(body: => DataFrame): Unit = {
       val t0 = System.nanoTime()

@@ -290,6 +290,26 @@ class DedupSpec extends SparkSpec {
     hs.values.foreach(h => assert(h >= 0L && h < (1L << 60)))
   }
 
+  test("the xxhash64 and md5 families plan the same physical operators") {
+    // the bench-only xxhash64 queries are timed but never oracle-checked:
+    // their correctness rests on running the DAG of their gated md5 twin;
+    // no relation an earlier test cached may stand in for a subtree
+    spark.catalog.clearCache()
+    def operators(df: DataFrame): Seq[String] = {
+      val key = "spark.sql.adaptive.enabled"
+      val prev = spark.conf.get(key)
+      spark.conf.set(key, "false")
+      try df.queryExecution.executedPlan.collect { case p => p.nodeName }
+      finally spark.conf.set(key, prev)
+    }
+    val sigs = operators(Dedup.minhashSignatures(docs))
+    assert(sigs.contains("Exchange"), sigs)
+    assert(sigs == operators(Dedup.minhashSignaturesMd5(docs)))
+    val sim = operators(Dedup.simhashNearDups(docs))
+    assert(sim.contains("BroadcastHashJoin"), sim)
+    assert(sim == operators(Dedup.simhashNearDupsMd5(docs)))
+  }
+
   test("incremental dedup drops batch docs whose text exists in history") {
     val history = Seq(
       (1L, "seen before"), (2L, "also seen"), (3L, "history only")

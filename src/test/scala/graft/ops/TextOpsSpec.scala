@@ -551,6 +551,25 @@ class TextOpsSpec extends SparkSpec {
     assert(r.getDouble(2) > 0.999, s"r2 ${r.getDouble(2)}")
   }
 
+  test("zipf slope: a degenerate top-N fits NULL instead of dividing by zero") {
+    import spark.implicits._
+    def fit(text: String): (Long, Any, Any) = {
+      val key = "spark.sql.ansi.enabled"
+      val prev = spark.conf.get(key)
+      spark.conf.set(key, "true")
+      try {
+        val r = TextOps.zipfSlope(Seq((1L, text)).toDF("doc_id", "text"),
+          topN = 10).collect()(0)
+        (r.getLong(0), r.get(1), r.get(2))
+      } finally spark.conf.set(key, prev)
+    }
+    // one token: every x (ln rank) is equal, so neither fit exists
+    assert(fit("solo solo solo") == ((1L, null, null)))
+    // every token once: y (ln count) is constant, a flat line with no
+    // variance for r2 to explain
+    assert(fit("a b c d e") == ((5L, 0.0, null)))
+  }
+
   test("nb classifier: class-indicative tokens push margins to the right side") {
     // train (even ids): en docs say hello, fr docs say bonjour; the
     // held-out odd docs must score by those token weights
